@@ -2,11 +2,6 @@
 # Repeat-suite flake harness — analog of the reference's
 # src/main/test-mr-many.sh:15-22 (run the whole suite N times, stop at
 # the first failing trial). Usage: scripts/test-many.sh [runs]
-#
-# Quiet-run protocol (benches, not tests): check /proc/loadavg 1-min
-# < ~1.5 before any RECORDED graft.Bench run — a contended machine
-# silently inflates numbers 2-8×, and Bench self-flags "contended":true
-# above load 2.0 (see Bench.scala); never commit a contended artifact.
 set -uo pipefail
 cd "$(dirname "$0")/.."
 runs=${1:-3}

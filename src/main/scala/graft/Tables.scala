@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions.{col, lit, unix_micros}
 import org.apache.spark.sql.types.{DateType, DecimalType, DoubleType, FloatType,
   LongType, TimestampNTZType, TimestampType}
 
+import graft.queries.Memo
+
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
   * All queries read via this single entry so that source options (and, at
@@ -30,41 +32,16 @@ object Tables {
     * `spark.sql.hive.filesourcePartitionFileCacheSize` caches for catalog
     * tables); no row data is persisted, every query still scans parquet.
     * At 100 TB the listing is minutes of driver time per query without
-    * this. Entries evict when the owning SparkContext ends (same
-    * lifecycle as the queries' Memo tables). Staleness: a caller that
+    * this. Entries evict when the owning SparkContext ends
+    * ([[graft.queries.Memo.memoizeValue]]). Staleness: a caller that
     * rewrites a table in-place mid-session would read the old file list —
     * the engine's corpora are immutable per directory (generators write
     * fresh dirs), same contract as the queries' disk-cached artifacts.
     */
-  private val tableMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String, String), DataFrame]
-
-  /** Contexts that already carry an eviction listener — round-18 advice
-    * fix: one listener per SparkContext (clearing every key whose session
-    * belongs to the ending context, cloned sessions included) instead of
-    * one listener per memo entry, which accumulated on a long-lived
-    * multi-session context.
-    */
-  private val evictRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[org.apache.spark.SparkContext]()
-
-  private def memoized(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    tableMemo.getOrElseUpdate((spark, key, ""), {
-      val sc = spark.sparkContext
-      if (evictRegistered.add(sc))
-        sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-            tableMemo.keys.toSeq.filter(_._1.sparkContext eq sc)
-              .foreach(k => tableMemo.remove(k): Unit)
-            evictRegistered.remove(sc): Unit
-          }
-        })
-      build
-    })
+  private val tableMemo = Memo.table()
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    memoized(spark, s"$dir/$name") {
+    Memo.memoizeValue(tableMemo, spark, s"$dir/$name") {
       val df = spark.read.parquet(s"$dir/$name.parquet")
       name match {
         case "events" => normalizeEventTs(spark, df)
@@ -216,11 +193,11 @@ object Tables {
     * is also once per (session, dir).
     */
   def docs(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, s"$dir#docs-spread")(
+    Memo.memoizeValue(tableMemo, spark, s"$dir#docs-spread")(
       spread(spark, apply(spark, dir, "documents"), "doc_id"))
 
   /** `embeddings`, conditionally spread like [[docs]]. */
   def embeddings(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, s"$dir#emb-spread")(
+    Memo.memoizeValue(tableMemo, spark, s"$dir#emb-spread")(
       spread(spark, apply(spark, dir, "embeddings"), "vec_id"))
 }

@@ -17,54 +17,44 @@ case class QueryDef(
   * tables (shingle tables, signature tables, embedding norms): queries
   * reference these subplans several times and repeated invocations (the
   * bench loop, the verify dump) share one cache entry instead of leaking a
-  * new one per call. When the owning SparkContext ends the entry is
-  * evicted, so the map never retains stopped sessions (or their cached
-  * blocks) for the JVM lifetime — a slow leak in a long-running
-  * multi-tenant driver otherwise. One listener per entry; eviction is
-  * idempotent.
+  * new one per call. When the owning SparkContext ends every entry of that
+  * context is evicted, so the map never retains stopped sessions (or their
+  * cached blocks) for the JVM lifetime — a slow leak in a long-running
+  * multi-tenant driver otherwise. One listener per (memo, context);
+  * eviction is idempotent, and a stopped context memoizes nothing.
   */
-private[queries] object Memo {
+private[graft] object Memo {
   type Table = scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]
   def table(): Table = new Table
 
   def memoize(memo: Table, spark: SparkSession, dir: String)(
       build: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((spark, dir), {
-      evictOnEnd(memo, spark)
-      build.persist()
-    })
+    memoizeValue(memo, spark, dir)(build.persist())
 
-  /** Memoize a DataFrame PLAN per (session, dir) — like [[memoize]] but
-    * WITHOUT `.persist()`: no row data is ever cached; every action on
-    * the returned DataFrame re-executes the full plan from the parquet
-    * inputs. What repeats share is the ANALYZED LOGICAL PLAN object —
-    * construction cost (sub-plan assembly, memoized-literal pulls) is
-    * paid once, and because the stored plan's expression ids are fixed,
-    * re-executions generate byte-identical codegen text and hit the
-    * generated-class cache instead of recompiling (round-17: the recall
-    * report rebuilt ten search plans per invocation — 1.4 s of driver
-    * construction and 158 janino recompiles per WARM run).
-    */
-  def memoizePlan(memo: Table, spark: SparkSession, dir: String)(
-      build: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((spark, dir), {
-      evictOnEnd(memo, spark)
-      build
-    })
-
-  /** Memoize a driver-side PLANNING value (split-point bounds, row
-    * counts) per (session, dir) — same lifecycle as [[memoize]] but for
-    * plain values that are pulled to the driver once and embedded in
-    * plans as literals, so repeated plan constructions (the bench loop's
-    * warm repeats) don't re-run the sampling job each time.
+  /** Memoize any per-(session, key) value with the lifecycle above and no
+    * `.persist()`: driver-side PLANNING values (split-point bounds, row
+    * counts) pulled to the driver once and embedded in plans as literals,
+    * and DataFrame PLANS (base-table loaders, the search plans), whose
+    * repeats share one analyzed logical plan — construction is paid once
+    * and the fixed expression ids keep codegen text byte-identical, so
+    * re-executions hit the generated-class cache. No row data is cached.
     */
   def memoizeValue[A](
       memo: scala.collection.concurrent.TrieMap[(SparkSession, String), A],
-      spark: SparkSession, dir: String)(build: => A): A =
-    memo.getOrElseUpdate((spark, dir), {
-      evictOnEnd(memo, spark)
+      spark: SparkSession, key: String)(build: => A): A = {
+    val sc = spark.sparkContext
+    if (sc.isStopped) return build
+    val v = memo.getOrElseUpdate((spark, key), {
+      evictOnEnd(memo, sc)
       build
     })
+    // Lost a race with the end event: its listener may already have run.
+    if (sc.isStopped) {
+      memo.remove((spark, key))
+      evictRegistered.remove((memo, sc))
+    }
+    v
+  }
 
   /** (memo, context) pairs that already carry an eviction listener —
     * round-18 advice fix: the round-17 form registered ONE LISTENER PER
@@ -79,8 +69,7 @@ private[queries] object Memo {
 
   private def evictOnEnd[A](
       memo: scala.collection.concurrent.TrieMap[(SparkSession, String), A],
-      spark: SparkSession): Unit = {
-    val sc = spark.sparkContext
+      sc: org.apache.spark.SparkContext): Unit =
     if (evictRegistered.add((memo, sc)))
       sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
@@ -90,7 +79,6 @@ private[queries] object Memo {
           evictRegistered.remove((memo, sc)): Unit
         }
       })
-  }
 
   /** Bump when the SEMANTICS of any disk-cached artifact change (algorithm
     * edits that don't move a tunable constant): stale cache entries under
@@ -134,10 +122,8 @@ private[queries] object Memo {
     */
   def memoizeDisk(memo: Table, spark: SparkSession, dir: String, label: String,
       configKey: String, memoKey: String = "")(build: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((spark, dir + memoKey), {
-      evictOnEnd(memo, spark)
-      diskCached(spark, dir, label, configKey)(build).persist()
-    })
+    memoizeValue(memo, spark, dir + memoKey)(
+      diskCached(spark, dir, label, configKey)(build).persist())
 
   private def diskCached(spark: SparkSession, dir: String, label: String,
       configKey: String)(build: => DataFrame): DataFrame = {

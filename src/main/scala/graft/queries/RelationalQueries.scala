@@ -303,8 +303,8 @@ object RelationalQueries {
     // NTZ→LTZ cast, which reads the SESSION timezone — it must be UTC so the
     // epoch arithmetic is the identity wall-clock mapping the oracle's
     // naive `o_orderdate <= ts` comparison uses, on any machine TZ.
-    // Require, don't set: every entry point (Verify, Bench, Explain,
-    // StageProfile, tests) pins UTC at session build, and silently mutating
+    // Require, don't set: every entry point (Verify, the dev mains, the
+    // CLI, tests) pins UTC at session build, and silently mutating
     // the shared session here would change the semantics of every other
     // tz-sensitive query (e.g. pivot_daily's day bucketing) behind the
     // caller's back, in execution-order-dependent ways.

@@ -132,17 +132,7 @@ object SimilarityQueries {
     new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]
 
   private def estimatedRows(spark: SparkSession, dir: String): Long =
-    rowsMemo.getOrElseUpdate((spark, dir), {
-      // Same application-end eviction as Memo.memoize: without it the map
-      // retains stopped SparkSession objects for the JVM lifetime — a slow
-      // leak in a long-running multi-tenant driver.
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          rowsMemo.remove((spark, dir))
-      })
-      countRows(spark, dir)
-    })
+    Memo.memoizeValue(rowsMemo, spark, dir)(countRows(spark, dir))
 
   private def countRows(spark: SparkSession, dir: String): Long = {
     val conf = spark.sessionState.newHadoopConf()
@@ -353,7 +343,7 @@ object SimilarityQueries {
   }
 
   /** PLAN memo for the ten declared search DataFrames + the recall
-    * report (round-17, Memo.memoizePlan — no data cached, ever): each
+    * report (round-17, Memo.memoizeValue — no data cached, ever): each
     * search assembles a deep plan from the memoized index artifacts, and
     * the recall report assembles all ten. Re-building them per
     * invocation cost 1.4 s of driver construction per report call and —
@@ -365,7 +355,7 @@ object SimilarityQueries {
   private val searchPlanMemo = Memo.table()
   private def planMemo(spark: SparkSession, dir: String, name: String)(
       build: => DataFrame): DataFrame =
-    Memo.memoizePlan(searchPlanMemo, spark, dir + "#" + name)(build)
+    Memo.memoizeValue(searchPlanMemo, spark, dir + "#" + name)(build)
 
   def annLsh(spark: SparkSession, dir: String): DataFrame =
     planMemo(spark, dir, "ann_lsh")(annLshProbe(spark, dir, LshRadius, LshTables))

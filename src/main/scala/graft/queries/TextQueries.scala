@@ -1034,11 +1034,8 @@ object TextQueries {
     Memo.memoizeDisk(bpeTrainMemo, spark, dir, "bpe_merges",
       s"rounds=$BpeRounds")(bpeTrainMerges(bpeDictionary(spark, dir)))
 
-  /** The (word, c) training dictionary — exposed for the rounds-cost
-    * probe ([[graft.BpeCurve]]), which times [[bpeTrainMerges]] at 10×
-    * the production round count to pin the linear-in-rounds claim.
-    */
-  private[graft] def bpeDictionary(spark: SparkSession, dir: String): DataFrame =
+  /** The (word, c) training dictionary. */
+  private def bpeDictionary(spark: SparkSession, dir: String): DataFrame =
     words(spark, dir).groupBy(col("word")).agg(count(lit(1)).as("c"))
 
   /** Greedy leftmost non-overlapping merge of (lhs, rhs) over a symbol
