@@ -11,7 +11,8 @@ import graft.queries.SimilarityQueries
   *
   *   - `ann_lsh` across multi-probe radii (Hamming 0/1/2 around the
   *     query's own bucket)
-  *   - `ann_ivf_kmeans` across probe depths (`nprobe`)
+  *   - `ann_ivf_kmeans` and `ann_ivf_scaled` across probe depths
+  *     (`nprobe`), through the one IVF probe hook over an index value
   *   - `ann_ivfpq_rerank` across (nprobe, rerank depth R)
   *
   * Shared index artifacts (codebooks, inverted lists, PQ codes) are
@@ -31,14 +32,13 @@ object RecallSweep {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // optional arg: sweep only one family ("lsh" | "ivf" | "pq" | "hn") —
-    // a retune session usually moves one knob and should not pay for the
-    // whole grid. Unknown names are an ERROR, not a silent empty sweep
-    // (a typo like "lhs" would otherwise make want() false for every
-    // family, run nothing, and exit 0 — the same failure mode Bench's
-    // unknown-query guard exists for), and the check runs BEFORE the
-    // exact baseline below so the typo fails fast instead of after the
-    // costliest step of the sweep.
+    // optional arg: sweep only one family ("lsh" | "ivf" | "scaled" |
+    // "pq" | "hn") — a retune session usually moves one knob and should
+    // not pay for the whole grid. Unknown names are an ERROR, not a
+    // silent empty sweep (a typo like "lhs" would otherwise make want()
+    // false for every family, run nothing, and exit 0), and the check
+    // runs BEFORE the exact baseline below so the typo fails fast instead
+    // of after the costliest step of the sweep.
     val Families = Set("lsh", "ivf", "pq", "hn", "scaled")
     val family = args.headOption
     family.filterNot(Families).foreach { f =>
@@ -91,7 +91,7 @@ object RecallSweep {
     val nprobes = Seq(2, 4, 8, 12, 16, 24, 32)
     if (want("ivf")) nprobes.foreach { np =>
       timed(f"ann_ivf_kmeans nprobe=$np%-3d (${np * 100.0 / SimilarityQueries.IvfC}%.0f%% lists)",
-        SimilarityQueries.annIvfKmeansProbe(spark, sfDir, np))
+        SimilarityQueries.annIvfProbe(spark, sfDir, SimilarityQueries.LloydIvf, np))
     }
     if (want("scaled")) {
       // scaled-capacity index across probe depth, incl. the EQUAL-SCAN
@@ -101,7 +101,7 @@ object RecallSweep {
       val c = SimilarityQueries.scaledCOf(spark, sfDir)
       for (np <- Seq(8, 16, 24, 48, 59, 82, 110).filter(_ <= c)) {
         timed(f"ann_ivf_scaled nprobe=$np%-3d (${np * 100.0 / c}%.0f%% of $c lists)",
-          SimilarityQueries.annIvfScaledProbe(spark, sfDir, np))
+          SimilarityQueries.annIvfProbe(spark, sfDir, SimilarityQueries.ScaledIvf, np))
       }
     }
     if (want("pq")) nprobes.foreach { np =>

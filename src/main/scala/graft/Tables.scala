@@ -38,10 +38,8 @@ object Tables {
     * the engine's corpora are immutable per directory (generators write
     * fresh dirs), same contract as the queries' disk-cached artifacts.
     */
-  private val tableMemo = Memo.table()
-
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    Memo.memoizeValue(tableMemo, spark, s"$dir/$name") {
+    Memo.memoizeValue(spark, dir, s"table:$name") {
       val df = spark.read.parquet(s"$dir/$name.parquet")
       name match {
         case "events" => normalizeEventTs(spark, df)
@@ -193,11 +191,11 @@ object Tables {
     * is also once per (session, dir).
     */
   def docs(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoizeValue(tableMemo, spark, s"$dir#docs-spread")(
+    Memo.memoizeValue(spark, dir, "table:documents-spread")(
       spread(spark, apply(spark, dir, "documents"), "doc_id"))
 
   /** `embeddings`, conditionally spread like [[docs]]. */
   def embeddings(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoizeValue(tableMemo, spark, s"$dir#emb-spread")(
+    Memo.memoizeValue(spark, dir, "table:embeddings-spread")(
       spread(spark, apply(spark, dir, "embeddings"), "vec_id"))
 }

@@ -83,19 +83,12 @@ object DedupQueries {
     * a new one per call. At cluster scale this is the standard "materialize
     * the shingle table once per dedup job" step.
     */
-  private val shingleMemo = Memo.table()
-
-  /** Session-scoped memoize-and-persist — see [[Memo]]. */
-  private def memoize(memo: Memo.Table, spark: SparkSession, dir: String)(
-      build: => DataFrame): DataFrame =
-    Memo.memoize(memo, spark, dir)(build)
-
   private def shingleHashes(spark: SparkSession, dir: String): DataFrame =
     // Disk-cached index artifact (see [[Memo.memoizeDisk]]): the per-doc
     // shingle-hash table is the build-once base of every dedup pipeline;
     // a cold JVM scans the content-keyed parquet instead of re-running
     // the tokenize→3-gram→hash kernel over the corpus.
-    Memo.memoizeDisk(shingleMemo, spark, dir, "shingle_hashes",
+    Memo.memoizeDisk(spark, dir, "shingle_hashes",
       s"k=3,P=$P,tok=letter-runs")(
       // ShingleHash60Expr fuses tokenize -> 3-gram -> hash60 % P ->
       // distinct into one per-row kernel (no intermediate token/gram/
@@ -106,23 +99,19 @@ object DedupQueries {
           graft.functions.ShingleHash60Expr(col("text"), 3, P).as("hs"))
         .filter(size(col("hs")) > 0))
 
-  /** Memo for the EXPLODED (doc_id, h) pair table — the base of the
-    * df-annotated table, the frequency table, and the sizes table below;
-    * re-exploding the array table per reference was the round-2 bench
-    * regression (1.39 s → 3.57 s). One persisted copy serves them all.
-    */
-  private val pairsMemo = Memo.table()
-
   private val shingleHashesCte: String =
     s"""toks AS (${Oracle.toksCte}),
        |sh AS (SELECT doc_id, list_distinct(${Oracle.ngrams3("t")}) AS shingles FROM toks WHERE len(t) >= 3),
        |hs AS (SELECT doc_id, list_distinct(list_transform(shingles, s -> ${Oracle.hash60("s")} % $P)) AS hs FROM sh)""".stripMargin
 
-  /** Exploded distinct (doc_id, h) shingle-hash pairs — persisted (see
-    * [[pairsMemo]]).
+  /** Exploded distinct (doc_id, h) shingle-hash pairs, memoized — the
+    * base of the df-annotated table, the frequency table, and the sizes
+    * table below; re-exploding the array table per reference was the
+    * round-2 bench regression (1.39 s → 3.57 s). One persisted copy
+    * serves them all.
     */
   private[graft] def shinglePairs(spark: SparkSession, dir: String): DataFrame =
-    memoize(pairsMemo, spark, dir)(
+    Memo.memoize(spark, dir, "shingle_pairs")(
       shingleHashes(spark, dir)
         .select(col("doc_id"), explode(col("hs")).as("h")))
 
@@ -130,20 +119,18 @@ object DedupQueries {
     s"""$shingleHashesCte,
        |ex AS (SELECT doc_id, unnest(hs) AS h FROM hs)""".stripMargin
 
-  /** Memo for the shingle document-frequency table (h, df). The prefix
+  /** The shingle document-frequency table (h, df), memoized. The prefix
     * query needs df for rarity ordering and BOTH exact-Jaccard queries need
     * it for the hot-shingle split below; rebuilding this aggregation per
     * invocation was the largest per-call cost left in the prefix query
     * after round 3 (the pair table it aggregates is persisted, the
     * aggregation itself was not).
     */
-  private val freqMemo = Memo.table()
-
   private def shingleFreq(spark: SparkSession, dir: String): DataFrame =
-    memoize(freqMemo, spark, dir)(
+    Memo.memoize(spark, dir, "shingle_freq")(
       shinglePairs(spark, dir).groupBy(col("h")).agg(count(lit(1)).as("df")))
 
-  /** Memo for the df-ANNOTATED pair table (doc_id, h, df): the one h-keyed
+  /** The df-ANNOTATED pair table (doc_id, h, df), memoized: the one h-keyed
     * join of pairs⋈freq happens HERE, once per (session, dir) — after it,
     * the exact-Jaccard queries' rarity ordering and hot/cold routing are
     * plain FILTERS on a persisted table instead of per-invocation
@@ -153,13 +140,11 @@ object DedupQueries {
     * "annotate the inverted index with document frequency" build step of
     * a prefix-filter dedup job.
     */
-  private val pairsDfMemo = Memo.table()
-
   private def shinglePairsDf(spark: SparkSession, dir: String): DataFrame =
-    memoize(pairsDfMemo, spark, dir)(
+    Memo.memoize(spark, dir, "shingle_pairs_df")(
       shinglePairs(spark, dir).join(shingleFreq(spark, dir), "h"))
 
-  /** Memo for the per-doc shingle-set size table (doc_id, n) — 16 bytes
+  /** The per-doc shingle-set size table (doc_id, n), memoized — 16 bytes
     * per document. The Jaccard union term joins it once per pair side;
     * caching the narrow projection keeps each (broadcast) build a scan of
     * a few tiny partitions instead of a full-width pass over the array
@@ -167,10 +152,8 @@ object DedupQueries {
     * (parallelism/8, floor 1): a fixed coalesce(1) would be a one-task
     * build and a single multi-GB cached partition at 10⁹ documents.
     */
-  private val sizesMemo = Memo.table()
-
   private def shingleSizes(spark: SparkSession, dir: String): DataFrame =
-    memoize(sizesMemo, spark, dir)(
+    Memo.memoize(spark, dir, "shingle_sizes")(
       shingleHashes(spark, dir)
         .select(col("doc_id"), size(col("hs")).cast("long").as("n"))
         .coalesce(math.max(1, spark.sparkContext.defaultParallelism / 8)))
@@ -274,29 +257,20 @@ object DedupQueries {
   }
 
   // ------------------------------------------------------------ dedup_minhash
-  /** `dedup_minhash` — MinHash+LSH near-duplicate pairs: shingle → 12
-    * minhashes (computed per-row over the hash array, no shuffle) → 4
-    * banded signatures → bucket self-join → exact-Jaccard verification at
-    * τ=0.8. Output: (doc_a, doc_b, jaccard).
+  /** The cap-BOUNDED banded-signature table, memoized — the LSH
+    * index-build artifact (band, sig, doc_id) with oversized buckets
+    * already removed: built once per (session, dir), so the
+    * per-invocation plan is one bucket aggregation + verify over a cached
+    * table, with no per-call oversized-count aggregate or anti-join
+    * exchange.
     */
-  /** Memo for the per-doc minhash signature table: referenced by both the
-    * oversized-bucket count and the bounded collect (and by repeated query
-    * invocations); one kernel pass over the cached shingle table serves
-    * all of them.
-    */
-  private val sigMemo = Memo.table()
-
-  /** Memo for the cap-BOUNDED banded-signature table — the LSH index-build
-    * artifact (band, sig, doc_id) with oversized buckets already removed:
-    * built once per (session, dir), so the per-invocation plan is one
-    * bucket aggregation + verify over a cached table, with no per-call
-    * oversized-count aggregate or anti-join exchange.
-    */
-  private val bandsMemo = Memo.table()
-
   private def boundedBands(spark: SparkSession, dir: String): DataFrame =
-    memoize(bandsMemo, spark, dir) {
-      val mh = memoize(sigMemo, spark, dir)(
+    Memo.memoize(spark, dir, "minhash_bands") {
+      // the per-doc minhash signature table, memoized too: referenced by
+      // both the oversized-bucket count and the bounded collect (and by
+      // repeated query invocations); one kernel pass over the cached
+      // shingle table serves all of them
+      val mh = Memo.memoize(spark, dir, "minhash_sigs")(
         shingleHashes(spark, dir)
           .select(col("doc_id"), graft.functions.MinHashSig(col("hs"), AB, P).as("sig"))
           .select(
@@ -321,16 +295,6 @@ object DedupQueries {
       bands.join(broadcast(oversized), Seq("band", "sig"), "left_anti")
     }
 
-  /** Memo for the VERIFIED near-dup pair table (doc_a, doc_b, jaccard) —
-    * the minhash index's final artifact. Three consumers reference it
-    * (pair listing, cluster-label build, triangle counting), and
-    * [[triangleCount]] alone references the edge list four times in one
-    * plan — without the memo each reference re-ran the candidate
-    * aggregation + Jaccard verify (observed: 3.4 s vs 0.7 s for the
-    * single-reference query at sf0.1). O(pairs) rows cached.
-    */
-  private val mhPairsMemo = Memo.table()
-
   /** Config fingerprint for the disk-cached minhash artifacts — every
     * tunable the verified pair graph depends on (the AB permutation
     * constants are fixed literals, covered by Memo's cache epoch).
@@ -338,8 +302,21 @@ object DedupQueries {
   private def mhConfigKey: String =
     s"P=$P Bands=$Bands Rows=$RowsPerBand cap=$MaxBandBucket tau=$JaccardTau"
 
+  /** `dedup_minhash` — MinHash+LSH near-duplicate pairs: shingle → 12
+    * minhashes (computed per-row over the hash array, no shuffle) → 4
+    * banded signatures → bucket self-join → exact-Jaccard verification at
+    * τ=0.8. Output: (doc_a, doc_b, jaccard).
+    *
+    * The VERIFIED near-dup pair table is memoized — the minhash index's
+    * final artifact. Three consumers reference it (pair listing,
+    * cluster-label build, triangle counting), and [[triangleCount]] alone
+    * references the edge list four times in one plan — without the memo
+    * each reference re-ran the candidate aggregation + Jaccard verify
+    * (observed: 3.4 s vs 0.7 s for the single-reference query at sf0.1).
+    * O(pairs) rows cached.
+    */
   def dedupMinhash(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoizeDisk(mhPairsMemo, spark, dir, "mh_pairs", mhConfigKey) {
+    Memo.memoizeDisk(spark, dir, "mh_pairs", mhConfigKey) {
       // Candidate pairs via ONE bucket aggregation + the PairsExpr kernel —
       // not a (band, sig) self-join, which would compute the
       // minhash-signature pipeline once per join side and shuffle twice.
@@ -426,8 +403,6 @@ object DedupQueries {
     */
   val MaxCcRounds = 50
 
-  private val clusterMemo = Memo.table()
-
   /** Min-label propagation WITH POINTER JUMPING to fixpoint over an
     * undirected pair graph: `pairs` is any 2-column (a, b) edge list;
     * returns the O(V) label table (id, lbl) with lbl = min id reachable
@@ -492,7 +467,7 @@ object DedupQueries {
   }
 
   private def clusterLabels(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoizeDisk(clusterMemo, spark, dir, "mh_cluster_labels",
+    Memo.memoizeDisk(spark, dir, "mh_cluster_labels",
       s"$mhConfigKey rounds=$MaxCcRounds")(
       propagateMinLabels(dedupMinhash(spark, dir).select(col("doc_a"), col("doc_b"))))
 
@@ -615,7 +590,7 @@ object DedupQueries {
     */
   val NgramJaccardTau = 0.5
 
-  /** Memo for the pairwise-OVERLAP table (da, db, inter = |A∩B|) over the
+  /** The pairwise-OVERLAP table (da, db, inter = |A∩B|), memoized, over the
     * full inverted index — the candidate-pair artifact every exact
     * similarity formula reads ([[ngramJaccard]]'s union ratio,
     * [[ngramContainment]]'s min ratio; a containment-direction or
@@ -634,15 +609,13 @@ object DedupQueries {
     * popular shingles make the fan-out skew-heavy: the prefix twin caps
     * it losslessly and is the declared scale path.)
     */
-  private val interMemo = Memo.table()
-
   private def interCounts(spark: SparkSession, dir: String): DataFrame =
     // Disk-cached index artifact (see [[Memo.memoizeDisk]]): the pair
     // fan-out + count aggregation is the dominant build of the exact
     // n-gram family, and its output is τ-independent (thresholds apply
     // downstream), so one build serves ngram_jaccard, ngram_containment
     // AND cosine_rerank across processes.
-    Memo.memoizeDisk(interMemo, spark, dir, "shingle_inter",
+    Memo.memoizeDisk(spark, dir, "shingle_inter",
       s"tok=letter-runs n=3 P=$P cap=$MaxShingleBucket")(
       coocPairs(shinglePairsDf(spark, dir))
         .repartition(spark.sparkContext.defaultParallelism, col("da"), col("db"))
@@ -712,22 +685,6 @@ object DedupQueries {
        |WHERE CAST(i.i AS DOUBLE) / least(sa.n, sb.n) >= $ContainmentTau""".stripMargin
 
   // ----------------------------------------------------- ngram_jaccard_prefix
-  /** Memo for the rarest-prefix rows (doc_id, h, df) — shared by the
-    * prefix-filter branch and the routing mass aggregate of
-    * [[ngramJaccardPrefix]]; linear in the corpus (Σ per-doc prefix
-    * lengths ≈ (1-τ)·|ex| rows).
-    */
-  private val prefixMemo = Memo.table()
-
-  /** Planning decision per (session, dir): did the candidate-mass
-    * comparison route `ngram_jaccard_prefix` to the count-based plan?
-    * Memoized so repeated plan constructions (the bench warm loop) run
-    * the two mass aggregates once, not per call — same
-    * [[Memo.memoizeValue]] discipline as global_rank's sampled bounds.
-    */
-  private val prefixRouteMemo =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), Boolean]()
-
   /** Routing margin between the two exact plans (see
     * [[ngramJaccardPrefix]]): the array-fetch verify costs ~50× more per
     * candidate pair than the count aggregation costs per fan-out row
@@ -790,7 +747,7 @@ object DedupQueries {
     */
   private[graft] def ngramJaccardPrefixRouted(spark: SparkSession, dir: String,
       forceCountPlan: Option[Boolean]): DataFrame = {
-    val prefix = memoize(prefixMemo, spark, dir)(prefixRows(spark, dir))
+    val prefix = prefixRows(spark, dir)
     val useCountPlan = forceCountPlan.getOrElse(prefixRouteUseCount(spark, dir))
     if (useCountPlan) ngramJaccard(spark, dir)
     // Shared-prefix-shingle pairs via one groupBy(h) + PairsExpr for cold
@@ -809,53 +766,60 @@ object DedupQueries {
   }
 
   /** The routing decision itself (true = count-based plan), exposed for
-    * tests that pin WHICH regime a corpus lands in. Memoized per
-    * (session, dir): the two mass aggregates run once, not per plan
-    * construction.
+    * tests that pin WHICH regime a corpus lands in. A planning decision
+    * memoized per (session, dir) so repeated plan constructions (the
+    * bench warm loop) run the two mass aggregates once, not per call —
+    * the same [[Memo.memoizeValue]] discipline as global_rank's sampled
+    * bounds.
     */
   private[graft] def prefixRouteUseCount(spark: SparkSession, dir: String): Boolean =
-    Memo.memoizeValue(prefixRouteMemo, spark, dir) {
-      val prefix = memoize(prefixMemo, spark, dir)(prefixRows(spark, dir))
+    Memo.memoizeValue(spark, dir, "prefix_route_use_count") {
+      val prefix = prefixRows(spark, dir)
       val candMass = pairMass(
         prefix.groupBy(col("h")).agg(count(lit(1)).as("m")))
       val fullMass = pairMass(shingleFreq(spark, dir).select(col("df").as("m")))
       candMass * PrefixVerifyCostRatio > fullMass
     }
 
-  /** The rarest-prefix rows (doc_id, h, df) of every document. */
-  private def prefixRows(spark: SparkSession, dir: String): DataFrame = {
-    val exf = shinglePairsDf(spark, dir) // persisted (doc_id, h, df)
-    // Rarest-prefix selection via hash aggregate + per-row array sort/slice
-    // instead of round-2's row_number window: the window forced a sort-based
-    // WindowExec over the whole exploded table PLUS a separate sizes join;
-    // here one groupBy(doc_id) collects (df, h) structs, and the per-doc
-    // sort + prefix slice happen in-row. (doc_id, h) pairs are distinct so
-    // the (df, h) sort key is unique per doc — identical prefix set.
-    val n = size(col("sh"))
-    val prefixLen = (n - ceil(n * lit(NgramJaccardTau)) + 1).cast("int")
-    // (df, h) packed into one long (df·2^31 + h; h < P = 2^31-1, df
-    // clamped at 2^31-1): ascending long order = (df asc, h asc), so the
-    // collected array sorts with a primitive comparator instead of
-    // per-element struct comparisons. Losslessness needs only SOME fixed
-    // total order on shingles, so the clamp (which can only reorder
-    // ultra-common shingles away from strict rarity order) never loses a
-    // pair — rarity order is a candidate-count heuristic, not a
-    // correctness condition.
-    val packed = least(col("df"), lit(2147483647L)) * lit(2147483648L) + col("h")
-    // The pinned repartition doubles as the aggregation exchange (the
-    // groupBy reuses the hash partitioning): without it AQE coalesces the
-    // byte-tiny but sort-heavy per-doc collect to ONE task. df rides
-    // INSIDE the packed long, so the prefix rows recover it with a shift
-    // instead of re-joining the frequency table (the clamp only matters
-    // above 2^31-1 ≫ MaxShingleBucket, so hot/cold routing is unaffected).
-    exf
-      .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(packed)).as("sh"))
-      .select(col("doc_id"), explode(slice(col("sh"), lit(1), prefixLen)).as("p"))
-      .select(col("doc_id"), col("p").bitwiseAND(lit(2147483647L)).as("h"),
-        shiftrightunsigned(col("p"), 31).as("df"))
-  }
+  /** The rarest-prefix rows (doc_id, h, df) of every document, memoized —
+    * shared by the prefix-filter branch and the routing mass aggregate of
+    * [[ngramJaccardPrefix]]; linear in the corpus (Σ per-doc prefix
+    * lengths ≈ (1-τ)·|ex| rows).
+    */
+  private def prefixRows(spark: SparkSession, dir: String): DataFrame =
+    Memo.memoize(spark, dir, "prefix_rows") {
+      val exf = shinglePairsDf(spark, dir) // persisted (doc_id, h, df)
+      // Rarest-prefix selection via hash aggregate + per-row array sort/slice
+      // instead of round-2's row_number window: the window forced a sort-based
+      // WindowExec over the whole exploded table PLUS a separate sizes join;
+      // here one groupBy(doc_id) collects (df, h) structs, and the per-doc
+      // sort + prefix slice happen in-row. (doc_id, h) pairs are distinct so
+      // the (df, h) sort key is unique per doc — identical prefix set.
+      val n = size(col("sh"))
+      val prefixLen = (n - ceil(n * lit(NgramJaccardTau)) + 1).cast("int")
+      // (df, h) packed into one long (df·2^31 + h; h < P = 2^31-1, df
+      // clamped at 2^31-1): ascending long order = (df asc, h asc), so the
+      // collected array sorts with a primitive comparator instead of
+      // per-element struct comparisons. Losslessness needs only SOME fixed
+      // total order on shingles, so the clamp (which can only reorder
+      // ultra-common shingles away from strict rarity order) never loses a
+      // pair — rarity order is a candidate-count heuristic, not a
+      // correctness condition.
+      val packed = least(col("df"), lit(2147483647L)) * lit(2147483648L) + col("h")
+      // The pinned repartition doubles as the aggregation exchange (the
+      // groupBy reuses the hash partitioning): without it AQE coalesces the
+      // byte-tiny but sort-heavy per-doc collect to ONE task. df rides
+      // INSIDE the packed long, so the prefix rows recover it with a shift
+      // instead of re-joining the frequency table (the clamp only matters
+      // above 2^31-1 ≫ MaxShingleBucket, so hot/cold routing is unaffected).
+      exf
+        .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
+        .groupBy(col("doc_id"))
+        .agg(sort_array(collect_list(packed)).as("sh"))
+        .select(col("doc_id"), explode(slice(col("sh"), lit(1), prefixLen)).as("p"))
+        .select(col("doc_id"), col("p").bitwiseAND(lit(2147483647L)).as("h"),
+          shiftrightunsigned(col("p"), 31).as("df"))
+    }
 
   // ------------------------------------------------------------ decontaminate
   /** `decontaminate` — train/eval n-gram overlap detection, the standard
@@ -940,13 +904,12 @@ object DedupQueries {
     * aggregated-then-joined shapes like this one).
     */
   val BloomFpp = 0.01
-  private val bloomMemo = Memo.table()
 
   /** The serialized eval-set Bloom sketch (memoized build artifact; the
     * `count()` is build-time sketch sizing, not per-query work).
     */
   private[graft] def evalBloomBytes(spark: SparkSession, dir: String): Array[Byte] =
-    Memo.memoizeDisk(bloomMemo, spark, dir, "eval_bloom",
+    Memo.memoizeDisk(spark, dir, "eval_bloom",
       s"fpp=$BloomFpp EvalMod=$EvalMod") {
       val ev = evalShingles(spark, dir)
       val n = math.max(ev.count(), 1L)
@@ -1135,13 +1098,11 @@ object DedupQueries {
     * shallow (no checkpoint needed, unlike [[propagateMinLabels]]'s
     * data-dependent loop).
     */
-  private val prMemo = Memo.table()
-
   def pagerank(spark: SparkSession, dir: String): DataFrame =
     // The O(V) score table is an iterative index-BUILD artifact (exactly
     // like [[dedupCluster]]'s label table): the unrolled-iteration jobs run
     // once per (session, dir); steady-state invocations read the cache.
-    Memo.memoizeDisk(prMemo, spark, dir, "pagerank_scores",
+    Memo.memoizeDisk(spark, dir, "pagerank_scores",
       s"$mhConfigKey iters=$PrIters scale=$PrScale")(
       pagerankScores(
         dedupMinhash(spark, dir).select(col("doc_a").as("a"), col("doc_b").as("b")))
@@ -1272,16 +1233,13 @@ object DedupQueries {
     * windows partition by doc_id, whose partition size is bounded by
     * document LENGTH (not corpus size) — skew-free by construction.
     */
-  /** Memo for the positional gram table (doc_id, pos, h) — dup_spans
-    * references it twice (df aggregation + hit join); one persisted copy
-    * serves both, so the corpus is tokenized/exploded once per
-    * (session, dir), not once per plan reference.
-    */
-  private val posGramMemo = Memo.table()
-
   def dupSpans(spark: SparkSession, dir: String): DataFrame = {
     val k = DupSpanK
-    val pg = memoize(posGramMemo, spark, dir)(
+    // the positional gram table (doc_id, pos, h), memoized — referenced
+    // twice (df aggregation + hit join); one persisted copy serves both,
+    // so the corpus is tokenized/exploded once per (session, dir), not
+    // once per plan reference
+    val pg = Memo.memoize(spark, dir, "dup_spans_pos_grams")(
       Tables.docs(spark, dir)
         .select(col("doc_id"),
           posexplode(TextFns.wordNgrams(TextFns.tokens(col("text")), k)))

@@ -13,70 +13,78 @@ case class QueryDef(
     sql: Option[String],
     doc: String = "")
 
-/** Session-scoped memoize-and-persist for per-(session, dir) derived
-  * tables (shingle tables, signature tables, embedding norms): queries
-  * reference these subplans several times and repeated invocations (the
-  * bench loop, the verify dump) share one cache entry instead of leaking a
-  * new one per call. When the owning SparkContext ends every entry of that
-  * context is evicted, so the map never retains stopped sessions (or their
-  * cached blocks) for the JVM lifetime — a slow leak in a long-running
-  * multi-tenant driver otherwise. One listener per (memo, context);
-  * eviction is idempotent, and a stopped context memoizes nothing.
+/** The engine's one artifact store: every session-scoped derived value —
+  * persisted tables (shingle tables, signature tables, embedding norms),
+  * driver-side planning values, memoized plans and disk-backed index
+  * artifacts — lives in ONE map keyed by (session, key), where the key
+  * names the artifact and the input directory it was derived from.
+  * Queries reference these subplans several times and repeated
+  * invocations (the bench loop, the verify dump) share one entry instead
+  * of leaking a new one per call. When the owning SparkContext ends every
+  * entry of that context is evicted, so the map never retains stopped
+  * sessions (or their cached blocks) for the JVM lifetime — a slow leak in
+  * a long-running multi-tenant driver otherwise. One listener per
+  * context; eviction is idempotent, and a stopped context memoizes
+  * nothing.
+  *
+  * A `name` belongs to ONE call site and one value type: two sites
+  * sharing a name would read each other's entry. [[memoizeDisk]] names
+  * its entries by the artifact's own identity (label, config key), so its
+  * callers pass no name.
   */
 private[graft] object Memo {
-  type Table = scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]
-  def table(): Table = new Table
+  private val store =
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Any]
 
-  def memoize(memo: Table, spark: SparkSession, dir: String)(
+  def memoize(spark: SparkSession, dir: String, name: String)(
       build: => DataFrame): DataFrame =
-    memoizeValue(memo, spark, dir)(build.persist())
+    memoizeValue(spark, dir, name)(build.persist())
 
-  /** Memoize any per-(session, key) value with the lifecycle above and no
-    * `.persist()`: driver-side PLANNING values (split-point bounds, row
-    * counts) pulled to the driver once and embedded in plans as literals,
-    * and DataFrame PLANS (base-table loaders, the search plans), whose
-    * repeats share one analyzed logical plan — construction is paid once
-    * and the fixed expression ids keep codegen text byte-identical, so
-    * re-executions hit the generated-class cache. No row data is cached.
+  /** Memoize any per-(session, dir, name) value with the lifecycle above
+    * and no `.persist()`: driver-side PLANNING values (split-point bounds,
+    * row counts) pulled to the driver once and embedded in plans as
+    * literals, and DataFrame PLANS (base-table loaders, the search plans),
+    * whose repeats share one analyzed logical plan — construction is paid
+    * once and the fixed expression ids keep codegen text byte-identical,
+    * so re-executions hit the generated-class cache. No row data is
+    * cached.
     */
-  def memoizeValue[A](
-      memo: scala.collection.concurrent.TrieMap[(SparkSession, String), A],
-      spark: SparkSession, key: String)(build: => A): A = {
+  def memoizeValue[A](spark: SparkSession, dir: String, name: String)(
+      build: => A): A = {
     val sc = spark.sparkContext
     if (sc.isStopped) return build
-    val v = memo.getOrElseUpdate((spark, key), {
-      evictOnEnd(memo, sc)
+    val key = (spark, s"$name@$dir")
+    val v = store.getOrElseUpdate(key, {
+      evictOnEnd(sc)
       build
     })
     // Lost a race with the end event: its listener may already have run.
     if (sc.isStopped) {
-      memo.remove((spark, key))
-      evictRegistered.remove((memo, sc))
+      store.remove(key)
+      evictRegistered.remove(sc)
     }
-    v
+    v.asInstanceOf[A]
   }
 
-  /** (memo, context) pairs that already carry an eviction listener —
-    * round-18 advice fix: the round-17 form registered ONE LISTENER PER
-    * ENTRY, so sessions created via newSession()/cloneSession() on a
-    * long-lived context accumulated listeners (and their closures) until
-    * the context ended. One listener per (memo, context) now clears every
-    * key belonging to the ending context — including cloned sessions',
-    * whose cached blocks die with the shared context anyway.
+  /** Contexts that already carry an eviction listener — round-18 advice
+    * fix: the round-17 form registered ONE LISTENER PER ENTRY, so sessions
+    * created via newSession()/cloneSession() on a long-lived context
+    * accumulated listeners (and their closures) until the context ended.
+    * One listener per context now clears every key belonging to the
+    * ending context — including cloned sessions', whose cached blocks die
+    * with the shared context anyway.
     */
   private val evictRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(AnyRef, org.apache.spark.SparkContext)]()
+    java.util.concurrent.ConcurrentHashMap.newKeySet[org.apache.spark.SparkContext]()
 
-  private def evictOnEnd[A](
-      memo: scala.collection.concurrent.TrieMap[(SparkSession, String), A],
-      sc: org.apache.spark.SparkContext): Unit =
-    if (evictRegistered.add((memo, sc)))
+  private def evictOnEnd(sc: org.apache.spark.SparkContext): Unit =
+    if (evictRegistered.add(sc))
       sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
             e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          memo.keys.toSeq.filter(_._1.sparkContext eq sc)
-            .foreach(k => memo.remove(k): Unit)
-          evictRegistered.remove((memo, sc)): Unit
+          store.keys.toSeq.filter(_._1.sparkContext eq sc)
+            .foreach(k => store.remove(k): Unit)
+          evictRegistered.remove(sc): Unit
         }
       })
 
@@ -112,17 +120,16 @@ private[graft] object Memo {
     * atomically rename into place; a lost race reads the winner's table.
     * Cache root: SPARK_GRAFT_INDEX_CACHE (default /tmp/graft-index-cache);
     * set it empty to disable disk caching (in-memory memo still applies).
+    *
+    * In memory the entry is keyed by the artifact's own identity —
+    * (label, configKey, dir) — so one label built under two config keys
+    * (e.g. inverted lists at two list counts `C=`) holds two entries, each
+    * serving its own rows, and no caller can read back a table built for
+    * another operating point.
     */
-  /** `memoKey` extends the IN-MEMORY memo key beyond (session, dir) when
-    * one table legitimately varies by a build parameter the disk key
-    * already carries (e.g. ivfAssigned's list count `c`): without it a
-    * capacity sweep hitting an already-populated entry would silently get
-    * the first-built table back. The footprint/disk key still uses the
-    * real `dir` only.
-    */
-  def memoizeDisk(memo: Table, spark: SparkSession, dir: String, label: String,
-      configKey: String, memoKey: String = "")(build: => DataFrame): DataFrame =
-    memoizeValue(memo, spark, dir + memoKey)(
+  def memoizeDisk(spark: SparkSession, dir: String, label: String,
+      configKey: String)(build: => DataFrame): DataFrame =
+    memoizeValue(spark, dir, s"$label|$configKey")(
       diskCached(spark, dir, label, configKey)(build).persist())
 
   private def diskCached(spark: SparkSession, dir: String, label: String,

@@ -26,10 +26,8 @@ object SimilarityQueries {
     * the cache each reference re-scanned the parquet and re-derived
     * vector + norm — the dominant repeated cost in ann_ivf's round-3 plan.
     */
-  private val embMemo = Memo.table()
-
   private def emb(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoize(embMemo, spark, dir)(
+    Memo.memoize(spark, dir, "emb_vectors")(
       Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("label"), VectorFns.toDouble(col("embedding")).as("v"))
         .withColumn("nrm", VectorFns.norm(col("v"))))
@@ -116,6 +114,13 @@ object SimilarityQueries {
   val TopK = 10
   val MaxBroadcastQueries = 65536
 
+  /** [[countRows]], memoized: at 100 TB the embeddings table is ~10⁵
+    * files and a footer pass costs driver minutes — do it once per
+    * (session, dir), not per query construction.
+    */
+  private def estimatedRows(spark: SparkSession, dir: String): Long =
+    Memo.memoizeValue(spark, dir, "emb_rows")(countRows(spark, dir))
+
   /** Exact row count from the parquet FOOTERS — planning metadata only
     * (file listing + footer reads), NO Spark job. A bytes/row heuristic is
     * not safe here: a dictionary-/RLE-compressed file below the assumed
@@ -124,16 +129,6 @@ object SimilarityQueries {
     * chunking exists to protect. Footer record counts are exact regardless
     * of encoding.
     */
-  /** Footer-count cache: at 100 TB the embeddings table is ~10⁵ files and
-    * a footer pass costs driver minutes — do it once per (session, dir),
-    * not per query construction.
-    */
-  private val rowsMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]
-
-  private def estimatedRows(spark: SparkSession, dir: String): Long =
-    Memo.memoizeValue(rowsMemo, spark, dir)(countRows(spark, dir))
-
   private def countRows(spark: SparkSession, dir: String): Long = {
     val conf = spark.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
@@ -238,11 +233,6 @@ object SimilarityQueries {
       .select(col("query_id"), col("neighbor_id"), col("rank"), sim.as("sim"))
   }
 
-  /** `maxBroadcast` is the per-chunk query bound (default
-    * [[MaxBroadcastQueries]]); tests pass a tiny cap to force the
-    * multi-chunk path on small corpora, which the production bound never
-    * reaches at test scale factors.
-    */
   /** Disk-cached form of [[annTopk]] at the production operating point —
     * the recall=1 TRUTH TABLE is itself an index artifact: it is probed by
     * the declared `ann_topk` query, by [[annRecallReport]]'s ten
@@ -255,12 +245,15 @@ object SimilarityQueries {
     * chunk-count independent (the pmod classes partition the query set) —
     * tests that force the multi-chunk path call [[annTopk]] directly.
     */
-  private val exactTopkMemo = Memo.table()
-
   def annTopkCached(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoizeDisk(exactTopkMemo, spark, dir, "exact_topk",
+    Memo.memoizeDisk(spark, dir, "exact_topk",
       s"mod=$QueryMod,k=$TopK")(annTopk(spark, dir))
 
+  /** `maxBroadcast` is the per-chunk query bound (default
+    * [[MaxBroadcastQueries]]); tests pass a tiny cap to force the
+    * multi-chunk path on small corpora, which the production bound never
+    * reaches at test scale factors.
+    */
   def annTopk(spark: SparkSession, dir: String,
       maxBroadcast: Long = MaxBroadcastQueries): DataFrame = {
     val e = emb(spark, dir)
@@ -352,10 +345,9 @@ object SimilarityQueries {
     * recompiles per WARM report run). One analyzed plan per (session,
     * dir, search) fixes both; every action still executes from parquet.
     */
-  private val searchPlanMemo = Memo.table()
   private def planMemo(spark: SparkSession, dir: String, name: String)(
       build: => DataFrame): DataFrame =
-    Memo.memoizeValue(searchPlanMemo, spark, dir + "#" + name)(build)
+    Memo.memoizeValue(spark, dir, s"plan:$name")(build)
 
   def annLsh(spark: SparkSession, dir: String): DataFrame =
     planMemo(spark, dir, "ann_lsh")(annLshProbe(spark, dir, LshRadius, LshTables))
@@ -371,6 +363,10 @@ object SimilarityQueries {
     * vector-carrying `dropDuplicates` this replaces shipped ~1.1 KB per
     * pair and was one of the four sf10 stage deaths
     * (BENCH_sf10_r15.json.failed).
+    *
+    * The DEFAULT-setting table is memoized — [[annRecallReport]]'s scan
+    * count, computed once per (session, dir). Parameter sweeps
+    * (RECALL.md) bypass the memo.
     */
   private def lshCandidates(spark: SparkSession, dir: String, radius: Int,
       tables: Int = 1): DataFrame = {
@@ -378,15 +374,9 @@ object SimilarityQueries {
       .select(col("query_id"), col("neighbor_id"))
       .dropDuplicates("query_id", "neighbor_id")
     if (radius == LshRadius && tables == LshTables)
-      Memo.memoize(lshCandMemo, spark, dir)(build)
+      Memo.memoize(spark, dir, "lsh_candidates")(build)
     else build
   }
-
-  /** Memo for the DEFAULT-setting deduped LSH candidate-pair ids —
-    * [[annRecallReport]]'s scan count, computed once per (session, dir).
-    * Parameter sweeps (RECALL.md) bypass the memo.
-    */
-  private val lshCandMemo = Memo.table()
 
   private def lshCandidatesBuild(spark: SparkSession, dir: String, radius: Int,
       tables: Int = 1): DataFrame = {
@@ -555,14 +545,6 @@ object SimilarityQueries {
     * O(log diameter) rounds (pointer jumping), one shuffle join + min-agg
     * + jump join per round.
     */
-  private val embedClusterMemo = Memo.table()
-
-  private def embedClusterLabels(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoizeDisk(embedClusterMemo, spark, dir, "embed_cluster_labels",
-      s"CosTau=$CosTau SaltGrid=$SaltGrid")(
-      DedupQueries.propagateMinLabels(
-        similarPairs(spark, dir).select(col("a_id"), col("b_id"))))
-
   def dedupClusterEmbed(spark: SparkSession, dir: String): DataFrame = {
     val labels = embedClusterLabels(spark, dir)
     val cluster = coalesce(col("lbl"), col("vec_id"))
@@ -571,6 +553,12 @@ object SimilarityQueries {
       .select(col("vec_id"), cluster.as("cluster_id"),
         (cluster === col("vec_id")).as("is_canonical"))
   }
+
+  private def embedClusterLabels(spark: SparkSession, dir: String): DataFrame =
+    Memo.memoizeDisk(spark, dir, "embed_cluster_labels",
+      s"CosTau=$CosTau SaltGrid=$SaltGrid")(
+      DedupQueries.propagateMinLabels(
+        similarPairs(spark, dir).select(col("a_id"), col("b_id"))))
 
   /** Oracle: the same recursive-CTE transitive closure as dedupClusterSql,
     * over similarPairsSql's pair predicate (label block + rounded cosine τ).
@@ -654,49 +642,84 @@ object SimilarityQueries {
   private[graft] def strideOf(c: Int): Long =
     java.lang.Long.highestOneBit(c.toLong) * 2L
 
-  /** Memo for ann_recall_report's kmeans-IVF scanned-candidate count —
-    * one long of audit metadata shared by the report's three
-    * kmeans-list consumers (ivf_kmeans / ivfpq / ivfpq_rerank).
+  /** One IVF index, described once: its codebook (cidx, cv2, cn2) with
+    * cidx DENSE in [1, c], its list count `c`, and the labels of the disk
+    * artifacts built from it. Every IVF stage — inverted lists, probes,
+    * search, the hard-negative miner, the IVFADC chain, the balance and
+    * recall audits, and the streaming probe twins
+    * (`StreamingOps.annProbeStream`, which serve queries from the same
+    * artifacts a batch build job wrote) — takes the index VALUE, so a
+    * codebook can never meet another index's lists or list count.
+    *
+    * `tag` names the index in [[ivfBalance]] and in the in-memory keys of
+    * its derived tables; `lloyd` carries the artifacts that exist only
+    * over a Lloyd-refined codebook.
     */
-  private val kmScanCountMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]
+  private[graft] final case class IvfIndex(
+      tag: String,
+      c: (SparkSession, String) => Int,
+      codebook: (SparkSession, String) => DataFrame,
+      listsLabel: String,
+      lloyd: Option[LloydArtifacts] = None) {
+    /** The inverted lists (cidx, neighbor_id, cv, cn) — [[ivfAssigned]]. */
+    def lists(spark: SparkSession, dir: String): DataFrame =
+      ivfAssigned(spark, dir, this)
+  }
 
-  /** Same, for the scaled Lloyd codebook's probe lists (shared by the
-    * three capacity-law consumers: kmeans_scaled / ivfpq_scaled /
-    * ivfpq_rerank_scaled).
+  /** Disk labels of the artifacts built over a Lloyd codebook: the
+    * default-depth probe table ([[ivfProbes]]) and the IVFADC residual
+    * codebook and index ([[rpqCodebook]], [[ivfPqResIndex]]), whose
+    * config key `adcConfigKey` carries every tunable of both quantizers.
     */
-  private val kmScaledScanCountMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]
+  private[graft] final case class LloydArtifacts(probesLabel: String,
+      rpqCodebookLabel: String, resIndexLabel: String,
+      adcConfigKey: (SparkSession, String) => String)
 
-  /** Round-17 metadata memos: per-regime query counts and the remaining
-    * per-index scan counts (sampled-IVF, scaled-IVF, LSH) — each a 1-row
-    * deterministic aggregate over memoized artifacts, collected once per
-    * (session, dir, regime) and embedded in the recall report as a
-    * literal, exactly the [[kmScanCountMemo]] pattern.
+  /** The hash-sampled fixed-capacity index (`ann_ivf`). Its codebook is
+    * the index-BUILD artifact of IVF search (build the coarse quantizer
+    * once, probe it for every query batch): IvfC rows, persisted per
+    * (session, dir) so the assignment and probe branches (and repeated
+    * invocations) share one TakeOrdered+rank computation instead of
+    * re-deriving the codebook per reference.
     */
-  private val nQueriesMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]
-  private val ivfScanCountMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]
-  private val ivfScaledScanCountMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]
-  private val lshScanCountMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]
+  private[graft] val SampledIvf: IvfIndex = IvfIndex("sampled", (_, _) => IvfC,
+    (s, d) => Memo.memoize(s, d, "ivf_codebook:sampled")(sampledCodebook(s, d, IvfC)),
+    "ivf_lists_sampled")
 
-  /** Memo for the IVF codebook — the index-BUILD artifact of IVF search
-    * (build the coarse quantizer once, probe it for every query batch):
-    * IvfC rows, persisted per (session, dir) so the assignment and probe
-    * branches (and repeated invocations) share one TakeOrdered+rank
-    * computation instead of re-deriving the codebook per reference.
+  /** The hash-sampled capacity-law index (`ann_ivf_scaled`). */
+  private[graft] val ScaledIvf: IvfIndex = IvfIndex("scaled", scaledCOf,
+    (s, d) => Memo.memoize(s, d, "ivf_codebook:scaled")(
+      sampledCodebook(s, d, scaledCOf(s, d))),
+    "ivf_lists_scaled")
+
+  /** The Lloyd-refined fixed-capacity index (`ann_ivf_kmeans`, the IVFADC
+    * pair, `hard_negatives`). The codebook's config key has no `C=`:
+    * [[ivfConfigKey]] already carries IvfC.
     */
-  private val codebookMemo = Memo.table()
+  private[graft] val LloydIvf: IvfIndex = IvfIndex("lloyd", (_, _) => IvfC,
+    (s, d) => Memo.memoizeDisk(s, d, "km_codebook", ivfConfigKey)(
+      kmeansCodebookBuild(s, d, IvfC)),
+    "ivf_lists_kmeans",
+    Some(LloydArtifacts("ivf_probes_kmeans", "rpq_codebook", "ivfpq_res_index",
+      (_, _) => s"$ivfConfigKey $pqConfigKey")))
 
-  private def codebook(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoize(codebookMemo, spark, dir)(sampledCodebook(spark, dir, IvfC))
+  /** The Lloyd-refined capacity-law index (`ann_ivf_kmeans_scaled` and
+    * its IVFADC pair): the derived C rides every config key.
+    */
+  private[graft] val LloydScaledIvf: IvfIndex = IvfIndex("lloyd_scaled", scaledCOf,
+    (s, d) => {
+      val c = scaledCOf(s, d)
+      Memo.memoizeDisk(s, d, "km_codebook_scaled", s"$ivfConfigKey C=$c")(
+        kmeansCodebookBuild(s, d, c))
+    },
+    "ivf_lists_kmeans_scaled",
+    Some(LloydArtifacts("ivf_probes_kmeans_scaled", "rpq_codebook_scaled",
+      "ivfpq_res_index_scaled",
+      (s, d) => s"$ivfConfigKey $pqConfigKey C=${scaledCOf(s, d)}")))
 
   /** Hash-sampled codebook of `c` centroids — the shared builder behind
-    * the fixed-capacity [[codebook]] and the data-scaled
-    * [[scaledCodebookOf]]. `orderBy.limit(c)` is TakeOrderedAndProject; the
+    * the fixed-capacity [[SampledIvf]] and the data-scaled
+    * [[ScaledIvf]]. `orderBy.limit(c)` is TakeOrderedAndProject; the
     * dense-rank window runs over those c rows only (single tiny
     * partition).
     */
@@ -711,27 +734,27 @@ object SimilarityQueries {
   }
 
   def annIvf(spark: SparkSession, dir: String): DataFrame =
-    planMemo(spark, dir, "ann_ivf")(
-      ivfSearch(spark, dir, codebook(spark, dir), ivfListsMemo, "ivf_lists_sampled"))
+    planMemo(spark, dir, "ann_ivf")(annIvfProbe(spark, dir, SampledIvf))
 
-  /** Memos for the assigned inverted LISTS, one per codebook variant —
-    * the other half of the IVF index-build artifact (the codebook memo is
-    * the quantizer; this is the corpus partitioned by it). A real IVF
-    * index stores exactly this table; recomputing the n·C assignment on
-    * every probe batch would make "index" a misnomer. Keyed (session,
-    * dir) like every memo; a codebook change invalidates with the session.
+  /** Config fingerprints for the disk-cached index artifacts: every
+    * tunable the artifact's CONTENT depends on, so a retune invalidates
+    * exactly the affected cache entries (Memo.memoizeDisk). Probe-side
+    * constants (Nprobe, RerankR, QueryMod) are deliberately absent — they
+    * parameterize the search, not the index.
     */
-  private val ivfListsMemo = Memo.table()
-  private val kmListsMemo = Memo.table()
+  private def ivfConfigKey: String =
+    s"IvfC=$IvfC KmIters=$KmIters KmDim=$KmDim QScale=$QScale"
+  private def pqConfigKey: String =
+    s"PqM=$PqM PqK=$PqK PqIters=$PqIters KmDim=$KmDim QScale=$QScale"
 
-  /** The IVF search stage, shared by [[annIvf]] and [[annIvfKmeans]]:
-    * assignment of all corpus vectors to their nearest centroid (packed
-    * max_by hash aggregate), Nprobe probe lists per query, shuffle-hash
-    * probe join, exact top-k ranking. `cents` must be a (cidx, cv2, cn2)
-    * codebook with cidx DENSE in [1, IvfC].
-    */
   /** Corpus → centroid assignment, memoized: the inverted LISTS half of
-    * the IVF index. max_by aggregation instead of a row_number window —
+    * the IVF index (the codebook is the quantizer; this is the corpus
+    * partitioned by it). A real IVF index stores exactly this table;
+    * recomputing the n·C assignment on every probe batch would make
+    * "index" a misnomer. The config key carries the index's `C=$c`, so
+    * lists built at two list counts are two artifacts.
+    *
+    * max_by aggregation instead of a row_number window —
     * partial aggregation collapses the n·C broadcast-join rows to n
     * map-side, so only one row per vector crosses the exchange. The
     * (cos6 DESC, cidx ASC) order is packed into ONE long — cos6 is
@@ -747,29 +770,11 @@ object SimilarityQueries {
     * and (v, nrm) re-attach with one join against the persisted emb table
     * afterwards.
     */
-  /** Config fingerprints for the disk-cached index artifacts: every
-    * tunable the artifact's CONTENT depends on, so a retune invalidates
-    * exactly the affected cache entries (Memo.memoizeDisk). Probe-side
-    * constants (Nprobe, RerankR, QueryMod) are deliberately absent — they
-    * parameterize the search, not the index.
-    */
-  private def ivfConfigKey: String =
-    s"IvfC=$IvfC KmIters=$KmIters KmDim=$KmDim QScale=$QScale"
-  private def pqConfigKey: String =
-    s"PqM=$PqM PqK=$PqK PqIters=$PqIters KmDim=$KmDim QScale=$QScale"
-
-  /** Each (listsMemo, diskLabel) pair is bound to one codebook variant,
-    * whose `c` is a pure function of (variant, dir) — IvfC for the fixed
-    * tables, [[scaledCOf]] (memoized per session+dir) for the scaled
-    * ones. The in-memory memo key carries `C=$c` like the disk key does,
-    * so a capacity sweep passing a different c against a populated table
-    * builds its own entry instead of silently reading the first-built
-    * lists back.
-    */
-  private def ivfAssigned(spark: SparkSession, dir: String, cents: DataFrame,
-      listsMemo: Memo.Table, diskLabel: String, c: Int = IvfC): DataFrame =
-    Memo.memoizeDisk(listsMemo, spark, dir, diskLabel, s"$ivfConfigKey C=$c",
-      memoKey = s"#C=$c") {
+  private def ivfAssigned(spark: SparkSession, dir: String,
+      idx: IvfIndex): DataFrame = {
+    val cents = idx.codebook(spark, dir)
+    val c = idx.c(spark, dir)
+    Memo.memoizeDisk(spark, dir, idx.listsLabel, s"$ivfConfigKey C=$c") {
       val e = emb(spark, dir)
       // stride derived from the ACTUAL list count, not the fixed constant:
       // the scaled codebook's C is data-derived and can exceed IvfC
@@ -785,19 +790,7 @@ object SimilarityQueries {
         .select(col("cidx"), col("vec_id").as("neighbor_id"),
           col("v").as("cv"), col("nrm").as("cn"))
     }
-
-  /** Memo for the DEFAULT-depth kmeans probe lists — the query→list
-    * assignment table (O(n/QueryMod · Nprobe) rows, vectors included) that
-    * annIvfKmeans, the IVFADC pair, and ann_recall_report's scan count
-    * all derive. Their downstream column prunings differ, so Spark's
-    * ReuseExchange canonical-equality check can NOT dedupe the subtree
-    * across them — without this memo each consumer re-runs the
-    * query×centroid crossJoin + window. Production shape: a query batch
-    * is assigned to lists once, then probed against every index variant.
-    * Sweep paths (non-default nprobe, sampled codebook) bypass the memo.
-    */
-  private val kmProbesMemo = Memo.table()
-  private val kmScaledProbesMemo = Memo.table()
+  }
 
   /** Probe-side config fingerprint: unlike the LIST artifacts (whose
     * content the probe constants cannot touch), the probe tables' content
@@ -807,30 +800,38 @@ object SimilarityQueries {
   private def probesConfigKey(c: Long): String =
     s"$ivfConfigKey Nprobe=$Nprobe QueryMod=$QueryMod C=$c"
 
-  private def ivfProbes(spark: SparkSession, dir: String, cents: DataFrame,
-      nprobe: Int = Nprobe): DataFrame =
-    // Round-18 (verdict item 1): the two SHARED probe tables are
-    // disk-cached index artifacts like the lists/codebooks they pair with
-    // (a query batch is assigned to lists ONCE, then probed against every
-    // index variant — the assignment is part of the build side of the
-    // BUILD-vs-PROBE split). In-memory memoization (round 17) already
-    // shared one persisted copy per session; the disk artifact
-    // additionally (a) drops the per-cold-JVM query×centroid crossJoin +
-    // window rebuild, and (b) replaces the rebuild subtree under the
-    // InMemoryRelation with one parquet scan — fewer stages on the
-    // first-touch pass of every session.
-    if (nprobe == Nprobe && kmCodebookMemo.get((spark, dir)).exists(_ eq cents))
-      Memo.memoizeDisk(kmProbesMemo, spark, dir, "ivf_probes_kmeans",
-        probesConfigKey(IvfC))(
-        ivfProbesBuild(spark, dir, cents, nprobe))
-    else if (nprobe == Nprobe &&
-        kmScaledCodebookMemo.get((spark, dir)).exists(_ eq cents))
-      // the scaled Lloyd codebook's probe lists have the same three
-      // default-depth consumers (search, ADC tables, recall-report scan)
-      Memo.memoizeDisk(kmScaledProbesMemo, spark, dir, "ivf_probes_kmeans_scaled",
-        probesConfigKey(scaledCOf(spark, dir)))(
-        ivfProbesBuild(spark, dir, cents, nprobe))
-    else ivfProbesBuild(spark, dir, cents, nprobe)
+  /** The query→list assignment table (O(n/QueryMod · Nprobe) rows,
+    * vectors included). A Lloyd index's DEFAULT-depth table is memoized:
+    * its search, its IVFADC pair, and ann_recall_report's scan count all
+    * derive from it, and their downstream column prunings differ, so
+    * Spark's ReuseExchange canonical-equality check can NOT dedupe the
+    * subtree across them — without the memo each consumer re-runs the
+    * query×centroid crossJoin + window. Production shape: a query batch
+    * is assigned to lists once, then probed against every index variant.
+    * Sweep paths (non-default nprobe, sampled codebooks) bypass the memo.
+    *
+    * Round-18 (verdict item 1): the two SHARED probe tables are
+    * disk-cached index artifacts like the lists/codebooks they pair with
+    * (a query batch is assigned to lists ONCE, then probed against every
+    * index variant — the assignment is part of the build side of the
+    * BUILD-vs-PROBE split). In-memory memoization (round 17) already
+    * shared one persisted copy per session; the disk artifact
+    * additionally (a) drops the per-cold-JVM query×centroid crossJoin +
+    * window rebuild, and (b) replaces the rebuild subtree under the
+    * InMemoryRelation with one parquet scan — fewer stages on the
+    * first-touch pass of every session.
+    */
+  private def ivfProbes(spark: SparkSession, dir: String, idx: IvfIndex,
+      nprobe: Int = Nprobe): DataFrame = {
+    val cents = idx.codebook(spark, dir)
+    idx.lloyd match {
+      case Some(l) if nprobe == Nprobe =>
+        Memo.memoizeDisk(spark, dir, l.probesLabel,
+          probesConfigKey(idx.c(spark, dir)))(
+          ivfProbesBuild(spark, dir, cents, nprobe))
+      case _ => ivfProbesBuild(spark, dir, cents, nprobe)
+    }
+  }
 
   /** Probe lists (n/QueryMod query vectors): each query's top-Nprobe
     * centroids via a window over the already-filtered query×centroid
@@ -855,26 +856,22 @@ object SimilarityQueries {
     * broadcast inside the helpers is O(IvfC) — constant — by
     * construction.
     */
-  private def ivfCandidates(spark: SparkSession, dir: String, cents: DataFrame,
-      listsMemo: Memo.Table, diskLabel: String, nprobe: Int = Nprobe,
-      c: Int = IvfC): DataFrame =
-    ivfProbes(spark, dir, cents, nprobe).hint("shuffle_hash")
-      .join(ivfAssigned(spark, dir, cents, listsMemo, diskLabel, c), Seq("cidx"))
+  private def ivfCandidates(spark: SparkSession, dir: String, idx: IvfIndex,
+      nprobe: Int = Nprobe): DataFrame =
+    ivfProbes(spark, dir, idx, nprobe).hint("shuffle_hash")
+      .join(idx.lists(spark, dir), Seq("cidx"))
       .filter(col("query_id") =!= col("neighbor_id"))
 
-  private def ivfSearch(spark: SparkSession, dir: String, cents: DataFrame,
-      listsMemo: Memo.Table, diskLabel: String, nprobe: Int = Nprobe,
-      c: Int = IvfC): DataFrame =
-    ranked(spark, dir,
-      ivfCandidates(spark, dir, cents, listsMemo, diskLabel, nprobe, c))
-
-  /** Sweep hook (dev + property tests): [[annIvfKmeans]] at an arbitrary
-    * probe depth, sharing every memoized index artifact.
+  /** The IVF search stage behind the four `ann_ivf*` queries: assignment
+    * of all corpus vectors to their nearest centroid (packed max_by hash
+    * aggregate), `nprobe` probe lists per query, shuffle-hash probe join,
+    * exact top-k ranking. Also the sweep hook (RecallSweep, RECALL.md):
+    * any index at an arbitrary probe depth, sharing every memoized index
+    * artifact.
     */
-  private[graft] def annIvfKmeansProbe(spark: SparkSession, dir: String,
-      nprobe: Int): DataFrame =
-    ivfSearch(spark, dir, kmeansCodebook(spark, dir), kmListsMemo,
-      "ivf_lists_kmeans", nprobe)
+  private[graft] def annIvfProbe(spark: SparkSession, dir: String,
+      idx: IvfIndex, nprobe: Int = Nprobe): DataFrame =
+    ranked(spark, dir, ivfCandidates(spark, dir, idx, nprobe))
 
   /** The IVF search stage as oracle SQL — tc/assigned/probes/rank over a
     * codebook CTE named `$cent` with columns (cidx, cv, cn). Shared by the
@@ -960,39 +957,14 @@ object SimilarityQueries {
     math.max(4L, math.min(ScaledCMax.toLong, c)).toInt
   }
 
-  private val scaledCodebookMemo = Memo.table()
-  private val scaledListsMemo = Memo.table()
-
-  private def scaledCodebookOf(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoize(scaledCodebookMemo, spark, dir)(
-      sampledCodebook(spark, dir, scaledC(estimatedRows(spark, dir))))
-
   def annIvfScaled(spark: SparkSession, dir: String): DataFrame =
-    planMemo(spark, dir, "ann_ivf_scaled")(
-      ivfSearch(spark, dir, scaledCodebookOf(spark, dir), scaledListsMemo,
-        "ivf_lists_scaled", c = scaledCOf(spark, dir)))
+    planMemo(spark, dir, "ann_ivf_scaled")(annIvfProbe(spark, dir, ScaledIvf))
 
-  /** Sweep hooks (dev + RECALL.md): the scaled-capacity index at an
-    * arbitrary probe depth, sharing every memoized artifact; and the
-    * derived list count itself.
+  /** The capacity-law list count of the corpus at `dir` (also the
+    * RecallSweep grid bound).
     */
   private[graft] def scaledCOf(spark: SparkSession, dir: String): Int =
     scaledC(estimatedRows(spark, dir))
-
-  /** Index-artifact accessors for the streaming probe twin (the scaled
-    * analog of [[kmIndexCodebook]]/[[kmIndexLists]]).
-    */
-  private[graft] def scaledIndexCodebook(spark: SparkSession, dir: String): DataFrame =
-    scaledCodebookOf(spark, dir)
-
-  private[graft] def scaledIndexLists(spark: SparkSession, dir: String): DataFrame =
-    ivfAssigned(spark, dir, scaledCodebookOf(spark, dir), scaledListsMemo,
-      "ivf_lists_scaled", scaledCOf(spark, dir))
-
-  private[graft] def annIvfScaledProbe(spark: SparkSession, dir: String,
-      nprobe: Int): DataFrame =
-    ivfSearch(spark, dir, scaledCodebookOf(spark, dir), scaledListsMemo,
-      "ivf_lists_scaled", nprobe, scaledCOf(spark, dir))
 
   /** The scaled-capacity codebook as CTEs (`cap`/`cent0`/`cent`) — shared
     * by the ann_ivf_scaled oracle and the hard_negatives_scaled oracle so
@@ -1050,8 +1022,6 @@ object SimilarityQueries {
   val KmDim = 64
   val QScale = 1048576L // 2^20: |q_i| < 2^40-ish => 64-dim sums never overflow
 
-  private val kmCodebookMemo = Memo.table()
-
   /** (vec_id, v, nrm, qv) — emb plus the quantized integer vector. */
   private def quantized(e: DataFrame): DataFrame =
     e.withColumn("qv", transform(col("v"), x => floor(x * QScale + lit(0.5))))
@@ -1083,18 +1053,14 @@ object SimilarityQueries {
       .withColumn("cn", VectorFns.norm(col("cv")))
   }
 
-  private def kmeansCodebook(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoizeDisk(kmCodebookMemo, spark, dir, "km_codebook", ivfConfigKey)(
-      kmeansCodebookBuild(spark, dir, IvfC))
-
   /** The Lloyd build at an arbitrary list count — shared by the fixed
-    * [[kmeansCodebook]] (c = IvfC) and the capacity-law
-    * [[kmeansScaledCodebookOf]] (c = ⌊√(Nprobe·n)⌋).
+    * [[LloydIvf]] (c = IvfC) and the capacity-law [[LloydScaledIvf]]
+    * (c = ⌊√(Nprobe·n)⌋).
     */
   private def kmeansCodebookBuild(spark: SparkSession, dir: String,
       c: Int): DataFrame = {
     val eq = quantized(emb(spark, dir))
-    // Lloyd INIT = the same hash-sampled selection as [[codebook]], but
+    // Lloyd INIT = the same hash-sampled selection as [[SampledIvf]], but
     // with centroids in the QUANTIZED domain (cv = qv / 2^20) so
     // iteration 0's centroids are already integer-derived like every
     // later one (joining the existing codebook back by vector value
@@ -1112,22 +1078,7 @@ object SimilarityQueries {
   }
 
   def annIvfKmeans(spark: SparkSession, dir: String): DataFrame =
-    planMemo(spark, dir, "ann_ivf_kmeans")(
-      ivfSearch(spark, dir, kmeansCodebook(spark, dir), kmListsMemo,
-        "ivf_lists_kmeans"))
-
-  /** The two halves of the k-means IVF index, exposed for the STREAMING
-    * probe job ([[graft.streaming.StreamingOps.annProbeStream]]): built
-    * (or read back from the disk cache) exactly as the batch query
-    * builds them, so a probe process in a different JVM serves queries
-    * against the same artifacts the build job wrote — the build-vs-probe
-    * separation made literal.
-    */
-  private[graft] def kmIndexCodebook(spark: SparkSession, dir: String): DataFrame =
-    kmeansCodebook(spark, dir)
-  private[graft] def kmIndexLists(spark: SparkSession, dir: String): DataFrame =
-    ivfAssigned(spark, dir, kmeansCodebook(spark, dir), kmListsMemo,
-      "ivf_lists_kmeans")
+    planMemo(spark, dir, "ann_ivf_kmeans")(annIvfProbe(spark, dir, LloydIvf))
 
   /** The Lloyd-codebook CTE chain (embCte, eq with (vec_id, v, nrm, qv),
     * init c0/cq/cent0, KmIters refinement steps → `${pfx}cent$KmIters`) as
@@ -1223,25 +1174,9 @@ object SimilarityQueries {
     * SimilarityPropertySpec and audited (with scan fraction) in
     * [[annRecallReport]] and [[ivfBalance]].
     */
-  private val kmScaledCodebookMemo = Memo.table()
-  private val kmScaledListsMemo = Memo.table()
-
-  private def kmeansScaledCodebookOf(spark: SparkSession, dir: String): DataFrame = {
-    val c = scaledCOf(spark, dir)
-    Memo.memoizeDisk(kmScaledCodebookMemo, spark, dir, "km_codebook_scaled",
-      s"$ivfConfigKey C=$c")(kmeansCodebookBuild(spark, dir, c))
-  }
-
   def annIvfKmeansScaled(spark: SparkSession, dir: String): DataFrame =
     planMemo(spark, dir, "ann_ivf_kmeans_scaled")(
-      ivfSearch(spark, dir, kmeansScaledCodebookOf(spark, dir), kmScaledListsMemo,
-        "ivf_lists_kmeans_scaled", c = scaledCOf(spark, dir)))
-
-  /** Sweep hook: the scaled Lloyd index at arbitrary probe depth. */
-  private[graft] def annIvfKmeansScaledProbe(spark: SparkSession, dir: String,
-      nprobe: Int): DataFrame =
-    ivfSearch(spark, dir, kmeansScaledCodebookOf(spark, dir), kmScaledListsMemo,
-      "ivf_lists_kmeans_scaled", nprobe, scaledCOf(spark, dir))
+      annIvfProbe(spark, dir, LloydScaledIvf))
 
   val annIvfKmeansScaledSql: String =
     s"""WITH $kmScaledCentSqlCtes,
@@ -1355,9 +1290,6 @@ object SimilarityQueries {
   val PqMaxBroadcast: Int =
     math.max(1, MaxBroadcastQueries * KmDim / (PqM * PqK))
 
-  private val pqCodebookMemo = Memo.table()
-  private val pqCodesMemo = Memo.table()
-
   /** Lloyd iterations for the PQ sub-codebooks (the trained-quantizer
     * upgrade PQ gets, mirroring the IVF k-means codebook — a production
     * PQ always trains per-subspace centroids; the hash-sampled init alone
@@ -1381,7 +1313,7 @@ object SimilarityQueries {
     * is memoized index-BUILD cost.
     */
   private def pqCodebook(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoizeDisk(pqCodebookMemo, spark, dir, "pq_codebook", pqConfigKey)(
+    Memo.memoizeDisk(spark, dir, "pq_codebook", pqConfigKey)(
       trainPqCodebook(quantized(emb(spark, dir)).select(col("vec_id"), col("qv"))))
 
   /** The PQ training loop over ANY (vec_id, qv) integer-vector source —
@@ -1480,7 +1412,7 @@ object SimilarityQueries {
 
   /** The PQ index: one row per corpus vector, codes = array of PqM codes. */
   private def pqCodes(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoizeDisk(pqCodesMemo, spark, dir, "pq_codes", pqConfigKey)(
+    Memo.memoizeDisk(spark, dir, "pq_codes", pqConfigKey)(
       encodeCodes(pqDistances(quantized(emb(spark, dir)), pqCodebook(spark, dir))))
 
   /** Query-side ADC tables (query_id, tds): tds = the PqM×PqK distances
@@ -1642,7 +1574,7 @@ object SimilarityQueries {
     * list scans they replace.
     *
     * Residual arithmetic stays engine-exact end to end: centroids are the
-    * integer-derived doubles of [[kmeansCodebook]], re-quantized to
+    * integer-derived doubles of [[LloydIvf]]'s codebook, re-quantized to
     * integers by one exactly-rounded floor(cv·2^20 + 0.5) per component
     * ([[qCentroids]]), so residuals are differences of exact BIGINTs and
     * every sub-distance/adist/rank below them is associative integer
@@ -1655,49 +1587,31 @@ object SimilarityQueries {
     * residual sub-codebooks are ONE shared PqM×PqK table (Jégou §III's
     * memory-bounded choice), trained by the same [[trainPqCodebook]]
     * loop as ann_pq's, just on residual vectors.
+    *
+    * The IVFADC chain is ONE pipeline over either Lloyd index:
+    * [[LloydIvf]] (C = IvfC — the measured control half) here, and
+    * [[LloydScaledIvf]] (C = ⌊√(Nprobe·n)⌋) in [[annIvfPqScaled]].
+    * Residual training/encoding/ADC are shared verbatim, so the twins
+    * cannot drift in search semantics — only the coarse quantizer (and
+    * thus the probed fraction) differs.
     */
-  private val rpqCodebookMemo = Memo.table()
-  private val rIvfPqMemo = Memo.table()
-  private val residualsMemo = Memo.table()
-  private val rpqScaledCodebookMemo = Memo.table()
-  private val rIvfPqScaledMemo = Memo.table()
-  private val residualsScaledMemo = Memo.table()
+  def annIvfPq(spark: SparkSession, dir: String): DataFrame =
+    planMemo(spark, dir, "ann_ivfpq")(ivfPqAdc(spark, dir, LloydIvf, TopK))
 
-  /** The IVFADC chain is ONE parameterized pipeline over two coarse
-    * quantizers: `scaled = false` probes the fixed-capacity Lloyd
-    * codebook ([[kmeansCodebook]], C = IvfC — the measured control half),
-    * `scaled = true` the capacity-law one ([[kmeansScaledCodebookOf]],
-    * C = ⌊√(Nprobe·n)⌋). Residual training/encoding/ADC are shared
-    * verbatim, so the twins cannot drift in search semantics — only the
-    * coarse quantizer (and thus the probed fraction) differs.
+  /** The IVFADC artifacts of a Lloyd index — the chain is defined over
+    * Lloyd codebooks only.
     */
-  private def adcCents(spark: SparkSession, dir: String,
-      scaled: Boolean): DataFrame =
-    if (scaled) kmeansScaledCodebookOf(spark, dir) else kmeansCodebook(spark, dir)
-
-  private def adcLists(spark: SparkSession, dir: String,
-      scaled: Boolean): DataFrame =
-    if (scaled)
-      ivfAssigned(spark, dir, kmeansScaledCodebookOf(spark, dir),
-        kmScaledListsMemo, "ivf_lists_kmeans_scaled", scaledCOf(spark, dir))
-    else kmIndexLists(spark, dir)
-
-  /** Artifact-label suffix + config key per variant: the scaled
-    * artifacts' content depends on the derived C, so it rides the key.
-    */
-  private def adcSuffix(scaled: Boolean): String = if (scaled) "_scaled" else ""
-  private def adcConfigKey(spark: SparkSession, dir: String,
-      scaled: Boolean): String =
-    if (scaled) s"$ivfConfigKey $pqConfigKey C=${scaledCOf(spark, dir)}"
-    else s"$ivfConfigKey $pqConfigKey"
+  private def adcOf(idx: IvfIndex): LloydArtifacts =
+    idx.lloyd.getOrElse(throw new IllegalArgumentException(
+      s"IVFADC needs a Lloyd-refined index, got '${idx.tag}'"))
 
   /** The coarse centroids re-quantized to the integer domain (cidx, qc):
     * one exactly-rounded floor per component of an engine-identical
     * double → engine-identical BIGINTs.
     */
   private def qCentroids(spark: SparkSession, dir: String,
-      scaled: Boolean = false): DataFrame =
-    adcCents(spark, dir, scaled).select(col("cidx"),
+      idx: IvfIndex): DataFrame =
+    idx.codebook(spark, dir).select(col("cidx"),
       transform(col("cv2"), x => floor(x * QScale + lit(0.5))).as("qc"))
 
   /** (vec_id, cidx, qv): each corpus vector's exact integer residual
@@ -1706,11 +1620,11 @@ object SimilarityQueries {
     * and the encode pass); the derived artifacts are disk-cached.
     */
   private def residuals(spark: SparkSession, dir: String,
-      scaled: Boolean = false): DataFrame =
-    Memo.memoize(if (scaled) residualsScaledMemo else residualsMemo, spark, dir) {
-      adcLists(spark, dir, scaled).select(col("neighbor_id").as("vec_id"), col("cidx"))
+      idx: IvfIndex): DataFrame =
+    Memo.memoize(spark, dir, s"ivfadc_residuals:${idx.tag}") {
+      idx.lists(spark, dir).select(col("neighbor_id").as("vec_id"), col("cidx"))
         .join(quantized(emb(spark, dir)).select(col("vec_id"), col("qv")), Seq("vec_id"))
-        .join(broadcast(qCentroids(spark, dir, scaled)), Seq("cidx"))
+        .join(broadcast(qCentroids(spark, dir, idx)), Seq("cidx"))
         .select(col("vec_id"), col("cidx"),
           zip_with(col("qv"), col("qc"), (a, b) => a - b).as("qv"))
     }
@@ -1719,64 +1633,63 @@ object SimilarityQueries {
     * loop as [[pqCodebook]], run on residuals.
     */
   private def rpqCodebook(spark: SparkSession, dir: String,
-      scaled: Boolean = false): DataFrame =
-    Memo.memoizeDisk(if (scaled) rpqScaledCodebookMemo else rpqCodebookMemo,
-      spark, dir, s"rpq_codebook${adcSuffix(scaled)}",
-      adcConfigKey(spark, dir, scaled))(
-      trainPqCodebook(residuals(spark, dir, scaled).select(col("vec_id"), col("qv"))))
+      idx: IvfIndex): DataFrame = {
+    val adc = adcOf(idx)
+    Memo.memoizeDisk(spark, dir, adc.rpqCodebookLabel,
+      adc.adcConfigKey(spark, dir))(
+      trainPqCodebook(residuals(spark, dir, idx).select(col("vec_id"), col("qv"))))
+  }
 
   /** The IVFADC index: (cidx, neighbor_id, codes) with codes = the PqM
     * residual codes. One disk-cached artifact — at 100 TB this table IS
     * the in-memory index a probe fleet serves from.
     */
   private def ivfPqResIndex(spark: SparkSession, dir: String,
-      scaled: Boolean = false): DataFrame =
-    Memo.memoizeDisk(if (scaled) rIvfPqScaledMemo else rIvfPqMemo, spark, dir,
-      s"ivfpq_res_index${adcSuffix(scaled)}", adcConfigKey(spark, dir, scaled)) {
-      val r = residuals(spark, dir, scaled)
-      encodeCodes(pqDistances(r, rpqCodebook(spark, dir, scaled)))
+      idx: IvfIndex): DataFrame = {
+    val adc = adcOf(idx)
+    Memo.memoizeDisk(spark, dir, adc.resIndexLabel, adc.adcConfigKey(spark, dir)) {
+      val r = residuals(spark, dir, idx)
+      encodeCodes(pqDistances(r, rpqCodebook(spark, dir, idx)))
         .withColumnRenamed("vec_id", "neighbor_id")
         .join(r.select(col("vec_id").as("neighbor_id"), col("cidx")),
           Seq("neighbor_id"))
     }
+  }
 
   /** Query-side ADC tables, one per (query, probed list): the query's
     * residual against THAT list's centroid, tabulated against the
     * residual sub-codebooks. (query_id, cidx, tds) with tds laid out
     * exactly like [[pqQueryTables]]' so [[pqRank]] scores both variants.
+    *
+    * The DEFAULT-depth tables are memoized — shared by [[annIvfPq]]
+    * (k = TopK) and [[annIvfPqRerank]] (k = RerankR): the two consumers
+    * differ only in how many candidates they keep, so the per-(query,
+    * probed list) table build (residuals × sub-codebook scoring + the
+    * 4096-slot sort) is identical and O(nq · Nprobe) rows. Without the
+    * memo each consumer — and the recall report, which runs both —
+    * rebuilds it. Sweep paths (non-default nprobe) bypass.
     */
-  /** Memo for the DEFAULT-depth ADC query distance tables — shared by
-    * [[annIvfPq]] (k = TopK) and [[annIvfPqRerank]] (k = RerankR): the
-    * two consumers differ only in how many candidates they keep, so the
-    * per-(query, probed list) table build (residuals × sub-codebook
-    * scoring + the 4096-slot sort) is identical and O(nq · Nprobe) rows.
-    * Without the memo each consumer — and the recall report, which runs
-    * both — rebuilds it. Sweep paths (non-default nprobe) bypass.
-    */
-  private val rpqQtMemo = Memo.table()
-  private val rpqQtScaledMemo = Memo.table()
-
   private def rpqQueryTables(spark: SparkSession, dir: String,
-      nprobe: Int, scaled: Boolean = false): DataFrame =
+      nprobe: Int, idx: IvfIndex): DataFrame =
     if (nprobe == Nprobe)
-      Memo.memoize(if (scaled) rpqQtScaledMemo else rpqQtMemo, spark, dir)(
-        rpqQueryTablesBuild(spark, dir, nprobe, scaled))
-    else rpqQueryTablesBuild(spark, dir, nprobe, scaled)
+      Memo.memoize(spark, dir, s"ivfadc_query_tables:${idx.tag}")(
+        rpqQueryTablesBuild(spark, dir, nprobe, idx))
+    else rpqQueryTablesBuild(spark, dir, nprobe, idx)
 
   private def rpqQueryTablesBuild(spark: SparkSession, dir: String,
-      nprobe: Int, scaled: Boolean = false): DataFrame = {
+      nprobe: Int, idx: IvfIndex): DataFrame = {
     val qInt = quantized(emb(spark, dir)).filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("query_id"), col("qv").as("qvi"))
-    val qres = ivfProbes(spark, dir, adcCents(spark, dir, scaled), nprobe)
+    val qres = ivfProbes(spark, dir, idx, nprobe)
       .select(col("query_id"), col("cidx"))
       .join(qInt, Seq("query_id"))
-      .join(broadcast(qCentroids(spark, dir, scaled)), Seq("cidx"))
+      .join(broadcast(qCentroids(spark, dir, idx)), Seq("cidx"))
       .select(col("query_id"), col("cidx"),
         zip_with(col("qvi"), col("qc"), (a, b) => a - b).as("qv"))
     qres
       .select(col("query_id"), col("cidx"), col("qv"),
         explode(sequence(lit(0), lit(PqM - 1))).as("m"))
-      .crossJoin(broadcast(rpqCodebook(spark, dir, scaled)))
+      .crossJoin(broadcast(rpqCodebook(spark, dir, idx)))
       .select(col("query_id"), col("cidx"), col("m"), col("cj"),
         pqSubDist(col("qv"), col("qc"), col("m")).as("d"))
       .groupBy(col("query_id"), col("cidx"))
@@ -1788,7 +1701,7 @@ object SimilarityQueries {
 
   /** The IVFADC candidate stage shared by [[annIvfPq]] (k = TopK, result
     * ranks ARE the ADC ranks) and [[annIvfPqRerank]] (k = RerankR,
-    * candidates only) — and, via `scaled`, by their capacity-law twins:
+    * candidates only) — and, via `idx`, by their capacity-law twins:
     * per-(query, list) tables ⋈ (lists ⋈ residual codes) shuffle-hash on
     * cidx, ADC scoring, top-k per query. A candidate sits in exactly one
     * list and probe lists are distinct, so no (query, candidate) pair is
@@ -1804,8 +1717,8 @@ object SimilarityQueries {
     * n·40 B). The fat tds rows STREAM through the join and are consumed
     * by the adist projection in the same stage, so nothing wide is ever
     * buffered.
-    */
-  /** Round-18 measured dead end, kept on record (verdict item 1's "share
+    *
+    * Round-18 measured dead end, kept on record (verdict item 1's "share
     * one exchange subtree" lever): [[annIvfPq]] (rank ≤ TopK) is exactly
     * the PREFIX of [[annIvfPqRerank]]'s rank ≤ RerankR candidate ranking
     * (row_number over (adist ASC, neighbor_id ASC) is a deterministic
@@ -1830,22 +1743,19 @@ object SimilarityQueries {
     * would do it; weigh against the duplicated map stage actually
     * measured before building one.
     */
-  private def ivfPqAdc(spark: SparkSession, dir: String, k: Int,
-      nprobe: Int = Nprobe, scaled: Boolean = false): DataFrame =
-    pqRank(rpqQueryTables(spark, dir, nprobe, scaled)
-      .join(ivfPqResIndex(spark, dir, scaled).hint("shuffle_hash"), Seq("cidx"))
+  private def ivfPqAdc(spark: SparkSession, dir: String, idx: IvfIndex, k: Int,
+      nprobe: Int = Nprobe): DataFrame =
+    pqRank(rpqQueryTables(spark, dir, nprobe, idx)
+      .join(ivfPqResIndex(spark, dir, idx).hint("shuffle_hash"), Seq("cidx"))
       .filter(col("query_id") =!= col("neighbor_id")), k)
-
-  def annIvfPq(spark: SparkSession, dir: String): DataFrame =
-    planMemo(spark, dir, "ann_ivfpq")(ivfPqAdc(spark, dir, TopK))
 
   // ------------------------------------------------------- ann_ivfpq_scaled
   /** `ann_ivfpq_scaled` — IVFADC whose coarse quantizer follows the
     * balanced capacity law: the scaled Lloyd codebook
-    * ([[kmeansScaledCodebookOf]], C = ⌊√(Nprobe·n)⌋) prunes the candidate
+    * ([[LloydScaledIvf]], C = ⌊√(Nprobe·n)⌋) prunes the candidate
     * set to Nprobe lists of mean size √(n/Nprobe) — per-query scan √n,
     * not n — while the residual PqM×PqK sub-codebooks and the ADC scoring
-    * stay EXACTLY [[annIvfPq]]'s (shared `scaled`-parameterized chain;
+    * stay EXACTLY [[annIvfPq]]'s (the same chain over another index;
     * PQ's compression budget is per-vector and does not scale with the
     * corpus). This was the last fixed-capacity member class: round 14
     * measured the fixed IVFADC pair quadratic across decades (34 s at
@@ -1856,7 +1766,7 @@ object SimilarityQueries {
     * hash-checked end to end.
     */
   def annIvfPqScaled(spark: SparkSession, dir: String): DataFrame =
-    planMemo(spark, dir, "ann_ivfpq_scaled")(ivfPqAdc(spark, dir, TopK, scaled = true))
+    planMemo(spark, dir, "ann_ivfpq_scaled")(ivfPqAdc(spark, dir, LloydScaledIvf, TopK))
 
   /** The residual probe/assign/encode/ADC CTE chain shared by the IVFADC
     * oracle and its re-rank twin — and, via `centChain`, by their
@@ -1942,12 +1852,12 @@ object SimilarityQueries {
     */
   def annIvfPqRerankScaled(spark: SparkSession, dir: String): DataFrame =
     planMemo(spark, dir, "ann_ivfpq_rerank_scaled")(
-      annIvfPqRerankProbe(spark, dir, Nprobe, RerankR, scaled = true))
+      annIvfPqRerankProbe(spark, dir, Nprobe, RerankR, LloydScaledIvf))
 
   /** Sweep hook: the re-ranked IVFADC at arbitrary (nprobe, R). */
   private[graft] def annIvfPqRerankProbe(spark: SparkSession, dir: String,
-      nprobe: Int, r: Int, scaled: Boolean = false): DataFrame = {
-    val cand = ivfPqAdc(spark, dir, r, nprobe, scaled)
+      nprobe: Int, r: Int, idx: IvfIndex = LloydIvf): DataFrame = {
+    val cand = ivfPqAdc(spark, dir, idx, r, nprobe)
       .select(col("query_id"), col("neighbor_id"))
     val e = emb(spark, dir)
     val q = e.select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
@@ -1982,7 +1892,7 @@ object SimilarityQueries {
     * EVERY vector (not just the `ann_*` query sample) the top-[[HardNegK]]
     * most-similar vectors with a DIFFERENT label, found among the members
     * of its [[HardNegProbe]] nearest kmeans-IVF lists — the Lloyd index
-    * ([[kmeansCodebook]] + [[kmIndexLists]], the engine's best-measured
+    * ([[LloydIvf]], the engine's best-measured
     * candidate generator: recall@10 0.735 at 38% scan) reused as the
     * miner's candidate source, replacing the round-12 LSH radius-1 probes
     * (recall@1 0.150 at ~3.5% scan; the IVF lists at a comparable
@@ -2038,17 +1948,17 @@ object SimilarityQueries {
     */
   private[graft] def hardNegativesProbe(spark: SparkSession, dir: String,
       nprobe: Int): DataFrame =
-    hardNegMine(spark, dir, nprobe, kmeansCodebook(spark, dir),
-      kmIndexLists(spark, dir), IvfC)
+    hardNegMine(spark, dir, nprobe, LloydIvf)
 
-  /** The mining stage over an arbitrary (codebook, inverted lists, list
-    * count) index — shared by the committed kmeans-IVF miner and the
-    * scaled-capacity one so the probe/rank semantics cannot drift.
-    * `lists` must be the (cidx, neighbor_id, cv, cn) table built by
-    * [[ivfAssigned]] over the SAME `cents`/`c`.
+  /** The mining stage over any IVF index — shared by the committed
+    * kmeans-IVF miner and the scaled-capacity one so the probe/rank
+    * semantics cannot drift.
     */
   private def hardNegMine(spark: SparkSession, dir: String, nprobe: Int,
-      cents: DataFrame, lists: DataFrame, c: Int): DataFrame = {
+      idx: IvfIndex): DataFrame = {
+    val cents = idx.codebook(spark, dir)
+    val lists = idx.lists(spark, dir)
+    val c = idx.c(spark, dir)
     val e = emb(spark, dir)
     val stride = strideOf(c)
     val cos6c = round(cosine(col("v"), col("cv2"), col("nrm"), col("cn2")), 6)
@@ -2169,7 +2079,7 @@ object SimilarityQueries {
   /** `hard_negatives_scaled` — the capacity law applied to the MINER: the
     * same per-anchor cross-label top-[[HardNegK]] mining as
     * [[hardNegatives]], but over the scaled-capacity index
-    * (C = ⌊√(Nprobe·n)⌋ sampled lists, [[scaledCodebookOf]]) at
+    * (C = ⌊√(Nprobe·n)⌋ sampled lists, [[ScaledIvf]]) at
     * [[HardNegProbeScaled]] probe lists per anchor.
     *
     * Why it exists: the sf10 scale-up measured the fixed-capacity miner
@@ -2187,8 +2097,7 @@ object SimilarityQueries {
   val HardNegProbeScaled = 7
 
   def hardNegativesScaled(spark: SparkSession, dir: String): DataFrame =
-    hardNegMine(spark, dir, HardNegProbeScaled, scaledCodebookOf(spark, dir),
-      scaledIndexLists(spark, dir), scaledCOf(spark, dir))
+    hardNegMine(spark, dir, HardNegProbeScaled, ScaledIvf)
 
   val hardNegativesScaledSql: String =
     s"""WITH $embCte,
@@ -2318,18 +2227,12 @@ object SimilarityQueries {
     * has run); the report is three O(C)-row aggregations + a union.
     */
   def ivfBalance(spark: SparkSession, dir: String): DataFrame = {
-    def sizes(tag: String, cents: DataFrame, memo: Memo.Table,
-        diskLabel: String, c: Int = IvfC): DataFrame =
-      ivfAssigned(spark, dir, cents, memo, diskLabel, c)
+    val all = Seq(SampledIvf, LloydIvf, ScaledIvf, LloydScaledIvf).map { idx =>
+      idx.lists(spark, dir)
         .groupBy(col("cidx")).agg(count(lit(1)).as("n_vectors"))
-        .select(lit(tag).as("codebook"), col("cidx").cast("long").as("cidx"),
+        .select(lit(idx.tag).as("codebook"), col("cidx").cast("long").as("cidx"),
           col("n_vectors"))
-    val all = sizes("sampled", codebook(spark, dir), ivfListsMemo, "ivf_lists_sampled")
-      .unionAll(sizes("lloyd", kmeansCodebook(spark, dir), kmListsMemo, "ivf_lists_kmeans"))
-      .unionAll(sizes("scaled", scaledCodebookOf(spark, dir), scaledListsMemo,
-        "ivf_lists_scaled", scaledCOf(spark, dir)))
-      .unionAll(sizes("lloyd_scaled", kmeansScaledCodebookOf(spark, dir),
-        kmScaledListsMemo, "ivf_lists_kmeans_scaled", scaledCOf(spark, dir)))
+    }.reduce(_ unionAll _)
     val totals = Window.partitionBy(col("codebook"))
     all.withColumn("share",
       col("n_vectors").cast("double") /
@@ -2470,21 +2373,27 @@ object SimilarityQueries {
     // attach joins — all re-executed (and AQE-replanned) inside every
     // report run to reproduce constants that cannot change within a
     // session. Warm report runs now carry zero scan-frac stages.
-    def ivfScanCount(r: Regime, cents: DataFrame, listsMemo: Memo.Table,
-        diskLabel: String, c: Int = IvfC): Long = {
-      val sizes = ivfAssigned(spark, dir, cents, listsMemo, diskLabel, c)
-        .groupBy(col("cidx")).agg(count(lit(1)).as("sz"))
-      val raw = r.dec(ivfProbes(spark, dir, cents)).select(col("cidx"))
-        .join(broadcast(sizes), Seq("cidx"))
-        .agg(sum(col("sz")).as("raw"))
-        .select(col("raw")).head()
-      // sum over an empty join is NULL (a decimated query set whose probes
-      // match no list) — treat as 0 scanned rather than NPE (advice fix;
-      // the round-16 in-plan form propagated the NULL into scan_frac)
-      (if (raw.isNullAt(0)) 0L else raw.getLong(0)) - nQueriesVal(r)
-    }
+    //
+    // Each IVF scan count is one long of audit metadata per (index,
+    // regime); the Lloyd counts are shared by the three consumers of that
+    // index's probe lists (ivf_kmeans / ivfpq / ivfpq_rerank, and the
+    // scaled trio). The regime tag keys each entry so a sweep mixing
+    // sample targets in one session never crosses values.
+    def ivfScanCount(r: Regime, idx: IvfIndex): Long =
+      Memo.memoizeValue(spark, dir, s"recall_scan_count:${idx.tag}${r.memoTag}") {
+        val sizes = idx.lists(spark, dir)
+          .groupBy(col("cidx")).agg(count(lit(1)).as("sz"))
+        val raw = r.dec(ivfProbes(spark, dir, idx)).select(col("cidx"))
+          .join(broadcast(sizes), Seq("cidx"))
+          .agg(sum(col("sz")).as("raw"))
+          .select(col("raw")).head()
+        // sum over an empty join is NULL (a decimated query set whose probes
+        // match no list) — treat as 0 scanned rather than NPE (advice fix;
+        // the round-16 in-plan form propagated the NULL into scan_frac)
+        (if (raw.isNullAt(0)) 0L else raw.getLong(0)) - nQueriesVal(r)
+      }
     def nQueriesVal(r: Regime): Long =
-      Memo.memoizeValue(nQueriesMemo, spark, dir + r.memoTag)(
+      Memo.memoizeValue(spark, dir, s"recall_n_queries${r.memoTag}")(
         r.truth.agg(count(lit(1)).as("nq")).head().getLong(0))
     // corpus size: the embeddings table's exact parquet-footer row count
     // (the same planning metadata the broadcast chunking uses)
@@ -2499,7 +2408,8 @@ object SimilarityQueries {
     // LSH scan count: in sampled mode build candidates for the DECIMATED
     // query set directly (the memoized full candidate table is exactly
     // the Θ(n²/101) mass sampling avoids — don't materialize it to count)
-    val lshNcand: Long = Memo.memoizeValue(lshScanCountMemo, spark, dir + ctl.memoTag) {
+    val lshNcand: Long = Memo.memoizeValue(spark, dir,
+        s"recall_scan_count:lsh${ctl.memoTag}") {
       (if (sampled)
         lshCandidatesBuild(spark, dir, LshRadius, LshTables)
           .select(col("query_id"), col("neighbor_id")).filter(samplePred)
@@ -2507,20 +2417,10 @@ object SimilarityQueries {
       else lshCandidates(spark, dir, LshRadius, LshTables))
         .agg(count(lit(1)).as("ncand")).select(col("ncand")).head().getLong(0)
     }
-    // Three indexes (ivf_kmeans, ivfpq, ivfpq_rerank) share the SAME
-    // kmeans probe lists, so their scan count is one number; ditto the
-    // scaled-Lloyd trio. The regime tag keys each memo so a sweep mixing
-    // sample targets in one session never crosses values.
-    val kmNcand: Long = Memo.memoizeValue(kmScanCountMemo, spark, dir + ctl.memoTag)(
-      ivfScanCount(ctl, kmeansCodebook(spark, dir), kmListsMemo, "ivf_lists_kmeans"))
-    val kmScaledNcand: Long = Memo.memoizeValue(kmScaledScanCountMemo, spark, dir)(
-      ivfScanCount(full, kmeansScaledCodebookOf(spark, dir), kmScaledListsMemo,
-        "ivf_lists_kmeans_scaled", scaledCOf(spark, dir)))
-    val ivfNcand: Long = Memo.memoizeValue(ivfScanCountMemo, spark, dir + ctl.memoTag)(
-      ivfScanCount(ctl, codebook(spark, dir), ivfListsMemo, "ivf_lists_sampled"))
-    val ivfScaledNcand: Long = Memo.memoizeValue(ivfScaledScanCountMemo, spark, dir)(
-      ivfScanCount(full, scaledCodebookOf(spark, dir), scaledListsMemo,
-        "ivf_lists_scaled", scaledCOf(spark, dir)))
+    val kmNcand = ivfScanCount(ctl, LloydIvf)
+    val kmScaledNcand = ivfScanCount(full, LloydScaledIvf)
+    val ivfNcand = ivfScanCount(ctl, SampledIvf)
+    val ivfScaledNcand = ivfScanCount(full, ScaledIvf)
     val indexes: Seq[(String, DataFrame, Double, Regime)] = Seq(
       ("ann_lsh", annLsh(spark, dir), fracOf(ctl, lshNcand), ctl),
       ("ann_ivf", annIvf(spark, dir), fracOf(ctl, ivfNcand), ctl),

@@ -378,16 +378,14 @@ object TextQueries {
     */
   val TfidfK = 5
 
-  /** Memo for the per-doc term-frequency table (doc_id, term, tf) — the
+  /** The per-doc term-frequency table (doc_id, term, tf), memoized — the
     * shared base of [[tfidfTopterms]] and [[repetitionScore]] (and the
     * textbook first artifact of any term-statistics pipeline): one
     * explode + hash aggregation over the corpus per (session, dir)
     * instead of one per query invocation.
     */
-  private val tfMemo = Memo.table()
-
   private def termFreq(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoizeDisk(tfMemo, spark, dir, "term_freq", "tok=letter-runs")(
+    Memo.memoizeDisk(spark, dir, "term_freq", "tok=letter-runs")(
       words(spark, dir)
         .groupBy(col("doc_id"), col("word").as("term"))
         .agg(count(lit(1)).as("tf")))
@@ -836,10 +834,8 @@ object TextQueries {
     * partial-final hash agg per (session, dir), cached at vocabulary
     * scale (sublinear in the corpus, Heaps' law).
     */
-  private val sourceTermMemo = Memo.table()
-
   private def sourceTermFreq(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoizeDisk(sourceTermMemo, spark, dir, "source_term_freq",
+    Memo.memoizeDisk(spark, dir, "source_term_freq",
       "tok=letter-runs")(
       termFreq(spark, dir)
         .join(docs(spark, dir).select(col("doc_id"), col("source")), "doc_id")
@@ -1028,10 +1024,8 @@ object TextQueries {
     */
   val BpeRounds = 10
 
-  private val bpeTrainMemo = Memo.table()
-
   def bpeTrain(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoizeDisk(bpeTrainMemo, spark, dir, "bpe_merges",
+    Memo.memoizeDisk(spark, dir, "bpe_merges",
       s"rounds=$BpeRounds")(bpeTrainMerges(bpeDictionary(spark, dir)))
 
   /** The (word, c) training dictionary. */

@@ -965,13 +965,8 @@ object StreamingOps {
     * `emb` is any stream with (vec_id, embedding) — callers choose the
     * query population (tests use the batch query stride).
     */
-  def annProbeStream(spark: SparkSession, emb: DataFrame, dir: String): DataFrame = {
-    import graft.queries.SimilarityQueries
-    probeStreamOver(emb,
-      SimilarityQueries.kmIndexCodebook(spark, dir),
-      SimilarityQueries.kmIndexLists(spark, dir),
-      SimilarityQueries.IvfC)
-  }
+  def annProbeStream(spark: SparkSession, emb: DataFrame, dir: String): DataFrame =
+    probeStreamOver(spark, emb, dir, graft.queries.SimilarityQueries.LloydIvf)
 
   /** The scaled-capacity analog of [[annProbeStream]] — the 27th twin:
     * the SAME live retrieval stage served by the capacity-law index
@@ -984,22 +979,22 @@ object StreamingOps {
     * grows linearly. Batch agreement is pinned in StreamingSpec exactly
     * like the fixed twin's.
     */
-  def annProbeScaledStream(spark: SparkSession, emb: DataFrame, dir: String): DataFrame = {
-    import graft.queries.SimilarityQueries
-    probeStreamOver(emb,
-      SimilarityQueries.scaledIndexCodebook(spark, dir),
-      SimilarityQueries.scaledIndexLists(spark, dir),
-      SimilarityQueries.scaledCOf(spark, dir))
-  }
+  def annProbeScaledStream(spark: SparkSession, emb: DataFrame, dir: String): DataFrame =
+    probeStreamOver(spark, emb, dir, graft.queries.SimilarityQueries.ScaledIvf)
 
-  /** Shared probe stage over an arbitrary (codebook, lists, list count)
-    * IVF index; the packing stride derives from the ACTUAL list count,
-    * matching the batch assignment/probe packing.
+  /** Shared probe stage over any IVF index — its codebook, lists and
+    * list count come from the one index value, built (or read back from
+    * the disk cache) exactly as the batch query builds them; the packing
+    * stride derives from the ACTUAL list count, matching the batch
+    * assignment/probe packing.
     */
-  private def probeStreamOver(emb: DataFrame, codebook: DataFrame,
-      lists: DataFrame, listCount: Int): DataFrame = {
+  private def probeStreamOver(spark: SparkSession, emb: DataFrame, dir: String,
+      index: graft.queries.SimilarityQueries.IvfIndex): DataFrame = {
     import graft.functions.VectorFns
     import graft.queries.SimilarityQueries.{Nprobe, TopK}
+    val codebook = index.codebook(spark, dir)
+    val lists = index.lists(spark, dir)
+    val listCount = index.c(spark, dir)
     val stride = graft.queries.SimilarityQueries.strideOf(listCount)
     val cb1 = codebook
       .agg(collect_list(struct(col("cidx"), col("cv2"), col("cn2"))).as("cb"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -11,9 +11,9 @@ import graft.SparkTestBase
   * (`Memo.memoizeDisk`) — correctness-critical infrastructure: a stale
   * hit would silently serve a wrong index (wrong pair graph, wrong
   * codebook) to every downstream query, so each component of the content
-  * key is pinned here: a second process (simulated by a fresh in-memory
-  * memo table) must HIT, and any input-file or config change must MISS
-  * and rebuild.
+  * key is pinned here: a second process (simulated by a fresh session,
+  * whose view of the in-memory store is empty) must HIT, and any
+  * input-file or config change must MISS and rebuild.
   */
 class MemoDiskSpec extends SparkTestBase {
 
@@ -32,8 +32,9 @@ class MemoDiskSpec extends SparkTestBase {
     */
   private final class Builder(label: String, dir: String) {
     var builds = 0
-    def run(configKey: String = "k=1", memo: Memo.Table = Memo.table()): DataFrame =
-      Memo.memoizeDisk(memo, spark, dir, label, configKey) {
+    def run(configKey: String = "k=1",
+        session: SparkSession = spark.newSession()): DataFrame =
+      Memo.memoizeDisk(session, dir, label, configKey) {
         builds += 1
         spark.read.parquet(s"$dir/t").groupBy((col("id") % 2).as("parity"))
           .agg(sum(col("v")).as("sv"))
@@ -47,7 +48,7 @@ class MemoDiskSpec extends SparkTestBase {
     val b = new Builder(uniq("hit"), dir)
     val first = b.run().orderBy("parity").collect().map(_.toSeq)
     assert(b.builds === 1)
-    // fresh memo table = a cold JVM's view: must come back from disk
+    // fresh session = a cold JVM's view: must come back from disk
     val second = b.run().orderBy("parity").collect().map(_.toSeq)
     assert(b.builds === 1, "cold-process read must not re-run the build")
     assert(second.toSeq === first.toSeq)
@@ -75,6 +76,26 @@ class MemoDiskSpec extends SparkTestBase {
     // the original operating point is still cached
     b.run(configKey = "k=1").count()
     assert(b.builds === 2)
+  }
+
+  test("one label under two config keys in one session holds two entries") {
+    val dir = inputDir("twokeys")
+    val label = uniq("twokeys")
+    val session = spark.newSession()
+    var builds = 0
+    def run(m: Int): Long =
+      Memo.memoizeDisk(session, dir, label, s"m=$m") {
+        builds += 1
+        spark.read.parquet(s"$dir/t").select((col("v") * m).as("v"))
+      }.agg(sum("v")).collect()(0).getLong(0)
+    val base = (0L until 10L).map(_ * 3).sum
+    assert(run(1) === base)
+    assert(run(2) === 2 * base, "a second config key must not read the first key's rows")
+    assert(builds === 2)
+    // both entries stay live in the session's store
+    assert(run(1) === base)
+    assert(run(2) === 2 * base)
+    assert(builds === 2)
   }
 
   test("README documents the invalidation contract an operator relies on") {
