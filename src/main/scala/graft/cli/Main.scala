@@ -1,7 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.{Encoders, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.SparkSession
 
 import graft.operators.{Apps, MapReduce, MRApp}
 
@@ -18,15 +17,16 @@ import graft.operators.{Apps, MapReduce, MRApp}
   *   for the CLI path).
   *
   * Output: text files of `"<key> <value>"` lines under outDir — the
-  * reference's mr-out format (src/mr/worker.go:150-155).
-  *   - Default (no --partitions): ONE globally-sorted file, exactly the
-  *     sequential oracle's layout (src/main/mrsequential.go:59). Correct
-  *     for parity runs; single-file output is inherently driver-bounded.
-  *   - `--partitions N`: the production layout — N reduce buckets by the
-  *     reference's own FNV-1a `ihash(key) % N` (src/mr/worker.go:25-29),
-  *     each bucket written as its own file with keys sorted WITHIN the
-  *     bucket (the per-reduce-task order the reference workers produce).
-  *     No global sort, no single-partition collapse — scales with N.
+  * reference's mr-out format (src/mr/worker.go:150-155), one file per
+  * reduce bucket, EVERY bucket (empty ones included): bucket i holds the
+  * keys with the reference's own FNV-1a `ihash(key) % N`
+  * (src/mr/worker.go:25-29), sorted by key (the per-reduce-task order the
+  * reference workers produce). One shuffle per job, no global sort.
+  *   - Default (no --partitions): N = 1, ONE key-sorted file — exactly the
+  *     sequential oracle's layout (src/main/mrsequential.go:59). Like
+  *     `mrsequential`, the whole reduce then runs in one task.
+  *   - `--partitions N`: N buckets reduced in parallel — the layout that
+  *     scales.
   */
 object Main {
 
@@ -60,24 +60,15 @@ object Main {
       }
     })
 
-  /** Write the result in the reference's partitioned mr-out layout: one
-    * file per FNV-1a bucket — EVERY bucket, like the reference's
-    * per-reduce-task `mr-out-X` files (empty ones included) — with keys
-    * sorted within the bucket. Exposed for the spec; the dataflow is a
-    * single shuffle (`repartitionAndSortWithinPartitions`) — sort scope
-    * is the bucket, never the global result. Spark's text writer emits no
-    * part file for an empty partition, so missing bucket indices are
-    * touched as empty `part-NNNNN-empty.txt` files after the write (the
-    * RDD-backed dataset has no exchange above the partitioner, so task i
-    * writes exactly `part-i`).
+  /** Run `app` over `glob` into `outDir` as `nReduce` bucket files (see
+    * the object doc). Spark's text writer emits no part file for an empty
+    * partition, so missing bucket indices are touched as empty
+    * `part-NNNNN-empty.txt` files after the write (no exchange sits above
+    * `MapReduce.run`'s bucketing, so task i writes exactly `part-i`).
     */
-  private[graft] def writePartitioned(spark: SparkSession,
-      result: org.apache.spark.sql.Dataset[graft.operators.KV],
-      outDir: String, nReduce: Int): Unit = {
-    val lines = result.rdd.map(kv => (kv.key, kv.value))
-      .repartitionAndSortWithinPartitions(new MapReduce.FnvPartitioner(nReduce))
-      .map { case (k, v) => s"$k $v" }
-    spark.createDataset(lines)(Encoders.STRING)
+  private[graft] def run(spark: SparkSession, app: MRApp, outDir: String,
+      glob: String, nReduce: Int): Unit = {
+    MapReduce.toOutputLines(MapReduce.run(spark, glob, app, nReduce))
       .write.mode("overwrite").text(outDir)
     val present = Option(new java.io.File(outDir).listFiles()).toSeq.flatten
       .filter(_.getName.startsWith("part-"))
@@ -89,9 +80,9 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val (flags, pos) = args.partition(_.startsWith("--"))
-    val nPartitions: Option[Int] = flags.collectFirst {
+    val nReduce = flags.collectFirst {
       case f if f.startsWith("--partitions=") => f.stripPrefix("--partitions=").toInt
-    }
+    }.getOrElse(1)
     val badFlags = flags.filterNot(_.startsWith("--partitions="))
     if (pos.length != 3 || badFlags.nonEmpty) {
       System.err.println(
@@ -107,20 +98,10 @@ object Main {
     val spark = graft.GraftSession.configure(SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName(s"graft-$appName")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val result = MapReduce.run(spark, glob, app)
-    nPartitions match {
-      case Some(n) => writePartitioned(spark, result, outDir, n)
-      case None =>
-        MapReduce.toOutputLines(result)
-          .orderBy(col("value"))
-          .coalesce(1)
-          .write.mode("overwrite").text(outDir)
-    }
-    spark.stop()
+    try run(spark, app, outDir, glob, nReduce)
+    finally spark.stop()
   }
 }

@@ -13,9 +13,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Implemented as a native Catalyst `Expression` with code generation so it
   * participates in whole-stage codegen (no UDF serialization / boxing on the
   * hot path). Logically Spark's own Murmur3 hash partitioning is equivalent
-  * (SURVEY §1.3 — partition layout never affects query results); this exists
-  * for byte-level layout parity with the reference's `mr-<m>-<r>` files and
-  * as the engine's example of extending Catalyst.
+  * (SURVEY §1.3 — partition layout never affects query results);
+  * `MapReduce.run` buckets by this hash so its reduce output has the
+  * reference's `mr-out-<r>` layout.
   */
 object Fnv1a32 {
   final val OffsetBasis: Int = 0x811c9dc5

@@ -39,7 +39,7 @@ object Algebraic {
 
   /** Run an algebraic app: same dataflow as MapReduce.run, but the reduce
     * is a Spark `Aggregator` → `HashAggregate` with map-side combine
-    * instead of `mapGroups` over fully-gathered values.
+    * instead of a sorted reduce over fully-gathered values.
     */
   def run[B](spark: SparkSession, inputGlob: String, app: AlgebraicApp[B]): Dataset[KV] = {
     import spark.implicits._

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.Partitioner
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
-import graft.functions.Fnv1a32
+import graft.functions.Fnv1a32Expr
 
 /** One intermediate/output record of the MapReduce surface — the reference's
   * only data type (`KeyValue{Key,Value string}`, reference
@@ -32,16 +32,23 @@ trait MRApp extends Serializable {
   *
   *   whole-file scan (E1, `src/mr/worker.go:73-84`)
   *     → flatMap of the user map fn (E2, `src/mr/worker.go:83`)
-  *     → hash-partitioned shuffle (E3/E4, `src/mr/worker.go:86-113`)
-  *     → group values by key (E5, `src/mr/worker.go:139-148` — hash
-  *       grouping, NO sort, despite the Go function's name)
-  *     → user reduce per distinct key (E7, `src/mr/worker.go:150-155`)
+  *     → ONE shuffle straight into reduce bucket `ihash(key) % nReduce`
+  *       (E3/E4, `src/mr/worker.go:25-29,86-113`)
+  *     → sort each bucket by key (the paper's reduce-side sort, §3.1 step
+  *       5; `src/main/mrsequential.go:59` with nReduce = 1)
+  *     → user reduce once per run of equal keys (E5/E7,
+  *       `src/mr/worker.go:139-155`)
   *
-  * Scale note: `mapGroups` buffers one key's values at a time — exactly the
-  * reference reducer's own contract (it materializes `map[string][]string`).
-  * Algebraic apps (e.g. word count) should instead use the DataFrame
-  * queries in `graft.queries`, which keep partial aggregation + whole-stage
-  * codegen; this generic path exists for arbitrary, non-algebraic reducers.
+  * Reduce task i holds exactly bucket i, its keys in order, so a writer
+  * straight above `run` emits the reference's `mr-out-i` layout.
+  *
+  * Scale note: the reduce buffers one key's values at a time — exactly the
+  * reference reducer's own contract (it materializes `map[string][]string`);
+  * the sort spills to disk like any Spark sort. With nReduce = 1 the whole
+  * reduce is one task, as in `mrsequential`. Algebraic apps (e.g. word
+  * count) should instead use the DataFrame queries in `graft.queries` or
+  * [[Algebraic]], which keep partial aggregation + whole-stage codegen;
+  * this generic path exists for arbitrary, non-algebraic reducers.
   */
 object MapReduce {
 
@@ -58,15 +65,31 @@ object MapReduce {
       .as[(String, String)]
   }
 
-  /** Run an MRApp end-to-end; result is the unordered set of (key, value)
-    * output records (ordering contract: none — SURVEY §1.2).
+  /** Run an MRApp end-to-end; result partition i is reduce bucket
+    * `Fnv1a32(key) % nReduce` (a null key goes to bucket 0), sorted by key.
+    * The bucket is a `repartitionById` (REPARTITION_BY_NUM), which AQE
+    * never coalesces, so the layout holds after execution too.
     */
   def run(spark: SparkSession, inputGlob: String, app: MRApp, nReduce: Int = 10): Dataset[KV] = {
     import spark.implicits._
-    val pairs = wholeFiles(spark, inputGlob).flatMap { case (f, c) => app.map(f, c) }
-    pairs
-      .groupByKey(_.key)
-      .mapGroups((k, it) => KV(k, app.reduce(k, it.map(_.value).toSeq)))
+    val bucket = ColumnBridge.column(Fnv1a32Expr(ColumnBridge.expression(col("key")))) % nReduce
+    wholeFiles(spark, inputGlob).flatMap { case (f, c) => app.map(f, c) }
+      .repartitionById(nReduce, coalesce(bucket, lit(0)))
+      .sortWithinPartitions("key")
+      .mapPartitions(reduceRuns(app, _))
+  }
+
+  /** Call `app.reduce` once per run of equal keys in a key-sorted bucket,
+    * holding only the current key's values.
+    */
+  private def reduceRuns(app: MRApp, sorted: Iterator[KV]): Iterator[KV] = {
+    val in = sorted.buffered
+    Iterator.continually(in).takeWhile(_.hasNext).map { _ =>
+      val key = in.head.key
+      val values = List.newBuilder[String]
+      while (in.hasNext && in.head.key == key) values += in.next().value
+      KV(key, app.reduce(key, values.result()))
+    }
   }
 
   /** Render the reference's `mr-out-*` line format: `"<key> <value>"`
@@ -74,15 +97,6 @@ object MapReduce {
     */
   def toOutputLines(ds: Dataset[KV]): DataFrame =
     ds.toDF().select(concat_ws(" ", col("key"), col("value")).as("value"))
-
-  /** Exact reference partitioner: `ihash(key) % nReduce` with FNV-1a
-    * (`src/mr/worker.go:25-29,90`). Only needed for byte-level layout parity
-    * with the reference's intermediate files — results never depend on it.
-    */
-  class FnvPartitioner(val numPartitions: Int) extends Partitioner {
-    override def getPartition(key: Any): Int =
-      Fnv1a32.hash(key.toString.getBytes("UTF-8")) % numPartitions
-  }
 
   /** The reference's intermediate-file JSON encoding: one object per line,
     * capitalized field names (`{"Key":…,"Value":…}`, encoder at reference
@@ -101,18 +115,5 @@ object MapReduce {
       .json(path)
       .select(col("Key").as("key"), col("Value").as("value"))
       .as[KV]
-  }
-
-  /** Map-side output partitioned exactly like the reference's `mr-<m>-<r>`
-    * buckets (E3/E4) — debugging/parity aid.
-    */
-  def fnvPartitioned(spark: SparkSession, inputGlob: String, app: MRApp, nReduce: Int): Dataset[KV] = {
-    import spark.implicits._
-    val pairs = wholeFiles(spark, inputGlob).flatMap { case (f, c) => app.map(f, c) }
-    pairs.rdd
-      .map(kv => (kv.key, kv.value))
-      .partitionBy(new FnvPartitioner(nReduce))
-      .map { case (k, v) => KV(k, v) }
-      .toDS()
   }
 }

@@ -28,6 +28,16 @@ class AlgebraicSpec extends SparkTestBase {
     assert(algebraic === generic)
   }
 
+  test("generic wordcount equals algebraic wordcount") {
+    val glob = s"$corpusDir/pg-*.txt"
+    val generic = MapReduce.run(spark, glob, Apps.WordCount)
+      .collect().map(kv => kv.key -> kv.value).toMap
+    val algebraic = Algebraic.run(spark, glob, Algebraic.WordCountAlgebraic)
+      .collect().map(kv => kv.key -> kv.value).toMap
+    assert(generic.nonEmpty)
+    assert(generic === algebraic)
+  }
+
   test("algebraic plan uses hash aggregation (partial agg), not mapGroups") {
     val plan = Algebraic.run(spark, s"$corpusDir/pg-*.txt", Algebraic.WordCountAlgebraic)
       .queryExecution.executedPlan.toString

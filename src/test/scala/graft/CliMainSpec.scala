@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import graft.operators.{KV, MapReduce, MRApp}
+import graft.functions.Fnv1a32
+import graft.operators.{Apps, KV, MapReduce, MRApp}
 
 /** A user app that is NOT in cli.Main's builtin map — the reflective
   * plugin path's test subject (reference parity: `mrworker.go:32-49`
@@ -53,7 +54,7 @@ class CliMainSpec extends SparkTestBase {
     val result = MapReduce.run(spark, s"$inDir/*.txt", graft.operators.Apps.WordCount)
     val outDir = Files.createTempDirectory("cli-out").toString + "/parts"
     val n = 4
-    cli.Main.writePartitioned(spark, result, outDir, n)
+    cli.Main.run(spark, Apps.WordCount, outDir, s"$inDir/*.txt", n)
     val files = new java.io.File(outDir).listFiles()
       .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
     assert(files.length === n, s"expected one output file per reduce bucket")
@@ -67,7 +68,7 @@ class CliMainSpec extends SparkTestBase {
     // bucket assignment is the reference's own ihash(key) % n
     perFile.zipWithIndex.foreach { case (lines, i) =>
       lines.map(_.split(" ")(0)).foreach { k =>
-        assert(new MapReduce.FnvPartitioner(n).getPartition(k) === i,
+        assert(Fnv1a32.hash(k.getBytes("UTF-8")) % n === i,
           s"key $k landed in bucket $i, not its FNV bucket")
       }
     }
@@ -79,18 +80,32 @@ class CliMainSpec extends SparkTestBase {
   test("partitioned output: empty buckets still produce a (zero-byte) file, like the reference's mr-out-X") {
     val inDir = Files.createTempDirectory("cli-in-empty")
     Files.writeString(inDir.resolve("one.txt"), "solo solo solo")
-    val result = MapReduce.run(spark, s"$inDir/*.txt", graft.operators.Apps.WordCount)
     val outDir = Files.createTempDirectory("cli-out-empty").toString + "/parts"
     val n = 4 // one key -> exactly one non-empty bucket, three empty
-    cli.Main.writePartitioned(spark, result, outDir, n)
+    cli.Main.run(spark, Apps.WordCount, outDir, s"$inDir/*.txt", n)
     val files = new java.io.File(outDir).listFiles()
       .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
     assert(files.length === n, s"expected $n files (empty buckets included), got ${files.map(_.getName).toSeq}")
-    val soloBucket = new MapReduce.FnvPartitioner(n).getPartition("solo")
+    val soloBucket = Fnv1a32.hash("solo".getBytes("UTF-8")) % n
     files.zipWithIndex.foreach { case (f, i) =>
       val lines = scala.io.Source.fromFile(f).getLines().toVector
       if (i == soloBucket) assert(lines === Vector("solo 3"))
       else assert(lines.isEmpty, s"bucket $i should be empty, got $lines")
     }
+  }
+
+  test("default layout: one part file, key-sorted lines equal to the sequential fold") {
+    val inDir = Files.createTempDirectory("cli-in-default")
+    Files.writeString(inDir.resolve("a.txt"), "cat dog cat bird emu fox gnu hen")
+    Files.writeString(inDir.resolve("b.txt"), "dog dog bird ant cat fox ant yak")
+    val outDir = Files.createTempDirectory("cli-out-default").toString + "/one"
+    cli.Main.run(spark, Apps.WordCount, outDir, s"$inDir/*.txt", 1)
+    val files = new java.io.File(outDir).listFiles().filter(_.getName.startsWith("part-"))
+    assert(files.length === 1, files.map(_.getName).toSeq)
+    val lines = scala.io.Source.fromFile(files.head).getLines().toVector
+    val words = "cat dog cat bird emu fox gnu hen dog dog bird ant cat fox ant yak".split(" ")
+    val sequential = words.groupBy(identity).toVector.sortBy(_._1)
+      .map { case (w, ws) => s"$w ${ws.length}" }
+    assert(lines === sequential)
   }
 }

@@ -2,14 +2,22 @@ package graft
 
 import java.nio.file.Files
 
-import graft.operators.{Apps, KV, MapReduce}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+
+import graft.functions.Fnv1a32
+import graft.operators.{Apps, KV, MapReduce, MRApp}
 
 /** Unit + property tests of the generic MapReduce surface: results match a
   * naive single-threaded fold, are invariant to the reduce partition count,
-  * and the FNV partitioner places keys exactly like the reference
-  * (ihash(key) % nReduce, src/mr/worker.go:90).
+  * and `run` places keys exactly like the reference (ihash(key) % nReduce,
+  * src/mr/worker.go:90), sorted by key within each bucket.
   */
 class MapReduceSpec extends SparkTestBase {
+
+  /** Plan traversal that descends into AQE's final plan and query stages. */
+  private object Plans extends AdaptiveSparkPlanHelper
 
   private lazy val corpusDir: String = {
     val d = Files.createTempDirectory("mr-corpus")
@@ -37,23 +45,46 @@ class MapReduceSpec extends SparkTestBase {
   test("results are invariant to nReduce / shuffle partitioning") {
     val expected = naiveWordCount
     Seq(1, 5, 10).foreach { n =>
-      val got = MapReduce.fnvPartitioned(spark, s"$corpusDir/*.txt", Apps.WordCount, n)
-      // partitioned map output regrouped: same multiset of pairs
-      val regrouped = got.collect().groupBy(_.key)
-        .map { case (k, kvs) => k -> Apps.WordCount.reduce(k, kvs.map(_.value).toSeq) }
-      assert(regrouped === expected, s"nReduce=$n")
+      val got = MapReduce.run(spark, s"$corpusDir/*.txt", Apps.WordCount, n).collect()
+      // each key reduced exactly once, to the same pairs as the naive fold
+      assert(got.map(_.key).distinct.length === got.length, s"nReduce=$n")
+      assert(got.map(kv => kv.key -> kv.value).toMap === expected, s"nReduce=$n")
     }
   }
 
-  test("FnvPartitioner places every key at ihash(key) % nReduce") {
-    val n = 7
-    val rdd = MapReduce.fnvPartitioned(spark, s"$corpusDir/*.txt", Apps.WordCount, n).rdd
-    val misplaced = rdd
-      .mapPartitionsWithIndex { (idx, it) =>
-        it.filterNot(kv =>
-          graft.functions.Fnv1a32.hash(kv.key.getBytes("UTF-8")) % n == idx)
-      }.count()
-    assert(misplaced === 0)
+  test("run places every key at ihash(key) % nReduce, sorted within its bucket") {
+    Seq(1, 3, 7).foreach { n =>
+      val parts = MapReduce.run(spark, s"$corpusDir/*.txt", Apps.WordCount, n).rdd.glom().collect()
+      assert(parts.length === n)
+      parts.zipWithIndex.foreach { case (part, i) =>
+        val keys = part.map(_.key).toSeq
+        val misplaced = keys.filterNot(k => Fnv1a32.hash(k.getBytes("UTF-8")) % n == i)
+        assert(misplaced === Nil, s"n=$n bucket $i")
+        assert(keys === keys.sorted.distinct, s"n=$n bucket $i not key-sorted: $keys")
+      }
+      assert(parts.flatten.map(kv => kv.key -> kv.value).toMap === naiveWordCount, s"n=$n")
+    }
+  }
+
+  test("a null key is grouped as one key") {
+    val nullKeys = new MRApp {
+      def map(file: String, contents: String): IterableOnce[KV] =
+        Iterator(KV(null, "x"), KV("a", "y"), KV(null, "z"))
+      def reduce(key: String, values: Seq[String]): String = values.sorted.mkString("+")
+    }
+    val got = MapReduce.run(spark, s"$corpusDir/f1.txt", nullKeys, 3).collect()
+      .map(kv => s"${kv.key}=${kv.value}").sorted.mkString(",")
+    assert(got === "a=y,null=x+z")
+  }
+
+  test("run's executed plan has exactly one shuffle and no range partitioning") {
+    val ds = MapReduce.run(spark, s"$corpusDir/*.txt", Apps.WordCount, 3)
+    ds.collect()
+    val plan = ds.queryExecution.executedPlan
+    val shuffles = Plans.collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(shuffles.map(_.shuffleOrigin) === Seq(REPARTITION_BY_NUM), plan.toString)
+    assert(Plans.collect(plan) { case p if p.outputPartitioning.isInstanceOf[RangePartitioning] => p }
+      .isEmpty, plan.toString)
   }
 
   test("Indexer app: distinct docs per word, sorted CSV") {

@@ -74,9 +74,9 @@ class SchedulerCapabilitySpec extends SparkTestBase {
   test("rtiming: >=2 REDUCE tasks run concurrently (post-shuffle stage)") {
     // reference src/mrapps/rtiming.go:17-84 / src/main/test-mr.sh:174-195:
     // the probe lives in reduce(), which MapReduce.run executes inside the
-    // post-shuffle mapGroups stage — map-side concurrency (mtiming above)
-    // says nothing about it. 26 keys over 4 shuffle partitions with a
-    // 300 ms sleep per group force overlapping reduce tasks.
+    // post-shuffle sorted-bucket stage — map-side concurrency (mtiming
+    // above) says nothing about it. 26 keys over run's default 10 reduce
+    // buckets with a 300 ms sleep per key force overlapping reduce tasks.
     liveTasks.set(0); maxConcurrent.set(0)
     val probing = new graft.operators.MRApp {
       def map(file: String, contents: String): IterableOnce[graft.operators.KV] =
