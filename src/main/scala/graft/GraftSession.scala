@@ -5,14 +5,13 @@ import org.apache.spark.sql.SparkSession
 /** Single source of truth for the session configuration the engine
   * REQUIRES to run correctly and to survive its measured scale-ups.
   *
-  * Every graft entry point (Verify, the dev mains, the CLI, the test
-  * base) builds its session through [[configure]];
+  * Every graft entry point (Verify, GenScale, the CLI, the test base)
+  * builds its session through [[configure]];
   * an EMBEDDER with an existing session calls `GraftSession(spark)` once
   * before invoking anything in `SparkEntry.queries` — it applies the
   * runtime-settable subset and diagnoses any static (JVM-wide) conf that
-  * was fixed to an incompatible value at first-session creation (warning
-  * by default — the static conf is performance-only; `requireStatic =
-  * true` opts into fail-fast).
+  * was fixed to an incompatible value at first-session creation (a
+  * warning — the static conf is performance-only).
   *
   * Why each conf (evidence in BASELINE.md / bench artifacts):
   *
@@ -98,22 +97,14 @@ object GraftSession {
     * confs, verifies the static ones. Returns the same session.
     *
     * The one static conf today (codegen cache size) affects SPEED only,
-    * never results — so the default is to WARN on mismatch rather than
-    * reject every embedder whose first session left it unset. Pass
-    * `requireStatic = true` to fail fast instead (a perf-regression-
-    * intolerant deployment that wants the misconfiguration surfaced as an
-    * error at startup, not as seconds-per-plan later).
-    *
-    * @throws IllegalStateException if `requireStatic` and a static conf is
-    *   incompatible — the embedder must set it on the FIRST SparkSession
-    *   of the JVM (static confs cannot change later).
+    * never results — so a mismatch is a WARNING rather than a rejection
+    * of every embedder whose first session left it unset.
     */
-  def apply(spark: SparkSession, requireStatic: Boolean = false): SparkSession = {
+  def apply(spark: SparkSession): SparkSession = {
     runtimeConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     staticConfs.foreach { case (k, v) =>
       staticConfError(k, v, spark.conf.getOption(k)).foreach { msg =>
-        if (requireStatic) throw new IllegalStateException(msg)
-        else System.err.println(s"[graft] WARNING: $msg — continuing (performance-only)")
+        System.err.println(s"[graft] WARNING: $msg — continuing (performance-only)")
       }
     }
     spark
@@ -140,8 +131,4 @@ object GraftSession {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.ui.enabled", "false"))
-
-  /** `SPARK_GRAFT_CPUS` with a tool-appropriate default. */
-  def envCpus(default: Int): Int =
-    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(default)
 }

@@ -78,19 +78,35 @@ object Main {
     }
   }
 
-  def main(args: Array[String]): Unit = {
+  /** A parsed command line: app name, output dir, input glob, bucket count. */
+  private[graft] case class Args(app: String, outDir: String, glob: String, nReduce: Int)
+
+  /** Exactly three positional arguments and at most one
+    * `--partitions=N` with N a positive integer (default 1); None for
+    * anything else. Pure, so a bad command line is rejected before any
+    * session starts.
+    */
+  private[graft] def parseArgs(args: Seq[String]): Option[Args] = {
     val (flags, pos) = args.partition(_.startsWith("--"))
-    val nReduce = flags.collectFirst {
-      case f if f.startsWith("--partitions=") => f.stripPrefix("--partitions=").toInt
-    }.getOrElse(1)
-    val badFlags = flags.filterNot(_.startsWith("--partitions="))
-    if (pos.length != 3 || badFlags.nonEmpty) {
+    val nReduce = flags match {
+      case Seq() => Some(1)
+      case Seq(f) if f.startsWith("--partitions=") =>
+        f.stripPrefix("--partitions=").toIntOption.filter(_ > 0)
+      case _ => None
+    }
+    (pos, nReduce) match {
+      case (Seq(app, outDir, glob), Some(n)) => Some(Args(app, outDir, glob, n))
+      case _ => None
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val Args(appName, outDir, glob, nReduce) = parseArgs(args.toSeq).getOrElse {
       System.err.println(
         s"usage: graft.cli.Main <${apps.keys.mkString("|")}|fqcn-of-MRApp> " +
           "<outDir> <inputGlob> [--partitions=N]")
       sys.exit(2)
     }
-    val Array(appName, outDir, glob) = pos
     val app = try resolveApp(appName) catch {
       case e: IllegalArgumentException => System.err.println(e.getMessage); sys.exit(2)
     }

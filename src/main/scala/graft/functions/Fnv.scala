@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, IntegerType}
@@ -32,11 +31,6 @@ object Fnv1a32 {
     }
     h & 0x7fffffff
   }
-
-  /** Register `fnv1a32(str)` for SQL / `call_function` use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fnv1a32", exprs => Fnv1a32Expr(exprs.head), "built-in")
 }
 
 case class Fnv1a32Expr(child: Expression) extends UnaryExpression {

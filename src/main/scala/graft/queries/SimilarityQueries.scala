@@ -350,49 +350,45 @@ object SimilarityQueries {
     Memo.memoizeValue(spark, dir, s"plan:$name")(build)
 
   def annLsh(spark: SparkSession, dir: String): DataFrame =
-    planMemo(spark, dir, "ann_lsh")(annLshProbe(spark, dir, LshRadius, LshTables))
+    planMemo(spark, dir, "ann_lsh")(ranked(spark, dir, lshCandidatesBuild(spark, dir)))
 
-  /** DEDUPED candidate-pair IDS of the (radius, tables)-parameterized
-    * LSH search — the exact-scored candidate set [[annRecallReport]]
-    * counts (the same set the RECALL.md "~X% scanned" figures
-    * describe). Ids only, deduped: the SCORING pass no longer consumes
-    * this stage (the distinct-top-k aggregate inside [[ranked]] absorbs
-    * multi-table duplicates, so [[annLshProbe]] feeds the raw bucket
-    * join straight into it), and pruning the vectors here keeps the
-    * distinct exchange at 16 B per candidate pair — the
-    * vector-carrying `dropDuplicates` this replaces shipped ~1.1 KB per
-    * pair and was one of the four sf10 stage deaths
-    * (BENCH_sf10_r15.json.failed).
+  /** DEDUPED candidate-pair IDS of the LSH search — the exact-scored
+    * candidate set [[annRecallReport]] counts (the same set the
+    * RECALL.md "~X% scanned" figures describe). Ids only, deduped: the
+    * SCORING pass no longer consumes this stage (the distinct-top-k
+    * aggregate inside [[ranked]] absorbs multi-table duplicates, so
+    * [[annLsh]] feeds the raw bucket join straight into it), and
+    * pruning the vectors here keeps the distinct exchange at 16 B per
+    * candidate pair — the vector-carrying `dropDuplicates` this
+    * replaces shipped ~1.1 KB per pair and was one of the four sf10
+    * stage deaths (BENCH_sf10_r15.json.failed).
     *
-    * The DEFAULT-setting table is memoized — [[annRecallReport]]'s scan
-    * count, computed once per (session, dir). Parameter sweeps
-    * (RECALL.md) bypass the memo.
+    * The table is memoized — [[annRecallReport]]'s scan count, computed
+    * once per (session, dir).
     */
-  private def lshCandidates(spark: SparkSession, dir: String, radius: Int,
-      tables: Int = 1): DataFrame = {
-    def build = lshCandidatesBuild(spark, dir, radius, tables)
+  private def lshCandidates(spark: SparkSession, dir: String): DataFrame =
+    Memo.memoize(spark, dir, "lsh_candidates")(lshCandidatesBuild(spark, dir)
       .select(col("query_id"), col("neighbor_id"))
-      .dropDuplicates("query_id", "neighbor_id")
-    if (radius == LshRadius && tables == LshTables)
-      Memo.memoize(spark, dir, "lsh_candidates")(build)
-    else build
-  }
+      .dropDuplicates("query_id", "neighbor_id"))
 
-  private def lshCandidatesBuild(spark: SparkSession, dir: String, radius: Int,
-      tables: Int = 1): DataFrame = {
-    val masks = lshProbeMasks(radius)
+  /** The raw LSH bucket join at the committed ([[LshRadius]],
+    * [[LshTables]]) operating point: one row per (query, neighbor, table)
+    * match.
+    */
+  private def lshCandidatesBuild(spark: SparkSession, dir: String): DataFrame = {
+    val masks = lshProbeMasks(LshRadius)
     // per-table buckets computed ONCE per row, before the probe explode
     val withB = emb(spark, dir).withColumn("bs", array(
-      (0 until tables).map(t => VectorFns.axisLshBucketAt(col("v"), LshBits, t * LshBits)): _*))
+      (0 until LshTables).map(t => VectorFns.axisLshBucketAt(col("v"), LshBits, t * LshBits)): _*))
     val q = withB.filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"),
-        explode(array((for { t <- 0 until tables; m <- masks } yield
+        explode(array((for { t <- 0 until LshTables; m <- masks } yield
           struct(lit(t).as("t"), element_at(col("bs"), t + 1).bitwiseXOR(lit(m)).as("b"))): _*)).as("p"))
       .select(col("query_id"), col("qv"), col("qn"),
         col("p.t").as("qtbl"), col("p.b").as("pb"))
     val c = withB
       .select(col("vec_id").as("neighbor_id"), col("v").as("cv"), col("nrm").as("cn"),
-        explode(array((0 until tables).map(t =>
+        explode(array((0 until LshTables).map(t =>
           struct(lit(t).as("t"), element_at(col("bs"), t + 1).as("b"))): _*)).as("p"))
       .select(col("neighbor_id"), col("cv"), col("cn"),
         col("p.t").as("ctbl"), col("p.b").as("cb"))
@@ -418,10 +414,6 @@ object SimilarityQueries {
       col("qtbl") === col("ctbl") && col("pb") === col("cb") &&
         col("query_id") =!= col("neighbor_id"))
   }
-
-  def annLshProbe(spark: SparkSession, dir: String, radius: Int,
-      tables: Int = 1): DataFrame =
-    ranked(spark, dir, lshCandidatesBuild(spark, dir, radius, tables))
 
   private val bucketSql: String =
     (0 until LshBits)
@@ -599,8 +591,8 @@ object SimilarityQueries {
     * the result oracle-checkable.
     */
   /** Nprobe=24 of 64 lists scans ~38% of the corpus per query — the
-    * operating point from the committed RECALL.md sweep (RecallSweep at
-    * sf0.1): recall@10 0.735 (ann_ivf_kmeans) at flat measured probe cost.
+    * operating point from the committed RECALL.md sweep (sf0.1):
+    * recall@10 0.735 (ann_ivf_kmeans) at flat measured probe cost.
     * The test corpus is near-uniform on the sphere, so recall tracks the
     * scanned fraction and its marginal efficiency DECLINES past this
     * point (16→24 buys +0.165, 24→32 only +0.130 for the same +12.5%
@@ -801,14 +793,14 @@ object SimilarityQueries {
     s"$ivfConfigKey Nprobe=$Nprobe QueryMod=$QueryMod C=$c"
 
   /** The query→list assignment table (O(n/QueryMod · Nprobe) rows,
-    * vectors included). A Lloyd index's DEFAULT-depth table is memoized:
+    * vectors included). A Lloyd index's table is memoized:
     * its search, its IVFADC pair, and ann_recall_report's scan count all
     * derive from it, and their downstream column prunings differ, so
     * Spark's ReuseExchange canonical-equality check can NOT dedupe the
     * subtree across them — without the memo each consumer re-runs the
     * query×centroid crossJoin + window. Production shape: a query batch
     * is assigned to lists once, then probed against every index variant.
-    * Sweep paths (non-default nprobe, sampled codebooks) bypass the memo.
+    * The hash-sampled codebooks' tables are rebuilt per use.
     *
     * Round-18 (verdict item 1): the two SHARED probe tables are
     * disk-cached index artifacts like the lists/codebooks they pair with
@@ -821,15 +813,13 @@ object SimilarityQueries {
     * InMemoryRelation with one parquet scan — fewer stages on the
     * first-touch pass of every session.
     */
-  private def ivfProbes(spark: SparkSession, dir: String, idx: IvfIndex,
-      nprobe: Int = Nprobe): DataFrame = {
+  private def ivfProbes(spark: SparkSession, dir: String, idx: IvfIndex): DataFrame = {
     val cents = idx.codebook(spark, dir)
     idx.lloyd match {
-      case Some(l) if nprobe == Nprobe =>
+      case Some(l) =>
         Memo.memoizeDisk(spark, dir, l.probesLabel,
-          probesConfigKey(idx.c(spark, dir)))(
-          ivfProbesBuild(spark, dir, cents, nprobe))
-      case _ => ivfProbesBuild(spark, dir, cents, nprobe)
+          probesConfigKey(idx.c(spark, dir)))(ivfProbesBuild(spark, dir, cents))
+      case _ => ivfProbesBuild(spark, dir, cents)
     }
   }
 
@@ -837,15 +827,15 @@ object SimilarityQueries {
     * centroids via a window over the already-filtered query×centroid
     * join — tiny input.
     */
-  private def ivfProbesBuild(spark: SparkSession, dir: String, cents: DataFrame,
-      nprobe: Int = Nprobe): DataFrame = {
+  private def ivfProbesBuild(spark: SparkSession, dir: String,
+      cents: DataFrame): DataFrame = {
     val cos6 = round(cosine(col("v"), col("cv2"), col("nrm"), col("cn2")), 6)
     val centRank = Window.partitionBy(col("vec_id"))
       .orderBy(cos6.desc, col("cidx").asc)
     emb(spark, dir).filter(col("vec_id") % QueryMod === 0)
       .crossJoin(broadcast(cents))
       .withColumn("cr", row_number().over(centRank))
-      .filter(col("cr") <= nprobe)
+      .filter(col("cr") <= Nprobe)
       .select(col("vec_id").as("query_id"), col("cidx"), col("v").as("qv"), col("nrm").as("qn"))
   }
 
@@ -856,22 +846,19 @@ object SimilarityQueries {
     * broadcast inside the helpers is O(IvfC) — constant — by
     * construction.
     */
-  private def ivfCandidates(spark: SparkSession, dir: String, idx: IvfIndex,
-      nprobe: Int = Nprobe): DataFrame =
-    ivfProbes(spark, dir, idx, nprobe).hint("shuffle_hash")
+  private def ivfCandidates(spark: SparkSession, dir: String, idx: IvfIndex): DataFrame =
+    ivfProbes(spark, dir, idx).hint("shuffle_hash")
       .join(idx.lists(spark, dir), Seq("cidx"))
       .filter(col("query_id") =!= col("neighbor_id"))
 
   /** The IVF search stage behind the four `ann_ivf*` queries: assignment
     * of all corpus vectors to their nearest centroid (packed max_by hash
-    * aggregate), `nprobe` probe lists per query, shuffle-hash probe join,
-    * exact top-k ranking. Also the sweep hook (RecallSweep, RECALL.md):
-    * any index at an arbitrary probe depth, sharing every memoized index
-    * artifact.
+    * aggregate), [[Nprobe]] probe lists per query, shuffle-hash probe
+    * join, exact top-k ranking — over any index, sharing every memoized
+    * index artifact.
     */
-  private[graft] def annIvfProbe(spark: SparkSession, dir: String,
-      idx: IvfIndex, nprobe: Int = Nprobe): DataFrame =
-    ranked(spark, dir, ivfCandidates(spark, dir, idx, nprobe))
+  private def annIvfProbe(spark: SparkSession, dir: String, idx: IvfIndex): DataFrame =
+    ranked(spark, dir, ivfCandidates(spark, dir, idx))
 
   /** The IVF search stage as oracle SQL — tc/assigned/probes/rank over a
     * codebook CTE named `$cent` with columns (cidx, cv, cn). Shared by the
@@ -940,7 +927,7 @@ object SimilarityQueries {
     * Lloyd 2.0×, LSH 2.1×): finer cells rank neighborhoods better than
     * the coarse 64-list settings' ~2×-per-scan law, so the capacity law
     * buys retrieval efficiency as well as cost scaling — at EQUAL scan
-    * (RecallSweep `scaled` grid, RECALL.md) it dominates its fixed-C
+    * (the `scaled` grid in RECALL.md) it dominates its fixed-C
     * sampled twin (0.735 vs 0.645 at ~38%) and MATCHES the Lloyd-refined
     * index with zero training iterations. The scan fraction is published
     * per index by [[annRecallReport]], so the trade is visible
@@ -960,10 +947,8 @@ object SimilarityQueries {
   def annIvfScaled(spark: SparkSession, dir: String): DataFrame =
     planMemo(spark, dir, "ann_ivf_scaled")(annIvfProbe(spark, dir, ScaledIvf))
 
-  /** The capacity-law list count of the corpus at `dir` (also the
-    * RecallSweep grid bound).
-    */
-  private[graft] def scaledCOf(spark: SparkSession, dir: String): Int =
+  /** The capacity-law list count of the corpus at `dir`. */
+  private def scaledCOf(spark: SparkSession, dir: String): Int =
     scaledC(estimatedRows(spark, dir))
 
   /** The scaled-capacity codebook as CTEs (`cap`/`cent0`/`cent`) — shared
@@ -1661,43 +1646,36 @@ object SimilarityQueries {
     * residual sub-codebooks. (query_id, cidx, tds) with tds laid out
     * exactly like [[pqQueryTables]]' so [[pqRank]] scores both variants.
     *
-    * The DEFAULT-depth tables are memoized — shared by [[annIvfPq]]
+    * The tables are memoized — shared by [[annIvfPq]]
     * (k = TopK) and [[annIvfPqRerank]] (k = RerankR): the two consumers
     * differ only in how many candidates they keep, so the per-(query,
     * probed list) table build (residuals × sub-codebook scoring + the
     * 4096-slot sort) is identical and O(nq · Nprobe) rows. Without the
     * memo each consumer — and the recall report, which runs both —
-    * rebuilds it. Sweep paths (non-default nprobe) bypass.
+    * rebuilds it.
     */
-  private def rpqQueryTables(spark: SparkSession, dir: String,
-      nprobe: Int, idx: IvfIndex): DataFrame =
-    if (nprobe == Nprobe)
-      Memo.memoize(spark, dir, s"ivfadc_query_tables:${idx.tag}")(
-        rpqQueryTablesBuild(spark, dir, nprobe, idx))
-    else rpqQueryTablesBuild(spark, dir, nprobe, idx)
-
-  private def rpqQueryTablesBuild(spark: SparkSession, dir: String,
-      nprobe: Int, idx: IvfIndex): DataFrame = {
-    val qInt = quantized(emb(spark, dir)).filter(col("vec_id") % QueryMod === 0)
-      .select(col("vec_id").as("query_id"), col("qv").as("qvi"))
-    val qres = ivfProbes(spark, dir, idx, nprobe)
-      .select(col("query_id"), col("cidx"))
-      .join(qInt, Seq("query_id"))
-      .join(broadcast(qCentroids(spark, dir, idx)), Seq("cidx"))
-      .select(col("query_id"), col("cidx"),
-        zip_with(col("qvi"), col("qc"), (a, b) => a - b).as("qv"))
-    qres
-      .select(col("query_id"), col("cidx"), col("qv"),
-        explode(sequence(lit(0), lit(PqM - 1))).as("m"))
-      .crossJoin(broadcast(rpqCodebook(spark, dir, idx)))
-      .select(col("query_id"), col("cidx"), col("m"), col("cj"),
-        pqSubDist(col("qv"), col("qc"), col("m")).as("d"))
-      .groupBy(col("query_id"), col("cidx"))
-      .agg(sort_array(collect_list(struct(
-        (col("m") * PqK + col("cj")).as("key"), col("d")))).as("kd"))
-      .select(col("query_id"), col("cidx"),
-        transform(col("kd"), x => x.getField("d")).as("tds"))
-  }
+  private def rpqQueryTables(spark: SparkSession, dir: String, idx: IvfIndex): DataFrame =
+    Memo.memoize(spark, dir, s"ivfadc_query_tables:${idx.tag}") {
+      val qInt = quantized(emb(spark, dir)).filter(col("vec_id") % QueryMod === 0)
+        .select(col("vec_id").as("query_id"), col("qv").as("qvi"))
+      val qres = ivfProbes(spark, dir, idx)
+        .select(col("query_id"), col("cidx"))
+        .join(qInt, Seq("query_id"))
+        .join(broadcast(qCentroids(spark, dir, idx)), Seq("cidx"))
+        .select(col("query_id"), col("cidx"),
+          zip_with(col("qvi"), col("qc"), (a, b) => a - b).as("qv"))
+      qres
+        .select(col("query_id"), col("cidx"), col("qv"),
+          explode(sequence(lit(0), lit(PqM - 1))).as("m"))
+        .crossJoin(broadcast(rpqCodebook(spark, dir, idx)))
+        .select(col("query_id"), col("cidx"), col("m"), col("cj"),
+          pqSubDist(col("qv"), col("qc"), col("m")).as("d"))
+        .groupBy(col("query_id"), col("cidx"))
+        .agg(sort_array(collect_list(struct(
+          (col("m") * PqK + col("cj")).as("key"), col("d")))).as("kd"))
+        .select(col("query_id"), col("cidx"),
+          transform(col("kd"), x => x.getField("d")).as("tds"))
+    }
 
   /** The IVFADC candidate stage shared by [[annIvfPq]] (k = TopK, result
     * ranks ARE the ADC ranks) and [[annIvfPqRerank]] (k = RerankR,
@@ -1743,9 +1721,8 @@ object SimilarityQueries {
     * would do it; weigh against the duplicated map stage actually
     * measured before building one.
     */
-  private def ivfPqAdc(spark: SparkSession, dir: String, idx: IvfIndex, k: Int,
-      nprobe: Int = Nprobe): DataFrame =
-    pqRank(rpqQueryTables(spark, dir, nprobe, idx)
+  private def ivfPqAdc(spark: SparkSession, dir: String, idx: IvfIndex, k: Int): DataFrame =
+    pqRank(rpqQueryTables(spark, dir, idx)
       .join(ivfPqResIndex(spark, dir, idx).hint("shuffle_hash"), Seq("cidx"))
       .filter(col("query_id") =!= col("neighbor_id")), k)
 
@@ -1841,8 +1818,7 @@ object SimilarityQueries {
   val RerankR = 100
 
   def annIvfPqRerank(spark: SparkSession, dir: String): DataFrame =
-    planMemo(spark, dir, "ann_ivfpq_rerank")(
-      annIvfPqRerankProbe(spark, dir, Nprobe, RerankR))
+    planMemo(spark, dir, "ann_ivfpq_rerank")(ivfPqRerank(spark, dir, LloydIvf))
 
   /** `ann_ivfpq_rerank_scaled` — the exact re-rank stage over the
     * capacity-law IVFADC ([[annIvfPqScaled]]): identical R/k contract,
@@ -1852,12 +1828,11 @@ object SimilarityQueries {
     */
   def annIvfPqRerankScaled(spark: SparkSession, dir: String): DataFrame =
     planMemo(spark, dir, "ann_ivfpq_rerank_scaled")(
-      annIvfPqRerankProbe(spark, dir, Nprobe, RerankR, LloydScaledIvf))
+      ivfPqRerank(spark, dir, LloydScaledIvf))
 
-  /** Sweep hook: the re-ranked IVFADC at arbitrary (nprobe, R). */
-  private[graft] def annIvfPqRerankProbe(spark: SparkSession, dir: String,
-      nprobe: Int, r: Int, idx: IvfIndex = LloydIvf): DataFrame = {
-    val cand = ivfPqAdc(spark, dir, idx, r, nprobe)
+  /** The exact re-rank of `idx`'s top-[[RerankR]] IVFADC candidates. */
+  private def ivfPqRerank(spark: SparkSession, dir: String, idx: IvfIndex): DataFrame = {
+    val cand = ivfPqAdc(spark, dir, idx, RerankR)
       .select(col("query_id"), col("neighbor_id"))
     val e = emb(spark, dir)
     val q = e.select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
@@ -1941,14 +1916,7 @@ object SimilarityQueries {
   val HardNegProbe = 2
 
   def hardNegatives(spark: SparkSession, dir: String): DataFrame =
-    hardNegativesProbe(spark, dir, HardNegProbe)
-
-  /** Sweep hook: the miner at arbitrary probe depth (over the committed
-    * kmeans-IVF index).
-    */
-  private[graft] def hardNegativesProbe(spark: SparkSession, dir: String,
-      nprobe: Int): DataFrame =
-    hardNegMine(spark, dir, nprobe, LloydIvf)
+    hardNegMine(spark, dir, HardNegProbe, LloydIvf)
 
   /** The mining stage over any IVF index — shared by the committed
     * kmeans-IVF miner and the scaled-capacity one so the probe/rank
@@ -2377,8 +2345,8 @@ object SimilarityQueries {
     // Each IVF scan count is one long of audit metadata per (index,
     // regime); the Lloyd counts are shared by the three consumers of that
     // index's probe lists (ivf_kmeans / ivfpq / ivfpq_rerank, and the
-    // scaled trio). The regime tag keys each entry so a sweep mixing
-    // sample targets in one session never crosses values.
+    // scaled trio). The regime tag keys each entry so reports at two
+    // sample targets in one session never cross values.
     def ivfScanCount(r: Regime, idx: IvfIndex): Long =
       Memo.memoizeValue(spark, dir, s"recall_scan_count:${idx.tag}${r.memoTag}") {
         val sizes = idx.lists(spark, dir)
@@ -2411,10 +2379,10 @@ object SimilarityQueries {
     val lshNcand: Long = Memo.memoizeValue(spark, dir,
         s"recall_scan_count:lsh${ctl.memoTag}") {
       (if (sampled)
-        lshCandidatesBuild(spark, dir, LshRadius, LshTables)
+        lshCandidatesBuild(spark, dir)
           .select(col("query_id"), col("neighbor_id")).filter(samplePred)
           .dropDuplicates("query_id", "neighbor_id")
-      else lshCandidates(spark, dir, LshRadius, LshTables))
+      else lshCandidates(spark, dir))
         .agg(count(lit(1)).as("ncand")).select(col("ncand")).head().getLong(0)
     }
     val kmNcand = ivfScanCount(ctl, LloydIvf)

@@ -890,18 +890,11 @@ object StreamingOps {
   /** Watermark horizon + top-k window for [[annProbeStream]]: a query's
     * candidates all land in one processing-time window (they are produced
     * by one micro-batch), so the window is a state-EVICTION boundary, not
-    * a semantic one. Because the axis is PROCESSING time, a soak shorter
-    * than the horizon can never witness the eviction it exists to prove —
-    * so the horizon is env-overridable (`SPARK_GRAFT_PROBE_HORIZON`, a
-    * Spark interval string) for [[graft.StreamSoak]], which shortens it
-    * and sleeps epochs past it to record state actually draining. Window
-    * CONTENT per query is horizon-independent (one micro-batch produces
-    * all of a query's candidates), so the override never changes emitted
-    * (query, rank, neighbor, sim) rows — only how long they stay in the
-    * store.
+    * a semantic one. Window CONTENT per query is horizon-independent, so
+    * the horizon never changes emitted (query, rank, neighbor, sim) rows —
+    * only how long they stay in the store.
     */
-  val ProbeHorizon: String =
-    sys.env.getOrElse("SPARK_GRAFT_PROBE_HORIZON", "10 minutes")
+  val ProbeHorizon: String = "10 minutes"
 
   /** Bounded top-k accumulator for the streaming ANN probe: the state a
     * query holds is AT MOST k candidates — reduce/merge insert and trim,

@@ -46,6 +46,20 @@ class CliMainSpec extends SparkTestBase {
     assert(e2.getMessage.contains("unknown app"))
   }
 
+  test("parseArgs accepts one positive --partitions=N and rejects every other flag before a session starts") {
+    val pos = Seq("wc", "out", "in/*.txt")
+    assert(cli.Main.parseArgs(pos) === Some(cli.Main.Args("wc", "out", "in/*.txt", 1)))
+    assert(cli.Main.parseArgs(pos :+ "--partitions=8").map(_.nReduce) === Some(8))
+    assert(cli.Main.parseArgs("--partitions=8" +: pos).map(_.nReduce) === Some(8))
+    Seq("0", "-3", "abc", "", "99999999999").foreach { v =>
+      assert(cli.Main.parseArgs(pos :+ s"--partitions=$v") === None, s"--partitions=$v")
+    }
+    assert(cli.Main.parseArgs(pos ++ Seq("--partitions=2", "--partitions=2")) === None)
+    assert(cli.Main.parseArgs(pos :+ "--verbose") === None)
+    assert(cli.Main.parseArgs(pos.take(2)) === None)
+    assert(cli.Main.parseArgs(pos :+ "extra") === None)
+  }
+
   test("partitioned output: FNV bucket per file, keys sorted within bucket, content equals the sequential layout") {
     import spark.implicits._
     val inDir = Files.createTempDirectory("cli-in")

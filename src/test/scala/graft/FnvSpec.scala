@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.functions.{call_function, col}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.ColumnBridge
 
-import graft.functions.Fnv1a32
+import graft.functions.{Fnv1a32, Fnv1a32Expr}
 
 /** FNV-1a 32-bit vectors from the published FNV reference
   * (http://www.isthe.com/chongo/tech/comp/fnv/) masked to non-negative,
@@ -20,11 +21,10 @@ class FnvSpec extends SparkTestBase {
   }
 
   test("fnv1a32 expression evaluates identically to the Scala impl (codegen path)") {
-    Fnv1a32.register(spark)
     import spark.implicits._
     val words = Seq("", "a", "foobar", "the", "sherlock", "été")
     val got = words.toDF("w")
-      .select(col("w"), call_function("fnv1a32", col("w")).as("h"))
+      .select(col("w"), ColumnBridge.column(Fnv1a32Expr(ColumnBridge.expression(col("w")))).as("h"))
       .collect()
       .map(r => r.getString(0) -> r.getInt(1)).toMap
     words.foreach { w =>
