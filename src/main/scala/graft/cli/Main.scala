@@ -21,7 +21,9 @@ import graft.operators.{Apps, MapReduce, MRApp}
   * reduce bucket, EVERY bucket (empty ones included): bucket i holds the
   * keys with the reference's own FNV-1a `ihash(key) % N`
   * (src/mr/worker.go:25-29), sorted by key (the per-reduce-task order the
-  * reference workers produce). One shuffle per job, no global sort.
+  * reference workers produce). One shuffle per job, no global sort. `wc`
+  * is an [[graft.operators.AlgebraicApp]], so its counts are combined per
+  * input file before that shuffle; the other apps shuffle every map record.
   *   - Default (no --partitions): N = 1, ONE key-sorted file — exactly the
   *     sequential oracle's layout (src/main/mrsequential.go:59). Like
   *     `mrsequential`, the whole reduce then runs in one task.

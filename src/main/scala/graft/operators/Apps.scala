@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.{Encoder, Encoders}
+
 /** The reference's eight plugin apps (SURVEY §2.2), minus the pure
   * scheduler probes (jobcount/mtiming/rtiming/crash timing behavior — those
   * are *harness* capabilities covered by Spark task retry/speculation and
@@ -8,13 +10,18 @@ package graft.operators
 object Apps {
 
   /** Word count — reference `src/mrapps/wc.go:19-40`: tokenize on
-    * non-letter runes, emit (word, "1"); reduce = number of values.
+    * non-letter runes, emit (word, "1"); reduce = number of values, a
+    * count monoid, so `MapReduce.run` combines it per file.
     */
-  object WordCount extends MRApp {
+  object WordCount extends AlgebraicApp[Long] {
     def map(file: String, contents: String): IterableOnce[KV] =
       contents.split(graft.functions.TextFns.TokenSplitRegex).iterator
         .filter(_.nonEmpty).map(w => KV(w, "1"))
-    def reduce(key: String, values: Seq[String]): String = values.size.toString
+    def zero: Long = 0L
+    def fold(n: Long, value: String): Long = n + 1
+    def merge(a: Long, b: Long): Long = a + b
+    def finish(n: Long): String = n.toString
+    def bufferEncoder: Encoder[Long] = Encoders.scalaLong
   }
 
   /** Inverted index — reference `src/mrapps/indexer.go:20-39`: per-document

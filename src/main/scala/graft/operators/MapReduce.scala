@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
@@ -20,6 +22,21 @@ case class KV(key: String, value: String)
 trait MRApp extends Serializable {
   def map(file: String, contents: String): IterableOnce[KV]
   def reduce(key: String, values: Seq[String]): String
+}
+
+/** An MRApp whose reduce is a fold into a commutative monoid `B`
+  * (`zero`, `merge`), so `MapReduce.run` may combine each file's map
+  * output before the shuffle — the paper's Combiner (Dean & Ghemawat
+  * §4.3). `reduce` is derived from the fold, so both paths agree.
+  */
+trait AlgebraicApp[B] extends MRApp {
+  def zero: B
+  def fold(b: B, value: String): B
+  def merge(a: B, b: B): B
+  def finish(b: B): String
+  def bufferEncoder: Encoder[B]
+  final def reduce(key: String, values: Seq[String]): String =
+    finish(values.foldLeft(zero)(fold))
 }
 
 /** The generic MapReduce engine, re-expressed on Spark.
@@ -42,13 +59,18 @@ trait MRApp extends Serializable {
   * Reduce task i holds exactly bucket i, its keys in order, so a writer
   * straight above `run` emits the reference's `mr-out-i` layout.
   *
-  * Scale note: the reduce buffers one key's values at a time — exactly the
-  * reference reducer's own contract (it materializes `map[string][]string`);
-  * the sort spills to disk like any Spark sort. With nReduce = 1 the whole
-  * reduce is one task, as in `mrsequential`. Algebraic apps (e.g. word
-  * count) should instead use the DataFrame queries in `graft.queries` or
-  * [[Algebraic]], which keep partial aggregation + whole-stage codegen;
-  * this generic path exists for arbitrary, non-algebraic reducers.
+  * A plain [[MRApp]] keeps the reference contract: no combiner, the
+  * reducer sees every value of its key (`src/mr/worker.go:150-155`; the
+  * jobcount test, `src/main/test-mr.sh:210-218`). An [[AlgebraicApp]]
+  * (word count) is combined per input file instead: each file's map
+  * output is folded into one buffer per key before the shuffle, and each
+  * run of equal keys merges those buffers. The combine holds one file's
+  * keys, which the `wholetext` scan already holds in memory.
+  *
+  * Scale note: the generic reduce buffers one key's values at a time —
+  * exactly the reference reducer's own contract (it materializes
+  * `map[string][]string`); the sort spills to disk like any Spark sort.
+  * With nReduce = 1 the whole reduce is one task, as in `mrsequential`.
   */
 object MapReduce {
 
@@ -72,23 +94,47 @@ object MapReduce {
     */
   def run(spark: SparkSession, inputGlob: String, app: MRApp, nReduce: Int = 10): Dataset[KV] = {
     import spark.implicits._
-    val bucket = ColumnBridge.column(Fnv1a32Expr(ColumnBridge.expression(col("key")))) % nReduce
-    wholeFiles(spark, inputGlob).flatMap { case (f, c) => app.map(f, c) }
-      .repartitionById(nReduce, coalesce(bucket, lit(0)))
-      .sortWithinPartitions("key")
-      .mapPartitions(reduceRuns(app, _))
+    val files = wholeFiles(spark, inputGlob)
+    app match {
+      case a: AlgebraicApp[b] =>
+        // the per-file combine: one buffer per key of this file's map output
+        val combined = files.flatMap { case (f, c) =>
+          val bufs = mutable.HashMap.empty[String, b]
+          a.map(f, c).iterator.foreach(kv => bufs(kv.key) = a.fold(bufs.getOrElse(kv.key, a.zero), kv.value))
+          bufs
+        }(Encoders.tuple(Encoders.STRING, a.bufferEncoder))
+        bucketSorted(combined, col("_1"), nReduce).mapPartitions { in =>
+          foldRuns(in)(_._1, a.zero)((acc, kb) => a.merge(acc, kb._2))
+            .map { case (k, acc) => KV(k, a.finish(acc)) }
+        }
+      case _ =>
+        bucketSorted(files.flatMap { case (f, c) => app.map(f, c) }, col("key"), nReduce)
+          .mapPartitions { in =>
+            foldRuns(in)(_.key, List.newBuilder[String])(_ += _.value)
+              .map { case (k, values) => KV(k, app.reduce(k, values.result())) }
+          }
+    }
   }
 
-  /** Call `app.reduce` once per run of equal keys in a key-sorted bucket,
-    * holding only the current key's values.
+  /** Shuffle each record to bucket `Fnv1a32(key) % nReduce` and sort every
+    * bucket by key.
     */
-  private def reduceRuns(app: MRApp, sorted: Iterator[KV]): Iterator[KV] = {
+  private def bucketSorted[T](ds: Dataset[T], key: Column, nReduce: Int): Dataset[T] = {
+    val bucket = ColumnBridge.column(Fnv1a32Expr(ColumnBridge.expression(key))) % nReduce
+    ds.repartitionById(nReduce, coalesce(bucket, lit(0))).sortWithinPartitions(key)
+  }
+
+  /** Fold each run of equal keys in a key-sorted bucket into one
+    * accumulator, holding only the current run's.
+    */
+  private def foldRuns[T, A](sorted: Iterator[T])(key: T => String, zero: => A)(
+      step: (A, T) => A): Iterator[(String, A)] = {
     val in = sorted.buffered
     Iterator.continually(in).takeWhile(_.hasNext).map { _ =>
-      val key = in.head.key
-      val values = List.newBuilder[String]
-      while (in.hasNext && in.head.key == key) values += in.next().value
-      KV(key, app.reduce(key, values.result()))
+      val k = key(in.head)
+      var acc = zero
+      while (in.hasNext && key(in.head) == k) acc = step(acc, in.next())
+      (k, acc)
     }
   }
 
@@ -97,23 +143,4 @@ object MapReduce {
     */
   def toOutputLines(ds: Dataset[KV]): DataFrame =
     ds.toDF().select(concat_ws(" ", col("key"), col("value")).as("value"))
-
-  /** The reference's intermediate-file JSON encoding: one object per line,
-    * capitalized field names (`{"Key":…,"Value":…}`, encoder at reference
-    * `src/mr/worker.go:96-113`; committed examples `src/main/mr-1-1`).
-    */
-  def toReferenceJson(ds: Dataset[KV]): DataFrame =
-    ds.toDF().select(col("key").as("Key"), col("value").as("Value"))
-
-  /** Read reference-format intermediate files back as KV (decoder parity
-    * with `src/mr/worker.go:157-178`).
-    */
-  def fromReferenceJson(spark: SparkSession, path: String): Dataset[KV] = {
-    import spark.implicits._
-    spark.read
-      .schema("Key STRING, Value STRING")
-      .json(path)
-      .select(col("Key").as("key"), col("Value").as("value"))
-      .as[KV]
-  }
 }

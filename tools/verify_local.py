@@ -22,7 +22,9 @@ import datetime
 import json
 import os
 import math
+import shutil
 import sys
+import tempfile
 
 import duckdb
 
@@ -63,7 +65,17 @@ def norm_val(v):
 
 
 def main(sf_dir, out_dir):
-    con = duckdb.connect()
+    # DuckDB spills to ./.tmp under the cwd by default; keep the spill
+    # beside the dump instead, and remove it on exit
+    spill = tempfile.mkdtemp(prefix=".duckdb-spill-", dir=out_dir)
+    try:
+        return compare(sf_dir, out_dir, spill)
+    finally:
+        shutil.rmtree(spill, ignore_errors=True)
+
+
+def compare(sf_dir, out_dir, spill):
+    con = duckdb.connect(config={"temp_directory": spill})
     for t in TABLES:
         # driver testdata is one file per table; generated scale-up dirs
         # (GenScale) are <table>.parquet/part-*.parquet directories
