@@ -140,7 +140,7 @@ class MapReduceSpec extends SparkTestBase {
     }
   }
 
-  test("wc's shuffle writes one record per distinct (file, word); a plain MRApp, one per token") {
+  test("wc shuffles one record per distinct (file, word); a plain MRApp, one per token") {
     val distinctPairs = files.map { case (_, text) => words(text).distinct.size }.sum
     val tokens = files.map { case (_, text) => words(text).size }.sum
     assert(distinctPairs < tokens)
