@@ -165,18 +165,12 @@ object DedupQueries {
     * task). Shingles above the bound are diverted to a streaming salted
     * self-join branch instead — same pairs, exactly once, no per-key
     * buffer (sort-merge join spills; the salt grid spreads one hot
-    * shingle's O(df²) pair fan-out over SaltCells² tasks). Unlike minhash's
+    * shingle's O(df²) pair fan-out over SaltGrid² tasks). Unlike minhash's
     * [[MaxBandBucket]] this is NOT a drop: exact-Jaccard recall is
     * preserved bit-for-bit (the oracle SQL is unchanged), which
     * DedupPropertySpec pins with a corpus of >MaxShingleBucket clones.
     */
   val MaxShingleBucket = 1024
-
-  /** Salt-grid factor for the hot-shingle self-join (same exactly-once
-    * construction as SimilarityQueries.saltedGrid, proven by
-    * SimilarityPropertySpec).
-    */
-  val SaltCells = 4
 
   /** All co-occurring (da, db) pairs, da < db, of a (doc_id, h, df) table
     * — one output row per (h, pair). `df` must be the per-h row count of
@@ -187,11 +181,11 @@ object DedupQueries {
     * collect_list + the lazy [[graft.functions.PairsExpr]] generator — a
     * single aggregation whose per-key buffer is bounded by the df filter.
     * Hot shingles: a salted streaming self-join of the (tiny, usually
-    * empty) hot slice — each pair meets in exactly one of SaltCells²
-    * cells. Routing is a plain column filter (df travels WITH the rows),
-    * so neither branch needs a broadcast of the hot set — per invocation
-    * the only work beyond the aggregation itself is two filter scans of
-    * the (persisted) input.
+    * empty) hot slice over [[SimilarityQueries.saltedGrid]] — each pair
+    * meets in exactly one of SaltGrid² cells. Routing is a plain column
+    * filter (df travels WITH the rows), so neither branch needs a
+    * broadcast of the hot set — per invocation the only work beyond the
+    * aggregation itself is two filter scans of the (persisted) input.
     *
     * `hotThreshold` exists so tests can force every shingle down either
     * branch and prove the routing equivalence directly
@@ -206,12 +200,10 @@ object DedupQueries {
       .filter(size(col("ids")) > 1)
       .select(graft.functions.PairsExpr(col("ids"))) // generator -> (da, db)
     val th = t.filter(col("df") > hotThreshold)
-    val a = th.select(col("h"), col("doc_id").as("da"))
-      .withColumn("si_a", pmod(xxhash64(col("da")), lit(SaltCells)).cast("int"))
-      .withColumn("sj_a", explode(array((0 until SaltCells).map(lit): _*)))
-    val b = th.select(col("h").as("hb"), col("doc_id").as("db"))
-      .withColumn("sj_b", pmod(xxhash64(col("db")), lit(SaltCells)).cast("int"))
-      .withColumn("si_b", explode(array((0 until SaltCells).map(lit): _*)))
+    val a = SimilarityQueries.saltedGrid(
+      th.select(col("h"), col("doc_id").as("da")), "da", "si_a", "sj_a")
+    val b = SimilarityQueries.saltedGrid(
+      th.select(col("h").as("hb"), col("doc_id").as("db")), "db", "sj_b", "si_b")
     val hotPairs = a.join(b,
         col("h") === col("hb") && col("si_a") === col("si_b") &&
           col("sj_a") === col("sj_b") && col("da") < col("db"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.{TopKLongsAgg, VectorFns}
+import graft.functions.{TextFns, TopKLongsAgg, VectorFns}
 
 /** Similarity search over the `embeddings` table (`embedding:
   * array<float>`, 64-dim): blocked cosine near-duplicate pairs (SURVEY
@@ -47,13 +47,14 @@ object SimilarityQueries {
     * block — the same role LSH bands play for text dedup.
     *
     * Skew guard: the block self-join is fragmented over an S×S salt grid
-    * (see [[saltedBlockJoin]]) so one hot label never lands its entire
+    * (see [[saltedGrid]]) so one hot label never lands its entire
     * pair-quadratic on a single task.
     */
   val CosTau = 0.35
 
-  /** Salt-grid fragmentation factor for block self-joins. Each side is
-    * replicated S×; a block's pairs spread over S² join cells.
+  /** Salt-grid fragmentation factor for block self-joins (these and
+    * `DedupQueries.coocPairs`' hot shingles). Each side is replicated S×;
+    * a block's pairs spread over S² join cells.
     */
   val SaltGrid = 4
 
@@ -64,9 +65,10 @@ object SimilarityQueries {
     * identical to the unsalted join, but a hot block's O(block²) pairs
     * spread across S² independent join cells instead of one straggler
     * task. Standard theta-join fragmentation; replication factor S per
-    * side.
+    * side. Shared by the embedding block joins here and the hot-shingle
+    * branch of `DedupQueries.coocPairs`.
     */
-  private def saltedGrid(df: DataFrame, idCol: String, ownAxis: String,
+  private[graft] def saltedGrid(df: DataFrame, idCol: String, ownAxis: String,
       otherAxis: String): DataFrame =
     df.withColumn(ownAxis, pmod(xxhash64(col(idCol)), lit(SaltGrid)).cast("int"))
       .withColumn(otherAxis, explode(array((0 until SaltGrid).map(lit): _*)))
@@ -171,9 +173,12 @@ object SimilarityQueries {
   private[graft] def chunkOf(queryId: Column, nChunks: Int): Column =
     pmod(xxhash64(queryId), lit(nChunks.toLong))
 
-  /** Per-query exact top-[[TopK]] over a candidate-pair stream carrying
+  /** Per-query exact top-`k` over a candidate-pair stream carrying
     * both raw vectors (query_id, neighbor_id, qv, qn, cv, cn). Order is
     * `round(cos, 6) desc, neighbor_id asc`; `sim` is `round(cos, 4)`.
+    * Shared by every ANN search path (k = [[TopK]]) and the hard-negative
+    * miner (k = [[HardNegK]], `withLabels` appends `query_label` and
+    * `neighbor_label` from the two re-joins it already makes).
     *
     * NOT a `row_number` window: each candidate row necessarily carries
     * both 64-double vectors (the cosine is computed here), and a window
@@ -182,19 +187,16 @@ object SimilarityQueries {
     * brute-force truth build's 400 M-candidate window sort filled the
     * disk and killed the stage (BENCH_sf10_r15.json.failed), the same
     * failure mode hard_negatives hit a round earlier. Instead the rank
-    * key packs into ONE long in the join projection — the
-    * [[hardNegMine]] packing: round(cos6·10⁶) ∈ [−10⁶, 10⁶] shifted
-    * non-negative, 21 bits, times 2^[[HardNegIdBits]] plus the
-    * complemented id, with the id bound ENFORCED in-plan — and a bounded
-    * distinct-top-k heap aggregate ([[TopKLongsAgg]], O(k) state) keeps
-    * the k best per query: the vectors never leave the map side and the
-    * aggregation exchange carries one ≤k-long buffer per query per
-    * partition. Duplicate candidate PAIRS (the LSH multi-table union
-    * emits a pair once per matching table) pack to the SAME long and the
-    * aggregate's distinct semantics absorb them — no pre-scoring
+    * key packs into ONE long in the join projection ([[candidatePack]])
+    * and a bounded distinct-top-k heap aggregate ([[TopKLongsAgg]], O(k)
+    * state) keeps the k best per query: the vectors never leave the map
+    * side and the aggregation exchange carries one ≤k-long buffer per
+    * query per partition. Duplicate candidate PAIRS (the LSH multi-table
+    * union emits a pair once per matching table) pack to the SAME long
+    * and the aggregate's distinct semantics absorb them — no pre-scoring
     * `dropDuplicates` exchange either.
     *
-    * The k winners (≤ TopK·nq rows) re-join the vector table by id to
+    * The k winners (≤ k·nq rows) re-join the vector table by id to
     * recompute `sim` as round(cos, 4) EXACTLY — deriving it from the
     * packed 6-decimal value would double-round.
     *
@@ -207,30 +209,50 @@ object SimilarityQueries {
     * external vectors must thread its own vector table through here
     * instead of emb (or left-join + assert).
     */
-  private def ranked(spark: SparkSession, dir: String, joined: DataFrame): DataFrame = {
+  private def ranked(spark: SparkSession, dir: String, joined: DataFrame,
+      k: Int = TopK, withLabels: Boolean = false): DataFrame = {
     val cos = cosine(col("qv"), col("cv"), col("qn"), col("cn"))
-    val idCap = 1L << HardNegIdBits
-    val guardedId = when(col("neighbor_id") < 0 || col("neighbor_id") >= lit(idCap),
-      raise_error(concat(
-        lit(s"ranked packing: neighbor_id outside [0, 2^$HardNegIdBits): "),
-        col("neighbor_id").cast("string")))).otherwise(col("neighbor_id"))
-    val pk = (round(round(cos, 6) * lit(1000000d)).cast("long") + lit(1000000L)) *
-      lit(idCap) + (lit(idCap - 1L) - guardedId)
     val e = emb(spark, dir)
     val sim = round(cosine(col("qv2"), col("cv2"), col("qn2"), col("cn2")), 4)
+    val labels = if (withLabels) Seq(col("query_label"), col("neighbor_label")) else Nil
     joined
-      .select(col("query_id"), pk.as("pk"))
+      .select(col("query_id"), candidatePack(cos, col("neighbor_id")).as("pk"))
       .groupBy(col("query_id"))
-      .agg(TopKLongsAgg(col("pk"), TopK).as("pks"))
+      .agg(TopKLongsAgg(col("pk"), k).as("pks"))
       .select(col("query_id"), posexplode(col("pks")).as(Seq("pos", "pk")))
-      .select(col("query_id"),
-        (lit(idCap - 1L) - pmod(col("pk"), lit(idCap))).as("neighbor_id"),
+      .select(col("query_id"), candidateId(col("pk")).as("neighbor_id"),
         (col("pos") + 1).cast("long").as("rank"))
-      .join(e.select(col("vec_id").as("query_id"), col("v").as("qv2"),
-        col("nrm").as("qn2")), Seq("query_id"))
-      .join(e.select(col("vec_id").as("neighbor_id"), col("v").as("cv2"),
-        col("nrm").as("cn2")), Seq("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), col("rank"), sim.as("sim"))
+      .join(e.select(col("vec_id").as("query_id"), col("label").as("query_label"),
+        col("v").as("qv2"), col("nrm").as("qn2")), Seq("query_id"))
+      .join(e.select(col("vec_id").as("neighbor_id"), col("label").as("neighbor_label"),
+        col("v").as("cv2"), col("nrm").as("cn2")), Seq("neighbor_id"))
+      .select(Seq(col("query_id"), col("neighbor_id"), col("rank"), sim.as("sim")) ++
+        labels: _*)
+  }
+
+  /** The candidate order (round(cos, 6) DESC, id ASC) as ONE long, the
+    * largest long being the best candidate: round(cos6·10⁶) ∈ [−10⁶, 10⁶]
+    * shifted non-negative (21 bits, FP-exact for 6-decimal values), times
+    * 2^[[HardNegIdBits]], plus the complemented id. The id bound is
+    * ENFORCED in-plan: an id outside [0, 2^42) (e.g. a hashed 64-bit
+    * vec_id scheme) fails the job with a clear error instead of silently
+    * corrupting the ranking — one long comparison per candidate,
+    * negligible next to the cosine computed in the same projection.
+    * [[candidateId]] inverts it.
+    */
+  private[graft] def candidatePack(cos: Column, id: Column): Column = {
+    val idCap = 1L << HardNegIdBits
+    val guarded = when(id < 0 || id >= lit(idCap), raise_error(concat(
+      lit(s"candidate packing: id outside [0, 2^$HardNegIdBits): "), id.cast("string"))))
+      .otherwise(id)
+    (round(round(cos, 6) * lit(1000000d)).cast("long") + lit(1000000L)) *
+      lit(idCap) + (lit(idCap - 1L) - guarded)
+  }
+
+  /** The id of a [[candidatePack]] long. */
+  private[graft] def candidateId(pk: Column): Column = {
+    val idCap = 1L << HardNegIdBits
+    lit(idCap - 1L) - pmod(pk, lit(idCap))
   }
 
   /** Disk-cached form of [[annTopk]] at the production operating point —
@@ -613,26 +635,71 @@ object SimilarityQueries {
   val IvfC = 64
   val Nprobe = 24
 
-  /** Stride of the packed (cos6, cidx) ordering long used by the
-    * assignment/probe max_by trick: `cos6_fixed * IvfStride + (IvfC -
-    * cidx)`. The tiebreak term ranges over [0, IvfC-1] (cidx is DENSE in
-    * [1, IvfC]), so the stride must exceed IvfC-1 or cidx bits silently
-    * overflow into the cos6 field, corrupting both tie-breaks and the
-    * pmod unpacking. Derived from IvfC (next power of two above it) so
-    * the scaladocs' "raise IvfC at 100 TB" advice can't break packing.
+  /** The packing stride for a codebook of `c` lists, used only by
+    * [[centroidPack]] and its inverse [[centroidOf]]: next power of two
+    * above c−1, so the dense tiebreak term (c − cidx) ∈ [0, c−1] can never
+    * overflow into the cos6 field (which would corrupt both the tiebreak
+    * and the pmod unpacking). Derived from the ACTUAL list count, so the
+    * scaled codebooks' data-derived C and the "raise IvfC at 100 TB"
+    * advice cannot break the packing.
     */
-  val IvfStride: Long = strideOf(IvfC)
-
-  /** The packing stride for a codebook of `c` lists — the ONE definition
-    * behind the (cos6, cidx) packed orderings in [[ivfAssigned]],
-    * [[hardNegMine]], and the streaming probe stage
-    * (`StreamingOps.probeStreamOver`): next power of two above c-1, so
-    * the dense tiebreak term (c − cidx) ∈ [0, c−1] can never overflow
-    * into the cos6 field. Shared so the invariant cannot desynchronize
-    * across the three packers.
-    */
-  private[graft] def strideOf(c: Int): Long =
+  private def strideOf(c: Int): Long =
     java.lang.Long.highestOneBit(c.toLong) * 2L
+
+  /** The centroid order (round(cos, 6) DESC, cidx ASC) as ONE long, the
+    * largest long being the nearest centroid and, among cos6 ties, the
+    * smallest cidx: `round(cos6·10⁶)·strideOf(c) + (c − cidx)`. cos6 is
+    * exactly k/10⁶, so round(cos6·10⁶) recovers k; cidx is DENSE in
+    * [1, c], so the tiebreak fits below the stride for any vec_id width.
+    * A fixed-width long (not a STRUCT ordering, which forces a
+    * SortAggregate) keeps every per-vector centroid selection in a hash
+    * aggregate. The one definition behind [[nearestCentroid]],
+    * [[topCentroids]] and the streaming probe stage
+    * (`StreamingOps.probeStreamOver`); [[centroidOf]] inverts it.
+    */
+  private[graft] def centroidPack(cos: Column, cidx: Column, c: Int): Column =
+    round(round(cos, 6) * lit(1000000d)).cast("long") * lit(strideOf(c)) +
+      (lit(c.toLong) - cidx)
+
+  /** The cidx of a [[centroidPack]] long (pmod handles negative cos6). */
+  private[graft] def centroidOf(ord: Column, c: Int): Column =
+    lit(c.toLong) - pmod(ord, lit(strideOf(c)))
+
+  /** (vec_id, cidx, ord) for every vector of `side` (vec_id, v, nrm) ×
+    * every centroid of the broadcast codebook `cents` (cidx, cv2, cn2),
+    * `c` lists. Only longs flow on: an array-typed column would force a
+    * SortAggregate over all n·C rows AND ship every vector C times.
+    */
+  private def centroidOrds(side: DataFrame, cents: DataFrame, c: Int): DataFrame =
+    side.crossJoin(broadcast(cents))
+      .select(col("vec_id"), col("cidx"), centroidPack(
+        cosine(col("v"), col("cv2"), col("nrm"), col("cn2")), col("cidx"), c).as("ord"))
+
+  /** (vec_id, cidx): each vector's nearest centroid — a max_by hash
+    * aggregate whose partial side collapses the n·C cross-join rows to n
+    * map-side. Unique per (vec_id, cidx) → deterministic argmax.
+    */
+  private[graft] def nearestCentroid(side: DataFrame, cents: DataFrame, c: Int): DataFrame =
+    centroidOrds(side, cents, c)
+      .groupBy(col("vec_id"))
+      .agg(max_by(col("cidx"), col("ord")).as("cidx"))
+
+  /** (vec_id, cidx): each vector's `n` nearest centroids — the one top-n
+    * probe selection. A bounded heap ([[TopKLongsAgg]], O(n) state per
+    * vector — the scaled codebooks' C is data-derived and unbounded)
+    * collapses map-side after the broadcast crossJoin, so the exchange
+    * carries one ≤n-long buffer per vector per partition where a window
+    * would sort all n·C rows. The packed ords are distinct per vector
+    * (distinct cidx ⇒ distinct residue), so the aggregate's distinct
+    * semantics are a no-op.
+    */
+  private[graft] def topCentroids(side: DataFrame, cents: DataFrame, c: Int,
+      n: Int): DataFrame =
+    centroidOrds(side, cents, c)
+      .groupBy(col("vec_id"))
+      .agg(TopKLongsAgg(col("ord"), n).as("ords"))
+      .select(col("vec_id"), explode(col("ords")).as("ord"))
+      .select(col("vec_id"), centroidOf(col("ord"), c).as("cidx"))
 
   /** One IVF index, described once: its codebook (cidx, cv2, cn2) with
     * cidx DENSE in [1, c], its list count `c`, and the labels of the disk
@@ -709,21 +776,28 @@ object SimilarityQueries {
       "ivfpq_res_index_scaled",
       (s, d) => s"$ivfConfigKey $pqConfigKey C=${scaledCOf(s, d)}")))
 
+  /** The `n` rows of `src` with the smallest (hash60(vec_id), vec_id) —
+    * a deterministic uniform sample, decoupled from id assignment order
+    * and reproduced by the oracles' `ORDER BY hash60, vec_id` — numbered
+    * densely 1..n in that order as `idxCol`. `orderBy.limit(n)` is
+    * TakeOrderedAndProject; the numbering window runs over those n rows
+    * only (single tiny partition). The one selection behind
+    * [[sampledCodebook]], the Lloyd init and the PQ init.
+    */
+  private def hashSampled(src: DataFrame, n: Int, idxCol: String): DataFrame = {
+    val order = Seq(col("ch").asc, col("vec_id").asc)
+    src.withColumn("ch", TextFns.hash60(col("vec_id").cast("string")))
+      .orderBy(order: _*).limit(n)
+      .withColumn(idxCol, row_number().over(Window.orderBy(order: _*)).cast("long"))
+  }
+
   /** Hash-sampled codebook of `c` centroids — the shared builder behind
     * the fixed-capacity [[SampledIvf]] and the data-scaled
-    * [[ScaledIvf]]. `orderBy.limit(c)` is TakeOrderedAndProject; the
-    * dense-rank window runs over those c rows only (single tiny
-    * partition).
+    * [[ScaledIvf]].
     */
-  private def sampledCodebook(spark: SparkSession, dir: String, c: Int): DataFrame = {
-    import graft.functions.TextFns
-    val ch = TextFns.hash60(col("vec_id").cast("string"))
-    emb(spark, dir).withColumn("ch", ch)
-      .orderBy(col("ch").asc, col("vec_id").asc).limit(c)
-      .withColumn("cidx",
-        row_number().over(Window.orderBy(col("ch").asc, col("vec_id").asc)).cast("long"))
+  private def sampledCodebook(spark: SparkSession, dir: String, c: Int): DataFrame =
+    hashSampled(emb(spark, dir), c, "cidx")
       .select(col("cidx"), col("v").as("cv2"), col("nrm").as("cn2"))
-  }
 
   def annIvf(spark: SparkSession, dir: String): DataFrame =
     planMemo(spark, dir, "ann_ivf")(annIvfProbe(spark, dir, SampledIvf))
@@ -746,21 +820,9 @@ object SimilarityQueries {
     * "index" a misnomer. The config key carries the index's `C=$c`, so
     * lists built at two list counts are two artifacts.
     *
-    * max_by aggregation instead of a row_number window —
-    * partial aggregation collapses the n·C broadcast-join rows to n
-    * map-side, so only one row per vector crosses the exchange. The
-    * (cos6 DESC, cidx ASC) order is packed into ONE long — cos6 is
-    * exactly k/1e6 so round(cos6·1e6) recovers k, and cidx is DENSE in
-    * [1, IvfC] so the tiebreak term fits below IvfStride regardless of
-    * vec_id width — because a STRUCT ordering argument forces a
-    * SortAggregate while a fixed-width long keeps the whole assignment in
-    * a HashAggregate. Unique per (vec_id, cidx) → deterministic argmax,
-    * matching the oracle's rank-1 row. Only (vec_id, cidx, ord) flow into
-    * the aggregate: an array-typed buffer (e.g. first(v)) would force a
-    * SortAggregate over all n·C rows AND ship every vector C times
-    * through the cross join; the all-long buffer keeps a HashAggregate,
-    * and (v, nrm) re-attach with one join against the persisted emb table
-    * afterwards.
+    * The assignment is [[nearestCentroid]] (a max_by hash aggregate, not
+    * a row_number window), matching the oracle's rank-1 row; (v, nrm)
+    * re-attach with one join against the persisted emb table afterwards.
     */
   private def ivfAssigned(spark: SparkSession, dir: String,
       idx: IvfIndex): DataFrame = {
@@ -768,17 +830,7 @@ object SimilarityQueries {
     val c = idx.c(spark, dir)
     Memo.memoizeDisk(spark, dir, idx.listsLabel, s"$ivfConfigKey C=$c") {
       val e = emb(spark, dir)
-      // stride derived from the ACTUAL list count, not the fixed constant:
-      // the scaled codebook's C is data-derived and can exceed IvfC
-      val stride = strideOf(c)
-      val cos6 = round(cosine(col("v"), col("cv2"), col("nrm"), col("cn2")), 6)
-      val packedOrder = round(cos6 * lit(1000000d)).cast("long") * lit(stride) +
-        (lit(c.toLong) - col("cidx"))
-      val assignedIds = e.crossJoin(broadcast(cents))
-        .select(col("vec_id"), col("cidx"), packedOrder.as("ord"))
-        .groupBy(col("vec_id"))
-        .agg(max_by(col("cidx"), col("ord")).as("cidx"))
-      assignedIds.join(e, "vec_id")
+      nearestCentroid(e, cents, c).join(e, "vec_id")
         .select(col("cidx"), col("vec_id").as("neighbor_id"),
           col("v").as("cv"), col("nrm").as("cn"))
     }
@@ -798,7 +850,7 @@ object SimilarityQueries {
     * derive from it, and their downstream column prunings differ, so
     * Spark's ReuseExchange canonical-equality check can NOT dedupe the
     * subtree across them — without the memo each consumer re-runs the
-    * query×centroid crossJoin + window. Production shape: a query batch
+    * query×centroid crossJoin + top-n heap. Production shape: a query batch
     * is assigned to lists once, then probed against every index variant.
     * The hash-sampled codebooks' tables are rebuilt per use.
     *
@@ -809,33 +861,28 @@ object SimilarityQueries {
     * BUILD-vs-PROBE split). In-memory memoization (round 17) already
     * shared one persisted copy per session; the disk artifact
     * additionally (a) drops the per-cold-JVM query×centroid crossJoin +
-    * window rebuild, and (b) replaces the rebuild subtree under the
+    * top-n heap rebuild, and (b) replaces the rebuild subtree under the
     * InMemoryRelation with one parquet scan — fewer stages on the
     * first-touch pass of every session.
     */
   private def ivfProbes(spark: SparkSession, dir: String, idx: IvfIndex): DataFrame = {
     val cents = idx.codebook(spark, dir)
+    val c = idx.c(spark, dir)
     idx.lloyd match {
       case Some(l) =>
         Memo.memoizeDisk(spark, dir, l.probesLabel,
-          probesConfigKey(idx.c(spark, dir)))(ivfProbesBuild(spark, dir, cents))
-      case _ => ivfProbesBuild(spark, dir, cents)
+          probesConfigKey(c))(ivfProbesBuild(spark, dir, cents, c))
+      case _ => ivfProbesBuild(spark, dir, cents, c)
     }
   }
 
   /** Probe lists (n/QueryMod query vectors): each query's top-Nprobe
-    * centroids via a window over the already-filtered query×centroid
-    * join — tiny input.
+    * centroids ([[topCentroids]]), with the query vector re-attached.
     */
   private def ivfProbesBuild(spark: SparkSession, dir: String,
-      cents: DataFrame): DataFrame = {
-    val cos6 = round(cosine(col("v"), col("cv2"), col("nrm"), col("cn2")), 6)
-    val centRank = Window.partitionBy(col("vec_id"))
-      .orderBy(cos6.desc, col("cidx").asc)
-    emb(spark, dir).filter(col("vec_id") % QueryMod === 0)
-      .crossJoin(broadcast(cents))
-      .withColumn("cr", row_number().over(centRank))
-      .filter(col("cr") <= Nprobe)
+      cents: DataFrame, c: Int): DataFrame = {
+    val q = emb(spark, dir).filter(col("vec_id") % QueryMod === 0)
+    topCentroids(q, cents, c, Nprobe).join(q, "vec_id")
       .select(col("vec_id").as("query_id"), col("cidx"), col("v").as("qv"), col("nrm").as("qn"))
   }
 
@@ -853,9 +900,9 @@ object SimilarityQueries {
 
   /** The IVF search stage behind the four `ann_ivf*` queries: assignment
     * of all corpus vectors to their nearest centroid (packed max_by hash
-    * aggregate), [[Nprobe]] probe lists per query, shuffle-hash probe
-    * join, exact top-k ranking — over any index, sharing every memoized
-    * index artifact.
+    * aggregate), [[Nprobe]] probe lists per query (packed top-n heap),
+    * shuffle-hash probe join, exact top-k ranking — over any index,
+    * sharing every memoized index artifact.
     */
   private def annIvfProbe(spark: SparkSession, dir: String, idx: IvfIndex): DataFrame =
     ranked(spark, dir, ivfCandidates(spark, dir, idx))
@@ -1011,31 +1058,23 @@ object SimilarityQueries {
   private def quantized(e: DataFrame): DataFrame =
     e.withColumn("qv", transform(col("v"), x => floor(x * QScale + lit(0.5))))
 
-  /** One Lloyd step: cents (cidx, cv, cn) -> refined (cidx, cv, cn).
+  /** One Lloyd step: cents (cidx, cv2, cn2) -> refined (cidx, cv2, cn2).
     * `c` is the list count of the codebook being refined (cidx DENSE in
-    * [1, c]) — the packing stride derives from it like every packer.
+    * [1, c]). The assignment is the search stage's [[nearestCentroid]].
     */
   private def lloydStep(eq: DataFrame, cents: DataFrame, c: Int): DataFrame = {
-    val cos6 = round(cosine(col("v"), col("cv"), col("nrm"), col("cn")), 6)
-    // same packed (cos6 desc, cidx asc) max_by trick as the search stage:
-    // keeps the whole n·C assignment in a HashAggregate
-    val ord = round(cos6 * lit(1000000d)).cast("long") * lit(strideOf(c)) +
-      (lit(c.toLong) - col("cidx"))
-    val assigned = eq.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("cidx"), ord.as("ord"))
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("cidx"), col("ord")).as("cidx"))
+    val assigned = nearestCentroid(eq, cents, c)
     val sums = assigned.join(eq.select(col("vec_id"), col("qv")), "vec_id")
       .groupBy(col("cidx"))
       .agg(count(lit(1)).as("cnt"),
         (1 to KmDim).map(i => sum(element_at(col("qv"), i)).as(s"s$i")): _*)
     val meanCv = array((1 to KmDim).map(i =>
       col(s"s$i").cast("double") / (lit(QScale) * col("cnt")).cast("double")): _*)
-    cents.select(col("cidx"), col("cv"))
+    cents.select(col("cidx"), col("cv2"))
       .join(broadcast(sums), Seq("cidx"), "left")
       .select(col("cidx"),
-        when(col("cnt").isNull, col("cv")).otherwise(meanCv).as("cv"))
-      .withColumn("cn", VectorFns.norm(col("cv")))
+        when(col("cnt").isNull, col("cv2")).otherwise(meanCv).as("cv2"))
+      .withColumn("cn2", VectorFns.norm(col("cv2")))
   }
 
   /** The Lloyd build at an arbitrary list count — shared by the fixed
@@ -1046,20 +1085,16 @@ object SimilarityQueries {
       c: Int): DataFrame = {
     val eq = quantized(emb(spark, dir))
     // Lloyd INIT = the same hash-sampled selection as [[SampledIvf]], but
-    // with centroids in the QUANTIZED domain (cv = qv / 2^20) so
+    // with centroids in the QUANTIZED domain (cv2 = qv / 2^20) so
     // iteration 0's centroids are already integer-derived like every
     // later one (joining the existing codebook back by vector value
     // would fan out under duplicate vectors).
-    val ch = graft.functions.TextFns.hash60(col("vec_id").cast("string"))
-    val init = eq.withColumn("ch", ch)
-      .orderBy(col("ch").asc, col("vec_id").asc).limit(c)
-      .withColumn("cidx",
-        row_number().over(Window.orderBy(col("ch").asc, col("vec_id").asc)).cast("long"))
+    val init = hashSampled(eq, c, "cidx")
       .select(col("cidx"),
-        transform(col("qv"), q => q.cast("double") / lit(QScale.toDouble)).as("cv"))
-      .withColumn("cn", VectorFns.norm(col("cv")))
+        transform(col("qv"), q => q.cast("double") / lit(QScale.toDouble)).as("cv2"))
+      .withColumn("cn2", VectorFns.norm(col("cv2")))
     val refined = (1 to KmIters).foldLeft(init)((cb, _) => lloydStep(eq, cb, c))
-    refined.select(col("cidx"), col("cv").as("cv2"), col("cn").as("cn2"))
+    refined.select(col("cidx"), col("cv2"), col("cn2"))
   }
 
   def annIvfKmeans(spark: SparkSession, dir: String): DataFrame =
@@ -1308,12 +1343,7 @@ object SimilarityQueries {
     * semantics; only the vectors they are trained ON differ.
     */
   private def trainPqCodebook(src: DataFrame): DataFrame = {
-    val ch = graft.functions.TextFns.hash60(col("vec_id").cast("string"))
-    val init0 = src.withColumn("ch", ch)
-      .orderBy(col("ch").asc, col("vec_id").asc).limit(PqK)
-      .withColumn("cj",
-        row_number().over(Window.orderBy(col("ch").asc, col("vec_id").asc)).cast("long"))
-      .select(col("cj"), col("qv").as("qc"))
+    val init0 = hashSampled(src, PqK, "cj").select(col("cj"), col("qv").as("qc"))
     // per-subspace view of init and corpus: (m, cj, sc) / (vec_id, m, sv)
     val subSlice = (c: Column) =>
       slice(c, (col("m") * PqSub + 1).cast("int"), lit(PqSub))
@@ -1343,8 +1373,7 @@ object SimilarityQueries {
       diff * diff
     }.reduceLeft(_ + _)
     val assigned = eqSubs.join(broadcast(cents), Seq("m"))
-      .select(col("vec_id"), col("m"), col("cj"),
-        (d * lit(2L * PqK) + col("cj")).as("ord"))
+      .select(col("vec_id"), col("m"), col("cj"), pqPack(d, col("cj")).as("ord"))
       .groupBy(col("vec_id"), col("m"))
       .agg(min_by(col("cj"), col("ord")).as("cj"))
     val sumCols = (1 to PqSub).map(i => sum(element_at(col("sv"), i)).as(s"s$i"))
@@ -1379,14 +1408,22 @@ object SimilarityQueries {
       .select(col("vec_id"), col("m"), col("cj"),
         pqSubDist(col("qv"), col("qc"), col("m")).as("d"))
 
-  /** Encode (vec_id, m, cj, d) distances into one codes row per vector.
-    * d·(2·PqK)+cj packs (d asc, cj asc) into one long (d < 2^50,
-    * cj ≤ PqK) so the per-(vector, subspace) argmin stays a HashAggregate.
+  /** The PQ assignment order (d ASC, cj ASC) as ONE long, the smallest
+    * long being the nearest sub-centroid: d·(2·PqK) + cj (d < 2^50,
+    * cj ≤ PqK), so every per-(vector, subspace) argmin stays a hash
+    * aggregate. The one definition behind [[pqLloydStep]],
+    * [[encodeCodes]] and [[pqDistortion]]; [[pqDistOf]] recovers d.
     */
+  private def pqPack(d: Column, cj: Column): Column = d * lit(2L * PqK) + cj
+
+  /** The distance d of the [[pqPack]] long in column `packed`. */
+  private def pqDistOf(packed: String): Column = expr(s"$packed div ${2L * PqK}")
+
+  /** Encode (vec_id, m, cj, d) distances into one codes row per vector. */
   private def encodeCodes(dists: DataFrame): DataFrame = {
     val enc = dists
       .groupBy(col("vec_id"), col("m"))
-      .agg(min_by(col("cj"), col("d") * lit(2L * PqK) + col("cj")).as("cj"))
+      .agg(min_by(col("cj"), pqPack(col("d"), col("cj"))).as("cj"))
     val pivots = (0 until PqM).map(m =>
       max(when(col("m") === m, col("cj"))).as(s"c$m"))
     enc.groupBy(col("vec_id"))
@@ -1888,24 +1925,22 @@ object SimilarityQueries {
     *
     * Scale shape: the anchor side IS the corpus, so the per-anchor
     * top-[[HardNegProbe]] centroid selection must NOT be a window over
-    * the n·C assignment rows (that shuffles C× the corpus); instead the
-    * broadcast-codebook crossJoin collapses map-side into ONE hash
-    * aggregate collecting the C packed (cos6, cidx) longs per anchor —
-    * the exchange carries n rows — and the top-nprobe probes unpack from
-    * the sorted array (cidx = IvfC − ord mod IvfStride, the same packing the
-    * assignment argmax uses). The probe join is shuffle-hash on the cidx
+    * the n·C assignment rows (that shuffles C× the corpus); instead it is
+    * the probe stage's [[topCentroids]] heap — the broadcast-codebook
+    * crossJoin collapses map-side and the exchange carries ≤nprobe longs
+    * per anchor per partition. The probe join is shuffle-hash on the cidx
     * equi-key (never broadcast); per-anchor fan-out is the probed lists'
-    * ~HardNegProbe/IvfC of the corpus, and the top-k window partitions by
-    * anchor. At 100 TB raise IvfC so list count tracks cluster
+    * ~HardNegProbe/IvfC of the corpus, and the top-k is [[ranked]]'s heap
+    * per anchor. At 100 TB raise IvfC so list count tracks cluster
     * parallelism — identical knob and identical reasoning to [[annIvf]].
     */
   val HardNegK = 3
 
   /** Width of the candidate-id field in the packed (cos6, id) rank
-    * long — shared by the miner ([[hardNegMine]]) and every [[ranked]]
-    * search path: 42 bits is the widest the 21-bit shifted cos6 leaves
+    * long ([[candidatePack]], behind every [[ranked]] path, the miner
+    * included): 42 bits is the widest the 21-bit shifted cos6 leaves
     * ((2·10⁶)·2⁴² + 2⁴²−1 < 2⁶³). Ids beyond it (hashed 64-bit schemes)
-    * fail fast via the in-plan guards at both pack sites.
+    * fail fast via the pack's in-plan guard.
     */
   val HardNegIdBits = 42
 
@@ -1928,91 +1963,36 @@ object SimilarityQueries {
     val lists = idx.lists(spark, dir)
     val c = idx.c(spark, dir)
     val e = emb(spark, dir)
-    val stride = strideOf(c)
-    val cos6c = round(cosine(col("v"), col("cv2"), col("nrm"), col("cn2")), 6)
-    val ord = round(cos6c * lit(1000000d)).cast("long") * lit(stride) +
-      (lit(c.toLong) - col("cidx"))
-    // top-nprobe lists per anchor WITHOUT a window over n·C rows: one
-    // bounded top-k heap aggregate (partial collapses map-side after the
-    // broadcast crossJoin; O(nprobe) state per anchor vs collect_list's
-    // O(C) — the scaled codebook's C is data-derived and unbounded),
-    // unpack cidx from the packed long (pmod handles negative cos6
-    // cleanly). The packed ords are distinct per anchor (distinct cidx ⇒
-    // distinct residue), so the aggregate's distinct semantics are a
-    // no-op here.
-    val probes = e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), ord.as("ord"))
-      .groupBy(col("vec_id"))
-      .agg(TopKLongsAgg(col("ord"), nprobe).as("ords"))
-      .select(col("vec_id"), explode(col("ords")).as("ord"))
-      .select(col("vec_id"),
-        (lit(c.toLong) - pmod(col("ord"), lit(stride))).as("cidx"))
+    val probes = topCentroids(e, cents, c, nprobe)
       .join(e, Seq("vec_id"))
-      .select(col("vec_id").as("anchor_id"), col("label").as("anchor_label"),
-        col("cidx"), col("v").as("av"), col("nrm").as("an"))
+      .select(col("vec_id").as("query_id"), col("label").as("anchor_label"),
+        col("cidx"), col("v").as("qv"), col("nrm").as("qn"))
     val negs = lists
-      .select(col("cidx"), col("neighbor_id").as("neg_id"), col("cv"), col("cn"))
-      .join(e.select(col("vec_id").as("neg_id"), col("label").as("neg_label")),
-        Seq("neg_id"))
+      .select(col("cidx"), col("neighbor_id"), col("cv"), col("cn"))
+      .join(e.select(col("vec_id").as("neighbor_id"), col("label").as("neg_label")),
+        Seq("neighbor_id"))
     // a (anchor, neg) pair meets at most once: the negative sits in ONE
     // list and the anchor's probed lists are distinct; self-pairs die on
-    // the label filter (anchor_label = its own label)
-    val cos = cosine(col("av"), col("cv"), col("an"), col("cn"))
-    // Top-k per anchor via pack → bounded heap aggregate, NOT a
-    // row_number window over the candidate join output: each join row
-    // necessarily carries BOTH raw vectors (the cosine is computed here),
-    // so a window — which sorts the full candidate stream — ships ~1 KB
-    // per row through its sort. Measured at the 100× scale-up (sf10,
-    // 200 k vectors, C=64 fixed): ~1.25 G candidate rows ≈ 1.3 TB of
-    // window-sort spill — it filled a 77 GB disk and killed the stage.
-    // Here the rank key (round(cos,6) desc, neg_id asc) packs into ONE
-    // long IN THE JOIN PROJECTION (same round(cos6·10⁶) integerization as
-    // the probe-selection packing above — FP-exact for 6-decimal values),
-    // the vectors never leave the map side, and the aggregation exchange
-    // carries 8 bytes per candidate into per-anchor partial collects. The
-    // k winners (k·n rows) re-join the vector table to recompute `sim` as
-    // round(cos,4) EXACTLY — deriving it from the packed 6-decimal value
-    // would double-round. neg_id must fit HardNegIdBits = 42 bits — the
-    // widest field the 21-bit shifted cos6 leaves in a long
-    // ((2·10⁶)·2⁴² + 2⁴²−1 < 2⁶³) — and the bound is ENFORCED in-plan:
-    // an out-of-range id (e.g. a hashed 64-bit vec_id scheme) fails the
-    // job with a clear error instead of silently corrupting the ranking.
-    // One long comparison per candidate, negligible next to the cosine
-    // computed in the same projection.
-    val idCap = 1L << HardNegIdBits
-    val guardedId = when(col("neg_id") < 0 || col("neg_id") >= lit(idCap),
-      raise_error(concat(
-        lit(s"hard_negatives packing: neg_id outside [0, 2^$HardNegIdBits): "),
-        col("neg_id").cast("string")))).otherwise(col("neg_id"))
-    val pk = (round(round(cos, 6) * lit(1000000d)).cast("long") + lit(1000000L)) *
-      lit(idCap) + (lit(idCap - 1L) - guardedId)
+    // the label filter (anchor_label = its own label). Top-k per anchor is
+    // [[ranked]]'s pack → bounded heap, NOT a row_number window over the
+    // candidate join output: each join row carries BOTH raw vectors, so a
+    // window ships ~1 KB per row through its sort — measured at the 100×
+    // scale-up (sf10, 200 k vectors, C=64 fixed): ~1.25 G candidate rows
+    // ≈ 1.3 TB of window-sort spill filled a 77 GB disk and killed the
+    // stage. The heap holds HardNegK longs where collect_list would hold
+    // the per-anchor candidate count, O(n·nprobe/C) — unbounded across
+    // decades for the fixed-C control index.
+    //
     // build side = the LISTS (n rows): the probes side is n·nprobe rows of
     // the same ~512 B vector width — always nprobe× larger, and large
     // enough at the third decade (sf100: ~7 GB scaled) to fail the hash-
     // relation build that n-row lists survive
-    val topPacked = probes.join(negs.hint("shuffle_hash"), Seq("cidx"))
+    val cand = probes.join(negs.hint("shuffle_hash"), Seq("cidx"))
       .filter(col("anchor_label") =!= col("neg_label"))
-      .select(col("anchor_id"), col("anchor_label"), pk.as("pk"))
-      .groupBy(col("anchor_id"), col("anchor_label"))
-      // bounded heap, not collect_list: the per-anchor candidate count is
-      // O(n·nprobe/C) — unbounded across decades for the fixed-C control
-      // index — and collect_list holds ALL of it in the merge buffer;
-      // the heap holds HardNegK longs. Pairs meet at most once (see
-      // above), so distinct semantics are a no-op.
-      .agg(TopKLongsAgg(col("pk"), HardNegK).as("pks"))
-      .select(col("anchor_id"), col("anchor_label"),
-        posexplode(col("pks")).as(Seq("pos", "pk")))
-      .select(col("anchor_id"), col("anchor_label"),
-        (col("pos") + 1).cast("long").as("rank"),
-        (lit((1L << HardNegIdBits) - 1) - pmod(col("pk"), lit(1L << HardNegIdBits))).as("neg_id"))
-    val sim = round(cosine(col("av2"), col("nv"), col("an2"), col("nn")), 4)
-    topPacked
-      .join(e.select(col("vec_id").as("neg_id"), col("label").as("neg_label"),
-        col("v").as("nv"), col("nrm").as("nn")), Seq("neg_id"))
-      .join(e.select(col("vec_id").as("anchor_id"), col("v").as("av2"),
-        col("nrm").as("an2")), Seq("anchor_id"))
-      .select(col("anchor_id"), col("anchor_label"), col("neg_id"),
-        col("neg_label"), col("rank"), sim.as("sim"))
+    ranked(spark, dir, cand, HardNegK, withLabels = true)
+      .select(col("query_id").as("anchor_id"), col("query_label").as("anchor_label"),
+        col("neighbor_id").as("neg_id"), col("neighbor_label").as("neg_label"),
+        col("rank"), col("sim"))
   }
 
   /** The mining tail (probes → cross-label candidates → per-anchor
@@ -2150,9 +2130,8 @@ object SimilarityQueries {
   def pqDistortion(spark: SparkSession, dir: String): DataFrame =
     pqDistances(quantized(emb(spark, dir)), pqCodebook(spark, dir))
       .groupBy(col("vec_id"), col("m"))
-      .agg(min(col("d") * lit(2L * PqK) + col("cj")).as("packed"))
-      .select(col("m").cast("long").as("m"),
-        expr(s"packed div ${2L * PqK}").as("d"))
+      .agg(min(pqPack(col("d"), col("cj"))).as("packed"))
+      .select(col("m").cast("long").as("m"), pqDistOf("packed").as("d"))
       .groupBy(col("m"))
       .agg(count(lit(1)).as("n_vectors"), sum(col("d")).as("total_sqerr"))
       .withColumn("mse", col("total_sqerr").cast("double") /

@@ -906,7 +906,7 @@ object StreamingOps {
     * O(k) and O(corpus) state at 100 TB.
     *
     * Ordering key (nc, nid) = (−round(cos, 6), neighbor_id): ascending
-    * lexicographic order is exactly the batch `ranked()` window order
+    * lexicographic order is exactly the batch `ranked()` heap order
     * (cos6 DESC, neighbor_id ASC), so rank assignment agrees bit-for-bit.
     */
   private[streaming] case class ProbeCand(nc: Double, nid: Long, sim: Double)
@@ -940,9 +940,9 @@ object StreamingOps {
     *      codebook attaches as a ONE-row static crossJoin (constant
     *      broadcast — the [[graft.queries.SimilarityQueries]] pattern) and
     *      each query picks its top-`Nprobe` centroids inside one
-    *      `transform`/`sort_array`/`slice` expression — the packed-long
-    *      (cos6 DESC, cidx ASC) order of the batch probe stage, no
-    *      shuffle, no state;
+    *      `transform`/`sort_array`/`slice` expression over the batch
+    *      probe stage's packed-long (cos6 DESC, cidx ASC) key
+    *      (`centroidPack`), no shuffle, no state;
     *   2. candidate generation is a stream-STATIC equi-join on `cidx`
     *      (Spark executes it stateless — the static inverted lists are
     *      the join's build side; the query stream is never broadcast and
@@ -978,17 +978,16 @@ object StreamingOps {
   /** Shared probe stage over any IVF index — its codebook, lists and
     * list count come from the one index value, built (or read back from
     * the disk cache) exactly as the batch query builds them; the packing
-    * stride derives from the ACTUAL list count, matching the batch
-    * assignment/probe packing.
+    * key is the batch probe selection's `centroidPack`, over the ACTUAL
+    * list count.
     */
   private def probeStreamOver(spark: SparkSession, emb: DataFrame, dir: String,
       index: graft.queries.SimilarityQueries.IvfIndex): DataFrame = {
     import graft.functions.VectorFns
-    import graft.queries.SimilarityQueries.{Nprobe, TopK}
+    import graft.queries.SimilarityQueries.{Nprobe, TopK, centroidOf, centroidPack}
     val codebook = index.codebook(spark, dir)
     val lists = index.lists(spark, dir)
     val listCount = index.c(spark, dir)
-    val stride = graft.queries.SimilarityQueries.strideOf(listCount)
     val cb1 = codebook
       .agg(collect_list(struct(col("cidx"), col("cv2"), col("cn2"))).as("cb"))
     val probes = emb
@@ -996,15 +995,11 @@ object StreamingOps {
         VectorFns.toDouble(col("embedding")).as("qv"))
       .withColumn("qn", VectorFns.norm(col("qv")))
       .crossJoin(cb1)
-      .withColumn("pl", slice(sort_array(transform(col("cb"), c => {
-        val cos6 = round(VectorFns.dot(col("qv"), c("cv2")) / (col("qn") * c("cn2")), 6)
-        struct(
-          (round(cos6 * lit(1000000d)).cast("long") * lit(stride) +
-            (lit(listCount.toLong) - c("cidx"))).as("ord"),
-          c("cidx").as("cidx"))
-      }), asc = false), 1, Nprobe))
+      .withColumn("pl", slice(sort_array(transform(col("cb"), c => centroidPack(
+        VectorFns.dot(col("qv"), c("cv2")) / (col("qn") * c("cn2")), c("cidx"), listCount)),
+        asc = false), 1, Nprobe))
       .select(col("query_id"), col("qv"), col("qn"),
-        explode(col("pl.cidx")).as("cidx"))
+        explode(transform(col("pl"), o => centroidOf(o, listCount))).as("cidx"))
     val cos = VectorFns.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))
     val topk = udaf(new TopKReducer(TopK),
       org.apache.spark.sql.Encoders.product[ProbeCand])

@@ -509,4 +509,70 @@ class SimilarityPropertySpec extends SparkTestBase {
     for (i <- 1 to d)
       assert(got((i.toLong, i.toLong))._2 > 0L, s"diagonal ($i,$i) must be positive")
   }
+
+  test("probe tie rule: top-n centroids == sort by (cos6 desc, cidx asc)") {
+    // The heap selection gets the rule only through centroidPack, so pin
+    // it where it matters: cos6 ties. 10 of the 30 centroids are exact
+    // copies of others, so their cosines tie bit-for-bit against any query.
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    def vec(): Seq[Double] = Seq.fill(8)(rnd.nextGaussian())
+    val base = Seq.fill(20)(vec())
+    val cvs = base ++ base.indices.filter(_ % 2 == 0).map(base)
+    val c = cvs.length
+    val cents = cvs.zipWithIndex.map { case (v, i) => (i + 1L, v) }.toDF("cidx", "cv2")
+      .withColumn("cn2", VectorFns.norm(col("cv2")))
+    // queries: every centroid itself (a duplicated one ties at the top)
+    // and 200 random directions
+    val qs = (cvs ++ Seq.fill(200)(vec())).zipWithIndex
+      .map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "v")
+      .withColumn("nrm", VectorFns.norm(col("v")))
+    // Spark's round(cos, 6) per pair; the order is applied here, on the driver
+    val cos6 = VectorFns.dot(col("v"), col("cv2")) / (col("nrm") * col("cn2"))
+    val sorted: Map[Long, Seq[(Long, Double)]] = qs.crossJoin(cents)
+      .select(col("vec_id"), col("cidx"), round(cos6, 6))
+      .as[(Long, Long, Double)].collect().toSeq.groupBy(_._1)
+      .map { case (q, rs) => q -> rs.map(r => (r._2, r._3)).sortBy(r => (-r._2, r._1)) }
+    def check(what: String, df: org.apache.spark.sql.DataFrame, n: Int): Unit = {
+      val got = df.select(col("vec_id"), col("cidx")).as[(Long, Long)].collect().toSeq
+        .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
+      val expected = sorted.map { case (q, rs) => q -> rs.take(n).map(_._1).toSet }
+      val wrong = expected.keys.filter(q => got.get(q) != expected.get(q)).toSeq.sorted
+      if (got.keySet != expected.keySet || wrong.nonEmpty)
+        fail(s"$what, n=$n: ${wrong.size} queries differ, e.g. " +
+          wrong.take(3).map(q => s"$q got ${got.get(q)} want ${expected(q)}").mkString("; "))
+    }
+    for (n <- Seq(1, 2, SimilarityQueries.Nprobe)) {
+      assert(sorted.values.exists(rs => rs(n - 1)._2 == rs(n)._2),
+        s"no cos6 tie across the n=$n cut — the check would be vacuous")
+      check("topCentroids", SimilarityQueries.topCentroids(qs, cents, c, n), n)
+    }
+    // the assignment argmax follows the same rule
+    check("nearestCentroid", SimilarityQueries.nearestCentroid(qs, cents, c), 1)
+  }
+
+  test("candidate pack: id guard rejects -1 and 2^42; 2^42-1 round-trips") {
+    import spark.implicits._
+    import SimilarityQueries.{candidateId, candidatePack}
+    val cap = 1L << SimilarityQueries.HardNegIdBits
+    def pack(cos: Double, id: Long): Long =
+      Seq((cos, id)).toDF("cos", "id")
+        .select(candidatePack(col("cos"), col("id"))).as[Long].head()
+    def roundTrip(id: Long): Long =
+      Seq((0.5, id)).toDF("cos", "id")
+        .select(candidateId(candidatePack(col("cos"), col("id")))).as[Long].head()
+    assert(roundTrip(cap - 1) === cap - 1)
+    assert(roundTrip(0L) === 0L)
+    // (round(cos, 6) DESC, id ASC): larger long = better candidate
+    assert(pack(0.5, 3L) > pack(0.5, 7L))
+    assert(pack(0.6, 7L) > pack(0.5, 3L))
+    assert(pack(-1.0, cap - 1) >= 0L && pack(1.0, 0L) > 0L)
+    for (bad <- Seq(-1L, cap)) {
+      val err = intercept[Exception](roundTrip(bad))
+      val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(_.contains(s"outside [0, 2^${SimilarityQueries.HardNegIdBits}): $bad")),
+        s"id $bad: ${msgs.headOption.getOrElse("")}")
+    }
+  }
 }

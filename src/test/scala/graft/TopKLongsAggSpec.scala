@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.functions.{LongTopK, TopKLongsAgg}
 
 /** Differential + property pins for the bounded distinct-top-k heap
-  * aggregate backing every ANN ranking path ([[graft.queries
-  * .SimilarityQueries]]'s `ranked` and `hardNegMine`): the O(k)-state
+  * aggregate backing every ANN ranking and probe path ([[graft.queries
+  * .SimilarityQueries]]'s `ranked` — every ANN search and the hard-negative
+  * miner — and `topCentroids`, every IVF probe-list selection): the O(k)-state
   * replacement for the window sort that died at the sf10 scale-up
   * (BENCH_sf10_r15.json.failed). The reference formulation it must match
   * value-for-value is `slice(reverse(sort_array(collect_list(DISTINCT
