@@ -27,10 +27,12 @@ import org.apache.spark.sql.SparkSession
   *
   *  - `spark.sql.objectHashAggregate.sortBased.fallbackThreshold=2^22` —
   *    ObjectHashAggregate (the plan form of every TypedImperativeAggregate:
-  *    the bounded top-k heaps, collect_list, sketches) abandons hash
+  *    the bounded top-k pair heap `TopKLongsAgg` behind every ANN ranking
+  *    and probe list, collect_list, sketches) abandons hash
   *    aggregation after this many distinct keys per task and SORTS THE
   *    AGGREGATE'S INPUT STREAM instead. The 128-key default is sized for
-  *    unbounded buffers; for the engine's bounded O(k) heap aggregates it
+  *    unbounded buffers; for the engine's bounded heaps (16·k bytes per
+  *    group) it
   *    is catastrophic at scale — at the sf100 decade the hard-negative
   *    miner's per-anchor top-k (2 M groups over a 1.4e10-row candidate
   *    stream) spilled ~300 GB of sorter runs and died on disk

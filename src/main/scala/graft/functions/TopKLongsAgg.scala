@@ -8,33 +8,38 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
-/** Bounded distinct-top-k buffer over packed rank longs: a k-slot binary
-  * MIN-heap (the root is the current k-th best, so each candidate costs one
-  * comparison to reject) plus value dedup. State is O(k) — 8·k bytes —
-  * regardless of group size, which is the whole point: the alternative
-  * top-k formulations both carry O(group) through the plan
-  * (`row_number().over(window)` sorts the full candidate stream including
-  * every non-key column, and `slice(sort_array(collect_list(x)), …)` holds
-  * the group's complete value list in the aggregation buffer). Measured at
-  * the 100× scale-up (sf10, 200 k vectors): the brute-force truth build's
-  * window sort spilled the 400 M-pair × ~1.1 KB candidate stream to disk
-  * and killed the stage; with this aggregate the vectors never leave the
-  * map side and the exchange carries one ≤k-long buffer per (group ×
-  * partition).
+/** Bounded distinct-top-k buffer over (key, second) long pairs, ordered
+  * lexicographically: a k-slot binary MIN-heap (the root is the current
+  * k-th best pair, so each candidate costs one comparison to reject) plus
+  * pair dedup. State is O(k) — 16·k bytes — regardless of group size,
+  * which is the whole point: the alternative top-k formulations both
+  * carry O(group) through the plan (`row_number().over(window)` sorts the
+  * full candidate stream including every non-key column, and
+  * `slice(sort_array(collect_list(x)), …)` holds the group's complete
+  * value list in the aggregation buffer). Measured at the 100× scale-up
+  * (sf10, 200 k vectors): the brute-force truth build's window sort
+  * spilled the 400 M-pair × ~1.1 KB candidate stream to disk and killed
+  * the stage; with this aggregate the vectors never leave the map side
+  * and the exchange carries one ≤k-pair buffer per (group × partition).
   *
-  * DISTINCT semantics: a value already in the buffer is skipped, so the
-  * result is the k largest distinct values of the group. For the ANN
-  * ranking paths the packed value encodes (score, candidate id) and ids
-  * are unique per group — dedup is a no-op there — but the LSH
-  * multi-table union produces the SAME pair (hence the same packed long)
-  * once per matching table, and absorbing those duplicates here removes
-  * the pre-scoring `dropDuplicates` exchange that carried both raw
-  * vectors per candidate. Distinct-top-k is merge-order independent
-  * (if v is among the k largest distinct values globally, then no
-  * partition holds k distinct values above v, so v survives every
-  * partial buffer it appears in), so the aggregate is safe under any
-  * partial/final split — the property plain "keep k with duplicates"
-  * buffers lack.
+  * Two longs because not every ranking packs into one: the ADC order
+  * (adist ASC, id ASC) needs ~48 bits of distance AND a full id, and the
+  * cosine rankings carry their `round(cos, 4)` score bits as the second
+  * long so nothing downstream re-joins the vectors to recompute it. A
+  * one-long ordering (the centroid probe lists) passes a constant second.
+  *
+  * DISTINCT semantics: a pair already in the buffer is skipped, so the
+  * result is the k largest distinct pairs of the group. For the ANN
+  * ranking paths the pair encodes (score, candidate id) and ids are
+  * unique per group — dedup is a no-op there — but the LSH multi-table
+  * union and a query that arrives twice on a stream produce the SAME
+  * pair once per copy, and absorbing those duplicates here is what
+  * keeps each neighbour once. Distinct-top-k is merge-order independent
+  * (if p is among the k largest distinct pairs globally, then no
+  * partition holds k distinct pairs above p, so p survives every partial
+  * buffer it appears in), so the aggregate is safe under any
+  * partial/final split and in a streaming state store — the property
+  * plain "keep k with duplicates" buffers lack.
   *
   * Dedup costs a linear scan of the ≤k slots per accepted candidate
   * (rejected candidates — the vast majority once the heap warms up —
@@ -43,26 +48,34 @@ import org.apache.spark.sql.types._
   *
   * Exposed as a `TypedImperativeAggregate` (the same plumbing Spark's own
   * sketch aggregates and `collect_list` use), so the plan is a standard
-  * partial→final ObjectHashAggregate. eval returns the values sorted
-  * DESCENDING — `posexplode` positions are the 0-based ranks.
+  * partial→final ObjectHashAggregate. eval returns `array<struct<key,
+  * second>>` sorted DESCENDING — `posexplode` positions are the 0-based
+  * ranks.
   */
 final class LongTopK(val k: Int) extends Serializable {
-  val arr = new Array[Long](k) // min-heap over [0, size)
+  val keys = new Array[Long](k) // min-heap over [0, size), pairs (keys(i), seconds(i))
+  val seconds = new Array[Long](k)
   var size = 0
 
-  private def contains(v: Long): Boolean = {
+  private def less(ak: Long, as: Long, bk: Long, bs: Long): Boolean =
+    ak < bk || (ak == bk && as < bs)
+
+  private def lessAt(i: Int, j: Int): Boolean = less(keys(i), seconds(i), keys(j), seconds(j))
+
+  private def contains(key: Long, second: Long): Boolean = {
     var i = 0
-    while (i < size) { if (arr(i) == v) return true; i += 1 }
+    while (i < size) { if (keys(i) == key && seconds(i) == second) return true; i += 1 }
     false
   }
 
   private def swap(i: Int, j: Int): Unit = {
-    val t = arr(i); arr(i) = arr(j); arr(j) = t
+    val tk = keys(i); keys(i) = keys(j); keys(j) = tk
+    val ts = seconds(i); seconds(i) = seconds(j); seconds(j) = ts
   }
 
   private def siftUp(from: Int): Unit = {
     var i = from
-    while (i > 0 && arr((i - 1) >> 1) > arr(i)) { swap((i - 1) >> 1, i); i = (i - 1) >> 1 }
+    while (i > 0 && lessAt(i, (i - 1) >> 1)) { swap((i - 1) >> 1, i); i = (i - 1) >> 1 }
   }
 
   private def siftDown(): Unit = {
@@ -72,32 +85,30 @@ final class LongTopK(val k: Int) extends Serializable {
       val l = 2 * i + 1
       val r = l + 1
       var m = i
-      if (l < size && arr(l) < arr(m)) m = l
-      if (r < size && arr(r) < arr(m)) m = r
+      if (l < size && lessAt(l, m)) m = l
+      if (r < size && lessAt(r, m)) m = r
       if (m == i) done = true else { swap(m, i); i = m }
     }
   }
 
-  def add(v: Long): Unit =
+  def add(key: Long, second: Long): Unit =
     if (size < k) {
-      if (!contains(v)) { arr(size) = v; size += 1; siftUp(size - 1) }
-    } else if (v > arr(0) && !contains(v)) { // v == a buffered value ⇒ duplicate
-      arr(0) = v
+      if (!contains(key, second)) {
+        keys(size) = key; seconds(size) = second; size += 1; siftUp(size - 1)
+      }
+    } else if (less(keys(0), seconds(0), key, second) && !contains(key, second)) {
+      keys(0) = key; seconds(0) = second // equal to a buffered pair ⇒ duplicate
       siftDown()
     }
 
-  def sortedDesc: Array[Long] = {
-    val c = java.util.Arrays.copyOf(arr, size)
-    java.util.Arrays.sort(c)
-    var i = 0
-    val out = new Array[Long](size)
-    while (i < size) { out(i) = c(size - 1 - i); i += 1 }
-    out
-  }
+  /** The buffered pairs, best (lexicographically largest) first. */
+  def sortedDesc: Array[(Long, Long)] =
+    Array.tabulate(size)(i => (keys(i), seconds(i))).sorted(Ordering[(Long, Long)].reverse)
 }
 
 case class TopKLongsAgg(
-    child: Expression,
+    key: Expression,
+    second: Expression,
     k: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
@@ -113,26 +124,33 @@ case class TopKLongsAgg(
 
   override def createAggregationBuffer(): LongTopK = new LongTopK(k)
 
+  /** A row whose key or second is null is skipped. */
   override def update(buf: LongTopK, input: InternalRow): LongTopK = {
-    val v = child.eval(input)
-    if (v != null) buf.add(v.asInstanceOf[Long])
+    val kv = key.eval(input)
+    if (kv != null) {
+      val sv = second.eval(input)
+      if (sv != null) buf.add(kv.asInstanceOf[Long], sv.asInstanceOf[Long])
+    }
     buf
   }
 
   override def merge(a: LongTopK, b: LongTopK): LongTopK = {
     var i = 0
-    while (i < b.size) { a.add(b.arr(i)); i += 1 }
+    while (i < b.size) { a.add(b.keys(i), b.seconds(i)); i += 1 }
     a
   }
 
-  /** array<bigint> of the group's k largest distinct values, descending. */
-  override def eval(buf: LongTopK): Any = new GenericArrayData(buf.sortedDesc)
+  /** array<struct<key, second>> of the group's k largest distinct pairs,
+    * descending.
+    */
+  override def eval(buf: LongTopK): Any =
+    new GenericArrayData(buf.sortedDesc.map { case (kk, s) => InternalRow(kk, s) })
 
   override def serialize(buf: LongTopK): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + 8 * buf.size)
+    val bb = java.nio.ByteBuffer.allocate(4 + 16 * buf.size)
     bb.putInt(buf.size)
     var i = 0
-    while (i < buf.size) { bb.putLong(buf.arr(i)); i += 1 }
+    while (i < buf.size) { bb.putLong(buf.keys(i)).putLong(buf.seconds(i)); i += 1 }
     bb.array()
   }
 
@@ -140,21 +158,21 @@ case class TopKLongsAgg(
     val bb = java.nio.ByteBuffer.wrap(bytes)
     val n = bb.getInt
     val buf = new LongTopK(k)
-    // serialize wrote arr[0, size) verbatim — already deduped AND in valid
-    // min-heap order, so restore by direct copy (the old add() path paid
-    // an O(k) dedup scan per element = O(k²) per buffer deserialization)
+    // serialize wrote [0, size) verbatim — already deduped AND in valid
+    // min-heap order, so restore by direct copy (re-adding would pay an
+    // O(k) dedup scan per pair = O(k²) per buffer deserialization)
     var i = 0
-    while (i < n) { buf.arr(i) = bb.getLong; i += 1 }
+    while (i < n) { buf.keys(i) = bb.getLong; buf.seconds(i) = bb.getLong; i += 1 }
     buf.size = n
     buf
   }
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def dataType: DataType = ArrayType(TopKLongsAgg.PairType, containsNull = false)
   override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
+  override def children: Seq[Expression] = Seq(key, second)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren.head)
+    copy(key = newChildren(0), second = newChildren(1))
   override def withNewMutableAggBufferOffset(o: Int): TopKLongsAgg =
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): TopKLongsAgg =
@@ -163,7 +181,11 @@ case class TopKLongsAgg(
 }
 
 object TopKLongsAgg {
-  def apply(packed: Column, k: Int): Column =
-    ColumnBridge.column(
-      TopKLongsAgg(ColumnBridge.expression(packed), k).toAggregateExpression())
+  val PairType: StructType = StructType(Seq(
+    StructField("key", LongType, nullable = false),
+    StructField("second", LongType, nullable = false)))
+
+  def apply(key: Column, second: Column, k: Int): Column =
+    ColumnBridge.column(TopKLongsAgg(ColumnBridge.expression(key),
+      ColumnBridge.expression(second), k).toAggregateExpression())
 }

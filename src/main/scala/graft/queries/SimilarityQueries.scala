@@ -1,8 +1,11 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.Tables
 import graft.functions.{TextFns, TopKLongsAgg, VectorFns}
@@ -101,7 +104,7 @@ object SimilarityQueries {
   /** `ann_topk` — exact brute-force cosine top-10 for a deterministic query
     * subset (vec_id ≡ 0 mod 101): broadcast the query side in BOUNDED
     * chunks, stream the corpus side once per chunk, per-query top-k via
-    * window. This is the recall=1 baseline the LSH variant is measured
+    * [[ranked]]. This is the recall=1 baseline the LSH variant is measured
     * against.
     *
     * The query set is O(corpus/QueryMod), so an unchunked `broadcast(q)`
@@ -173,62 +176,45 @@ object SimilarityQueries {
   private[graft] def chunkOf(queryId: Column, nChunks: Int): Column =
     pmod(xxhash64(queryId), lit(nChunks.toLong))
 
-  /** Per-query exact top-`k` over a candidate-pair stream carrying
-    * both raw vectors (query_id, neighbor_id, qv, qn, cv, cn). Order is
-    * `round(cos, 6) desc, neighbor_id asc`; `sim` is `round(cos, 4)`.
-    * Shared by every ANN search path (k = [[TopK]]) and the hard-negative
-    * miner (k = [[HardNegK]], `withLabels` appends `query_label` and
-    * `neighbor_label` from the two re-joins it already makes).
+  /** Per-group exact top-`k` over a candidate-pair stream carrying
+    * both raw vectors (`by` columns, neighbor_id, qv, qn, cv, cn). Order
+    * is `round(cos, 6) desc, neighbor_id asc`; `sim` is `round(cos, 4)`.
+    * Grouped per query by every ANN search (k = [[TopK]]) and the
+    * hard-negative miner (k = [[HardNegK]]), per (window, query) by the
+    * streaming probe twins (`StreamingOps.probeStreamOver`).
     *
-    * NOT a `row_number` window: each candidate row necessarily carries
-    * both 64-double vectors (the cosine is computed here), and a window
-    * sorts the full candidate stream — ~1.1 KB per row through its
-    * exchange. Measured at the 100× scale-up (sf10, 200 k vectors): the
+    * NOT a `row_number` window: each candidate row carries both
+    * 64-double vectors, and a window sorts the full candidate stream —
+    * ~1.1 KB per row. At the 100× scale-up (sf10, 200 k vectors) the
     * brute-force truth build's 400 M-candidate window sort filled the
-    * disk and killed the stage (BENCH_sf10_r15.json.failed), the same
-    * failure mode hard_negatives hit a round earlier. Instead the rank
-    * key packs into ONE long in the join projection ([[candidatePack]])
-    * and a bounded distinct-top-k heap aggregate ([[TopKLongsAgg]], O(k)
-    * state) keeps the k best per query: the vectors never leave the map
-    * side and the aggregation exchange carries one ≤k-long buffer per
-    * query per partition. Duplicate candidate PAIRS (the LSH multi-table
-    * union emits a pair once per matching table) pack to the SAME long
-    * and the aggregate's distinct semantics absorb them — no pre-scoring
-    * `dropDuplicates` exchange either.
-    *
-    * The k winners (≤ k·nq rows) re-join the vector table by id to
-    * recompute `sim` as round(cos, 4) EXACTLY — deriving it from the
-    * packed 6-decimal value would double-round.
-    *
-    * PRECONDITION (silent-row-loss hazard, round-15 advice): BOTH id
-    * columns of `joined` must be `emb(spark, dir)` vec_ids — the winner
-    * re-join is INNER, so a candidate stream whose query or neighbor ids
-    * are not drawn from the embeddings table (e.g. a future external
-    * query-vector set) would silently drop those winners rather than
-    * fail. All current callers pass emb-derived ids; a new call site with
-    * external vectors must thread its own vector table through here
-    * instead of emb (or left-join + assert).
+    * disk (BENCH_sf10_r15.json.failed). Instead, in ONE projection of the
+    * join output, the rank key packs into a long ([[candidatePack]]) with
+    * `round(cos, 4)`'s IEEE bits beside it, and the [[TopKLongsAgg]] pair
+    * heap keeps the k best per group: the vectors never leave the map
+    * side, and `sim` comes back bit-exact from the pair — no re-join, no
+    * second rounding. Duplicate candidate pairs (the LSH multi-table
+    * union; a query a stream delivers twice) are the same pair, and the
+    * heap's distinct semantics absorb them.
     */
-  private def ranked(spark: SparkSession, dir: String, joined: DataFrame,
-      k: Int = TopK, withLabels: Boolean = false): DataFrame = {
+  private[graft] def ranked(joined: DataFrame, k: Int = TopK,
+      by: Seq[String] = Seq("query_id")): DataFrame = {
     val cos = cosine(col("qv"), col("cv"), col("qn"), col("cn"))
-    val e = emb(spark, dir)
-    val sim = round(cosine(col("qv2"), col("cv2"), col("qn2"), col("cn2")), 4)
-    val labels = if (withLabels) Seq(col("query_label"), col("neighbor_label")) else Nil
+    val keys = by.map(col)
     joined
-      .select(col("query_id"), candidatePack(cos, col("neighbor_id")).as("pk"))
-      .groupBy(col("query_id"))
-      .agg(TopKLongsAgg(col("pk"), k).as("pks"))
-      .select(col("query_id"), posexplode(col("pks")).as(Seq("pos", "pk")))
-      .select(col("query_id"), candidateId(col("pk")).as("neighbor_id"),
-        (col("pos") + 1).cast("long").as("rank"))
-      .join(e.select(col("vec_id").as("query_id"), col("label").as("query_label"),
-        col("v").as("qv2"), col("nrm").as("qn2")), Seq("query_id"))
-      .join(e.select(col("vec_id").as("neighbor_id"), col("label").as("neighbor_label"),
-        col("v").as("cv2"), col("nrm").as("cn2")), Seq("neighbor_id"))
-      .select(Seq(col("query_id"), col("neighbor_id"), col("rank"), sim.as("sim")) ++
-        labels: _*)
+      .select(keys ++ Seq(candidatePack(cos, col("neighbor_id")).as("pk"),
+        doubleBits(round(cos, 4)).as("sb")): _*)
+      .groupBy(keys: _*)
+      .agg(TopKLongsAgg(col("pk"), col("sb"), k).as("top"))
+      .select(keys :+ posexplode(col("top")).as(Seq("pos", "p")): _*)
+      .select(keys ++ Seq(candidateId(col("p.key")).as("neighbor_id"),
+        (col("pos") + 1).cast("long").as("rank"), bitsDouble(col("p.second")).as("sim")): _*)
   }
+
+  /** A double's IEEE-754 bits as a long, and back. */
+  private def doubleBits(d: Column): Column = ColumnBridge.column(StaticInvoke(
+    classOf[java.lang.Double], LongType, "doubleToLongBits", Seq(ColumnBridge.expression(d))))
+  private def bitsDouble(b: Column): Column = ColumnBridge.column(StaticInvoke(
+    classOf[java.lang.Double], DoubleType, "longBitsToDouble", Seq(ColumnBridge.expression(b))))
 
   /** The candidate order (round(cos, 6) DESC, id ASC) as ONE long, the
     * largest long being the best candidate: round(cos6·10⁶) ∈ [−10⁶, 10⁶]
@@ -295,7 +281,7 @@ object SimilarityQueries {
       broadcast(qk).join(c, col("query_id") =!= col("neighbor_id"))
     }.reduce(_ union _)
     // chunks are query_id-disjoint, so the per-query top-k agg is chunk-safe
-    ranked(spark, dir, joined)
+    ranked(joined)
   }
 
   private def rankedSql(candJoin: String): String =
@@ -372,7 +358,7 @@ object SimilarityQueries {
     Memo.memoizeValue(spark, dir, s"plan:$name")(build)
 
   def annLsh(spark: SparkSession, dir: String): DataFrame =
-    planMemo(spark, dir, "ann_lsh")(ranked(spark, dir, lshCandidatesBuild(spark, dir)))
+    planMemo(spark, dir, "ann_lsh")(ranked(lshCandidatesBuild(spark, dir)))
 
   /** DEDUPED candidate-pair IDS of the LSH search — the exact-scored
     * candidate set [[annRecallReport]] counts (the same set the
@@ -691,15 +677,16 @@ object SimilarityQueries {
     * carries one ≤n-long buffer per vector per partition where a window
     * would sort all n·C rows. The packed ords are distinct per vector
     * (distinct cidx ⇒ distinct residue), so the aggregate's distinct
-    * semantics are a no-op.
+    * semantics are a no-op; one long orders them, so the pair's second
+    * long is a constant.
     */
   private[graft] def topCentroids(side: DataFrame, cents: DataFrame, c: Int,
       n: Int): DataFrame =
     centroidOrds(side, cents, c)
       .groupBy(col("vec_id"))
-      .agg(TopKLongsAgg(col("ord"), n).as("ords"))
+      .agg(TopKLongsAgg(col("ord"), lit(0L), n).as("ords"))
       .select(col("vec_id"), explode(col("ords")).as("ord"))
-      .select(col("vec_id"), centroidOf(col("ord"), c).as("cidx"))
+      .select(col("vec_id"), centroidOf(col("ord.key"), c).as("cidx"))
 
   /** One IVF index, described once: its codebook (cidx, cv2, cn2) with
     * cidx DENSE in [1, c], its list count `c`, and the labels of the disk
@@ -905,7 +892,7 @@ object SimilarityQueries {
     * sharing every memoized index artifact.
     */
   private def annIvfProbe(spark: SparkSession, dir: String, idx: IvfIndex): DataFrame =
-    ranked(spark, dir, ivfCandidates(spark, dir, idx))
+    ranked(ivfCandidates(spark, dir, idx))
 
   /** The IVF search stage as oracle SQL — tc/assigned/probes/rank over a
     * codebook CTE named `$cent` with columns (cidx, cv, cn). Shared by the
@@ -1456,23 +1443,27 @@ object SimilarityQueries {
       .select(col("vec_id").as("query_id"),
         transform(col("kd"), x => x.getField("d")).as("tds"))
 
-  /** ADC scoring tail shared by [[annPq]] and [[annIvfPq]]: `joined` must
+  /** ADC scoring tail shared by [[annPq]] and [[ivfPqAdc]]: `joined` must
     * carry (query_id, tds, neighbor_id, codes); adist = PqM table lookups
-    * summed as exact BIGINT, rank per query by (adist, neighbor_id), top-k
-    * kept (k = TopK for the search result, RerankR for the re-rank
-    * candidate stage).
+    * summed as exact BIGINT, rank per query by (adist ASC, neighbor_id
+    * ASC), top-k kept. adist bounds at ~2^48 (16 sub-blocks × 4 dims ×
+    * (2·2^20)² residual diffs), too wide to share one long with the id,
+    * so the order is the [[TopKLongsAgg]] pair (−adist, −neighbor_id) —
+    * the largest pair is the nearest candidate, the same bounded heap as
+    * every cosine ranking.
     */
-  private def pqRank(joined: DataFrame, k: Int = TopK): DataFrame = {
+  private def pqRank(joined: DataFrame, k: Int): DataFrame = {
     val adist = (0 until PqM).map { m =>
       element_at(col("tds"),
         (lit(m * PqK) + element_at(col("codes"), m + 1)).cast("int"))
     }.reduceLeft(_ + _)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist").asc, col("neighbor_id").asc)
-    joined.withColumn("adist", adist)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("adist"), col("rank"))
+    joined
+      .select(col("query_id"), (-adist).as("na"), (-col("neighbor_id")).as("nn"))
+      .groupBy(col("query_id"))
+      .agg(TopKLongsAgg(col("na"), col("nn"), k).as("top"))
+      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "p")))
+      .select(col("query_id"), (-col("p.second")).as("neighbor_id"),
+        (-col("p.key")).as("adist"), (col("pos") + 1).cast("long").as("rank"))
   }
 
   def annPq(spark: SparkSession, dir: String,
@@ -1498,7 +1489,7 @@ object SimilarityQueries {
       val qk = if (nChunks == 1) q else q.filter(chunkOf(col("query_id"), nChunks) === k)
       broadcast(qk).join(c, col("query_id") =!= col("neighbor_id"))
     }.reduce(_ union _)
-    pqRank(joined)
+    pqRank(joined, TopK)
   }
 
   /** The PQ train+encode CTE chain over a (vec_id, qv) source CTE named
@@ -1618,7 +1609,8 @@ object SimilarityQueries {
     * thus the probed fraction) differs.
     */
   def annIvfPq(spark: SparkSession, dir: String): DataFrame =
-    planMemo(spark, dir, "ann_ivfpq")(ivfPqAdc(spark, dir, LloydIvf, TopK))
+    planMemo(spark, dir, "ann_ivfpq")(
+      ivfPqAdc(spark, dir, LloydIvf).filter(col("rank") <= TopK))
 
   /** The IVFADC artifacts of a Lloyd index — the chain is defined over
     * Lloyd codebooks only.
@@ -1683,13 +1675,10 @@ object SimilarityQueries {
     * residual sub-codebooks. (query_id, cidx, tds) with tds laid out
     * exactly like [[pqQueryTables]]' so [[pqRank]] scores both variants.
     *
-    * The tables are memoized — shared by [[annIvfPq]]
-    * (k = TopK) and [[annIvfPqRerank]] (k = RerankR): the two consumers
-    * differ only in how many candidates they keep, so the per-(query,
+    * The tables are memoized: [[annIvfPq]] and [[annIvfPqRerank]] are
+    * separate actions over the one [[ivfPqAdc]] plan, and the per-(query,
     * probed list) table build (residuals × sub-codebook scoring + the
-    * 4096-slot sort) is identical and O(nq · Nprobe) rows. Without the
-    * memo each consumer — and the recall report, which runs both —
-    * rebuilds it.
+    * 4096-slot sort, O(nq · Nprobe) rows) would otherwise re-run in each.
     */
   private def rpqQueryTables(spark: SparkSession, dir: String, idx: IvfIndex): DataFrame =
     Memo.memoize(spark, dir, s"ivfadc_query_tables:${idx.tag}") {
@@ -1714,13 +1703,14 @@ object SimilarityQueries {
           transform(col("kd"), x => x.getField("d")).as("tds"))
     }
 
-  /** The IVFADC candidate stage shared by [[annIvfPq]] (k = TopK, result
-    * ranks ARE the ADC ranks) and [[annIvfPqRerank]] (k = RerankR,
-    * candidates only) — and, via `idx`, by their capacity-law twins:
-    * per-(query, list) tables ⋈ (lists ⋈ residual codes) shuffle-hash on
-    * cidx, ADC scoring, top-k per query. A candidate sits in exactly one
-    * list and probe lists are distinct, so no (query, candidate) pair is
-    * scored twice.
+  /** The IVFADC ranking of `idx`, ONE plan per index shared by
+    * [[annIvfPq]] and [[annIvfPqRerank]] (and, via `idx`, by their
+    * capacity-law twins): per-(query, list) tables ⋈ (lists ⋈ residual
+    * codes) shuffle-hash on cidx, ADC scoring, and the top-[[RerankR]]
+    * per query. The re-rank reads its R candidates from it; ann_ivfpq is
+    * its rank ≤ [[TopK]] prefix. A candidate sits in exactly one list and
+    * probe lists are distinct, so no (query, candidate) pair is scored
+    * twice.
     *
     * The shuffle-hash BUILD side is the CODES index, not the ADC tables:
     * a codes row is ~40 B (PqM byte-scale codes + two ids) while an ADC
@@ -1733,35 +1723,20 @@ object SimilarityQueries {
     * by the adist projection in the same stage, so nothing wide is ever
     * buffered.
     *
-    * Round-18 measured dead end, kept on record (verdict item 1's "share
-    * one exchange subtree" lever): [[annIvfPq]] (rank ≤ TopK) is exactly
-    * the PREFIX of [[annIvfPqRerank]]'s rank ≤ RerankR candidate ranking
-    * (row_number over (adist ASC, neighbor_id ASC) is a deterministic
-    * total order), so both twins were rebuilt over ONE memoized
-    * rank-≤-RerankR plan with ann_ivfpq adding `filter(rank <= TopK)` on
-    * top — bit-identical results, and in the report (which runs both
-    * twins in one action) the ADC chains should have canonicalized equal
-    * and let AQE's stage cache execute the shuffle-hash join + adist
-    * scoring + ranking exchange ONCE per quantizer. It does not work:
-    * InsertWindowGroupLimit pushes each branch's rank bound below the
-    * window as a PARTIAL WindowGroupLimit on the map side of the ranking
-    * exchange (verified in the final adaptive plan: `row_number(), 10,
-    * Partial` vs `…, 100, Partial` per quantizer), so the optimizer
-    * re-splits the shared subtree and zero stages dedupe; the paired
-    * subset bench measured it flat (report 2.098 → 2.103 s warm sf0.1)
-    * with standalone ann_ivfpq paying rank-100 heap work for nothing.
-    * Reverted. A real fix needs a rank mechanism with no window for the
-    * optimizer to split — the [[TopKLongsAgg]] bounded heap — but the
-    * packed-long trick cannot carry (adist, id): adist bounds at
-    * ~2^48 (16 sub-blocks × 4 dims × (2·2^20)² residual diffs), leaving
-    * under 15 bits for the id tiebreak. A two-long-buffer heap aggregate
-    * would do it; weigh against the duplicated map stage actually
-    * measured before building one.
+    * One plan serves both (the deeper top-k answers the shallower, as in
+    * PAPERS.md's incremental top-k framework) because the ranking is the
+    * [[TopKLongsAgg]] pair heap over (adist ASC, neighbor_id ASC), a
+    * total order, and not a window: over a `row_number` window,
+    * InsertWindowGroupLimit pushes each consumer's own rank bound below
+    * the ranking exchange (`row_number(), 10, Partial` vs `…, 100,
+    * Partial`) and splits the plan. Standalone ann_ivfpq keeps 100 pairs
+    * per query instead of 10 — O(k) state either way.
     */
-  private def ivfPqAdc(spark: SparkSession, dir: String, idx: IvfIndex, k: Int): DataFrame =
-    pqRank(rpqQueryTables(spark, dir, idx)
-      .join(ivfPqResIndex(spark, dir, idx).hint("shuffle_hash"), Seq("cidx"))
-      .filter(col("query_id") =!= col("neighbor_id")), k)
+  private[graft] def ivfPqAdc(spark: SparkSession, dir: String, idx: IvfIndex): DataFrame =
+    planMemo(spark, dir, s"ivfadc_rank:${idx.tag}")(
+      pqRank(rpqQueryTables(spark, dir, idx)
+        .join(ivfPqResIndex(spark, dir, idx).hint("shuffle_hash"), Seq("cidx"))
+        .filter(col("query_id") =!= col("neighbor_id")), RerankR))
 
   // ------------------------------------------------------- ann_ivfpq_scaled
   /** `ann_ivfpq_scaled` — IVFADC whose coarse quantizer follows the
@@ -1780,7 +1755,8 @@ object SimilarityQueries {
     * hash-checked end to end.
     */
   def annIvfPqScaled(spark: SparkSession, dir: String): DataFrame =
-    planMemo(spark, dir, "ann_ivfpq_scaled")(ivfPqAdc(spark, dir, LloydScaledIvf, TopK))
+    planMemo(spark, dir, "ann_ivfpq_scaled")(
+      ivfPqAdc(spark, dir, LloydScaledIvf).filter(col("rank") <= TopK))
 
   /** The residual probe/assign/encode/ADC CTE chain shared by the IVFADC
     * oracle and its re-rank twin — and, via `centChain`, by their
@@ -1868,13 +1844,38 @@ object SimilarityQueries {
       ivfPqRerank(spark, dir, LloydScaledIvf))
 
   /** The exact re-rank of `idx`'s top-[[RerankR]] IVFADC candidates. */
-  private def ivfPqRerank(spark: SparkSession, dir: String, idx: IvfIndex): DataFrame = {
-    val cand = ivfPqAdc(spark, dir, idx, RerankR)
-      .select(col("query_id"), col("neighbor_id"))
+  private def ivfPqRerank(spark: SparkSession, dir: String, idx: IvfIndex): DataFrame =
+    ranked(withVectors(spark, dir,
+      ivfPqAdc(spark, dir, idx).select(col("query_id"), col("neighbor_id"))))
+
+  /** `cand` (query_id, neighbor_id, …) with [[ranked]]'s qv, qn, cv, cn. */
+  private def withVectors(spark: SparkSession, dir: String, cand: DataFrame): DataFrame = {
     val e = emb(spark, dir)
     val q = e.select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
     val c = e.select(col("vec_id").as("neighbor_id"), col("v").as("cv"), col("nrm").as("cn"))
-    ranked(spark, dir, cand.join(q, Seq("query_id")).join(c, Seq("neighbor_id")))
+    cand.join(q, Seq("query_id")).join(c, Seq("neighbor_id"))
+  }
+
+  /** Both IVFADC twins of `idx` for [[annRecallReport]] as (index,
+    * query_id, neighbor_id) rows from ONE occurrence of its [[ivfPqAdc]]
+    * ranking, decimated by `dec`: each candidate is tagged
+    * `ann_ivfpq_rerank<suffix>`, a rank ≤ [[TopK]] one also
+    * `ann_ivfpq<suffix>`, and [[ranked]] per (index, query) keeps the
+    * re-rank's top-TopK and every prefix row — the row sets of
+    * [[annIvfPqRerank]] and [[annIvfPq]]. Two searches in one plan would
+    * run the ADC join twice: Spark 4.1's AQE wraps each cached-table scan
+    * in a TableCacheQueryStage whose canonical form keeps its stage id, so
+    * no exchange above a memoized table is ever reused.
+    */
+  private def ivfPqTwinRows(spark: SparkSession, dir: String, idx: IvfIndex,
+      suffix: String, dec: DataFrame => DataFrame): DataFrame = {
+    val rerank = lit(s"ann_ivfpq_rerank$suffix")
+    val roles = when(col("rank") <= TopK, array(lit(s"ann_ivfpq$suffix"), rerank))
+      .otherwise(array(rerank))
+    val cand = dec(ivfPqAdc(spark, dir, idx)).select(col("query_id"), col("neighbor_id"),
+      explode(roles).as("index"))
+    ranked(withVectors(spark, dir, cand), TopK, Seq("index", "query_id"))
+      .select(col("index"), col("query_id"), col("neighbor_id"))
   }
 
   private def ivfPqRerankSqlOver(adcCtes: String): String =
@@ -1974,14 +1975,9 @@ object SimilarityQueries {
     // a (anchor, neg) pair meets at most once: the negative sits in ONE
     // list and the anchor's probed lists are distinct; self-pairs die on
     // the label filter (anchor_label = its own label). Top-k per anchor is
-    // [[ranked]]'s pack → bounded heap, NOT a row_number window over the
-    // candidate join output: each join row carries BOTH raw vectors, so a
-    // window ships ~1 KB per row through its sort — measured at the 100×
-    // scale-up (sf10, 200 k vectors, C=64 fixed): ~1.25 G candidate rows
-    // ≈ 1.3 TB of window-sort spill filled a 77 GB disk and killed the
-    // stage. The heap holds HardNegK longs where collect_list would hold
-    // the per-anchor candidate count, O(n·nprobe/C) — unbounded across
-    // decades for the fixed-C control index.
+    // [[ranked]]'s heap, not a window over the vector-carrying join (at
+    // sf10 its ~1.3 TB sort spill filled the disk); the two labels join
+    // back onto the ≤ HardNegK·n winners only.
     //
     // build side = the LISTS (n rows): the probes side is n·nprobe rows of
     // the same ~512 B vector width — always nprobe× larger, and large
@@ -1989,10 +1985,13 @@ object SimilarityQueries {
     // relation build that n-row lists survive
     val cand = probes.join(negs.hint("shuffle_hash"), Seq("cidx"))
       .filter(col("anchor_label") =!= col("neg_label"))
-    ranked(spark, dir, cand, HardNegK, withLabels = true)
-      .select(col("query_id").as("anchor_id"), col("query_label").as("anchor_label"),
-        col("neighbor_id").as("neg_id"), col("neighbor_label").as("neg_label"),
-        col("rank"), col("sim"))
+    ranked(cand, HardNegK)
+      .join(e.select(col("vec_id").as("query_id"), col("label").as("anchor_label")),
+        Seq("query_id"))
+      .join(e.select(col("vec_id").as("neighbor_id"), col("label").as("neg_label")),
+        Seq("neighbor_id"))
+      .select(col("query_id").as("anchor_id"), col("anchor_label"),
+        col("neighbor_id").as("neg_id"), col("neg_label"), col("rank"), col("sim"))
   }
 
   /** The mining tail (probes → cross-label candidates → per-anchor
@@ -2368,20 +2367,19 @@ object SimilarityQueries {
     val kmScaledNcand = ivfScanCount(full, LloydScaledIvf)
     val ivfNcand = ivfScanCount(ctl, SampledIvf)
     val ivfScaledNcand = ivfScanCount(full, ScaledIvf)
-    val indexes: Seq[(String, DataFrame, Double, Regime)] = Seq(
-      ("ann_lsh", annLsh(spark, dir), fracOf(ctl, lshNcand), ctl),
-      ("ann_ivf", annIvf(spark, dir), fracOf(ctl, ivfNcand), ctl),
-      ("ann_ivf_scaled", annIvfScaled(spark, dir), fracOf(full, ivfScaledNcand), full),
-      ("ann_ivf_kmeans", annIvfKmeans(spark, dir), fracOf(ctl, kmNcand), ctl),
-      ("ann_ivf_kmeans_scaled", annIvfKmeansScaled(spark, dir),
+    // the IVFADC twins (no search frame) come from [[ivfPqTwinRows]]
+    val indexes: Seq[(String, Option[DataFrame], Double, Regime)] = Seq(
+      ("ann_lsh", Some(annLsh(spark, dir)), fracOf(ctl, lshNcand), ctl),
+      ("ann_ivf", Some(annIvf(spark, dir)), fracOf(ctl, ivfNcand), ctl),
+      ("ann_ivf_scaled", Some(annIvfScaled(spark, dir)), fracOf(full, ivfScaledNcand), full),
+      ("ann_ivf_kmeans", Some(annIvfKmeans(spark, dir)), fracOf(ctl, kmNcand), ctl),
+      ("ann_ivf_kmeans_scaled", Some(annIvfKmeansScaled(spark, dir)),
         fracOf(full, kmScaledNcand), full),
-      ("ann_pq", annPq(spark, dir), 1.0, ctl), // linear compressed scan
-      ("ann_ivfpq", annIvfPq(spark, dir), fracOf(ctl, kmNcand), ctl),
-      ("ann_ivfpq_scaled", annIvfPqScaled(spark, dir),
-        fracOf(full, kmScaledNcand), full),
-      ("ann_ivfpq_rerank", annIvfPqRerank(spark, dir), fracOf(ctl, kmNcand), ctl),
-      ("ann_ivfpq_rerank_scaled", annIvfPqRerankScaled(spark, dir),
-        fracOf(full, kmScaledNcand), full))
+      ("ann_pq", Some(annPq(spark, dir)), 1.0, ctl), // linear compressed scan
+      ("ann_ivfpq", None, fracOf(ctl, kmNcand), ctl),
+      ("ann_ivfpq_scaled", None, fracOf(full, kmScaledNcand), full),
+      ("ann_ivfpq_rerank", None, fracOf(ctl, kmNcand), ctl),
+      ("ann_ivfpq_rerank_scaled", None, fracOf(full, kmScaledNcand), full))
     // ONE audit pipeline over a TAGGED UNION of the ten index outputs
     // (round-17 optimization, guide §2.4/§7.2): the round-16 form built
     // ten separate per-index audit branches — ten semi-joins, ten
@@ -2406,9 +2404,10 @@ object SimilarityQueries {
     // disabling AQE for the report OOMed a 48 GB driver at sf10, because
     // AQE is also what right-sizes the scaled searches' runtime
     // broadcasts and coalesces their shuffles.
-    val tagged = indexes.map { case (nm, df, _, r) =>
+    val tagged = (indexes.collect { case (nm, Some(df), _, r) =>
       r.dec(df).select(lit(nm).as("index"), col("query_id"), col("neighbor_id"))
-    }.reduce(_.unionByName(_))
+    } ++ Seq(ivfPqTwinRows(spark, dir, LloydIvf, "", ctl.dec),
+      ivfPqTwinRows(spark, dir, LloydScaledIvf, "_scaled", full.dec))).reduce(_.unionByName(_))
     val truthTagged = indexes.map { case (nm, _, _, r) =>
       r.truth.select(lit(nm).as("index"), col("query_id"), col("t"))
     }.reduce(_.unionByName(_))

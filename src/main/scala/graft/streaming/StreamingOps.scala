@@ -896,35 +896,6 @@ object StreamingOps {
     */
   val ProbeHorizon: String = "10 minutes"
 
-  /** Bounded top-k accumulator for the streaming ANN probe: the state a
-    * query holds is AT MOST k candidates — reduce/merge insert and trim,
-    * so arrival order and micro-batch boundaries cannot change the final
-    * set (top-k of a union = top-k of per-part top-k's: the merge is
-    * associative and commutative on trimmed buffers). A `collect_list`
-    * aggregation would instead hold EVERY probed candidate per query
-    * (Nprobe/C of the corpus) in the state store — the difference between
-    * O(k) and O(corpus) state at 100 TB.
-    *
-    * Ordering key (nc, nid) = (−round(cos, 6), neighbor_id): ascending
-    * lexicographic order is exactly the batch `ranked()` heap order
-    * (cos6 DESC, neighbor_id ASC), so rank assignment agrees bit-for-bit.
-    */
-  private[streaming] case class ProbeCand(nc: Double, nid: Long, sim: Double)
-  private[streaming] case class TopKBuf(items: Seq[ProbeCand])
-  private[streaming] class TopKReducer(k: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[ProbeCand, TopKBuf, TopKBuf] {
-    private def trim(s: Seq[ProbeCand]): Seq[ProbeCand] =
-      s.sortBy(c => (c.nc, c.nid)).take(k)
-    def zero: TopKBuf = TopKBuf(Nil)
-    def reduce(b: TopKBuf, a: ProbeCand): TopKBuf = TopKBuf(trim(a +: b.items))
-    def merge(x: TopKBuf, y: TopKBuf): TopKBuf = TopKBuf(trim(x.items ++ y.items))
-    def finish(b: TopKBuf): TopKBuf = TopKBuf(trim(b.items))
-    def bufferEncoder: org.apache.spark.sql.Encoder[TopKBuf] =
-      org.apache.spark.sql.Encoders.product[TopKBuf]
-    def outputEncoder: org.apache.spark.sql.Encoder[TopKBuf] =
-      org.apache.spark.sql.Encoders.product[TopKBuf]
-  }
-
   /** Streaming form of `ann_ivf_kmeans` — real-time similarity retrieval:
     * a stream of query vectors probes the STATIC k-means IVF index that
     * the batch build job wrote (served through `Memo.memoizeDisk`, so
@@ -947,13 +918,23 @@ object StreamingOps {
     *      (Spark executes it stateless — the static inverted lists are
     *      the join's build side; the query stream is never broadcast and
     *      never buffered);
-    *   3. per-query top-k is the ONLY stateful operator, with O(k) state
-    *      per (window, query) via [[TopKReducer]]; the processing-time
-    *      watermark ages finished queries out of the store.
+    *   3. per-query top-k is the ONLY stateful operator: the batch
+    *      ranking itself (`SimilarityQueries.ranked`, its packed
+    *      (cos6, id) key and `round(cos, 4)` bits in the
+    *      [[graft.functions.TopKLongsAgg]] pair heap), grouped by
+    *      (window, query) — 16·k bytes of state per group; the
+    *      processing-time watermark ages finished queries out of the
+    *      store.
     * Update mode; each trigger refreshes the top-k of queries that gained
     * candidates. On a closed input the final per-query rows equal the
     * batch `ann_ivf_kmeans` rows exactly (same index artifacts, same
-    * integer-packed orderings end-to-end) — pinned by StreamingSpec.
+    * ranking code) — pinned by StreamingSpec, also for a query stream
+    * that delivers every query twice (the heap keeps distinct pairs, so
+    * each neighbour is ranked once).
+    *
+    * The state schema is the heap's serialized pair buffer: a checkpoint
+    * written by an older build of this stage cannot be resumed and needs
+    * a fresh start.
     *
     * `emb` is any stream with (vec_id, embedding) — callers choose the
     * query population (tests use the batch query stride).
@@ -979,12 +960,13 @@ object StreamingOps {
     * list count come from the one index value, built (or read back from
     * the disk cache) exactly as the batch query builds them; the packing
     * key is the batch probe selection's `centroidPack`, over the ACTUAL
-    * list count.
+    * list count, and the ranking is the batch `ranked` per (window,
+    * query).
     */
   private def probeStreamOver(spark: SparkSession, emb: DataFrame, dir: String,
       index: graft.queries.SimilarityQueries.IvfIndex): DataFrame = {
     import graft.functions.VectorFns
-    import graft.queries.SimilarityQueries.{Nprobe, TopK, centroidOf, centroidPack}
+    import graft.queries.SimilarityQueries.{Nprobe, TopK, centroidOf, centroidPack, ranked}
     val codebook = index.codebook(spark, dir)
     val lists = index.lists(spark, dir)
     val listCount = index.c(spark, dir)
@@ -1000,27 +982,12 @@ object StreamingOps {
         asc = false), 1, Nprobe))
       .select(col("query_id"), col("qv"), col("qn"),
         explode(transform(col("pl"), o => centroidOf(o, listCount))).as("cidx"))
-    val cos = VectorFns.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))
-    val topk = udaf(new TopKReducer(TopK),
-      org.apache.spark.sql.Encoders.product[ProbeCand])
-    probes.join(lists, Seq("cidx"))
+    val cands = probes.join(lists, Seq("cidx"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      // + 0.0 collapses IEEE ±0.0 to one key: Scala's total ordering in
-      // TopKReducer ranks -0.0 < 0.0, but the batch window (Spark
-      // normalizes -0.0 == 0.0) treats them as neighbor_id-broken ties —
-      // without the normalization a rank-k boundary at cos6 = ±0.0 could
-      // order differently than batch ann_ivf_kmeans
-      .select(col("query_id"), (-round(cos, 6) + lit(0.0)).as("nc"),
-        col("neighbor_id").as("nid"), round(cos, 4).as("sim"))
       .withColumn("ingest_ts", current_timestamp())
       .withWatermark("ingest_ts", ProbeHorizon)
-      .groupBy(window(col("ingest_ts"), ProbeHorizon).as("win"), col("query_id"))
-      .agg(topk(col("nc"), col("nid"), col("sim")).as("tk"))
-      .select(col("win"), col("query_id"), posexplode(col("tk.items")))
-      .select(col("win"), col("query_id"),
-        col("col.nid").as("neighbor_id"),
-        (col("pos") + 1).cast("long").as("rank"),
-        col("col.sim").as("sim"))
+      .withColumn("win", window(col("ingest_ts"), ProbeHorizon))
+    ranked(cands, TopK, Seq("win", "query_id"))
   }
 
   /** Streaming form of the `chunk_docs` query: documents chunk into

@@ -42,7 +42,7 @@ class GraftSessionSpec extends SparkTestBase {
   private def heapAgg(s: SparkSession): DataFrame =
     s.range(0, 4000).repartition(1)
       .groupBy((col("id") % 1000).as("g"))
-      .agg(TopKLongsAgg(col("id"), 4).as("tk"))
+      .agg(TopKLongsAgg(col("id"), lit(0L), 4).as("tk"))
 
   private def fallbackTasks(df: DataFrame): Long = {
     // execute THIS queryExecution (df.write would plan and execute a

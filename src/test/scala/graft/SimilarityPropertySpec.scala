@@ -567,6 +567,9 @@ class SimilarityPropertySpec extends SparkTestBase {
     assert(pack(0.5, 3L) > pack(0.5, 7L))
     assert(pack(0.6, 7L) > pack(0.5, 3L))
     assert(pack(-1.0, cap - 1) >= 0L && pack(1.0, 0L) > 0L)
+    // IEEE −0.0 and 0.0 are one cosine: one key, so a rank cut at cos6 = 0
+    // is decided by the id alone
+    assert(pack(-0.0, 5L) === pack(0.0, 5L))
     for (bad <- Seq(-1L, cap)) {
       val err = intercept[Exception](roundTrip(bad))
       val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
@@ -574,5 +577,57 @@ class SimilarityPropertySpec extends SparkTestBase {
       assert(msgs.exists(_.contains(s"outside [0, 2^${SimilarityQueries.HardNegIdBits}): $bad")),
         s"id $bad: ${msgs.headOption.getOrElse("")}")
     }
+  }
+
+  test("one ADC ranking serves both IVFADC twins: ann_ivfpq is its rank <= TopK prefix") {
+    import spark.implicits._
+    import SimilarityQueries.{LloydIvf, LloydScaledIvf, RerankR, TopK}
+    val dir = sf("sf0.001")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "neighbor_id", "adist", "rank")
+        .as[(Long, Long, Long, Long)].collect().toSeq
+    for ((idx, search) <- Seq(
+        LloydIvf -> SimilarityQueries.annIvfPq(spark, dir),
+        LloydScaledIvf -> SimilarityQueries.annIvfPqScaled(spark, dir))) {
+      val shared = rows(SimilarityQueries.ivfPqAdc(spark, dir, idx))
+      // the shared ranking is dense 1..n per query in (adist, id) order,
+      // and deep enough that the RerankR cut is actually taken
+      val byQuery = shared.groupBy(_._1)
+      for ((q, rs) <- byQuery) {
+        val ordered = rs.sortBy(_._4)
+        assert(ordered.map(_._4) == (1L to rs.size.toLong), s"${idx.tag} q=$q ranks")
+        assert(ordered.map(r => (r._3, r._2)) == rs.map(r => (r._3, r._2)).sorted,
+          s"${idx.tag} q=$q order")
+      }
+      assert(byQuery.values.exists(_.size == RerankR), s"${idx.tag}: RerankR cut never taken")
+      assert(rows(search).sorted == shared.filter(_._4 <= TopK).sorted, idx.tag)
+    }
+  }
+
+  test("ann_recall_report scores each quantizer's ADC join once (plan pin)") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // the ADC scoring join: per-(query, list) tables ⋈ residual codes on
+    // cidx. ann_ivfpq and ann_ivfpq_rerank read one ranking plan per
+    // quantizer, so the final adaptive plan holds one such join per
+    // quantizer (the other consumer reuses its exchange) — 2, where two
+    // per-k rankings held 4
+    def adcJoins(p: SparkPlan): Int = {
+      val here = p match {
+        case a: AdaptiveSparkPlanExec => adcJoins(a.executedPlan)
+        case q: QueryStageExec => adcJoins(q.plan)
+        case j: BaseJoinExec
+            if j.leftKeys.exists(_.references.exists(_.name == "cidx")) && {
+              val out = j.left.output.map(_.name) ++ j.right.output.map(_.name)
+              out.contains("tds") && out.contains("codes")
+            } => 1
+        case _ => 0
+      }
+      here + p.children.map(adcJoins).sum
+    }
+    val report = SimilarityQueries.annRecallReport(spark, sf("sf0.001"))
+    assert(report.collect().length === 10)
+    assert(adcJoins(report.queryExecution.executedPlan) === 2)
   }
 }

@@ -467,6 +467,33 @@ class StreamingSpec extends SparkTestBase {
     assert(got.nonEmpty, "no probe results on the closed input: broken index join")
   }
 
+  test("streaming annProbeStream ranks a query that arrives twice once") {
+    // the same query vectors delivered twice (two copies of the stream):
+    // every candidate pair arrives twice, and the per-query top-k must
+    // still hold each neighbour once, at the batch rank
+    import org.apache.spark.sql.functions.col
+    val queries = StreamingOps.embStream(spark, dir)
+      .filter(col("vec_id") % graft.queries.SimilarityQueries.QueryMod === 0)
+    val stream = StreamingOps.annProbeStream(spark, queries.union(queries), dir)
+    val q = stream.writeStream
+      .format("memory").queryName("ann_probe_stream_doubled")
+      .outputMode("update")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.processAllAvailable(); q.stop()
+
+    // every emitted row, not a map: a duplicated neighbour must show
+    val got = spark.table("ann_probe_stream_doubled")
+      .select("query_id", "rank", "neighbor_id", "sim")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .toSeq.sorted
+    val expected = graft.queries.SimilarityQueries.annIvfKmeans(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(1), r.getDouble(3)))
+      .toSeq.sorted
+    assert(expected.nonEmpty)
+    assert(got === expected)
+  }
+
   test("streaming annProbeScaledStream equals batch ann_ivf_scaled on the closed query set") {
     // Same contract as the fixed-capacity probe twin above, over the
     // capacity-law index: the stream consumes the SAME scaled codebook

@@ -1,17 +1,19 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 
 import graft.functions.{LongTopK, TopKLongsAgg}
 
-/** Differential + property pins for the bounded distinct-top-k heap
-  * aggregate backing every ANN ranking and probe path ([[graft.queries
-  * .SimilarityQueries]]'s `ranked` — every ANN search and the hard-negative
-  * miner — and `topCentroids`, every IVF probe-list selection): the O(k)-state
+/** Differential + property pins for the bounded distinct-top-k pair heap
+  * backing every ANN ranking and probe path ([[graft.queries
+  * .SimilarityQueries]]'s `ranked` — every ANN search, the hard-negative
+  * miner and the streaming probe twin — the ADC `pqRank`, and
+  * `topCentroids`, every IVF probe-list selection): the O(k)-state
   * replacement for the window sort that died at the sf10 scale-up
   * (BENCH_sf10_r15.json.failed). The reference formulation it must match
-  * value-for-value is `slice(reverse(sort_array(collect_list(DISTINCT
-  * x))), 1, k)` — the k largest distinct values, descending.
+  * pair-for-pair is a driver-side `distinct`, a descending lexicographic
+  * sort of the (key, second) pairs and `take(k)`.
   */
 class TopKLongsAggSpec extends SparkTestBase {
 
@@ -32,6 +34,21 @@ class TopKLongsAggSpec extends SparkTestBase {
     dense ++ wide ++ extremes ++ tiny
   }
 
+  /** Tie-heavy pair stream: keys drawn from 5 values, so nearly every cut
+    * falls inside a key tie and the second long decides; exact duplicate
+    * pairs and Long extremes in the second position included.
+    */
+  private def pairRows: Seq[(Long, Long, Long)] = {
+    val r = new scala.util.Random(11)
+    val tied = Seq.tabulate(6000)(i =>
+      ((i % 5).toLong, r.nextInt(5).toLong - 2L, r.nextInt(400).toLong - 200L))
+    val extremes = Seq((0L, 2L, Long.MaxValue), (0L, 2L, Long.MinValue),
+      (1L, Long.MaxValue, Long.MinValue), (1L, Long.MaxValue, Long.MinValue))
+    tied ++ extremes
+  }
+
+  private val pairDesc: Ordering[(Long, Long)] = Ordering[(Long, Long)].reverse
+
   private def expected(k: Int): Map[Long, Seq[Long]] =
     rows.groupBy(_._1).map { case (g, vs) =>
       g -> vs.map(_._2).distinct.sorted(Ordering[Long].reverse).take(k)
@@ -39,8 +56,8 @@ class TopKLongsAggSpec extends SparkTestBase {
 
   private def actual(k: Int, partitions: Int): Map[Long, Seq[Long]] =
     rows.toDF("g", "v").repartition(partitions, col("g") * 0 + col("v"))
-      .groupBy(col("g")).agg(TopKLongsAgg(col("v"), k).as("top"))
-      .as[(Long, Seq[Long])].collect().toMap
+      .groupBy(col("g")).agg(TopKLongsAgg(col("v"), lit(0L), k).as("top"))
+      .select(col("g"), col("top.key")).as[(Long, Seq[Long])].collect().toMap
 
   test("matches distinct-sort-slice on duplicate-heavy data, any partitioning") {
     for (k <- Seq(1, 3, 10); p <- Seq(1, 4, 13)) {
@@ -54,18 +71,62 @@ class TopKLongsAggSpec extends SparkTestBase {
     assert(got(98L) == Seq(-3L)) // exact duplicate collapsed
   }
 
+  test("pairs: key ties broken by the second long, any k and partitioning") {
+    val groups = pairRows.groupBy(_._1)
+    for (k <- Seq(1, 3, 10, 100); p <- Seq(1, 4, 13)) {
+      val want = groups.map { case (g, vs) =>
+        g -> vs.map(v => (v._2, v._3)).distinct.sorted(pairDesc).take(k)
+      }
+      val got = pairRows.toDF("g", "a", "b")
+        .repartition(p, xxhash64(col("a"), col("b")))
+        .groupBy(col("g")).agg(TopKLongsAgg(col("a"), col("b"), k).as("top"))
+        .select(col("g"), col("top.key"), col("top.second"))
+        .as[(Long, Seq[Long], Seq[Long])].collect()
+        .map { case (g, ks, ss) => g -> ks.zip(ss) }.toMap
+      assert(got == want, s"k=$k partitions=$p")
+    }
+    // vacuity guard: every group's k=100 cut lands inside a key tie
+    assert(groups.values.forall { vs =>
+      val top = vs.map(v => (v._2, v._3)).distinct.sorted(pairDesc)
+      top(99)._1 == top(100)._1
+    })
+  }
+
   test("heap unit: dedup at the min slot and across merges") {
+    def add(h: LongTopK, vs: Long*): Unit = vs.foreach(h.add(_, 0L))
+    def keys(h: LongTopK): Seq[Long] = h.sortedDesc.toSeq.map(_._1)
     val a = new LongTopK(3)
-    Seq(5L, 1L, 9L, 1L, 5L, 9L).foreach(a.add) // dups while filling
-    assert(a.sortedDesc.toSeq == Seq(9L, 5L, 1L))
-    a.add(1L) // equal to current min — duplicate, must not evict
-    assert(a.sortedDesc.toSeq == Seq(9L, 5L, 1L))
-    a.add(7L) // genuine improvement evicts the min
-    assert(a.sortedDesc.toSeq == Seq(9L, 7L, 5L))
+    add(a, 5L, 1L, 9L, 1L, 5L, 9L) // dups while filling
+    assert(keys(a) == Seq(9L, 5L, 1L))
+    add(a, 1L) // equal to current min — duplicate, must not evict
+    assert(keys(a) == Seq(9L, 5L, 1L))
+    add(a, 7L) // genuine improvement evicts the min
+    assert(keys(a) == Seq(9L, 7L, 5L))
     val b = new LongTopK(3)
-    Seq(9L, 7L, 2L).foreach(b.add)
-    var i = 0
-    while (i < b.size) { a.add(b.arr(i)); i += 1 } // merge path
-    assert(a.sortedDesc.toSeq == Seq(9L, 7L, 5L)) // 9,7 deduped; 2 too small
+    add(b, 9L, 7L, 2L)
+    val agg = TopKLongsAgg(Literal(0L), Literal(0L), 3)
+    agg.merge(a, b)
+    assert(keys(a) == Seq(9L, 7L, 5L)) // 9,7 deduped; 2 too small
+  }
+
+  test("serialize -> deserialize round-trips a full pair buffer") {
+    val k = 16
+    val agg = TopKLongsAgg(Literal(0L), Literal(0L), k)
+    val buf = agg.createAggregationBuffer()
+    val r = new scala.util.Random(3)
+    Seq.fill(200)((r.nextInt(4).toLong, r.nextLong())).foreach { case (a, b) => buf.add(a, b) }
+    assert(buf.size == k)
+    val back = agg.deserialize(agg.serialize(buf))
+    assert(back.size == k)
+    assert(back.keys.toSeq == buf.keys.toSeq && back.seconds.toSeq == buf.seconds.toSeq,
+      "the heap layout must survive verbatim")
+    assert(back.sortedDesc.toSeq == buf.sortedDesc.toSeq)
+    // the restored heap keeps working: a duplicate is absorbed, a better
+    // pair evicts the minimum
+    val best = buf.sortedDesc.head
+    back.add(best._1, best._2)
+    assert(back.sortedDesc.toSeq == buf.sortedDesc.toSeq)
+    back.add(Long.MaxValue, 0L)
+    assert(back.sortedDesc.toSeq == ((Long.MaxValue, 0L) +: buf.sortedDesc.toSeq.init))
   }
 }

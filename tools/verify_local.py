@@ -9,6 +9,13 @@ the same sf tables, and compares: schema (column names), LOGICAL COLUMN
 TYPES, row count, and the multiset of rows (sorted by all columns, values
 compared exactly; floats must match to the last bit unless FLOAT_TOL is set).
 
+Each query prints one verdict line: `OK` (match), `FAIL` (a mismatch in
+schema, types, row count or values) or `ERROR` (DuckDB raised while reading
+the dump or running the oracle: out of memory, disk full, a bad statement).
+An error says nothing about the engine's result, so it is never reported as
+a mismatch. The summary counts matches and errors; the exit status is 1 if
+any query failed or errored.
+
 The type check exists because the driver's hash compare is type-sensitive
 while Python value compare is not: DuckDB `sum(BIGINT)` is HUGEINT, whose
 values fetch as plain ints locally (== the Spark BIGINT) yet hash differently
@@ -86,6 +93,7 @@ def compare(sf_dir, out_dir, spill):
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_ok = 0
     failures = []
+    errors = []
     for name, sql in sorted(oracle.items()):
         try:
             grel = con.sql(
@@ -98,7 +106,7 @@ def compare(sf_dir, out_dir, spill):
             exp_types = [str(t) for t in erel.types]
             exp = erel.fetchall()
         except Exception as e:
-            failures.append((name, f"ERROR {e}"))
+            errors.append((name, str(e)))
             continue
         if sorted(got_cols) != sorted(exp_cols):
             failures.append((name, f"schema: spark={sorted(got_cols)} oracle={sorted(exp_cols)}"))
@@ -142,8 +150,10 @@ def compare(sf_dir, out_dir, spill):
             print(f"OK    {name} ({len(got_r)} rows)")
     for name, msg in failures:
         print(f"FAIL  {name}: {msg}")
-    print(f"\n{n_ok}/{len(oracle)} queries match")
-    return 0 if not failures else 1
+    for name, msg in errors:
+        print(f"ERROR {name}: {msg}")
+    print(f"\n{n_ok}/{len(oracle)} queries match, {len(errors)} errors")
+    return 0 if not failures and not errors else 1
 
 
 if __name__ == "__main__":
