@@ -2367,19 +2367,19 @@ object SimilarityQueries {
     val kmScaledNcand = ivfScanCount(full, LloydScaledIvf)
     val ivfNcand = ivfScanCount(ctl, SampledIvf)
     val ivfScaledNcand = ivfScanCount(full, ScaledIvf)
-    // the IVFADC twins (no search frame) come from [[ivfPqTwinRows]]
-    val indexes: Seq[(String, Option[DataFrame], Double, Regime)] = Seq(
-      ("ann_lsh", Some(annLsh(spark, dir)), fracOf(ctl, lshNcand), ctl),
-      ("ann_ivf", Some(annIvf(spark, dir)), fracOf(ctl, ivfNcand), ctl),
-      ("ann_ivf_scaled", Some(annIvfScaled(spark, dir)), fracOf(full, ivfScaledNcand), full),
-      ("ann_ivf_kmeans", Some(annIvfKmeans(spark, dir)), fracOf(ctl, kmNcand), ctl),
-      ("ann_ivf_kmeans_scaled", Some(annIvfKmeansScaled(spark, dir)),
-        fracOf(full, kmScaledNcand), full),
-      ("ann_pq", Some(annPq(spark, dir)), 1.0, ctl), // linear compressed scan
-      ("ann_ivfpq", None, fracOf(ctl, kmNcand), ctl),
-      ("ann_ivfpq_scaled", None, fracOf(full, kmScaledNcand), full),
-      ("ann_ivfpq_rerank", None, fracOf(ctl, kmNcand), ctl),
-      ("ann_ivfpq_rerank_scaled", None, fracOf(full, kmScaledNcand), full))
+    val searches: Seq[(String, DataFrame, Double, Regime)] = Seq(
+      ("ann_lsh", annLsh(spark, dir), fracOf(ctl, lshNcand), ctl),
+      ("ann_ivf", annIvf(spark, dir), fracOf(ctl, ivfNcand), ctl),
+      ("ann_ivf_scaled", annIvfScaled(spark, dir), fracOf(full, ivfScaledNcand), full),
+      ("ann_ivf_kmeans", annIvfKmeans(spark, dir), fracOf(ctl, kmNcand), ctl),
+      ("ann_ivf_kmeans_scaled", annIvfKmeansScaled(spark, dir), fracOf(full, kmScaledNcand), full),
+      ("ann_pq", annPq(spark, dir), 1.0, ctl)) // linear compressed scan
+    // the IVFADC twins of each Lloyd quantizer, (index, name suffix,
+    // scan_frac, regime): both read one ADC ranking ([[ivfPqTwinRows]])
+    val twins = Seq((LloydIvf, "", fracOf(ctl, kmNcand), ctl),
+      (LloydScaledIvf, "_scaled", fracOf(full, kmScaledNcand), full))
+    val indexes = searches.map(s => (s._1, s._3, s._4)) ++ twins.flatMap {
+      case (_, sfx, f, r) => Seq(s"ann_ivfpq$sfx", s"ann_ivfpq_rerank$sfx").map((_, f, r)) }
     // ONE audit pipeline over a TAGGED UNION of the ten index outputs
     // (round-17 optimization, guide §2.4/§7.2): the round-16 form built
     // ten separate per-index audit branches — ten semi-joins, ten
@@ -2404,18 +2404,18 @@ object SimilarityQueries {
     // disabling AQE for the report OOMed a 48 GB driver at sf10, because
     // AQE is also what right-sizes the scaled searches' runtime
     // broadcasts and coalesces their shuffles.
-    val tagged = (indexes.collect { case (nm, Some(df), _, r) =>
+    val tagged = (searches.map { case (nm, df, _, r) =>
       r.dec(df).select(lit(nm).as("index"), col("query_id"), col("neighbor_id"))
-    } ++ Seq(ivfPqTwinRows(spark, dir, LloydIvf, "", ctl.dec),
-      ivfPqTwinRows(spark, dir, LloydScaledIvf, "_scaled", full.dec))).reduce(_.unionByName(_))
-    val truthTagged = indexes.map { case (nm, _, _, r) =>
+    } ++ twins.map { case (idx, sfx, _, r) => ivfPqTwinRows(spark, dir, idx, sfx, r.dec) })
+      .reduce(_.unionByName(_))
+    val truthTagged = indexes.map { case (nm, _, r) =>
       r.truth.select(lit(nm).as("index"), col("query_id"), col("t"))
     }.reduce(_.unionByName(_))
     // scan_frac attaches as a literal CASE over the 10 result rows — the
     // values are the memoized planning constants above
     val fracCol = indexes.tail.foldLeft(
-      when(col("index") === indexes.head._1, lit(indexes.head._3))) {
-      case (acc, (nm, _, f, _)) => acc.when(col("index") === nm, lit(f))
+      when(col("index") === indexes.head._1, lit(indexes.head._2))) {
+      case (acc, (nm, f, _)) => acc.when(col("index") === nm, lit(f))
     }
     val hits = exactAll
       .join(tagged, Seq("query_id", "neighbor_id"))

@@ -609,10 +609,10 @@ class SimilarityPropertySpec extends SparkTestBase {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     // the ADC scoring join: per-(query, list) tables ⋈ residual codes on
-    // cidx. ann_ivfpq and ann_ivfpq_rerank read one ranking plan per
-    // quantizer, so the final adaptive plan holds one such join per
-    // quantizer (the other consumer reuses its exchange) — 2, where two
-    // per-k rankings held 4
+    // cidx. The report reads both twins of a quantizer from ONE
+    // occurrence of its ivfPqAdc ranking (ivfPqTwinRows), because AQE
+    // cannot reuse an exchange above a memoized table: one such join per
+    // quantizer — 2, where a search per twin held 4
     def adcJoins(p: SparkPlan): Int = {
       val here = p match {
         case a: AdaptiveSparkPlanExec => adcJoins(a.executedPlan)
