@@ -80,7 +80,7 @@ object TokenKernels {
   /** hash60 of the digest state already fed into `md`: first 15 hex digits
     * of the MD5 as a long = top 60 bits of the first 8 digest bytes.
     */
-  private def h60(md: MessageDigest): Long = {
+  private[functions] def h60(md: MessageDigest): Long = {
     val d = md.digest()
     var h = 0L
     var j = 0

@@ -72,11 +72,7 @@ object WinnowFpsExpr {
     var g = 0
     while (g < nGrams) {
       md.update(bytes, offs(g), offs(g + k) - offs(g))
-      val d = md.digest()
-      var h = 0L
-      var j = 0
-      while (j < 8) { h = (h << 8) | (d(j) & 0xffL); j += 1 }
-      hs(g) = h >>> 4 // first 15 hex digits = top 60 bits (hash60)
+      hs(g) = TokenKernels.h60(md)
       g += 1
     }
 

@@ -10,8 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 case class QueryDef(
     fn: (SparkSession, String) => DataFrame,
-    sql: Option[String],
-    doc: String = "")
+    sql: Option[String])
 
 /** The engine's one artifact store: every session-scoped derived value —
   * persisted tables (shingle tables, signature tables, embedding norms),

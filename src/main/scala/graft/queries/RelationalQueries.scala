@@ -2079,64 +2079,7 @@ object RelationalQueries {
     * oracle. Purchases with no touch in window survive with NULL
     * attribution (zero-fill).
     *
-    * Scale shape: the intervalJoin axis-bucket trick with the window on
-    * the BACKWARD side — bucket width = window length, so each anchor
-    * (purchase) explodes into exactly its 2 covered buckets on the
-    * SPARSE side; touch events carry their single bucket; the (user,
-    * bucket) EQUI-join + residual range predicate bounds work by
-    * per-(user, window) density — never a per-user nested loop. Both
-    * scans prune with a pushed `event_type` filter. The per-purchase
-    * argmin is a `row_number`=1 window on the unique anchor event_id
-    * (skew-free, WindowGroupLimit partials below the exchange);
-    * zero-fill is an anchor-keyed left join.
-    */
-  val TouchWindowNs = 86400000000000L // 24 h
-  val ConversionType = "purchase"
-  val TouchTypes: Seq[String] = Seq("view", "click")
-
-  /** Cost-routed on the shared [[maxEventsPerUser]] probe: the
-    * (user, day-bucket) equi-join form below threshold (its candidate
-    * mass per user is purchases/bucket × touches/bucket — quadratic in
-    * per-user RATE, measured 67.0 s on the sf10 Zipf hot user vs 1.7 s
-    * uniform), the sorted per-user sliding-window-minimum scan
-    * ([[firstTouchScan]]) above it.
-    */
-  def firstTouch(spark: SparkSession, dir: String): DataFrame =
-    if (maxEventsPerUser(spark, dir) <= UserSkewRouteThreshold)
-      firstTouchJoin(spark, dir)
-    else firstTouchScan(spark, dir)
-
-  private[graft] def firstTouchJoin(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables(spark, dir, "events")
-      .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
-    val purchases = ev.filter(col("event_type") === ConversionType)
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ts").as("t0"))
-    // 2 consecutive buckets; array_distinct guards the 0 <= t0 < W corner
-    // where both `div`s truncate to 0 (harmless here — rn=1 dedups — but
-    // kept identical to linearAttribution, where a dup is output-changing)
-    val anchors = purchases.withColumn("b",
-      explode(array_distinct(array(expr(s"(t0 - $TouchWindowNs) div $TouchWindowNs"),
-        expr(s"t0 div $TouchWindowNs")))))
-    val touches = ev.filter(col("event_type").isin(TouchTypes: _*))
-      .select(col("user_id").as("t_user"), col("ts"),
-        expr("ts div 1000").as("us"), col("event_id"), col("event_type"))
-      .withColumn("b", expr(s"ts div $TouchWindowNs"))
-    val w = Window.partitionBy(col("purchase_id"))
-      .orderBy(col("us").asc, col("event_id").asc)
-    val first = anchors.join(touches,
-      anchors("user_id") === touches("t_user") && anchors("b") === touches("b"))
-      .filter(col("ts") >= col("t0") - TouchWindowNs && col("ts") < col("t0"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("purchase_id"), col("us").as("first_ts_us"),
-        col("event_id").as("first_event_id"),
-        col("event_type").as("first_event_type"))
-    purchases.select(col("purchase_id"), col("user_id"))
-      .join(first, Seq("purchase_id"), "left")
-  }
-
-  /** The skew form: ONE exchange on user_id, a per-partition (user, ts)
+    * Scale shape: ONE exchange on user_id, a per-partition (user, ts)
     * sort, then a single streaming pass holding a MONOTONIC DEQUE of
     * live touches per user — the classic sliding-window-minimum: a touch
     * evicts every queued touch with a ≥ (us, event_id) rank (it arrived
@@ -2146,18 +2089,26 @@ object RelationalQueries {
     * after expiring entries older than t0 − 24 h. Each event enters and
     * leaves the deque at most once — O(n log n) per user (the sort),
     * O(1) amortized per event after it, deque memory bounded by the
-    * window's live touch count, NEVER purchases × touches: the 67.0 s
-    * sf10-Zipf hot user (840 k events in one (user, bucket) join task)
-    * runs in the time of its sort. Emission preserves the join form's
-    * exact tie contract: rows sort (ts, kind purchase-first, event_id),
-    * so a touch AT a purchase's own timestamp is not yet in the deque
-    * (the strict `< t0` bound), while the window's inclusive lower bound
-    * is the `front.ts < t0 − W` expiry. mapPartitions is the documented
-    * last-resort tier (SURVEY operator-extension order) — the per-row
-    * loop is genuinely imperative state no Catalyst frame expresses
-    * (RANGE frames re-aggregate; see trailing_features).
+    * window's live touch count, never purchases × touches, so a hot user
+    * costs the time of its sort (a (user, day-bucket) join measured
+    * 67.0 s on the sf10 Zipf hot user vs 1.7 s uniform, and lost to this
+    * scan on uniform corpora too). Rows sort (ts, kind purchase-first,
+    * event_id), so a touch AT a purchase's own timestamp is not yet in
+    * the deque (the strict `< t0` bound), while the window's inclusive
+    * lower bound is the `front.ts < t0 − W` expiry.
+    *
+    * NULLs follow the oracle's join: a NULL user_id, ts or purchase id
+    * matches no touch (the purchase survives with NULL attribution), and
+    * a NULL touch event_id ranks last among same-microsecond touches
+    * (DuckDB's `ORDER BY us, event_id` is NULLS LAST). mapPartitions is
+    * the documented last-resort tier (SURVEY operator-extension order) —
+    * the per-row loop is imperative state no Catalyst frame expresses.
     */
-  private[graft] def firstTouchScan(spark: SparkSession, dir: String): DataFrame = {
+  val TouchWindowNs = 86400000000000L // 24 h
+  val ConversionType = "purchase"
+  val TouchTypes: Seq[String] = Seq("view", "click")
+
+  def firstTouch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val w = TouchWindowNs
     val parts = spark.sessionState.conf.numShufflePartitions
@@ -2166,28 +2117,34 @@ object RelationalQueries {
         col("event_type").isin(TouchTypes: _*))
       .select(col("user_id"), col("ts"),
         when(col("event_type") === ConversionType, lit(0)).otherwise(lit(1)).as("kind"),
-        col("event_id"), col("event_type"), expr("ts div 1000").as("us"))
+        col("event_id"), col("event_type"))
       .repartition(parts, col("user_id"))
       .sortWithinPartitions(col("user_id"), col("ts"), col("kind"), col("event_id"))
-      .as[(Long, Long, Int, Long, String, Long)]
+      .as[(Option[Long], Option[Long], Int, Option[Long], String)]
     sorted.mapPartitions { it =>
       // deque entries: (ts, us, event_id, event_type), arrival-ordered
       // (ts non-decreasing) AND (us, event_id)-increasing by construction
-      val dq = new scala.collection.mutable.ArrayDeque[(Long, Long, Long, String)]
-      var curUser = Long.MinValue
+      val dq = new scala.collection.mutable.ArrayDeque[(Long, Long, Option[Long], String)]
+      var curUser: Option[Long] = None
       var started = false
-      it.flatMap { case (user, ts, kind, eid, typ, us) =>
+      it.flatMap { case (user, ts, kind, eid, typ) =>
         if (!started || user != curUser) { dq.clear(); curUser = user; started = true }
         if (kind == 0) { // purchase: answer = head after expiry
-          val lo = ts - w
-          while (dq.nonEmpty && dq.head._1 < lo) dq.removeHead()
-          val ans = dq.headOption
-          Iterator.single((eid, user, ans.map(_._2), ans.map(_._3), ans.map(_._4)))
+          val ans =
+            if (user.isEmpty || eid.isEmpty) None
+            else ts.flatMap { t =>
+              while (dq.nonEmpty && dq.head._1 < t - w) dq.removeHead()
+              dq.headOption
+            }
+          Iterator.single((eid, user, ans.map(_._2), ans.flatMap(_._3), ans.map(_._4)))
         } else { // touch: evict dominated tails, enqueue
-          while (dq.nonEmpty &&
-              (dq.last._2 > us || (dq.last._2 == us && dq.last._3 >= eid)))
-            dq.removeLast()
-          dq.append((ts, us, eid, typ))
+          for (_ <- user; t <- ts) {
+            val u = t / 1000 // micros, truncated like the oracle's `// 1000`
+            while (dq.nonEmpty && (dq.last._2 > u ||
+                (dq.last._2 == u && dq.last._3.forall(q => eid.exists(q >= _)))))
+              dq.removeLast()
+            dq.append((t, u, eid, typ))
+          }
           Iterator.empty
         }
       }
@@ -2230,12 +2187,13 @@ object RelationalQueries {
     * 1/3+1/3+1/3 ≠ 1.00 float leakage), and the remainder assignment is
     * deterministic on both engines.
     *
-    * Scale shape: the same bucket-decomposed interval equi-join as
-    * [[firstTouch]] (conversions explode into 2 window-width buckets;
-    * touches carry their own bucket — an equi-join on (user, bucket), no
-    * inequality join); the per-conversion window functions partition by
-    * purchase_id over window-bounded groups (k ≤ touches per user per
-    * day). One exchange for the join, one for the window.
+    * Scale shape: the intervalJoin axis-bucket trick with the window on
+    * the BACKWARD side — bucket width = window length, so conversions
+    * explode into exactly their 2 covered buckets and touches carry their
+    * own bucket: an equi-join on (user, bucket) with the exact nanos range
+    * as residual, no inequality join; the per-conversion window functions
+    * partition by purchase_id over window-bounded groups (k ≤ touches per
+    * user per day). One exchange for the join, one for the window.
     *
     * Note: conversion values are non-negative (pinned by dq_audit's
     * domain checks on this corpus), where Spark's truncating `div` and
@@ -2245,8 +2203,9 @@ object RelationalQueries {
     * Skew note (round 16): the OUTPUT here is one row per
     * (conversion, in-window touch) pair — under a Zipf hot user that
     * mass is quadratic in per-user rate BY DEFINITION of the linear
-    * model (every pair is a real result row), so unlike
-    * [[firstTouch]]/[[trailingFeatures]] no plan can beat it. What a
+    * model (every pair is a real result row), so unlike [[firstTouch]]
+    * and [[trailingFeatures]], whose sorted per-user scans keep O(1)
+    * amortized state per event, no plan can shrink it. What a
     * plan CAN fix is that the whole hot mass lands in ONE
     * (user, bucket) join task; past the [[UserSkewRouteThreshold]]
     * probe the anchor side carries a [[AttributionSaltBuckets]]-way
@@ -2256,6 +2215,22 @@ object RelationalQueries {
     * replication is a ×S cost the balanced case should not pay).
     */
   val AttributionSaltBuckets = 32
+
+  /** User-skew route threshold of [[linearAttribution]]: at or below it
+    * the unsalted (user, bucket) join is cheaper (each user's pair mass
+    * is small, ≤ 67 M row touches at 8192 events/user); above it one
+    * Zipf hot user lands its whole quadratic pair mass in one join task,
+    * and the purchase-keyed salt spreads it. The statistic (max per-user
+    * event count) is one memoized partial-final agg per (session, dir).
+    */
+  val UserSkewRouteThreshold: Long = 8192L
+
+  private[graft] def maxEventsPerUser(spark: SparkSession, dir: String): Long =
+    Memo.memoizeValue(spark, dir, "max_events_per_user") {
+      Tables(spark, dir, "events")
+        .groupBy(col("user_id")).agg(count(lit(1)).as("c"))
+        .agg(max(col("c")).as("m")).head().getLong(0)
+    }
 
   def linearAttribution(spark: SparkSession, dir: String): DataFrame = {
     val salt =
@@ -3048,107 +3023,71 @@ object RelationalQueries {
     * BIGINT nanosecond gap), so partial-frame accumulation order can never
     * hash-mismatch; `gap_ns` is NULL when the horizon holds no prior event.
     *
-    * Scale shape — COST-ROUTED between the single-window form (small
-    * frames) and a DELTA/PREFIX-SUM form (skewed users), on a memoized
-    * max-events-per-user probe — see [[UserSkewRouteThreshold]].
-    * Round 16's Zipf(1) hot-user corpus measured the naive
-    * `rangeBetween(−H, −1)` window at **31.4 s vs 0.54 s uniform** at the
-    * SAME sf1 row count: Spark's `SlidingWindowFunctionFrame` moves its
-    * frame pointers incrementally but RE-AGGREGATES the frame buffer per
-    * row (count/sum have no invertible "subtract" path), so a user with n
-    * events and frame width f costs O(n·f) — ~1.2e9 adds for the 72 k-event
-    * hot user. Instead each event contributes +1/+cents at `ts` and
-    * −1/−cents at `ts + H`; both streams collapse to one row per
-    * (user, time) and a RUNNING `rowsBetween(unboundedPreceding, current)`
-    * sum — which Spark DOES evaluate incrementally, O(1)/row — minus the
-    * row's own delta gives Σ deltas STRICTLY BEFORE t. That equals the
-    * frame exactly: arrivals count once `t > ts_j` (peers at distance 0
-    * excluded, the −1 ns bound) and cancel once `t > ts_j + H` (the 7-day
-    * horizon, inclusive at exactly ts − H). `gap_ns` is the lag to the
-    * previous DISTINCT per-user timestamp, nulled past the horizon — the
-    * same "max of an empty frame" contract. Cost per user: one sort +
-    * linear passes, O(n log n) — the hot user went 31.4 s → sub-second
-    * with every output row hash-identical (BENCH_skew_r16 artifacts).
-    * The key space stays huge so the user_id exchange is balanced; a
-    * power user now bounds one task at n log n, not n·f.
+    * Scale shape: the [[firstTouch]] shape — ONE exchange on user_id, a
+    * per-partition (user, ts) sort, then a single streaming pass per user
+    * over runs of equal ts. The pass keeps a deque of the in-horizon runs
+    * (ts, events, cents) with a running count and cents sum: each run
+    * first expires runs older than `ts − H` (the frame's lower bound is
+    * inclusive), is then emitted against that state (peers at distance 0
+    * are outside each other's frame, the −1 ns bound), and only then
+    * joins the deque. `gap_ns` is `ts` minus the newest live run. Each
+    * run enters and leaves the deque once, so a user costs its sort,
+    * O(n log n), where a `rangeBetween(−H, −1)` window costs O(n·f)
+    * (Spark's sliding frame re-aggregates its buffer per row: 31.4 s vs
+    * 0.54 s uniform on round 16's sf1 Zipf hot user).
+    *
+    * NULLs follow the oracle's window: a NULL user_id is one more user,
+    * a user's NULL-ts rows form one run that is each row's whole frame,
+    * itself included (with a NULL gap), and a NULL value counts in
+    * `n_7d` but adds nothing to `cents_7d`.
     */
   val TrailingHorizonNs: Long = 7L * 86400000000000L
 
-  /** Shared user-skew route threshold (trailing_features, first_touch):
-    * the small-frame plans are CHEAPER while every user's window work is
-    * small, and their worst per-user cost is bounded by max_u(n_u)²-ish
-    * terms; at 8192 events/user that is ≤ 67 M row touches ≈ sub-second.
-    * Past the threshold a Zipf hot user explodes them (measured on the
-    * round-16 skew corpora: trailing_features' sliding-frame
-    * re-aggregation 31.4 s vs 0.54 s uniform at sf1; first_touch's
-    * per-(user, day-bucket) join mass 67.0 s vs 1.7 s at sf10) and the
-    * O(n log n) skew forms win outright. Same measured-routing pattern
-    * as ngram_jaccard_prefix: the statistic (max per-user event count)
-    * is one memoized partial-final agg per (session, dir).
-    */
-  val UserSkewRouteThreshold: Long = 8192L
-
-  private[graft] def maxEventsPerUser(spark: SparkSession, dir: String): Long =
-    Memo.memoizeValue(spark, dir, "max_events_per_user") {
-      Tables(spark, dir, "events")
-        .groupBy(col("user_id")).agg(count(lit(1)).as("c"))
-        .agg(max(col("c")).as("m")).head().getLong(0)
-    }
-
-  def trailingFeatures(spark: SparkSession, dir: String): DataFrame =
-    if (maxEventsPerUser(spark, dir) <= UserSkewRouteThreshold)
-      trailingFeaturesWindow(spark, dir)
-    else trailingFeaturesDelta(spark, dir)
-
-  /** The small-frame form: one user_id exchange, one WindowExec with all
-    * three RANGE frames. Worst task = max_u(n_u·f_u) — only safe below
-    * [[UserSkewRouteThreshold]] (see the routing scaladoc).
-    */
-  private[graft] def trailingFeaturesWindow(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"))
-      .rangeBetween(-TrailingHorizonNs, -1L)
-    Tables(spark, dir, "events")
-      .select(col("event_id"), col("user_id"), col("ts"),
-        round(col("value") * 100).cast("long").as("cents"))
-      .select(col("event_id"), col("user_id"),
-        count(lit(1)).over(w).as("n_7d"),
-        coalesce(sum(col("cents")).over(w), lit(0L)).as("cents_7d"),
-        (col("ts") - max(col("ts")).over(w)).as("gap_ns"))
-  }
-
-  private[graft] def trailingFeaturesDelta(spark: SparkSession, dir: String): DataFrame = {
+  def trailingFeatures(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
     val h = TrailingHorizonNs
-    val ev = Tables(spark, dir, "events")
-      .select(col("event_id"), col("user_id"), col("ts"),
+    val parts = spark.sessionState.conf.numShufflePartitions
+    val sorted = Tables(spark, dir, "events")
+      .select(col("user_id"), col("ts"), col("event_id"),
         round(col("value") * 100).cast("long").as("cents"))
-    // peers collapse: one row per (user, distinct ts) with its arrival mass
-    val arr = ev.groupBy(col("user_id"), col("ts").as("t"))
-      .agg(count(lit(1)).as("an"), sum(col("cents")).as("ac"))
-    // +mass at arrival, −mass at expiry (ts + H); collapse time ties so the
-    // running-sum order is deterministic (an expiry landing exactly on an
-    // arrival time merges into one signed delta row)
-    val deltas = arr
-      .select(col("user_id"), col("t"), col("an").as("dn"), col("ac").as("dc"))
-      .unionAll(arr.select(col("user_id"), (col("t") + h).as("t"),
-        (-col("an")).as("dn"), (-col("ac")).as("dc")))
-      .groupBy(col("user_id"), col("t"))
-      .agg(sum(col("dn")).as("dn"), sum(col("dc")).as("dc"))
-    val wCum = Window.partitionBy(col("user_id")).orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // running sum MINUS the row's own delta = Σ deltas strictly before t
-    val cum = deltas.select(col("user_id"), col("t"),
-      (sum(col("dn")).over(wCum) - col("dn")).as("nb"),
-      (sum(col("dc")).over(wCum) - col("dc")).as("cb"))
-    val wPrev = Window.partitionBy(col("user_id")).orderBy(col("t"))
-    val feat = arr
-      .select(col("user_id"), col("t"), lag(col("t"), 1).over(wPrev).as("pt"))
-      .join(cum, Seq("user_id", "t"))
-      .withColumnRenamed("t", "ts")
-    ev.join(feat, Seq("user_id", "ts"))
-      .select(col("event_id"), col("user_id"),
-        col("nb").as("n_7d"),
-        col("cb").as("cents_7d"),
-        when(col("ts") - col("pt") <= h, col("ts") - col("pt")).as("gap_ns"))
+      .repartition(parts, col("user_id"))
+      .sortWithinPartitions(col("user_id"), col("ts"))
+      .as[(Option[Long], Option[Long], Option[Long], Option[Long])]
+    sorted.mapPartitions { rows =>
+      val in = rows.buffered
+      // in-horizon runs of the current user: (ts, events, cents), ts-increasing
+      val live = new scala.collection.mutable.ArrayDeque[(Long, Long, Long)]
+      var n = 0L
+      var cents = 0L
+      var curUser: Option[Long] = None
+      var started = false
+      Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+        val (user, ts) = (in.head._1, in.head._2)
+        val run = scala.collection.mutable.ArrayBuffer.empty[Option[Long]]
+        var runCents = 0L
+        while (in.hasNext && in.head._1 == user && in.head._2 == ts) {
+          val r = in.next()
+          run += r._3
+          runCents += r._4.getOrElse(0L)
+        }
+        if (!started || user != curUser) {
+          live.clear(); n = 0L; cents = 0L; curUser = user; started = true
+        }
+        ts match {
+          case None => run.map(eid => (eid, user, run.size.toLong, runCents, Option.empty[Long]))
+          case Some(t) =>
+            while (live.nonEmpty && live.head._1 < t - h) {
+              val (_, en, ec) = live.removeHead()
+              n -= en; cents -= ec
+            }
+            val gap = live.lastOption.map(t - _._1)
+            val out = run.map(eid => (eid, user, n, cents, gap))
+            live.append((t, run.size.toLong, runCents))
+            n += run.size; cents += runCents
+            out
+        }
+      }
+    }.toDF("event_id", "user_id", "n_7d", "cents_7d", "gap_ns")
   }
 
   val trailingFeaturesSql: String =

@@ -26,7 +26,12 @@ class EventEdgeSpec extends SparkTestBase {
   /** Write (event_id, ts_ns, user_id, event_type, value) rows as an
     * events.parquet the Tables loader accepts; returns the sf-style dir.
     */
-  private def eventsDir(rows: Seq[(Long, Long, Long, String, Double)]): String = {
+  private def eventsDir(rows: Seq[(Long, Long, Long, String, Double)]): String =
+    nullableEventsDir(rows.map { case (id, ts, u, t, v) => (id, Some(ts), Some(u), t, Some(v)) })
+
+  /** [[eventsDir]] for rows whose ts, user_id or value may be NULL. */
+  private def nullableEventsDir(
+      rows: Seq[(Long, Option[Long], Option[Long], String, Option[Double])]): String = {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-edge").toString
     rows.map { case (id, ts, u, t, v) => (id, ts, u, t, v, "{}") }
@@ -34,6 +39,23 @@ class EventEdgeSpec extends SparkTestBase {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
     dir
   }
+
+  /** NULL ts, user_id and value rows, shared by first_touch and
+    * trailing_features: (event_id, ts, user_id, event_type, value).
+    */
+  private val NullT0 = 1700000000000000000L
+  private val NullH = 3600L * 1000000000L
+  private lazy val nullsDir = nullableEventsDir(Seq(
+    (1L, Some(NullT0), Some(7L), "view", Some(1.0)),
+    (2L, Some(NullT0 + NullH), Some(7L), "view", None),
+    (3L, Some(NullT0 + 2 * NullH), Some(7L), "purchase", Some(3.0)),
+    (4L, None, Some(7L), "view", Some(4.0)),
+    (5L, None, Some(7L), "purchase", Some(5.0)),
+    (6L, Some(NullT0), None, "view", Some(6.0)),
+    (7L, Some(NullT0 + NullH), None, "purchase", Some(7.0))))
+
+  private def optLong(r: org.apache.spark.sql.Row, i: Int): Option[Long] =
+    Option(r.get(i)).map(_.asInstanceOf[Long])
 
   test("sessionize: a gap of exactly 30 min continues the session; +1 ns starts a new one") {
     val t0 = 1700000000000000000L
@@ -163,6 +185,15 @@ class EventEdgeSpec extends SparkTestBase {
       100L -> ((7L, Some((1L, "view")))),
       200L -> ((8L, Some((10L, "view")))),
       300L -> ((9L, None))))
+    // NULLs as in the oracle's join: a NULL ts or user_id matches no
+    // touch, and its purchase survives with NULL attribution
+    val nulls = RelationalQueries.firstTouch(spark, nullsDir).collect().map { r =>
+      r.getLong(0) -> ((optLong(r, 1), optLong(r, 2), optLong(r, 3), Option(r.getString(4))))
+    }.toMap
+    assert(nulls === Map(
+      3L -> ((Some(7L), Some(NullT0 / 1000), Some(1L), Some("view"))),
+      5L -> ((Some(7L), None, None, None)),
+      7L -> ((None, None, None, None))))
   }
 
   test("path_topk: same-microsecond ties order by event_id; windows never cross users") {
@@ -231,6 +262,20 @@ class EventEdgeSpec extends SparkTestBase {
       3L -> ((1L, 200L, Some(1L))),
       4L -> ((1L, 200L, Some(1L))),
       5L -> ((0L, 0L, None))))
+    // NULLs as in the oracle's window: a user's NULL-ts rows are each
+    // other's frame, itself included; a NULL user_id is its own group;
+    // a NULL value counts in n_7d and adds nothing to cents_7d
+    val nulls = RelationalQueries.trailingFeatures(spark, nullsDir).collect()
+      .map(r => r.getLong(0) -> ((optLong(r, 1), r.getLong(2), r.getLong(3), optLong(r, 4))))
+      .toMap
+    assert(nulls === Map(
+      1L -> ((Some(7L), 0L, 0L, None)),
+      2L -> ((Some(7L), 1L, 100L, Some(NullH))),
+      3L -> ((Some(7L), 2L, 100L, Some(NullH))),
+      4L -> ((Some(7L), 2L, 900L, None)),
+      5L -> ((Some(7L), 2L, 900L, None)),
+      6L -> ((None, 0L, 0L, None)),
+      7L -> ((None, 1L, 600L, Some(NullH)))))
   }
 
   test("linear_attribution: largest-remainder split is exact; window edges pin") {

@@ -6,13 +6,12 @@ import org.apache.spark.sql.functions._
 
 import graft.queries.RelationalQueries
 
-/** Pins the round-16 skew form of `first_touch` (sorted per-user
-  * sliding-window-minimum scan) against the (user, day-bucket) join form
-  * it replaces past the skew threshold, on inputs built to break the
-  * deque bookkeeping:
+/** Pins `first_touch`'s sorted per-user sliding-window-minimum scan
+  * against a driver-side brute-force recompute, on inputs built to break
+  * the deque bookkeeping:
   *
   *  - a HOT user interleaving purchases and touches densely (the Zipf
-  *    regime: the join form's per-(user, bucket) candidate mass measured
+  *    regime: a (user, day-bucket) join's candidate mass measured
   *    67.0 s vs 1.7 s at sf10),
   *  - touches AT a purchase's own timestamp (strict `< t0`: excluded),
   *  - a touch EXACTLY at t0 − 24 h (inclusive lower bound: included),
@@ -24,8 +23,8 @@ class FirstTouchSpec extends SparkTestBase {
 
   private val W = RelationalQueries.TouchWindowNs
 
-  private lazy val dir: String = {
-    import spark.implicits._
+  /** (event_id, user_id, ts, event_type) */
+  private lazy val events: Seq[(Long, Long, Long, String)] = {
     val rnd = new scala.util.Random(61)
     // hot user 1: 3000 events over ~10 days, ~1/3 purchases, dense ties
     val hot = Seq.tabulate(3000) { i =>
@@ -46,8 +45,13 @@ class FirstTouchSpec extends SparkTestBase {
       // same-microsecond pair: event_id breaks the argmin tie
       (9101L, 3L, 5000L, "view"), (9100L, 3L, 5500L, "click"),
       (9102L, 3L, 9000L, "purchase"), (9103L, 3L, 9000L, "purchase"))
+    hot ++ edge
+  }
+
+  private lazy val dir: String = {
+    import spark.implicits._
     val d = Files.createTempDirectory("ft-skew")
-    (hot ++ edge)
+    events
       .toDF("event_id", "user_id", "ts", "event_type")
       .repartition(7)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
@@ -56,34 +60,66 @@ class FirstTouchSpec extends SparkTestBase {
     d.toString
   }
 
-  private def keyOf(r: org.apache.spark.sql.Row) =
-    r.getLong(0) -> ((r.getLong(1),
-      if (r.isNullAt(2)) null else r.getLong(2),
-      if (r.isNullAt(3)) null else r.getLong(3),
-      if (r.isNullAt(4)) null else r.getString(4)))
-  private val cols =
-    Seq("purchase_id", "user_id", "first_ts_us", "first_event_id", "first_event_type")
+  private type Attribution = (Long, Option[Long], Option[Long], Option[String])
 
-  test("scan form == join form on dense hot-user corpus with boundary and tie cases") {
-    val scan = RelationalQueries.firstTouchScan(spark, dir)
-      .select(cols.head, cols.tail: _*).collect().map(keyOf).toMap
-    val join = RelationalQueries.firstTouchJoin(spark, dir)
-      .select(cols.head, cols.tail: _*).collect().map(keyOf).toMap
-    assert(scan.size === join.size, "one row per purchase, both forms")
-    assert(scan === join)
-    // direct pins, independent of the join oracle:
-    // inclusive lower bound — the touch exactly 24 h before IS the answer
-    assert(scan(9002L) === ((2L, 0L, 9001L, "view")))
+  /** Driver-side recompute: each purchase's (us, event_id)-least touch of
+    * the same user in [t0 − W, t0).
+    */
+  private def bruteForce: Map[Long, Attribution] = {
+    val touches = events.filter(e => RelationalQueries.TouchTypes.contains(e._4))
+      .groupBy(_._2)
+    events.filter(_._4 == RelationalQueries.ConversionType).map { case (pid, u, t0, _) =>
+      val first = touches.getOrElse(u, Nil)
+        .filter(e => e._3 >= t0 - W && e._3 < t0)
+        .minByOption(e => (e._3 / 1000, e._1))
+      pid -> ((u, first.map(_._3 / 1000), first.map(_._1), first.map(_._4)))
+    }.toMap
+  }
+
+  private def declared: Map[Long, Attribution] =
+    RelationalQueries.firstTouch(spark, dir).collect().map { r =>
+      r.getLong(0) -> ((r.getLong(1), Option(r.get(2)).map(_.asInstanceOf[Long]),
+        Option(r.get(3)).map(_.asInstanceOf[Long]), Option(r.getString(4))))
+    }.toMap
+
+  test("declared plan == driver-side brute force on the dense hot-user corpus") {
+    val got = declared
+    assert(got === bruteForce)
+    assert(got.values.count(_._2.isDefined) > 100, "vacuous: few attributed purchases")
+    // direct pins: inclusive lower bound — the touch exactly 24 h before
+    // IS the answer
+    assert(got(9002L) === ((2L, Some(0L), Some(9001L), Some("view"))))
     // empty window (the only touches are > W old or at t0 itself)
-    assert(scan(9004L) === ((2L, null, null, null)))
+    assert(got(9004L) === ((2L, None, None, None)))
   }
 
   test("tie semantics: smaller event_id wins within a microsecond; same-ts purchases agree") {
-    val scan = RelationalQueries.firstTouchScan(spark, dir)
-      .select(cols.head, cols.tail: _*).collect().map(keyOf).toMap
+    val got = declared
     // touches at us=5 (ts 5000, eid 9101) and us=5 (ts 5500, eid 9100):
     // same microsecond, so the argmin order (us, event_id) picks 9100
-    assert(scan(9102L) === ((3L, 5L, 9100L, "click")))
-    assert(scan(9103L) === scan(9102L))
+    assert(got(9102L) === ((3L, Some(5L), Some(9100L), Some("click"))))
+    assert(got(9103L) === got(9102L))
+  }
+
+  test("a NULL touch event_id ranks last within its microsecond, as in the oracle") {
+    import spark.implicits._
+    val d = Files.createTempDirectory("ft-null-id")
+    Seq[(Option[Long], Long, Long, String)](
+      (None, 1000L, 5L, "view"), (Some(50L), 1500L, 5L, "click"), // same µs: 50 wins
+      (Some(60L), 5000L, 5L, "purchase"),
+      (None, 10000L, 6L, "view"), (Some(61L), 20000L, 6L, "purchase"), // the only touch
+      (Some(70L), 1000L, 8L, "view"), (None, 1200L, 8L, "click"), // same µs: 70 wins
+      (Some(71L), 3000L, 8L, "purchase"))
+      .toDF("event_id", "ts", "user_id", "event_type")
+      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
+        lit(1.0).as("value"), lit("{}").as("props"))
+      .write.parquet(d.resolve("events.parquet").toString)
+    val got = RelationalQueries.firstTouch(spark, d.toString).collect().map { r =>
+      r.getLong(0) -> ((r.getLong(2), Option(r.get(3)).map(_.asInstanceOf[Long]), r.getString(4)))
+    }.toMap
+    assert(got === Map(
+      60L -> ((1L, Some(50L), "click")),
+      61L -> ((10L, None, "view")),
+      71L -> ((1L, Some(70L), "view"))))
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
-import graft.functions.{Hash60ArrayExpr, ShingleHash60Expr, TextFns, TokenHash60Expr}
+import graft.functions.{ShingleHash60Expr, TextFns, TokenHash60Expr}
 
 /** Differential tests: the fused native kernels must agree exactly with
   * the Column-level formulations they replaced (which in turn are pinned
@@ -107,8 +107,8 @@ class TokenKernelsSpec extends SparkTestBase {
     val got = df.select(ShingleHash60Expr(col("text"), 3, P).as("hs"))
       .collect().map(_.getSeq[Long](0).sorted)
     val want = df.select(
-        array_distinct(Hash60ArrayExpr(
-          array_distinct(TextFns.wordNgrams(hofTokens, 3)), P)).as("hs"))
+        array_distinct(transform(array_distinct(TextFns.wordNgrams(hofTokens, 3)),
+          g => TextFns.hash60(g) % P)).as("hs"))
       .collect().map(_.getSeq[Long](0).sorted)
     got.zip(want).zip(samples).foreach { case ((g, w), s) =>
       assert(g === w, s"input=$s")

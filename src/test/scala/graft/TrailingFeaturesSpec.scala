@@ -6,29 +6,31 @@ import org.apache.spark.sql.functions._
 
 import graft.queries.RelationalQueries
 
-/** Pins the round-16 skew routing of `trailing_features`: the delta/
-  * prefix-sum form must be value-identical to the single-window form it
-  * replaces past the skew threshold, on inputs built to break the delta
-  * bookkeeping:
+/** Pins `trailing_features`' sorted per-user scan against a driver-side
+  * brute-force recompute of the RANGE frame, on inputs built to break the
+  * scan's deque bookkeeping:
   *
-  *  - one HOT user holding most of the corpus (the Zipf regime that
-  *    motivated the rewrite: the naive frame re-aggregation is O(n·f)
-  *    per user and measured 31.4 s vs 0.54 s at sf1),
+  *  - one HOT user holding most of the corpus (the Zipf regime: a
+  *    `rangeBetween` window re-aggregates its frame per row, O(n·f) per
+  *    user, measured 31.4 s vs 0.54 s at sf1),
   *  - duplicate timestamps (RANGE peers must all be EXCLUDED by the
-  *    −1 ns upper bound, and their masses must merge in the arrival
-  *    collapse),
+  *    −1 ns upper bound, and their masses must enter the frame together),
   *  - events exactly H apart (the inclusive lower bound: an event at
   *    ts − H is still inside the frame, so its expiry must not fire
   *    until strictly after ts),
-  *  - gaps longer than H (empty frames: n=0, cents=0, gap NULL).
+  *  - gaps longer than H (empty frames: n=0, cents=0, gap NULL),
+  *  - a second corpus whose hot user has more events than
+  *    [[RelationalQueries.UserSkewRouteThreshold]].
   */
 class TrailingFeaturesSpec extends SparkTestBase {
 
   private val H = RelationalQueries.TrailingHorizonNs
+  private val day = 86400000000000L
 
-  private lazy val dir: String = {
-    import spark.implicits._
-    val day = 86400000000000L
+  /** (event_id, user_id, ts, cents) */
+  private type Event = (Long, Long, Long, Long)
+
+  private lazy val events: Seq[Event] = {
     val rnd = new scala.util.Random(16)
     // hot user 1: 2000 events over ~55 days incl. duplicate timestamps;
     // user 2: sparse with a > H dead gap; user 3: events EXACTLY H apart
@@ -40,8 +42,27 @@ class TrailingFeaturesSpec extends SparkTestBase {
       (9003L, 2L, 3 * H + 5L, 13L))
     val edge = Seq((9101L, 3L, 0L, 1L), (9102L, 3L, H, 2L), (9103L, 3L, 2 * H, 4L),
       (9104L, 3L, 2 * H, 8L)) // tie at 2H: peers excluded from each other
-    val d = Files.createTempDirectory("tf-skew")
-    (hot ++ sparse ++ edge)
+    hot ++ sparse ++ edge
+  }
+
+  /** Hot user 1 holds 9000 events over ~40 days, 3 to a timestamp, so
+    * it sits above the user-skew threshold; users 2..41 hold 10 each.
+    */
+  private lazy val skewedEvents: Seq[Event] = {
+    val rnd = new scala.util.Random(9)
+    val hot = Seq.tabulate(9000) { i =>
+      ((i.toLong, 1L, (i / 3).toLong * (day / 75), (rnd.nextInt(500) - 100).toLong))
+    }
+    val cold = Seq.tabulate(400) { i =>
+      ((100000L + i, 2L + i / 10, rnd.nextInt(30).toLong * day, rnd.nextInt(100).toLong))
+    }
+    hot ++ cold
+  }
+
+  private def write(rows: Seq[Event], name: String): String = {
+    import spark.implicits._
+    val d = Files.createTempDirectory(name)
+    rows
       .toDF("event_id", "user_id", "ts", "cents")
       .repartition(7) // adversarial placement; results must not care
       .select(col("event_id"), col("ts"), col("user_id"),
@@ -52,38 +73,45 @@ class TrailingFeaturesSpec extends SparkTestBase {
     d.toString
   }
 
-  private def keyOf(r: org.apache.spark.sql.Row) =
-    r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
-      if (r.isNullAt(4)) null else r.getLong(4)))
-  private val cols = Seq("event_id", "user_id", "n_7d", "cents_7d", "gap_ns")
+  private lazy val dir = write(events, "tf-edge")
 
-  test("delta form == window form on hot-user corpus with ties, horizon-edge events, dead gaps") {
-    val delta = RelationalQueries.trailingFeaturesDelta(spark, dir)
-      .select(cols.head, cols.tail: _*).collect().map(keyOf).toMap
-    val window = RelationalQueries.trailingFeaturesWindow(spark, dir)
-      .select(cols.head, cols.tail: _*).collect().map(keyOf).toMap
-    assert(delta.size === window.size)
-    assert(delta === window)
-    // spot-pin the horizon-edge semantics directly (independent of the
-    // window oracle): at ts=H the event at ts=0 is still IN frame
-    // (inclusive lower bound)...
-    assert(delta(9102L) === ((3L, 1L, 1L, H)))
-    // ...peers at the same ts see earlier history but not each other...
-    assert(delta(9103L)._2 === 1L, "tie peer must be excluded (only ts=H in frame)")
-    assert(delta(9104L)._2 === 1L)
-    // ...and a dead gap yields an empty frame: zero counts, NULL gap
-    assert(delta(9003L) === ((2L, 0L, 0L, null)))
+  private type Features = (Long, Long, Long, Option[Long])
+
+  /** Driver-side recompute of the frame [ts − H, ts − 1] of the same user. */
+  private def bruteForce(rows: Seq[Event]): Map[Long, Features] = {
+    val byUser = rows.groupBy(_._2)
+    rows.map { case (id, u, ts, _) =>
+      val frame = byUser(u).filter(e => e._3 >= ts - H && e._3 <= ts - 1)
+      id -> ((u, frame.size.toLong, frame.map(_._4).sum,
+        frame.map(_._3).maxOption.map(ts - _)))
+    }.toMap
   }
 
-  test("skew probe: max events per user, memoized, drives the route") {
-    assert(RelationalQueries.maxEventsPerUser(spark, dir) === 2000L)
-    // this corpus sits under the threshold → declared query takes the
-    // window form; equivalence above makes the route value-invisible
-    assert(2000L <= RelationalQueries.UserSkewRouteThreshold)
-    val declared = RelationalQueries.trailingFeatures(spark, dir)
-      .select(cols.head, cols.tail: _*).collect().map(keyOf).toMap
-    val delta = RelationalQueries.trailingFeaturesDelta(spark, dir)
-      .select(cols.head, cols.tail: _*).collect().map(keyOf).toMap
-    assert(declared === delta)
+  private def declared(dir: String): Map[Long, Features] =
+    RelationalQueries.trailingFeatures(spark, dir).collect().map { r =>
+      r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
+        Option(r.get(4)).map(_.asInstanceOf[Long])))
+    }.toMap
+
+  test("declared plan == driver-side brute force on hot user, ties, edges, gaps") {
+    val got = declared(dir)
+    // spot-pin the horizon-edge semantics directly: at ts=H the event at
+    // ts=0 is still IN frame (inclusive lower bound)...
+    assert(got(9102L) === ((3L, 1L, 1L, Some(H))))
+    // ...peers at the same ts see earlier history but not each other...
+    assert(got(9103L)._2 === 1L, "tie peer must be excluded (only ts=H in frame)")
+    assert(got(9104L)._2 === 1L)
+    // ...and a dead gap yields an empty frame: zero counts, NULL gap
+    assert(got(9003L) === ((2L, 0L, 0L, None)))
+    assert(got === bruteForce(events))
+  }
+
+  test("hot user above UserSkewRouteThreshold: declared plan == brute force") {
+    val skewDir = write(skewedEvents, "tf-skew")
+    assert(RelationalQueries.maxEventsPerUser(spark, skewDir) >
+      RelationalQueries.UserSkewRouteThreshold, "vacuous: no user above the threshold")
+    val got = declared(skewDir)
+    assert(got === bruteForce(skewedEvents))
+    assert(got.values.map(_._2).max > 100L, "vacuous: frames stay small")
   }
 }

@@ -59,16 +59,4 @@ class WinnowFpsSpec extends AnyFunSuite {
     assert(WinnowFpsExpr.compute(UTF8String.fromString("0123456789"), 8, 4)
       .numElements() === 0)
   }
-
-  test("hash60_array equals scalar hash60 % mod per element") {
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    val p = 2147483647L
-    val samples = Gen.listOfN(200, genText).sample.get.filter(_.nonEmpty)
-    val arr = new GenericArrayData(
-      samples.map(s => UTF8String.fromString(s): Any).toArray)
-    val got = graft.functions.Hash60ArrayExpr.compute(arr, p).toLongArray()
-    samples.zip(got).foreach { case (s, h) =>
-      assert(h === hash60(s) % p, s"input=$s")
-    }
-  }
 }
