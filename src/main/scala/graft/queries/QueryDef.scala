@@ -188,7 +188,7 @@ private[graft] object Memo {
     * residual race is a process holding an unread plan across 7+ idle
     * days while a second process prunes, inherent to any TTL cache.
     */
-  private val inUse = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private[graft] val inUse = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Last prune wall-clock per cache root — [[pruneStale]] is a full
     * directory stat walk, so it is rate-limited to once per hour per
@@ -201,20 +201,20 @@ private[graft] object Memo {
     * DataFrame — bounded by work actually done, and the price of never
     * deleting an artifact a live plan may still re-scan.
     */
-  private val lastPrune = new java.util.concurrent.ConcurrentHashMap[String, Long]()
+  private val lastPrune = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   /** Drop cache entries unused for 7 days (test corpora live in
     * fresh temp dirs, so their keys are single-use and would otherwise
     * accumulate; _SUCCESS mtime is refreshed on every read). At most one
     * walk per root per hour per process — see [[lastPrune]].
     */
-  private def pruneStale(root: java.io.File): Unit = {
+  private[graft] def pruneStale(root: java.io.File): Unit = {
     val now = System.currentTimeMillis()
-    val prev = lastPrune.getOrDefault(root.getPath, 0L)
-    if (now - prev < 3600L * 1000) return
-    if (!lastPrune.replace(root.getPath, prev, now) &&
-        lastPrune.putIfAbsent(root.getPath, now) != null) return // lost the race: someone else walks
-    val cutoff = System.currentTimeMillis() - 7L * 24 * 3600 * 1000
+    var walk = false
+    lastPrune.compute(root.getPath, (_, prev) =>
+      if (prev != null && now - prev < 3600L * 1000) prev else { walk = true; now })
+    if (!walk) return // walked within the hour, or another caller walks now
+    val cutoff = now - 7L * 24 * 3600 * 1000
     Option(root.listFiles()).toSeq.flatten.foreach { e =>
       val marker = new java.io.File(e, "_SUCCESS")
       if (e.isDirectory && marker.isFile && marker.lastModified() < cutoff &&

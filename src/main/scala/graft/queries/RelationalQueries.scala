@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,6 +27,53 @@ object RelationalQueries {
 
   private def sqlIntSum(e: String, scale: Int): String =
     s"CAST(sum(CAST(round(($e) * ${math.pow(10, scale).toLong}) AS BIGINT)) AS BIGINT)"
+
+  /** The per-user sorted sweep of every bounded-time-window query — the
+    * paper's reduce with a secondary sort: `rows` is shuffled on user_id,
+    * sorted within each partition by (user_id, `order`…), and ONE
+    * mapPartitions pass hands each user's rows to `sweep` as one iterator
+    * (draining what it leaves unread; a NULL user_id is one more user).
+    * mapPartitions is the documented last-resort tier (SURVEY
+    * operator-extension order): window state no Catalyst frame expresses.
+    */
+  private def perUserSweep[T, U: Encoder](rows: Dataset[T], order: Column*)(
+      user: T => Any)(sweep: Iterator[T] => Iterator[U]): Dataset[U] = {
+    val parts = rows.sparkSession.sessionState.conf.numShufflePartitions
+    rows.repartition(parts, col("user_id"))
+      .sortWithinPartitions(col("user_id") +: order: _*)
+      .mapPartitions(new UserRuns(_, user, sweep))
+  }
+
+  /** [[perUserSweep]]'s pass over one sorted partition: `sweep`'s output
+    * for each run of equal user keys in turn. The key is read and
+    * compared once per row, on a one-row lookahead. */
+  private final class UserRuns[T, U](in: Iterator[T], user: T => Any,
+      sweep: Iterator[T] => Iterator[U]) extends Iterator[U] {
+    private var more = in.hasNext
+    private var head: T = if (more) in.next() else null.asInstanceOf[T] // next row not handed out
+    private var run: Iterator[T] = Iterator.empty
+    private var out: Iterator[U] = Iterator.empty
+    def hasNext: Boolean = {
+      while (!out.hasNext) {
+        run.foreach(_ => ()) // drain the rows the last sweep left unread
+        if (!more) return false
+        run = userRun(user(head))
+        out = sweep(run)
+      }
+      true
+    }
+    def next(): U = if (hasNext) out.next() else Iterator.empty.next()
+    private def userRun(u: Any): Iterator[T] = new Iterator[T] {
+      private var same = true
+      def hasNext: Boolean = same
+      def next(): T = {
+        val r = head
+        more = in.hasNext
+        if (more) { head = in.next(); same = user(head) == u } else same = false
+        r
+      }
+    }
+  }
 
   // --------------------------------------------------------------- group_agg
   /** Q5 `group_agg` — TPC-H Q1-shaped pricing summary: the canonical
@@ -348,44 +395,46 @@ object RelationalQueries {
     * analytics is built on, and the pair-forming step of session-graph
     * features.
     *
-    * Scale shape: NOT a range join. Both sides bucket the event time into
-    * gap-width buckets; a follower within the gap lands in the same or
-    * the next bucket, so the left side explodes into exactly those two
-    * probe buckets and the join is an EQUI-join on (user, bucket) with
-    * the exact range check as a post-filter. Each qualifying pair meets
-    * exactly once (the right row has one bucket). Work is bounded by
-    * per-(user, 30 min) event density — the same axis-bucketing family as
-    * asof_join's single-shuffle form, where the naive
-    * `ON b.t BETWEEN a.t AND a.t + Δ` inequality join degenerates to a
-    * per-user nested loop.
+    * Scale shape: the [[perUserSweep]] over runs of equal us, not the
+    * naive `BETWEEN` join (a per-user nested loop). A run expires the live
+    * rows older than `us − Δ` (inclusive bound), is emitted against every
+    * live row (same-µs peers are not followers), then joins them: work is
+    * the output pairs plus the user's sort, memory one window. NULL
+    * user_id or ts rows form no pair, as in the oracle's join.
     *
     * Time axis: MICROSECONDS — Spark's native timestamp tick, and the
-    * exact axis the streaming twin's interval join operates on
-    * (stream-stream joins compare TimestampType, which is µs), so batch
-    * and stream share identical semantics including sub-second
-    * follow-ups. (An earlier form truncated to whole seconds, silently
-    * excluding genuine followers < 1 s apart — round-6 advice.) The
-    * events table carries nanos; the residual sub-µs truncation is below
-    * the engine's event-time resolution and applies identically to both
-    * compared instants. All arithmetic is BIGINT (integer µs, integer
-    * gap), so the output hash-matches the oracle exactly.
+    * exact axis the streaming twin's interval join compares, so batch and
+    * stream share semantics down to sub-second follow-ups. The sub-µs
+    * truncation of the nanos `ts` applies identically to both compared
+    * instants; all arithmetic is BIGINT, so the output hash-matches the
+    * oracle exactly.
     */
   val FunnelGapS = 1800L
   val FunnelGapUs: Long = FunnelGapS * 1000000L
 
   def funnelPairs(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
     val ev = Tables(spark, dir, "events")
-      .select(col("user_id"), col("event_id"), expr("ts div 1000").as("us"))
-      .withColumn("bk", expr(s"us div $FunnelGapUs"))
-    val a = ev.select(col("user_id").as("ua"), col("event_id").as("ea"),
-        col("us").as("ta"), col("bk"))
-      .withColumn("pb", explode(array(col("bk"), col("bk") + 1)))
-    val b = ev.select(col("user_id").as("ub"), col("event_id").as("next_event_id"),
-      col("us").as("tb"), col("bk").as("bb"))
-    a.join(b, col("ua") === col("ub") && col("pb") === col("bb") &&
-        col("tb") > col("ta") && col("tb") <= col("ta") + FunnelGapUs)
-      .select(col("ea").as("event_id"), col("next_event_id"),
-        col("ua").as("user_id"), (col("tb") - col("ta")).as("gap_us"))
+      .select(col("user_id"), expr("ts div 1000").as("us"), col("event_id"))
+      .filter(col("user_id").isNotNull && col("us").isNotNull)
+      .as[(Long, Long, Option[Long])]
+    perUserSweep(ev, col("us"))(_._1) { rows =>
+      val in = rows.buffered
+      // live rows: (us, event_id), us non-decreasing
+      val live = new scala.collection.mutable.ArrayDeque[(Long, Option[Long])]
+      Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+        val (user, us) = (in.head._1, in.head._2)
+        val run = scala.collection.mutable.ArrayBuffer.empty[Option[Long]]
+        while (in.hasNext && in.head._2 == us) run += in.next()._3
+        while (live.nonEmpty && live.head._1 < us - FunnelGapUs) live.removeHead()
+        val earlier = live.size
+        live ++= run.map(us -> _)
+        Iterator.range(0, earlier).flatMap { i =>
+          val (ua, ea) = live(i)
+          run.iterator.map(eb => (ea, eb, user, us - ua))
+        }
+      }
+    }.toDF("event_id", "next_event_id", "user_id", "gap_us")
   }
 
   val funnelPairsSql: String =
@@ -395,56 +444,66 @@ object RelationalQueries {
        |  ON b.user_id = a.user_id AND b.us > a.us AND b.us <= a.us + $FunnelGapUs""".stripMargin
 
   // ------------------------------------------------------------ interval_join
-  /** `interval_join` — the GENERAL bounded-interval equi-join
-    * ([[funnelPairs]] is the symmetric self-join special case): an ANCHOR
-    * relation opening per-row time windows, a PROBE relation matched into
-    * them, aggregated per anchor with zero-fill. Here the incident-impact
-    * staple: for every `error` event, the same user's activity in the
-    * following hour — did the error stall them or did they recover?
-    * The naive plan (`ON user = user AND t BETWEEN t0 AND t0 + Δ`) gives
-    * Spark only the equality key, degenerating to a per-user nested loop
-    * over that user's full history; a RANGE window cannot express it at
-    * all (two relations).
+  /** `interval_join` — the GENERAL bounded-interval join ([[funnelPairs]]
+    * is the symmetric self-join special case): an ANCHOR relation opening
+    * per-row time windows, a PROBE relation matched into them, aggregated
+    * per anchor with zero-fill. Here the incident-impact staple: for every
+    * `error` event, the same user's activity in the following hour — did
+    * the error stall them or did they recover? The naive plan
+    * (`ON user = user AND t BETWEEN t0 AND t0 + Δ`) is a per-user nested
+    * loop; a RANGE window cannot express it (two relations).
     *
-    * Scale shape — the funnel_pairs axis-bucketing generalized to
-    * asymmetric relations: bucket width = window length Δ, so a window
-    * spans AT MOST 2 buckets. The anchor side — the sparse side, where a
-    * constant fan-out belongs — explodes to its ≤2 covered buckets; the
-    * probe side computes its single bucket scan-local; the join is then a
-    * plain equi-join on (user, bucket) + residual range predicate: ONE
-    * user-keyed shuffle per side, work bounded by per-(user, Δ) event
-    * density, never per-user history. The zero-fill join back onto
-    * anchors is anchor-keyed (event_id — unique, skew-free); a
-    * pathological hot user splits by the same salting discipline as
-    * ngram_jaccard's hot shingles.
+    * Scale shape: the [[perUserSweep]] over a union of two row kinds —
+    * every event PROBES, every error also ANCHORS, probes first at equal
+    * µs. A probe expires and emits the anchors with `t0 < us − Δ`, then
+    * adds 1 and its cents to every live anchor; anchors live at the
+    * user's end are flushed, so each is emitted once, with no zero-fill
+    * join. Work is the (anchor, follower) pairs plus the user's sort.
     *
     * Axis: integer µs (the funnel convention, BIGINT arithmetic
-    * throughout), follower semantics strictly-after: (t0, t0 + Δ].
+    * throughout), follower semantics strictly-after: (t0, t0 + Δ]. As in
+    * the oracle, an anchor with a NULL user_id, ts or event_id gets
+    * (0, 0.0), and a NULL-value follower counts but adds no cents.
     */
   val ImpactWindowUs: Long = 3600000000L // 1-hour impact window
   val AnchorType = "error"
 
   def intervalJoin(spark: SparkSession, dir: String): DataFrame = {
-    val W = ImpactWindowUs
+    import spark.implicits._
     val e = Tables(spark, dir, "events")
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        expr("ts div 1000").as("us"), col("value"))
-    val anchors = e.filter(col("event_type") === AnchorType)
-      .select(col("user_id"), col("event_id"), col("us").as("t0"))
-    val probes = e.select(col("user_id").as("ub"), col("us"), col("value"))
-      .withColumn("bk", expr(s"us div $W"))
-    val matched = anchors
-      .withColumn("pb", explode(array(expr(s"t0 div $W"), expr(s"t0 div $W") + 1L)))
-      .join(probes,
-        col("ub") === col("user_id") && col("bk") === col("pb") &&
-          col("us") > col("t0") && col("us") <= col("t0") + W)
-      .groupBy(col("event_id"))
-      .agg(count(lit(1)).as("n_follow"), intSum(col("value"), 2).as("cents"))
-    anchors.select(col("event_id"), col("user_id"))
-      .join(matched, Seq("event_id"), "left")
-      .select(col("event_id"), col("user_id"),
-        coalesce(col("n_follow"), lit(0L)).as("n_follow"),
-        (coalesce(col("cents"), lit(0L)) / 100.0).as("total_value"))
+      .select(col("user_id"), expr("ts div 1000").as("us"), col("event_id"),
+        col("event_type"), round(col("value") * 100).cast("long").as("cents"))
+    // kind 0 = probe (every event), 1 = anchor (every error)
+    val rows = e.select(col("user_id"), col("us"), lit(0).as("kind"), col("event_id"),
+        col("cents"))
+      .union(e.filter(col("event_type") === AnchorType)
+        .select(col("user_id"), col("us"), lit(1).as("kind"), col("event_id"),
+          lit(null).cast("long").as("cents")))
+      .as[(Option[Long], Option[Long], Int, Option[Long], Option[Long])]
+    perUserSweep(rows, col("us"), col("kind"))(_._1) { rows =>
+      val live = new scala.collection.mutable.ArrayDeque[LiveAnchor] // t0-increasing
+      def emit(a: LiveAnchor) = (a.eventId, a.user, a.n, a.cents)
+      rows.flatMap { case (user, us, kind, eid, cents) =>
+        (kind, us) match {
+          case (1, Some(t0)) if user.nonEmpty && eid.nonEmpty =>
+            live.append(new LiveAnchor(eid, user, t0))
+            Iterator.empty
+          case (1, _) => Iterator.single((eid, user, 0L, 0L))
+          case (_, Some(t)) =>
+            val expired = live.removeHeadWhile(_.t0 < t - ImpactWindowUs)
+            live.foreach { a => a.n += 1; a.cents += cents.getOrElse(0L) }
+            expired.iterator.map(emit)
+          case _ => Iterator.empty
+        }
+      } ++ live.iterator.map(emit)
+    }.toDF("event_id", "user_id", "n_follow", "cents")
+      .select(col("event_id"), col("user_id"), col("n_follow"),
+        (col("cents") / 100.0).as("total_value"))
+  }
+
+  /** An [[intervalJoin]] anchor in its window, with its followers so far. */
+  private final class LiveAnchor(val eventId: Option[Long], val user: Option[Long], val t0: Long) {
+    var n, cents = 0L
   }
 
   val intervalJoinSql: String =
@@ -2079,30 +2138,24 @@ object RelationalQueries {
     * oracle. Purchases with no touch in window survive with NULL
     * attribution (zero-fill).
     *
-    * Scale shape: ONE exchange on user_id, a per-partition (user, ts)
-    * sort, then a single streaming pass holding a MONOTONIC DEQUE of
-    * live touches per user — the classic sliding-window-minimum: a touch
-    * evicts every queued touch with a ≥ (us, event_id) rank (it arrived
-    * later, so it expires later AND ranks better: the queued one can
-    * never be an answer again), so the deque stays rank-increasing in
-    * arrival order and each purchase's first-touch is the deque head
+    * Scale shape: the [[perUserSweep]] holding a MONOTONIC DEQUE of live
+    * touches — the classic sliding-window-minimum: a touch evicts every
+    * queued touch with a ≥ (us, event_id) rank (it arrived later, so it
+    * expires later AND ranks better), so the deque stays rank-increasing
+    * in arrival order and each purchase's first-touch is the deque head
     * after expiring entries older than t0 − 24 h. Each event enters and
-    * leaves the deque at most once — O(n log n) per user (the sort),
-    * O(1) amortized per event after it, deque memory bounded by the
-    * window's live touch count, never purchases × touches, so a hot user
-    * costs the time of its sort (a (user, day-bucket) join measured
-    * 67.0 s on the sf10 Zipf hot user vs 1.7 s uniform, and lost to this
-    * scan on uniform corpora too). Rows sort (ts, kind purchase-first,
-    * event_id), so a touch AT a purchase's own timestamp is not yet in
-    * the deque (the strict `< t0` bound), while the window's inclusive
-    * lower bound is the `front.ts < t0 − W` expiry.
+    * leaves the deque at most once, so a hot user costs the time of its
+    * sort (measured history: a (user, day-bucket) join took 67.0 s on the
+    * sf10 Zipf hot user vs 1.7 s uniform, and lost to this scan on
+    * uniform corpora too). Rows sort (ts, kind purchase-first, event_id),
+    * so a touch AT a purchase's own timestamp is not yet in the deque
+    * (the strict `< t0` bound); the inclusive lower bound is the
+    * `front.ts < t0 − W` expiry.
     *
     * NULLs follow the oracle's join: a NULL user_id, ts or purchase id
     * matches no touch (the purchase survives with NULL attribution), and
     * a NULL touch event_id ranks last among same-microsecond touches
-    * (DuckDB's `ORDER BY us, event_id` is NULLS LAST). mapPartitions is
-    * the documented last-resort tier (SURVEY operator-extension order) —
-    * the per-row loop is imperative state no Catalyst frame expresses.
+    * (DuckDB's `ORDER BY us, event_id` is NULLS LAST).
     */
   val TouchWindowNs = 86400000000000L // 24 h
   val ConversionType = "purchase"
@@ -2110,30 +2163,23 @@ object RelationalQueries {
 
   def firstTouch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val w = TouchWindowNs
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val sorted = Tables(spark, dir, "events")
+    val rows = Tables(spark, dir, "events")
       .filter(col("event_type") === ConversionType ||
         col("event_type").isin(TouchTypes: _*))
       .select(col("user_id"), col("ts"),
         when(col("event_type") === ConversionType, lit(0)).otherwise(lit(1)).as("kind"),
         col("event_id"), col("event_type"))
-      .repartition(parts, col("user_id"))
-      .sortWithinPartitions(col("user_id"), col("ts"), col("kind"), col("event_id"))
       .as[(Option[Long], Option[Long], Int, Option[Long], String)]
-    sorted.mapPartitions { it =>
+    perUserSweep(rows, col("ts"), col("kind"), col("event_id"))(_._1) { rows =>
       // deque entries: (ts, us, event_id, event_type), arrival-ordered
       // (ts non-decreasing) AND (us, event_id)-increasing by construction
       val dq = new scala.collection.mutable.ArrayDeque[(Long, Long, Option[Long], String)]
-      var curUser: Option[Long] = None
-      var started = false
-      it.flatMap { case (user, ts, kind, eid, typ) =>
-        if (!started || user != curUser) { dq.clear(); curUser = user; started = true }
+      rows.flatMap { case (user, ts, kind, eid, typ) =>
         if (kind == 0) { // purchase: answer = head after expiry
           val ans =
             if (user.isEmpty || eid.isEmpty) None
             else ts.flatMap { t =>
-              while (dq.nonEmpty && dq.head._1 < t - w) dq.removeHead()
+              while (dq.nonEmpty && dq.head._1 < t - TouchWindowNs) dq.removeHead()
               dq.headOption
             }
           Iterator.single((eid, user, ans.map(_._2), ans.flatMap(_._3), ans.map(_._4)))
@@ -2187,88 +2233,51 @@ object RelationalQueries {
     * 1/3+1/3+1/3 ≠ 1.00 float leakage), and the remainder assignment is
     * deterministic on both engines.
     *
-    * Scale shape: the intervalJoin axis-bucket trick with the window on
-    * the BACKWARD side — bucket width = window length, so conversions
-    * explode into exactly their 2 covered buckets and touches carry their
-    * own bucket: an equi-join on (user, bucket) with the exact nanos range
-    * as residual, no inequality join; the per-conversion window functions
-    * partition by purchase_id over window-bounded groups (k ≤ touches per
-    * user per day). One exchange for the join, one for the window.
+    * Scale shape: [[firstTouch]]'s rows (non-NULL user_id and ts) through
+    * the [[perUserSweep]], holding every live touch: each purchase expires
+    * the touches with `ts < t0 − 24 h` and emits one row per live touch.
+    * The per-conversion windows then partition by purchase_id — one
+    * exchange for the sweep, one for the windows, which stay because the
+    * oracle ranks every NULL-id purchase of every user together.
     *
     * Note: conversion values are non-negative (pinned by dq_audit's
     * domain checks on this corpus), where Spark's truncating `div` and
     * the oracle's floor `//` coincide; a ledger with REFUNDS would floor
     * both sides explicitly before splitting.
     *
-    * Skew note (round 16): the OUTPUT here is one row per
-    * (conversion, in-window touch) pair — under a Zipf hot user that
-    * mass is quadratic in per-user rate BY DEFINITION of the linear
-    * model (every pair is a real result row), so unlike [[firstTouch]]
-    * and [[trailingFeatures]], whose sorted per-user scans keep O(1)
-    * amortized state per event, no plan can shrink it. What a
-    * plan CAN fix is that the whole hot mass lands in ONE
-    * (user, bucket) join task; past the [[UserSkewRouteThreshold]]
-    * probe the anchor side carries a [[AttributionSaltBuckets]]-way
-    * purchase-keyed salt and touches replicate across it, spreading
-    * generation evenly (each pair still meets exactly once — an anchor
-    * has ONE salt). Uniform corpora keep the unsalted join (touch
-    * replication is a ×S cost the balanced case should not pay).
+    * The OUTPUT is one row per (conversion, in-window touch) pair —
+    * quadratic in per-user rate under a Zipf hot user BY DEFINITION of the
+    * linear model. NULLs follow the oracle: a NULL user_id or ts matches
+    * nothing, and a NULL touch event_id ranks last within its
+    * microsecond (`ORDER BY us, touch_id` is NULLS LAST).
     */
-  val AttributionSaltBuckets = 32
-
-  /** User-skew route threshold of [[linearAttribution]]: at or below it
-    * the unsalted (user, bucket) join is cheaper (each user's pair mass
-    * is small, ≤ 67 M row touches at 8192 events/user); above it one
-    * Zipf hot user lands its whole quadratic pair mass in one join task,
-    * and the purchase-keyed salt spreads it. The statistic (max per-user
-    * event count) is one memoized partial-final agg per (session, dir).
-    */
-  val UserSkewRouteThreshold: Long = 8192L
-
-  private[graft] def maxEventsPerUser(spark: SparkSession, dir: String): Long =
-    Memo.memoizeValue(spark, dir, "max_events_per_user") {
-      Tables(spark, dir, "events")
-        .groupBy(col("user_id")).agg(count(lit(1)).as("c"))
-        .agg(max(col("c")).as("m")).head().getLong(0)
-    }
-
   def linearAttribution(spark: SparkSession, dir: String): DataFrame = {
-    val salt =
-      if (maxEventsPerUser(spark, dir) <= UserSkewRouteThreshold) 1
-      else AttributionSaltBuckets
-    val ev = Tables(spark, dir, "events")
-      .select(col("event_id"), col("user_id"), col("ts"), col("event_type"),
-        col("value"))
-    val purchases = ev.filter(col("event_type") === ConversionType)
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ts").as("t0"), round(col("value") * 100).cast("long").as("cents"))
-    // array_distinct: for 0 <= t0 < W both `div`s truncate to bucket 0
-    // (negative dividend truncates toward zero), and a duplicated bucket
-    // would double-join every touch — corrupting rn/n_touches/share_cents.
-    // Unreachable for epoch-scale ns timestamps, but the guard costs one
-    // scan-local dedup of a 2-element array.
-    val anchors = purchases.withColumn("b",
-      explode(array_distinct(array(expr(s"(t0 - $TouchWindowNs) div $TouchWindowNs"),
-        expr(s"t0 div $TouchWindowNs")))))
-    val touches = ev.filter(col("event_type").isin(TouchTypes: _*))
-      .select(col("user_id").as("t_user"), col("ts"),
-        expr("ts div 1000").as("us"), col("event_id").as("touch_id"),
-        col("event_type").as("touch_type"))
-      .withColumn("b", expr(s"ts div $TouchWindowNs"))
-    // skew route: spread a hot (user, bucket)'s pair generation over
-    // `salt` tasks — anchors take ONE purchase-keyed salt cell, touches
-    // replicate across all cells (see the skew note above)
-    val anchorsS = anchors.withColumn("sb",
-      if (salt == 1) lit(0L) else pmod(xxhash64(col("purchase_id")), lit(salt.toLong)))
-    val touchesS = touches.withColumn("sb",
-      if (salt == 1) lit(0L) else explode(sequence(lit(0L), lit(salt - 1L))))
+    import spark.implicits._
+    val rows = Tables(spark, dir, "events")
+      .filter(col("user_id").isNotNull && col("ts").isNotNull &&
+        (col("event_type") === ConversionType || col("event_type").isin(TouchTypes: _*)))
+      .select(col("user_id"), col("ts"),
+        when(col("event_type") === ConversionType, lit(0)).otherwise(lit(1)).as("kind"),
+        col("event_id"), col("event_type"),
+        round(col("value") * 100).cast("long").as("cents"))
+      .as[(Long, Long, Int, Option[Long], String, Option[Long])]
+    val pairs = perUserSweep(rows, col("ts"), col("kind"))(_._1) { rows =>
+      // live touches: (ts, us, touch_id, touch_type), ts non-decreasing
+      val live = new scala.collection.mutable.ArrayDeque[(Long, Long, Option[Long], String)]
+      rows.flatMap { case (_, ts, kind, eid, typ, cents) =>
+        if (kind == 0) {
+          while (live.nonEmpty && live.head._1 < ts - TouchWindowNs) live.removeHead()
+          live.iterator.map { case (_, us, tid, ttyp) => (eid, cents, tid, ttyp, us) }
+        } else {
+          live.append((ts, ts / 1000, eid, typ))
+          Iterator.empty
+        }
+      }
+    }.toDF("purchase_id", "cents", "touch_id", "touch_type", "us")
     val byTime = Window.partitionBy(col("purchase_id"))
-      .orderBy(col("us").asc, col("touch_id").asc)
+      .orderBy(col("us").asc, col("touch_id").asc_nulls_last)
     val perConv = Window.partitionBy(col("purchase_id"))
-    anchorsS.join(touchesS,
-        anchorsS("user_id") === touchesS("t_user") && anchorsS("b") === touchesS("b") &&
-          anchorsS("sb") === touchesS("sb"))
-      .filter(col("ts") >= col("t0") - TouchWindowNs && col("ts") < col("t0"))
+    pairs
       .withColumn("rn", row_number().over(byTime).cast("long"))
       .withColumn("n_touches", count(lit(1)).over(perConv))
       .select(col("purchase_id"), col("touch_id"), col("touch_type"),
@@ -3023,18 +3032,15 @@ object RelationalQueries {
     * BIGINT nanosecond gap), so partial-frame accumulation order can never
     * hash-mismatch; `gap_ns` is NULL when the horizon holds no prior event.
     *
-    * Scale shape: the [[firstTouch]] shape — ONE exchange on user_id, a
-    * per-partition (user, ts) sort, then a single streaming pass per user
-    * over runs of equal ts. The pass keeps a deque of the in-horizon runs
-    * (ts, events, cents) with a running count and cents sum: each run
-    * first expires runs older than `ts − H` (the frame's lower bound is
-    * inclusive), is then emitted against that state (peers at distance 0
-    * are outside each other's frame, the −1 ns bound), and only then
-    * joins the deque. `gap_ns` is `ts` minus the newest live run. Each
-    * run enters and leaves the deque once, so a user costs its sort,
-    * O(n log n), where a `rangeBetween(−H, −1)` window costs O(n·f)
-    * (Spark's sliding frame re-aggregates its buffer per row: 31.4 s vs
-    * 0.54 s uniform on round 16's sf1 Zipf hot user).
+    * Scale shape: the [[perUserSweep]] over runs of equal ts, keeping a
+    * deque of the in-horizon runs (ts, events, cents) with a running
+    * count and cents sum: each run first expires runs older than `ts − H`
+    * (the frame's lower bound is inclusive), is then emitted against that
+    * state (peers at distance 0 are outside each other's frame, the −1 ns
+    * bound), and only then joins the deque. `gap_ns` is `ts` minus the
+    * newest live run. A user costs its sort, O(n log n), where a
+    * `rangeBetween(−H, −1)` window costs O(n·f) (31.4 s vs 0.54 s uniform
+    * on round 16's sf1 Zipf hot user).
     *
     * NULLs follow the oracle's window: a NULL user_id is one more user,
     * a user's NULL-ts rows form one run that is each row's whole frame,
@@ -3045,38 +3051,29 @@ object RelationalQueries {
 
   def trailingFeatures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val h = TrailingHorizonNs
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val sorted = Tables(spark, dir, "events")
+    val rows = Tables(spark, dir, "events")
       .select(col("user_id"), col("ts"), col("event_id"),
         round(col("value") * 100).cast("long").as("cents"))
-      .repartition(parts, col("user_id"))
-      .sortWithinPartitions(col("user_id"), col("ts"))
       .as[(Option[Long], Option[Long], Option[Long], Option[Long])]
-    sorted.mapPartitions { rows =>
+    perUserSweep(rows, col("ts"))(_._1) { rows =>
       val in = rows.buffered
-      // in-horizon runs of the current user: (ts, events, cents), ts-increasing
+      // in-horizon runs of this user: (ts, events, cents), ts-increasing
       val live = new scala.collection.mutable.ArrayDeque[(Long, Long, Long)]
       var n = 0L
       var cents = 0L
-      var curUser: Option[Long] = None
-      var started = false
       Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
         val (user, ts) = (in.head._1, in.head._2)
         val run = scala.collection.mutable.ArrayBuffer.empty[Option[Long]]
         var runCents = 0L
-        while (in.hasNext && in.head._1 == user && in.head._2 == ts) {
+        while (in.hasNext && in.head._2 == ts) {
           val r = in.next()
           run += r._3
           runCents += r._4.getOrElse(0L)
         }
-        if (!started || user != curUser) {
-          live.clear(); n = 0L; cents = 0L; curUser = user; started = true
-        }
         ts match {
           case None => run.map(eid => (eid, user, run.size.toLong, runCents, Option.empty[Long]))
           case Some(t) =>
-            while (live.nonEmpty && live.head._1 < t - h) {
+            while (live.nonEmpty && live.head._1 < t - TrailingHorizonNs) {
               val (_, en, ec) = live.removeHead()
               n -= en; cents -= ec
             }

@@ -31,7 +31,12 @@ class EventEdgeSpec extends SparkTestBase {
 
   /** [[eventsDir]] for rows whose ts, user_id or value may be NULL. */
   private def nullableEventsDir(
-      rows: Seq[(Long, Option[Long], Option[Long], String, Option[Double])]): String = {
+      rows: Seq[(Long, Option[Long], Option[Long], String, Option[Double])]): String =
+    nullIdEventsDir(rows.map { case (id, ts, u, t, v) => (Some(id), ts, u, t, v) })
+
+  /** [[nullableEventsDir]] for rows whose event_id may be NULL too. */
+  private def nullIdEventsDir(
+      rows: Seq[(Option[Long], Option[Long], Option[Long], String, Option[Double])]): String = {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-edge").toString
     rows.map { case (id, ts, u, t, v) => (id, ts, u, t, v, "{}") }
@@ -122,6 +127,43 @@ class EventEdgeSpec extends SparkTestBase {
     val got = RelationalQueries.intervalJoin(spark, dir)
       .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getDouble(3))).toMap
     assert(got === Map(1L -> ((2L, 8.0)))) // events 3 (3.0) + 5 (5.0)
+  }
+
+  test("interval_join: NULL user_id, ts or event_id anchors get (0, 0.0); NULL values add 0 cents") {
+    val t0 = 1700000000000000000L
+    val dir = nullIdEventsDir(Seq(
+      (Some(1L), Some(t0), Some(7L), "error", Some(1.0)),       // anchor
+      (Some(2L), Some(t0 + 1000L), Some(7L), "view", None),     // NULL value: counts, 0 cents
+      (Some(3L), Some(t0 + 2000L), Some(7L), "view", Some(2.5)),
+      (None, Some(t0 + 3000L), Some(7L), "error", Some(1.0)),   // NULL id anchor; follows 1
+      (Some(4L), None, Some(7L), "error", Some(1.0)),           // NULL ts anchor
+      (Some(5L), Some(t0), None, "error", Some(1.0)),           // NULL user anchor
+      (Some(6L), Some(t0 + 1000L), None, "view", Some(3.0)),    // NULL user: follows nobody
+      (Some(7L), None, Some(7L), "view", Some(4.0))))           // NULL ts: follows nobody
+    val got = RelationalQueries.intervalJoin(spark, dir).collect()
+      .map(r => (optLong(r, 0), optLong(r, 1), r.getLong(2), r.getDouble(3))).toSet
+    assert(got === Set(
+      (Some(1L), Some(7L), 3L, 3.5),
+      (None, Some(7L), 0L, 0.0),
+      (Some(4L), Some(7L), 0L, 0.0),
+      (Some(5L), None, 0L, 0.0)))
+  }
+
+  test("funnel_pairs: +30 min in; a same-µs peer, +30 min +1 µs and NULL rows out") {
+    val t0 = 1700000000000000000L
+    val gapUs = RelationalQueries.FunnelGapUs
+    val dir = nullableEventsDir(Seq(
+      (1L, Some(t0), Some(7L), "view", Some(1.0)),
+      (2L, Some(t0 + 500L), Some(7L), "view", Some(1.0)),           // same µs as 1: no pair
+      (3L, Some(t0 + GapNs), Some(7L), "click", Some(1.0)),         // exactly +30 min of 1, 2
+      (4L, Some(t0 + GapNs + 1000L), Some(7L), "view", Some(1.0)),  // +30 min +1 µs of 1, 2
+      (5L, Some(t0 + 1000L), None, "view", Some(1.0)),              // NULL user: no pair
+      (6L, Some(t0 + 2000L), None, "view", Some(1.0)),
+      (7L, None, Some(7L), "view", Some(1.0)),                      // NULL ts: no pair
+      (8L, None, Some(7L), "view", Some(1.0))))
+    val got = RelationalQueries.funnelPairs(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    assert(got === Set((1L, 3L, 7L, gapUs), (2L, 3L, 7L, gapUs), (3L, 4L, 7L, 1L)))
   }
 
   test("ewma_daily: weights halve per day and the 29-day horizon zeroes exactly") {
@@ -296,6 +338,40 @@ class EventEdgeSpec extends SparkTestBase {
     assert(got === Map(
       1L -> ((1L, 3L, 34L)), 2L -> ((2L, 3L, 33L)), 3L -> ((3L, 3L, 33L))))
     assert(got.values.map(_._3).sum === 100L, "shares must sum to the cents exactly")
+  }
+
+  test("linear_attribution: NULL touch ids rank last; NULL-id purchases rank together") {
+    // nullsDir's rows plus NULL event_id touches and purchases
+    val dir = nullIdEventsDir(Seq(
+      (Some(1L), Some(NullT0), Some(7L), "view", Some(1.0)),
+      (Some(2L), Some(NullT0 + NullH), Some(7L), "view", None),
+      (Some(3L), Some(NullT0 + 2 * NullH), Some(7L), "purchase", Some(3.0)),
+      (Some(4L), None, Some(7L), "view", Some(4.0)),
+      (Some(5L), None, Some(7L), "purchase", Some(5.0)),
+      (Some(6L), Some(NullT0), None, "view", Some(6.0)),
+      (Some(7L), Some(NullT0 + NullH), None, "purchase", Some(7.0)),
+      (Some(8L), Some(NullT0 + NullH), Some(7L), "click", Some(2.5)),
+      (None, Some(NullT0 + NullH), Some(7L), "click", Some(1.5)),
+      (None, Some(NullT0 + 3 * NullH), Some(7L), "purchase", Some(1.01)),
+      (Some(20L), Some(NullT0 + 2 * NullH), Some(9L), "click", Some(1.0)),
+      (None, Some(NullT0 + 3 * NullH), Some(9L), "purchase", Some(0.02))))
+    val got = RelationalQueries.linearAttribution(spark, dir).collect()
+      .map(r => (optLong(r, 0), optLong(r, 1), r.getString(2), r.getLong(3), r.getLong(4),
+        r.getLong(5)))
+    // the oracle's rows (linearAttributionSql in DuckDB on this corpus):
+    // the NULL-id touch is last within its microsecond, and the NULL-id
+    // purchases of users 7 and 9 form one ranking of 5 touches
+    assert(got.toSet === Set(
+      (Some(3L), Some(1L), "view", 1L, 4L, 75L),
+      (Some(3L), Some(2L), "view", 2L, 4L, 75L),
+      (Some(3L), Some(8L), "click", 3L, 4L, 75L),
+      (Some(3L), None, "click", 4L, 4L, 75L),
+      (None, Some(1L), "view", 1L, 5L, 21L),
+      (None, Some(2L), "view", 2L, 5L, 20L),
+      (None, Some(8L), "click", 3L, 5L, 20L),
+      (None, None, "click", 4L, 5L, 20L),
+      (None, Some(20L), "click", 5L, 5L, 0L)))
+    assert(got.length === 9)
   }
 
   test("hourly_lerp: gaps ramp linearly between observed hours; observed hours exact") {

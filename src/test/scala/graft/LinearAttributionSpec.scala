@@ -10,16 +10,15 @@ import graft.queries.RelationalQueries
   * round 16) as an executable fact instead of prose: the query emits one
   * row per (conversion, in-window touch) pair — under a hot user that
   * mass is quadratic in per-user rate BY DEFINITION of the linear model,
-  * so no plan can shrink it, only spread it. The fixture's hot user
-  * crosses [[RelationalQueries.UserSkewRouteThreshold]], so the 32-way
-  * purchase-salted join form (the round-16 skew route) is the plan under
-  * test, and the assertions are:
+  * so no plan can shrink it. The fixture's hot user holds more than
+  * 8192 events (where a deleted user-skew route once switched plans),
+  * and the assertions are:
   *
   *  - output rows == Σ over conversions of |in-window touches| — the
   *    output-bound identity itself, against a brute-force local oracle;
   *  - the full row multiset (rn, n_touches, largest-remainder
-  *    share_cents) matches that oracle, so salting never duplicates or
-  *    drops a (anchor, touch) meeting;
+  *    share_cents) matches that oracle, so the per-user sweep never
+  *    duplicates or drops a (conversion, touch) pair;
   *  - per-conversion Σ share_cents == cents exactly (no split leakage),
   *    with boundary cases pinned directly: touch AT t0 − 24 h included,
   *    touch AT t0 excluded, empty-window conversions absent from the
@@ -31,7 +30,7 @@ class LinearAttributionSpec extends SparkTestBase {
 
   private case class Ev(id: Long, user: Long, ts: Long, typ: String, value: Double)
 
-  // Hot user 1: 9000 events (> the 8192 route threshold) at one event per
+  // Hot user 1: 9000 events (> 8192) at one event per
   // ~2.7 h, so each 24 h window holds ~9 events — dense enough to make
   // remainder splitting non-trivial, small enough to brute-force locally.
   private lazy val events: Seq[Ev] = {
@@ -89,15 +88,14 @@ class LinearAttributionSpec extends SparkTestBase {
     }
   }
 
-  test("hot user routes to the salted form; output rows == Σ in-window touches (the output bound)") {
-    assert(RelationalQueries.maxEventsPerUser(spark, dir) >
-      RelationalQueries.UserSkewRouteThreshold,
-      "fixture must cross the skew threshold so the salted join is the plan under test")
+  test("hot user above 8192 events: output rows == Σ in-window touches") {
+    assert(events.groupBy(_.user).values.map(_.size).max > 8192,
+      "fixture must hold a hot user above 8192 events")
     val got = RelationalQueries.linearAttribution(spark, dir)
     assert(got.count() === expected.size.toLong)
   }
 
-  test("salted form matches the brute-force pair oracle row-for-row") {
+  test("hot-user sweep matches the brute-force pair oracle row-for-row") {
     val got = RelationalQueries.linearAttribution(spark, dir)
       .select("purchase_id", "touch_id", "touch_type", "rn", "n_touches", "share_cents")
       .collect()

@@ -1,5 +1,12 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+
 /** Inventory-wide plan linter — the scale-killer guards, run as tests.
   *
   * PLANS.md documents each query's intended shape in prose; this spec
@@ -151,6 +158,41 @@ class PlanGuardSpec extends SparkTestBase {
       } // else: unwritable cache root fell back to the raw build — the
         // BNLJ itself is covered by the allowlist membership test above
     }
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** The query's final adaptive plan, after one run. */
+  private def finalPlan(name: String) = {
+    val df = SparkEntry.all(name).fn(spark, dir)
+    df.collect()
+    df.queryExecution.executedPlan
+  }
+
+  /** Hash keys of every shuffle exchange of the final plan, in plan order. */
+  private def exchangeKeys(name: String): Seq[Seq[String]] =
+    Plans.collect(finalPlan(name)) { case e: ShuffleExchangeExec => e }.map {
+      _.outputPartitioning match {
+        case h: HashPartitioning =>
+          h.expressions.map { case a: AttributeReference => a.name; case e => e.sql }
+        case p => Seq(p.toString)
+      }
+    }
+
+  test("bounded-time-window queries plan no join and no Generate") {
+    Seq("funnel_pairs", "interval_join", "linear_attribution").foreach { name =>
+      val plan = finalPlan(name)
+      assert(Plans.collect(plan) { case j: BaseJoinExec => j }.isEmpty, s"$name joins:\n$plan")
+      assert(Plans.collect(plan) { case g: GenerateExec => g }.isEmpty, s"$name explodes:\n$plan")
+    }
+  }
+
+  test("per-user sweeps plan one user_id exchange; linear_attribution then purchase_id") {
+    Seq("first_touch", "trailing_features", "funnel_pairs", "interval_join").foreach { name =>
+      assert(exchangeKeys(name) === Seq(Seq("user_id")), name)
+    }
+    // plan order is top-down: the windows' exchange sits above the sweep's
+    assert(exchangeKeys("linear_attribution") === Seq(Seq("purchase_id"), Seq("user_id")))
   }
 
   test("the allowlist itself is tight: every member still plans a BNLJ") {

@@ -1445,6 +1445,23 @@ class QueriesSpec extends SparkTestBase {
       "every error had followers: window predicate probably not applied")
   }
 
+  test("funnel_pairs: equals a driver-side recompute of 30-min followers at sf0.01") {
+    import graft.queries.RelationalQueries
+    val gap = RelationalQueries.FunnelGapUs
+    val sf01 = sf("sf0.01")
+    val events = Tables(spark, sf01, "events")
+      .select(col("user_id"), col("event_id"), expr("ts div 1000").as("us"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val byUser = events.groupBy(_._1)
+    val want = events.toSeq.flatMap { case (u, ea, ta) =>
+      byUser(u).filter(b => b._3 > ta && b._3 <= ta + gap).map(b => (ea, b._2, u, b._3 - ta))
+    }
+    val got = RelationalQueries.funnelPairs(spark, sf01).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(got.sorted === want.sorted)
+    assert(got.nonEmpty, "no pair at all: broken sweep")
+  }
+
   test("incremental_merge: merge(base, delta) equals the full latest_by_key recompute") {
     val merged = graft.queries.RelationalQueries.incrementalMerge(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),

@@ -19,8 +19,7 @@ import graft.queries.RelationalQueries
   *    ts − H is still inside the frame, so its expiry must not fire
   *    until strictly after ts),
   *  - gaps longer than H (empty frames: n=0, cents=0, gap NULL),
-  *  - a second corpus whose hot user has more events than
-  *    [[RelationalQueries.UserSkewRouteThreshold]].
+  *  - a second corpus whose hot user has more than 8192 events.
   */
 class TrailingFeaturesSpec extends SparkTestBase {
 
@@ -46,7 +45,7 @@ class TrailingFeaturesSpec extends SparkTestBase {
   }
 
   /** Hot user 1 holds 9000 events over ~40 days, 3 to a timestamp, so
-    * it sits above the user-skew threshold; users 2..41 hold 10 each.
+    * it sits above 8192 events; users 2..41 hold 10 each.
     */
   private lazy val skewedEvents: Seq[Event] = {
     val rnd = new scala.util.Random(9)
@@ -106,10 +105,10 @@ class TrailingFeaturesSpec extends SparkTestBase {
     assert(got === bruteForce(events))
   }
 
-  test("hot user above UserSkewRouteThreshold: declared plan == brute force") {
+  test("hot user above 8192 events: declared plan == brute force") {
     val skewDir = write(skewedEvents, "tf-skew")
-    assert(RelationalQueries.maxEventsPerUser(spark, skewDir) >
-      RelationalQueries.UserSkewRouteThreshold, "vacuous: no user above the threshold")
+    assert(skewedEvents.groupBy(_._2).values.map(_.size).max > 8192,
+      "vacuous: no user above 8192 events")
     val got = declared(skewDir)
     assert(got === bruteForce(skewedEvents))
     assert(got.values.map(_._2).max > 100L, "vacuous: frames stay small")

@@ -98,6 +98,29 @@ class MemoDiskSpec extends SparkTestBase {
     assert(builds === 2)
   }
 
+  test("pruneStale: the first call walks the root; only lapsed, unheld entries go") {
+    val root = Files.createTempDirectory("graft-prune").toFile
+    val eightDaysAgo = System.currentTimeMillis() - 8L * 24 * 3600 * 1000
+    def entry(name: String, mtime: Long): java.io.File = {
+      val e = new java.io.File(root, name)
+      e.mkdirs()
+      val marker = new java.io.File(e, "_SUCCESS")
+      marker.createNewFile()
+      marker.setLastModified(mtime)
+      e
+    }
+    val stale = entry("stale-0", eightDaysAgo)
+    val fresh = entry("fresh-1", System.currentTimeMillis())
+    val held = entry("held-2", eightDaysAgo)
+    Memo.inUse.add(held.getPath)
+    try {
+      Memo.pruneStale(root) // a fresh root: the first call of this process
+      assert(!stale.exists(), "a lapsed entry survived the first prune of the process")
+      assert(fresh.exists())
+      assert(held.exists(), "an entry a live plan holds must never be pruned")
+    } finally Memo.inUse.remove(held.getPath)
+  }
+
   test("README documents the invalidation contract an operator relies on") {
     // lint-style pointer: the staleness semantics this spec pins are only
     // usable if an operator can FIND them — the README paragraph must
