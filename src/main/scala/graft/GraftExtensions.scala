@@ -21,9 +21,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   private def info(name: String, usage: String): ExpressionInfo =
     // ExpressionInfo requires `_FUNC_` in usage (it substitutes the bound
     // name at DESCRIBE time); call sites pass the readable "name(args)"
-    // form, rewritten here.
+    // form, rewritten here; the seven fields after usage stay empty.
     new ExpressionInfo("graft.functions", null, name,
-      usage.replaceFirst(java.util.regex.Pattern.quote(name), "_FUNC_"), "")
+      usage.replaceFirst(java.util.regex.Pattern.quote(name), "_FUNC_"), "", "", "", "", "", "", "")
 
   private def arity(name: String, args: Seq[Expression], n: Int): Unit =
     if (args.length != n)

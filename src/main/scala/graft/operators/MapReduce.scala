@@ -51,9 +51,9 @@ trait AlgebraicApp[B] extends MRApp {
   *     → flatMap of the user map fn (E2, `src/mr/worker.go:83`)
   *     → ONE shuffle straight into reduce bucket `ihash(key) % nReduce`
   *       (E3/E4, `src/mr/worker.go:25-29,86-113`)
-  *     → sort each bucket by key (the paper's reduce-side sort, §3.1 step
-  *       5; `src/main/mrsequential.go:59` with nReduce = 1)
-  *     → user reduce once per run of equal keys (E5/E7,
+  *     → [[SortedRuns]]: sort each bucket by key (the paper's reduce-side
+  *       sort, §3.1 step 5; `src/main/mrsequential.go:59` with nReduce = 1)
+  *       and call the user reduce once per run of equal keys (E5/E7,
   *       `src/mr/worker.go:139-155`)
   *
   * Reduce task i holds exactly bucket i, its keys in order, so a writer
@@ -103,40 +103,21 @@ object MapReduce {
           a.map(f, c).iterator.foreach(kv => bufs(kv.key) = a.fold(bufs.getOrElse(kv.key, a.zero), kv.value))
           bufs
         }(Encoders.tuple(Encoders.STRING, a.bufferEncoder))
-        bucketSorted(combined, col("_1"), nReduce).mapPartitions { in =>
-          foldRuns(in)(_._1, a.zero)((acc, kb) => a.merge(acc, kb._2))
-            .map { case (k, acc) => KV(k, a.finish(acc)) }
+        SortedRuns(buckets(combined, col("_1"), nReduce), col("_1"))(_._1) { (k, run) =>
+          Iterator.single(KV(k, a.finish(run.foldLeft(a.zero)((acc, kb) => a.merge(acc, kb._2)))))
         }
       case _ =>
-        bucketSorted(files.flatMap { case (f, c) => app.map(f, c) }, col("key"), nReduce)
-          .mapPartitions { in =>
-            foldRuns(in)(_.key, List.newBuilder[String])(_ += _.value)
-              .map { case (k, values) => KV(k, app.reduce(k, values.result())) }
-          }
+        val kvs = files.flatMap { case (f, c) => app.map(f, c) }
+        SortedRuns(buckets(kvs, col("key"), nReduce), col("key"))(_.key) { (k, run) =>
+          Iterator.single(KV(k, app.reduce(k, run.map(_.value).toList)))
+        }
     }
   }
 
-  /** Shuffle each record to bucket `Fnv1a32(key) % nReduce` and sort every
-    * bucket by key.
-    */
-  private def bucketSorted[T](ds: Dataset[T], key: Column, nReduce: Int): Dataset[T] = {
-    val bucket = ColumnBridge.column(Fnv1a32Expr(ColumnBridge.expression(key))) % nReduce
-    ds.repartitionById(nReduce, coalesce(bucket, lit(0))).sortWithinPartitions(key)
-  }
-
-  /** Fold each run of equal keys in a key-sorted bucket into one
-    * accumulator, holding only the current run's.
-    */
-  private def foldRuns[T, A](sorted: Iterator[T])(key: T => String, zero: => A)(
-      step: (A, T) => A): Iterator[(String, A)] = {
-    val in = sorted.buffered
-    Iterator.continually(in).takeWhile(_.hasNext).map { _ =>
-      val k = key(in.head)
-      var acc = zero
-      while (in.hasNext && key(in.head) == k) acc = step(acc, in.next())
-      (k, acc)
-    }
-  }
+  /** Shuffle each record to bucket `Fnv1a32(key) % nReduce`. */
+  private def buckets[T](ds: Dataset[T], key: Column, nReduce: Int): Dataset[T] =
+    ds.repartitionById(nReduce, coalesce(
+      ColumnBridge.column(Fnv1a32Expr(ColumnBridge.expression(key))) % nReduce, lit(0)))
 
   /** Render the reference's `mr-out-*` line format: `"<key> <value>"`
     * (`fmt.Fprintf("%v %v\n")`, reference `src/mr/worker.go:150-155`).

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.SortedRuns
 
 /** Relational queries over the TPC-H-ish tables (SURVEY §2.4 Q5, Q6, Q8,
   * Q11, plus window/sessionization coverage).
@@ -28,52 +29,12 @@ object RelationalQueries {
   private def sqlIntSum(e: String, scale: Int): String =
     s"CAST(sum(CAST(round(($e) * ${math.pow(10, scale).toLong}) AS BIGINT)) AS BIGINT)"
 
-  /** The per-user sorted sweep of every bounded-time-window query — the
-    * paper's reduce with a secondary sort: `rows` is shuffled on user_id,
-    * sorted within each partition by (user_id, `order`…), and ONE
-    * mapPartitions pass hands each user's rows to `sweep` as one iterator
-    * (draining what it leaves unread; a NULL user_id is one more user).
-    * mapPartitions is the documented last-resort tier (SURVEY
-    * operator-extension order): window state no Catalyst frame expresses.
-    */
-  private def perUserSweep[T, U: Encoder](rows: Dataset[T], order: Column*)(
-      user: T => Any)(sweep: Iterator[T] => Iterator[U]): Dataset[U] = {
-    val parts = rows.sparkSession.sessionState.conf.numShufflePartitions
-    rows.repartition(parts, col("user_id"))
-      .sortWithinPartitions(col("user_id") +: order: _*)
-      .mapPartitions(new UserRuns(_, user, sweep))
-  }
-
-  /** [[perUserSweep]]'s pass over one sorted partition: `sweep`'s output
-    * for each run of equal user keys in turn. The key is read and
-    * compared once per row, on a one-row lookahead. */
-  private final class UserRuns[T, U](in: Iterator[T], user: T => Any,
-      sweep: Iterator[T] => Iterator[U]) extends Iterator[U] {
-    private var more = in.hasNext
-    private var head: T = if (more) in.next() else null.asInstanceOf[T] // next row not handed out
-    private var run: Iterator[T] = Iterator.empty
-    private var out: Iterator[U] = Iterator.empty
-    def hasNext: Boolean = {
-      while (!out.hasNext) {
-        run.foreach(_ => ()) // drain the rows the last sweep left unread
-        if (!more) return false
-        run = userRun(user(head))
-        out = sweep(run)
-      }
-      true
-    }
-    def next(): U = if (hasNext) out.next() else Iterator.empty.next()
-    private def userRun(u: Any): Iterator[T] = new Iterator[T] {
-      private var same = true
-      def hasNext: Boolean = same
-      def next(): T = {
-        val r = head
-        more = in.hasNext
-        if (more) { head = in.next(); same = user(head) == u } else same = false
-        r
-      }
-    }
-  }
+  /** The per-user sorted sweep of every bounded-time-window query: a user_id
+    * exchange, then [[SortedRuns]] by (user_id, `order`…) hands each user's rows to `sweep`. */
+  private def perUserSweep[T, K, U: Encoder](rows: Dataset[T], order: Column*)(user: T => K)(
+      sweep: (K, Iterator[T]) => IterableOnce[U]): Dataset[U] =
+    SortedRuns(rows.repartition(rows.sparkSession.sessionState.conf.numShufflePartitions,
+      col("user_id")), col("user_id") +: order: _*)(user)(sweep)
 
   // --------------------------------------------------------------- group_agg
   /** Q5 `group_agg` — TPC-H Q1-shaped pricing summary: the canonical
@@ -418,14 +379,11 @@ object RelationalQueries {
       .select(col("user_id"), expr("ts div 1000").as("us"), col("event_id"))
       .filter(col("user_id").isNotNull && col("us").isNotNull)
       .as[(Long, Long, Option[Long])]
-    perUserSweep(ev, col("us"))(_._1) { rows =>
-      val in = rows.buffered
+    perUserSweep(ev, col("us"))(_._1) { (user, rows) =>
       // live rows: (us, event_id), us non-decreasing
       val live = new scala.collection.mutable.ArrayDeque[(Long, Option[Long])]
-      Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
-        val (user, us) = (in.head._1, in.head._2)
-        val run = scala.collection.mutable.ArrayBuffer.empty[Option[Long]]
-        while (in.hasNext && in.head._2 == us) run += in.next()._3
+      SortedRuns.runs(rows)(_._2) { (us, same) =>
+        val run = scala.collection.mutable.ArrayBuffer.from(same.map(_._3))
         while (live.nonEmpty && live.head._1 < us - FunnelGapUs) live.removeHead()
         val earlier = live.size
         live ++= run.map(us -> _)
@@ -480,7 +438,7 @@ object RelationalQueries {
         .select(col("user_id"), col("us"), lit(1).as("kind"), col("event_id"),
           lit(null).cast("long").as("cents")))
       .as[(Option[Long], Option[Long], Int, Option[Long], Option[Long])]
-    perUserSweep(rows, col("us"), col("kind"))(_._1) { rows =>
+    perUserSweep(rows, col("us"), col("kind"))(_._1) { (_, rows) =>
       val live = new scala.collection.mutable.ArrayDeque[LiveAnchor] // t0-increasing
       def emit(a: LiveAnchor) = (a.eventId, a.user, a.n, a.cents)
       rows.flatMap { case (user, us, kind, eid, cents) =>
@@ -2170,7 +2128,7 @@ object RelationalQueries {
         when(col("event_type") === ConversionType, lit(0)).otherwise(lit(1)).as("kind"),
         col("event_id"), col("event_type"))
       .as[(Option[Long], Option[Long], Int, Option[Long], String)]
-    perUserSweep(rows, col("ts"), col("kind"), col("event_id"))(_._1) { rows =>
+    perUserSweep(rows, col("ts"), col("kind"), col("event_id"))(_._1) { (_, rows) =>
       // deque entries: (ts, us, event_id, event_type), arrival-ordered
       // (ts non-decreasing) AND (us, event_id)-increasing by construction
       val dq = new scala.collection.mutable.ArrayDeque[(Long, Long, Option[Long], String)]
@@ -2261,7 +2219,7 @@ object RelationalQueries {
         col("event_id"), col("event_type"),
         round(col("value") * 100).cast("long").as("cents"))
       .as[(Long, Long, Int, Option[Long], String, Option[Long])]
-    val pairs = perUserSweep(rows, col("ts"), col("kind"))(_._1) { rows =>
+    val pairs = perUserSweep(rows, col("ts"), col("kind"))(_._1) { (_, rows) =>
       // live touches: (ts, us, touch_id, touch_type), ts non-decreasing
       val live = new scala.collection.mutable.ArrayDeque[(Long, Long, Option[Long], String)]
       rows.flatMap { case (_, ts, kind, eid, typ, cents) =>
@@ -3055,21 +3013,15 @@ object RelationalQueries {
       .select(col("user_id"), col("ts"), col("event_id"),
         round(col("value") * 100).cast("long").as("cents"))
       .as[(Option[Long], Option[Long], Option[Long], Option[Long])]
-    perUserSweep(rows, col("ts"))(_._1) { rows =>
-      val in = rows.buffered
+    perUserSweep(rows, col("ts"))(_._1) { (user, rows) =>
       // in-horizon runs of this user: (ts, events, cents), ts-increasing
       val live = new scala.collection.mutable.ArrayDeque[(Long, Long, Long)]
       var n = 0L
       var cents = 0L
-      Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
-        val (user, ts) = (in.head._1, in.head._2)
+      SortedRuns.runs(rows)(_._2) { (ts, same) =>
         val run = scala.collection.mutable.ArrayBuffer.empty[Option[Long]]
         var runCents = 0L
-        while (in.hasNext && in.head._2 == ts) {
-          val r = in.next()
-          run += r._3
-          runCents += r._4.getOrElse(0L)
-        }
+        same.foreach { r => run += r._3; runCents += r._4.getOrElse(0L) }
         ts match {
           case None => run.map(eid => (eid, user, run.size.toLong, runCents, Option.empty[Long]))
           case Some(t) =>

@@ -1,8 +1,8 @@
 package graft
 
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.execution.{GenerateExec, SortExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -193,6 +193,20 @@ class PlanGuardSpec extends SparkTestBase {
     }
     // plan order is top-down: the windows' exchange sits above the sweep's
     assert(exchangeKeys("linear_attribution") === Seq(Seq("purchase_id"), Seq("user_id")))
+  }
+
+  test("per-user sweeps plan one per-partition sort led by user_id and no range exchange") {
+    Seq("first_touch", "trailing_features", "funnel_pairs", "interval_join",
+        "linear_attribution").foreach { name =>
+      val plan = finalPlan(name)
+      val userSorts = Plans.collect(plan) {
+        case s: SortExec if !s.global => s.sortOrder.head.child
+      }.count { case a: AttributeReference => a.name == "user_id"; case _ => false }
+      assert(userSorts === 1, s"$name:\n$plan")
+      assert(Plans.collect(plan) {
+        case p if p.outputPartitioning.isInstanceOf[RangePartitioning] => p
+      }.isEmpty, s"$name:\n$plan")
+    }
   }
 
   test("the allowlist itself is tight: every member still plans a BNLJ") {

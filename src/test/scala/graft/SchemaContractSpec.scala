@@ -96,21 +96,21 @@ class SchemaContractSpec extends SparkTestBase {
       .select(expr("cast(s as timestamp)").as("o_orderdate"))
     val ntz = Tables.normalizeNaiveTs(spark, asTs, "o_orderdate")
     assert(ntz.schema("o_orderdate").dataType == TimestampNTZType)
-    assert(ntz.select(expr("cast(o_orderdate as string)")).head.getString(0)
+    assert(ntz.select(expr("cast(o_orderdate as string)")).head().getString(0)
       == "1997-03-15 12:34:56.789012")
     // DATE arrival → midnight NTZ (the same promotion DuckDB applies)
     val asDate = Seq("1997-03-15").toDF("s")
       .select(expr("cast(s as date)").as("l_shipdate"))
     val fromDate = Tables.normalizeNaiveTs(spark, asDate, "l_shipdate")
     assert(fromDate.schema("l_shipdate").dataType == TimestampNTZType)
-    assert(fromDate.select(expr("cast(l_shipdate as string)")).head.getString(0)
+    assert(fromDate.select(expr("cast(l_shipdate as string)")).head().getString(0)
       == "1997-03-15 00:00:00")
     // DECIMAL(12,2) arrival → DOUBLE, exact at 2-dec magnitudes
     val asDec = Seq(1L).toDF("k")
       .select(expr("cast(12345.67 as decimal(12,2))").as("o_totalprice"))
     val dbl = Tables.normalizeMoney(asDec, "orders", Seq("o_totalprice"))
     assert(dbl.schema("o_totalprice").dataType == DoubleType)
-    assert(dbl.head.getDouble(0) == 12345.67)
+    assert(dbl.head().getDouble(0) == 12345.67)
     // an unteachable flavor is rejected loudly, not absorbed silently
     val asStr = Seq("1997-03-15").toDF("o_orderdate")
     val e = intercept[IllegalArgumentException] {
