@@ -20,9 +20,8 @@ import graft.functions.TextFns
   *   - ngram_jaccard: inverted-index bucket aggregation with a hot-shingle
   *     split — posting lists over [[MaxShingleBucket]] stream through a
   *     salted self-join instead of a collect buffer, so a df=10⁶ shingle
-  *     at 100 TB is spread work, not a straggler OOM; the prefix twin
-  *     additionally caps per-shingle fanout losslessly and is the
-  *     declared scale path.
+  *     at 100 TB is spread work, not a straggler OOM. `ngram_jaccard_prefix`
+  *     is the same plan.
   *
   * All hashes derive from `TextFns.hash60` (md5-prefix), which DuckDB
   * reproduces exactly, so every stage is oracle-checkable.
@@ -119,12 +118,9 @@ object DedupQueries {
     s"""$shingleHashesCte,
        |ex AS (SELECT doc_id, unnest(hs) AS h FROM hs)""".stripMargin
 
-  /** The shingle document-frequency table (h, df), memoized. The prefix
-    * query needs df for rarity ordering and BOTH exact-Jaccard queries need
-    * it for the hot-shingle split below; rebuilding this aggregation per
-    * invocation was the largest per-call cost left in the prefix query
-    * after round 3 (the pair table it aggregates is persisted, the
-    * aggregation itself was not).
+  /** The shingle document-frequency table (h, df), memoized: the exact
+    * n-gram family needs df for the hot-shingle split below, and
+    * `dup_ngram_coverage` for its df ≥ 2 filter.
     */
   private def shingleFreq(spark: SparkSession, dir: String): DataFrame =
     Memo.memoize(spark, dir, "shingle_freq")(
@@ -132,13 +128,12 @@ object DedupQueries {
 
   /** The df-ANNOTATED pair table (doc_id, h, df), memoized: the one h-keyed
     * join of pairs⋈freq happens HERE, once per (session, dir) — after it,
-    * the exact-Jaccard queries' rarity ordering and hot/cold routing are
-    * plain FILTERS on a persisted table instead of per-invocation
-    * broadcast/anti-joins (each of which cost a broadcast exchange + an
-    * AQE stage boundary per call — the dominant per-call overhead at
-    * sf0.1 after round 3). At cluster scale this is the standard
-    * "annotate the inverted index with document frequency" build step of
-    * a prefix-filter dedup job.
+    * the hot/cold shingle routing is a plain FILTER on a persisted table
+    * instead of per-invocation broadcast/anti-joins (each of which cost a
+    * broadcast exchange + an AQE stage boundary per call — the dominant
+    * per-call overhead at sf0.1 after round 3). At cluster scale this is
+    * the standard "annotate the inverted index with document frequency"
+    * build step of a dedup job.
     */
   private def shinglePairsDf(spark: SparkSession, dir: String): DataFrame =
     Memo.memoize(spark, dir, "shingle_pairs_df")(
@@ -211,26 +206,25 @@ object DedupQueries {
     cold.union(hotPairs)
   }
 
-  /** Verified-Jaccard join: candidate pairs → (doc_a, doc_b, jaccard≥τ).
-    * jaccard = |A∩B| / (|A|+|B|-|A∩B|) over exact integer counts — the
-    * resulting double is engine-identical to the oracle's exploded-join
-    * formulation.
+  /** Verified-Jaccard join of `dedup_minhash`'s candidate pairs →
+    * (doc_a, doc_b, jaccard ≥ [[JaccardTau]]). jaccard = |A∩B| /
+    * (|A|+|B|-|A∩B|) over exact integer counts — the resulting double is
+    * engine-identical to the oracle's exploded-join formulation.
     *
     * Each candidate pair fetches both docs' shingle-hash ARRAYS from the
     * persisted array table and intersects them in-row — two narrow joins
     * keyed by doc id, zero re-explosion. (The round-2 form re-joined the
-    * exploded pair table twice plus two sizes joins; that verify chain
-    * alone cost ~4 s of the prefix query's 8.5 s.)
+    * exploded pair table twice plus two sizes joins.)
     *
-    * `dedupe=true` folds the candidate de-duplication into the SAME
-    * exchange that pins the verify width: the repartition hash-clusters by
-    * (da, db), the dropDuplicates aggregation reuses that partitioning,
-    * and the (broadcast) array joins + intersect run in the same wide
-    * stage — one exchange where a separate `.distinct()` before the
-    * verify cost two.
+    * A pair shares several bands, so candidates repeat: their
+    * de-duplication folds into the SAME exchange that pins the verify
+    * width — the repartition hash-clusters by (da, db), the dropDuplicates
+    * aggregation reuses that partitioning, and the (broadcast) array
+    * joins + intersect run in the same wide stage — one exchange where a
+    * separate `.distinct()` before the verify cost two.
     */
-  private def verifyJaccard(spark: SparkSession, dir: String, cand: DataFrame,
-      tau: Double, dedupe: Boolean = false): DataFrame = {
+  private def verifyJaccard(spark: SparkSession, dir: String,
+      cand: DataFrame): DataFrame = {
     val hs = shingleHashes(spark, dir)
     val i = size(array_intersect(col("ha"), col("hb")))
     val j = i.cast("double") / (size(col("ha")) + size(col("hb")) - i)
@@ -238,14 +232,12 @@ object DedupQueries {
     // fans out to two shingle arrays + an intersect, so AQE — which sizes
     // post-shuffle stages by BYTES — coalesces the stage to 1-3 tasks and
     // serializes the CPU (observed: 9.3 s of intersect CPU on 3 tasks).
-    val wide = cand.repartition(
-      spark.sparkContext.defaultParallelism, col("da"), col("db"))
-    val deduped = if (dedupe) wide.dropDuplicates("da", "db") else wide
-    deduped
+    cand.repartition(spark.sparkContext.defaultParallelism, col("da"), col("db"))
+      .dropDuplicates("da", "db")
       .join(hs.select(col("doc_id").as("da"), col("hs").as("ha")), "da")
       .join(hs.select(col("doc_id").as("db"), col("hs").as("hb")), "db")
       .select(col("da").as("doc_a"), col("db").as("doc_b"), j.as("jaccard"))
-      .filter(col("jaccard") >= tau)
+      .filter(col("jaccard") >= JaccardTau)
   }
 
   // ------------------------------------------------------------ dedup_minhash
@@ -312,13 +304,12 @@ object DedupQueries {
       // Candidate pairs via ONE bucket aggregation + the PairsExpr kernel —
       // not a (band, sig) self-join, which would compute the
       // minhash-signature pipeline once per join side and shuffle twice.
-      // Candidate de-dup folds into the verify exchange (dedupe = true).
       val cand = boundedBands(spark, dir)
         .groupBy(col("band"), col("sig"))
         .agg(collect_list(col("doc_id")).as("ids")) // PairsExpr orders per pair
         .filter(size(col("ids")) > 1)
         .select(graft.functions.PairsExpr(col("ids"))) // generator -> (da, db)
-      verifyJaccard(spark, dir, cand, JaccardTau, dedupe = true)
+      verifyJaccard(spark, dir, cand)
     }
 
   /** The full minhash pipeline as a reusable CTE chain ending in
@@ -597,9 +588,7 @@ object DedupQueries {
     * collect buffer; the pinned repartition IS the aggregation exchange
     * (groupBy reuses the hash partitioning) — without it AQE sizes the
     * post-shuffle stage by BYTES and coalesces the byte-tiny pair rows to
-    * ~3 tasks, serializing the CPU that runs in that stage. (At 100 TB,
-    * popular shingles make the fan-out skew-heavy: the prefix twin caps
-    * it losslessly and is the declared scale path.)
+    * ~3 tasks, serializing the CPU that runs in that stage.
     */
   private def interCounts(spark: SparkSession, dir: String): DataFrame =
     // Disk-cached index artifact (see [[Memo.memoizeDisk]]): the pair
@@ -675,143 +664,6 @@ object DedupQueries {
        |JOIN sz sa ON sa.doc_id = i.da
        |JOIN sz sb ON sb.doc_id = i.db
        |WHERE CAST(i.i AS DOUBLE) / least(sa.n, sb.n) >= $ContainmentTau""".stripMargin
-
-  // ----------------------------------------------------- ngram_jaccard_prefix
-  /** Routing margin between the two exact plans (see
-    * [[ngramJaccardPrefix]]): the array-fetch verify costs ~50× more per
-    * candidate pair than the count aggregation costs per fan-out row
-    * (measured at the 10× scale-up: 48.6 M candidates × ~49 µs vs 117 M
-    * fan-out rows through one partial-final count agg), so the prefix
-    * branch must cut the pair mass by MORE than this factor to win. 8 is
-    * deliberately conservative against the measured ~50: real open-vocab
-    * corpora cut 100-1000× (far above any margin) and saturated-universe
-    * corpora cut < 3× (far below), so the decision is insensitive to the
-    * exact value — it only matters that it sits between the two regimes.
-    */
-  val PrefixVerifyCostRatio = 8L
-
-  /** Σ m·(m−1)/2 over a one-column table of bucket sizes `m` — the number
-    * of intra-bucket pairs a generator over those buckets emits. O(buckets)
-    * aggregate collapsing to ONE driver long: planning metadata, same
-    * driver-pull class as the parquet footer counts.
-    */
-  private def pairMass(buckets: DataFrame): Long =
-    buckets.agg(coalesce(sum(col("m") * (col("m") - lit(1L))), lit(0L)))
-      .head().getLong(0) / 2
-
-  /** `ngram_jaccard_prefix` — the exact n-gram Jaccard join with
-    * positional prefix filtering AND cost-based routing between the two
-    * exact formulations. Each document's candidate key set is its
-    * n - ⌈τ·n⌉ + 1 globally-rarest shingles (rarity order = document
-    * frequency asc, hash asc); if J(A,B) ≥ τ the prefixes provably share
-    * a shingle, so the prefix branch's result is IDENTICAL to the
-    * brute-force join (same oracle SQL) while candidate generation never
-    * touches the high-frequency shingle head — the thing that explodes
-    * the inverted-index join under Zipf skew at 100 TB.
-    *
-    * THE ROUTING (round 14): prefix filtering is only a win while the
-    * prefix pair mass Σ_h pdf(h)·(pdf(h)−1)/2 is a small fraction of the
-    * full fan-out Σ_h df(h)·(df(h)−1)/2, because the prefix branch pays
-    * ~50× more per surviving candidate (two array fetches + an in-row
-    * intersect) than the count-based plan pays per fan-out row (one
-    * partial-final count aggregation). On an open-vocabulary corpus the
-    * prefix cuts the mass 100-1000× and wins outright; on a corpus whose
-    * shingle universe SATURATES (the synthetic tables: 31 words → all
-    * 31³ = 29,791 trigrams occupied, every df growing linearly with the
-    * corpus) the cut is < 3× and the verify branch measured 105.9 s at
-    * the 10× scale-up vs ~1 s for the count plan — candidates grew ×118
-    * (409 k → 48.6 M), a measured scaling exponent of 1.70. PPJoin-style
-    * positional + length filters were measured to prune only 25% of that
-    * (48.6 M → 36.7 M — with ONE shared rare shingle required, near-miss
-    * pairs dominate and sizes here spread only 8..98), so in-branch
-    * filtering cannot fix the regime; plan CHOICE can. Both masses come
-    * from one O(buckets) aggregate each over memoized tables, memoized as
-    * planning values (constructing this plan therefore runs those two
-    * small jobs once per session×dir). Both branches hash-match the same
-    * DuckDB oracle; DedupPropertySpec pins branch equality explicitly.
-    */
-  def ngramJaccardPrefix(spark: SparkSession, dir: String): DataFrame =
-    ngramJaccardPrefixRouted(spark, dir, forceCountPlan = None)
-
-  /** [[ngramJaccardPrefix]] with the routing decision overridable —
-    * `forceCountPlan = Some(false)` pins the prefix-filter branch under
-    * test on corpora where the mass comparison would route away from it.
-    */
-  private[graft] def ngramJaccardPrefixRouted(spark: SparkSession, dir: String,
-      forceCountPlan: Option[Boolean]): DataFrame = {
-    val prefix = prefixRows(spark, dir)
-    val useCountPlan = forceCountPlan.getOrElse(prefixRouteUseCount(spark, dir))
-    if (useCountPlan) ngramJaccard(spark, dir)
-    // Shared-prefix-shingle pairs via one groupBy(h) + PairsExpr for cold
-    // shingles (a self-join would run the whole prefix-selection pipeline
-    // once per side — observed in the round-3 plan audit as the duplicated
-    // ObjectHashAggregate/Generate branch), with the hot-shingle split of
-    // [[coocPairs]] so no collect buffer exceeds MaxShingleBucket. The
-    // corpus-level df is a valid per-h upper bound of the prefix table's
-    // bucket sizes (prefix rows ⊆ ex rows). The hot branches re-reference
-    // the prefix pipeline (filtered to df > bucket bound) — empty for
-    // every non-adversarial corpus, and in the adversarial case
-    // recomputing the filtered slice beats buffering an unbounded list.
-    // Candidate de-dup folds into the verify exchange (dedupe = true).
-    else verifyJaccard(spark, dir, coocPairs(prefix), NgramJaccardTau,
-      dedupe = true)
-  }
-
-  /** The routing decision itself (true = count-based plan), exposed for
-    * tests that pin WHICH regime a corpus lands in. A planning decision
-    * memoized per (session, dir) so repeated plan constructions (the
-    * bench warm loop) run the two mass aggregates once, not per call —
-    * the same [[Memo.memoizeValue]] discipline as global_rank's sampled
-    * bounds.
-    */
-  private[graft] def prefixRouteUseCount(spark: SparkSession, dir: String): Boolean =
-    Memo.memoizeValue(spark, dir, "prefix_route_use_count") {
-      val prefix = prefixRows(spark, dir)
-      val candMass = pairMass(
-        prefix.groupBy(col("h")).agg(count(lit(1)).as("m")))
-      val fullMass = pairMass(shingleFreq(spark, dir).select(col("df").as("m")))
-      candMass * PrefixVerifyCostRatio > fullMass
-    }
-
-  /** The rarest-prefix rows (doc_id, h, df) of every document, memoized —
-    * shared by the prefix-filter branch and the routing mass aggregate of
-    * [[ngramJaccardPrefix]]; linear in the corpus (Σ per-doc prefix
-    * lengths ≈ (1-τ)·|ex| rows).
-    */
-  private def prefixRows(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoize(spark, dir, "prefix_rows") {
-      val exf = shinglePairsDf(spark, dir) // persisted (doc_id, h, df)
-      // Rarest-prefix selection via hash aggregate + per-row array sort/slice
-      // instead of round-2's row_number window: the window forced a sort-based
-      // WindowExec over the whole exploded table PLUS a separate sizes join;
-      // here one groupBy(doc_id) collects (df, h) structs, and the per-doc
-      // sort + prefix slice happen in-row. (doc_id, h) pairs are distinct so
-      // the (df, h) sort key is unique per doc — identical prefix set.
-      val n = size(col("sh"))
-      val prefixLen = (n - ceil(n * lit(NgramJaccardTau)) + 1).cast("int")
-      // (df, h) packed into one long (df·2^31 + h; h < P = 2^31-1, df
-      // clamped at 2^31-1): ascending long order = (df asc, h asc), so the
-      // collected array sorts with a primitive comparator instead of
-      // per-element struct comparisons. Losslessness needs only SOME fixed
-      // total order on shingles, so the clamp (which can only reorder
-      // ultra-common shingles away from strict rarity order) never loses a
-      // pair — rarity order is a candidate-count heuristic, not a
-      // correctness condition.
-      val packed = least(col("df"), lit(2147483647L)) * lit(2147483648L) + col("h")
-      // The pinned repartition doubles as the aggregation exchange (the
-      // groupBy reuses the hash partitioning): without it AQE coalesces the
-      // byte-tiny but sort-heavy per-doc collect to ONE task. df rides
-      // INSIDE the packed long, so the prefix rows recover it with a shift
-      // instead of re-joining the frequency table (the clamp only matters
-      // above 2^31-1 ≫ MaxShingleBucket, so hot/cold routing is unaffected).
-      exf
-        .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-        .groupBy(col("doc_id"))
-        .agg(sort_array(collect_list(packed)).as("sh"))
-        .select(col("doc_id"), explode(slice(col("sh"), lit(1), prefixLen)).as("p"))
-        .select(col("doc_id"), col("p").bitwiseAND(lit(2147483647L)).as("h"),
-          shiftrightunsigned(col("p"), 31).as("df"))
-    }
 
   // ------------------------------------------------------------ decontaminate
   /** `decontaminate` — train/eval n-gram overlap detection, the standard
@@ -1412,9 +1264,10 @@ object DedupQueries {
     "dedup_simhash" -> QueryDef(dedupSimhash, Some(dedupSimhashSql)),
     "ngram_jaccard" -> QueryDef(ngramJaccard, Some(ngramJaccardSql)),
     "ngram_containment" -> QueryDef(ngramContainment, Some(ngramContainmentSql)),
-    // same oracle as ngram_jaccard: prefix filtering is lossless, and the
-    // hash-match against the brute-force SQL proves it per round
-    "ngram_jaccard_prefix" -> QueryDef(ngramJaccardPrefix, Some(ngramJaccardSql)),
+    // same plan and oracle as ngram_jaccard: the count plan beat a
+    // prefix-filter plan on every corpus timed (sf0.01, sf0.1, GenScale
+    // openvocab ×1 and ×10), open-vocabulary ones included
+    "ngram_jaccard_prefix" -> QueryDef(ngramJaccard, Some(ngramJaccardSql)),
     "dedup_cluster" -> QueryDef(dedupCluster, Some(dedupClusterSql)),
     "dup_cluster_stats" -> QueryDef(dupClusterStats, Some(dupClusterStatsSql)),
     "decontaminate" -> QueryDef(decontaminate, Some(decontaminateSql)),

@@ -6,10 +6,9 @@ import graft.functions.PairsExpr
 import graft.queries.DedupQueries
 
 /** Property tests for the dedup candidate-generation machinery beyond the
-  * fixed driver corpus: PairsExpr semantics, and the positional-prefix
-  * filter's losslessness on a RANDOM near-duplicate corpus (the prefix
-  * theorem claims identical results for any input; the oracle gate only
-  * proves it for one).
+  * fixed driver corpus: PairsExpr semantics, the hot-shingle split, the
+  * minhash cap, and minhash's exactness against the count plan on a
+  * RANDOM near-duplicate corpus (the oracle gate only proves it for one).
   */
 class DedupPropertySpec extends SparkTestBase {
 
@@ -60,63 +59,10 @@ class DedupPropertySpec extends SparkTestBase {
     d.toString
   }
 
-  test("prefix filtering is lossless: prefix == brute force on a random near-dup corpus") {
-    // forceCountPlan = Some(false) pins the PREFIX branch: the 12-word
-    // vocabulary saturates the trigram universe, so the cost-based router
-    // would (correctly) pick the count plan here — which is ngramJaccard
-    // itself and would make this losslessness test vacuous.
-    def collectPairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val exact = collectPairs(DedupQueries.ngramJaccard(spark, randomCorpusDir))
-    val prefix = collectPairs(
-      DedupQueries.ngramJaccardPrefixRouted(spark, randomCorpusDir, Some(false)))
-    assert(exact.nonEmpty, "corpus produced no qualifying pairs — test is vacuous")
-    assert(prefix === exact)
-  }
-
-  test("prefix routing: both plans agree with the routed entry point, and the " +
-      "saturated-universe corpus routes to the count plan") {
-    def collectPairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val routed = collectPairs(DedupQueries.ngramJaccardPrefix(spark, randomCorpusDir))
-    val forcedPrefix = collectPairs(
-      DedupQueries.ngramJaccardPrefixRouted(spark, randomCorpusDir, Some(false)))
-    val forcedCount = collectPairs(
-      DedupQueries.ngramJaccardPrefixRouted(spark, randomCorpusDir, Some(true)))
-    assert(routed === forcedPrefix && routed === forcedCount)
-    // the 12-word random corpus saturates its trigram universe (every df
-    // grows with the corpus), which is exactly the regime where prefix
-    // filtering stops paying for its per-candidate verify cost
-    assert(DedupQueries.prefixRouteUseCount(spark, randomCorpusDir),
-      "saturated-universe corpus should route to the count-based plan")
-  }
-
-  test("prefix routing: an open-vocabulary corpus with hot boilerplate routes " +
-      "to the PREFIX branch") {
-    // Every doc: three unique-word shingles (df=1) + one boilerplate
-    // shingle shared by all 200 docs (df=200). prefixLen = 4-⌈0.5·4⌉+1 = 3
-    // → each prefix is exactly the three df=1 shingles, so the prefix pair
-    // mass is 0 while the full fan-out mass is C(200,2) — the Zipf-head
-    // regime prefix filtering exists for, in miniature. Words must be
-    // LETTERS ONLY: the shingle tokenizer is letter-runs, so a
-    // digit-bearing word like "w7a" splits into "w", "a" and the corpus
-    // degenerates into shared shingles.
-    import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("open-vocab-corpus")
-    def enc(i: Int): String = i.toString.map(c => ('a' + (c - '0')).toChar).mkString
-    val docs = Seq.tabulate(200)(i =>
-      (i.toLong, s"q${enc(i)}x q${enc(i)}y q${enc(i)}z common alpha beta"))
-    docs.toDF("doc_id", "text")
-      .withColumn("lang", lit("en")).withColumn("source", lit("synth"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .coalesce(1).write.parquet(s"$d/documents.parquet")
-    assert(!DedupQueries.prefixRouteUseCount(spark, d.toString),
-      "open-vocab corpus should route to the prefix-filter branch")
-    // and the routed query still equals the brute-force result there
-    val exact = DedupQueries.ngramJaccard(spark, d.toString)
-    val routed = DedupQueries.ngramJaccardPrefix(spark, d.toString)
-    assert(exact.exceptAll(routed).count() === 0L)
-    assert(routed.exceptAll(exact).count() === 0L)
+  test("ngram_jaccard_prefix runs ngram_jaccard's count plan on sf0.01") {
+    val optimized = (q: String) =>
+      SparkEntry.queries(q)(spark, sf("sf0.01")).queryExecution.optimizedPlan
+    assert(optimized("ngram_jaccard_prefix").sameResult(optimized("ngram_jaccard")))
   }
 
   test("MaxBandBucket cap: an exact-dup flood generates no pairs, real near-dups survive") {
@@ -154,9 +100,7 @@ class DedupPropertySpec extends SparkTestBase {
     // while an unrelated cold near-dup pair exercises the generator
     // branch. Unlike minhash's lossy band cap, the exact ngram path must
     // KEEP every clone pair: expected output is all C(1030,2) clone pairs
-    // at jaccard 1.0 plus the near-dup pair — and the prefix twin (whose
-    // per-doc prefix here is the full 2-shingle set, also hot) must match
-    // the brute-force result row-for-row.
+    // at jaccard 1.0 plus the near-dup pair.
     import spark.implicits._
     val d = java.nio.file.Files.createTempDirectory("hot-shingle-corpus")
     val clone = "alpha beta gamma delta" // 2 shingles, both df=1030
@@ -175,11 +119,6 @@ class DedupPropertySpec extends SparkTestBase {
       .collect().map(r => r.getDouble(0) -> r.getLong(1)).toMap
     assert(byJ === Map(1.0 -> nClones, 0.9 -> 1L),
       s"expected $nClones clone pairs at J=1.0 + one J=0.9 pair, got $byJ")
-    // pin the prefix BRANCH (the router would pick the count plan on a
-    // 1030-clone corpus): its hot-shingle handling is the claim under test
-    val prefix = DedupQueries.ngramJaccardPrefixRouted(spark, d.toString, Some(false))
-    assert(exact.exceptAll(prefix).count() === 0L)
-    assert(prefix.exceptAll(exact).count() === 0L)
   }
 
   test("dedup_cluster closes transitive chains: A~B, B~C, A!~B~C still one cluster") {
