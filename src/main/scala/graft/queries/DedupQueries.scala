@@ -213,8 +213,7 @@ object DedupQueries {
     *
     * Each candidate pair fetches both docs' shingle-hash ARRAYS from the
     * persisted array table and intersects them in-row — two narrow joins
-    * keyed by doc id, zero re-explosion. (The round-2 form re-joined the
-    * exploded pair table twice plus two sizes joins.)
+    * keyed by doc id, zero re-explosion.
     *
     * A pair shares several bands, so candidates repeat: their
     * de-duplication folds into the SAME exchange that pins the verify

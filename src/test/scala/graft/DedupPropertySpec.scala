@@ -5,10 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.functions.PairsExpr
 import graft.queries.DedupQueries
 
-/** Property tests for the dedup candidate-generation machinery beyond the
-  * fixed driver corpus: PairsExpr semantics, the hot-shingle split, the
-  * minhash cap, and minhash's exactness against the count plan on a
-  * RANDOM near-duplicate corpus (the oracle gate only proves it for one).
+/** Property tests for the dedup operators beyond the fixed driver corpus,
+  * on constructed and RANDOM corpora (the oracle gate only proves each
+  * property for one input).
   */
 class DedupPropertySpec extends SparkTestBase {
 
