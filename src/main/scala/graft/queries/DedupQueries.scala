@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextFns
+import graft.operators.PostingPairs
 
 /** Deduplication operators over `documents` — the training-data-pipeline
   * surface: exact hashing, MinHash+LSH, SimHash, and n-gram Jaccard.
@@ -13,15 +14,14 @@ import graft.functions.TextFns
   * Scale design: nothing here is O(n²) over the corpus.
   *   - exact: one hash-shuffle.
   *   - minhash: per-doc signatures are computed with zero shuffle (native
-  *     minhash_sig kernel); candidate pairs come from one band-bucket
-  *     aggregation (PairsExpr), so generation is proportional to bucket
+  *     minhash_sig kernel); candidate pairs come from the band buckets'
+  *     posting lists ([[graft.operators.PostingPairs]], capped at
+  *     [[MaxBandBucket]]), so generation is proportional to bucket
   *     collisions, not n².
   *   - simhash: per-row fingerprint kernel + one tiny grouped aggregation.
-  *   - ngram_jaccard: inverted-index bucket aggregation with a hot-shingle
-  *     split — posting lists over [[MaxShingleBucket]] stream through a
-  *     salted self-join instead of a collect buffer, so a df=10⁶ shingle
-  *     at 100 TB is spread work, not a straggler OOM. `ngram_jaccard_prefix`
-  *     is the same plan.
+  *   - ngram_jaccard: the same posting-list pairs over the shingle
+  *     inverted index, uncapped (exact recall), then one count per pair.
+  *     `ngram_jaccard_prefix` is the same plan.
   *
   * All hashes derive from `TextFns.hash60` (md5-prefix), which DuckDB
   * reproduces exactly, so every stage is oracle-checkable.
@@ -118,22 +118,18 @@ object DedupQueries {
     s"""$shingleHashesCte,
        |ex AS (SELECT doc_id, unnest(hs) AS h FROM hs)""".stripMargin
 
-  /** The shingle document-frequency table (h, df), memoized: the exact
-    * n-gram family needs df for the hot-shingle split below, and
-    * `dup_ngram_coverage` for its df ≥ 2 filter.
+  /** The shingle document-frequency table (h, df), memoized:
+    * `dup_ngram_coverage` reads it for its df ≥ 2 filter.
     */
   private def shingleFreq(spark: SparkSession, dir: String): DataFrame =
     Memo.memoize(spark, dir, "shingle_freq")(
       shinglePairs(spark, dir).groupBy(col("h")).agg(count(lit(1)).as("df")))
 
   /** The df-ANNOTATED pair table (doc_id, h, df), memoized: the one h-keyed
-    * join of pairs⋈freq happens HERE, once per (session, dir) — after it,
-    * the hot/cold shingle routing is a plain FILTER on a persisted table
-    * instead of per-invocation broadcast/anti-joins (each of which cost a
-    * broadcast exchange + an AQE stage boundary per call — the dominant
-    * per-call overhead at sf0.1 after round 3). At cluster scale this is
-    * the standard "annotate the inverted index with document frequency"
-    * build step of a dedup job.
+    * join of pairs⋈freq happens HERE, once per (session, dir), so
+    * `dup_ngram_coverage`'s df filter is a plain FILTER on a persisted
+    * table. At cluster scale this is the standard "annotate the inverted
+    * index with document frequency" build step of a dedup job.
     */
   private def shinglePairsDf(spark: SparkSession, dir: String): DataFrame =
     Memo.memoize(spark, dir, "shingle_pairs_df")(
@@ -152,59 +148,6 @@ object DedupQueries {
       shingleHashes(spark, dir)
         .select(col("doc_id"), size(col("hs")).cast("long").as("n"))
         .coalesce(math.max(1, spark.sparkContext.defaultParallelism / 8)))
-
-  /** Per-shingle posting-list bound for the collect_list+PairsExpr pair
-    * generator: a shingle shared by more than this many documents would
-    * materialize its whole posting list in ONE aggregation buffer (a df=10⁶
-    * shingle at 100 TB is a multi-MB single-buffer row and a straggler
-    * task). Shingles above the bound are diverted to a streaming salted
-    * self-join branch instead — same pairs, exactly once, no per-key
-    * buffer (sort-merge join spills; the salt grid spreads one hot
-    * shingle's O(df²) pair fan-out over SaltGrid² tasks). Unlike minhash's
-    * [[MaxBandBucket]] this is NOT a drop: exact-Jaccard recall is
-    * preserved bit-for-bit (the oracle SQL is unchanged), which
-    * DedupPropertySpec pins with a corpus of >MaxShingleBucket clones.
-    */
-  val MaxShingleBucket = 1024
-
-  /** All co-occurring (da, db) pairs, da < db, of a (doc_id, h, df) table
-    * — one output row per (h, pair). `df` must be the per-h row count of
-    * the table or any per-h upper bound of it (an overestimate only moves
-    * more shingles onto the join branch; results are identical).
-    *
-    * Cold shingles (df ≤ [[MaxShingleBucket]]): one groupBy(h) +
-    * collect_list + the lazy [[graft.functions.PairsExpr]] generator — a
-    * single aggregation whose per-key buffer is bounded by the df filter.
-    * Hot shingles: a salted streaming self-join of the (tiny, usually
-    * empty) hot slice over [[SimilarityQueries.saltedGrid]] — each pair
-    * meets in exactly one of SaltGrid² cells. Routing is a plain column
-    * filter (df travels WITH the rows), so neither branch needs a
-    * broadcast of the hot set — per invocation the only work beyond the
-    * aggregation itself is two filter scans of the (persisted) input.
-    *
-    * `hotThreshold` exists so tests can force every shingle down either
-    * branch and prove the routing equivalence directly
-    * (DedupPropertySpec); production callers use the [[MaxShingleBucket]]
-    * default.
-    */
-  private[graft] def coocPairs(t: DataFrame,
-      hotThreshold: Long = MaxShingleBucket): DataFrame = {
-    val cold = t.filter(col("df") <= hotThreshold)
-      .groupBy(col("h"))
-      .agg(collect_list(col("doc_id")).as("ids")) // PairsExpr orders per pair
-      .filter(size(col("ids")) > 1)
-      .select(graft.functions.PairsExpr(col("ids"))) // generator -> (da, db)
-    val th = t.filter(col("df") > hotThreshold)
-    val a = SimilarityQueries.saltedGrid(
-      th.select(col("h"), col("doc_id").as("da")), "da", "si_a", "sj_a")
-    val b = SimilarityQueries.saltedGrid(
-      th.select(col("h").as("hb"), col("doc_id").as("db")), "db", "sj_b", "si_b")
-    val hotPairs = a.join(b,
-        col("h") === col("hb") && col("si_a") === col("si_b") &&
-          col("sj_a") === col("sj_b") && col("da") < col("db"))
-      .select(col("da"), col("db"))
-    cold.union(hotPairs)
-  }
 
   /** Verified-Jaccard join of `dedup_minhash`'s candidate pairs →
     * (doc_a, doc_b, jaccard ≥ [[JaccardTau]]). jaccard = |A∩B| /
@@ -240,43 +183,26 @@ object DedupQueries {
   }
 
   // ------------------------------------------------------------ dedup_minhash
-  /** The cap-BOUNDED banded-signature table, memoized — the LSH
-    * index-build artifact (band, sig, doc_id) with oversized buckets
-    * already removed: built once per (session, dir), so the
-    * per-invocation plan is one bucket aggregation + verify over a cached
-    * table, with no per-call oversized-count aggregate or anti-join
-    * exchange.
+  /** The banded-signature table (doc_id, band, sig) — the LSH index's
+    * buckets, read only by the `mh_pairs` build.
     */
-  private def boundedBands(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoize(spark, dir, "minhash_bands") {
-      // the per-doc minhash signature table, memoized too: referenced by
-      // both the oversized-bucket count and the bounded collect (and by
-      // repeated query invocations); one kernel pass over the cached
-      // shingle table serves all of them
-      val mh = Memo.memoize(spark, dir, "minhash_sigs")(
-        shingleHashes(spark, dir)
-          .select(col("doc_id"), graft.functions.MinHashSig(col("hs"), AB, P).as("sig"))
-          .select(
-            col("doc_id") +: AB.indices.map(i => element_at(col("sig"), i + 1).as(s"mh$i")): _*))
-      val bandStructs = (0 until Bands).map { b =>
-        val sig = concat_ws("-",
-          (0 until RowsPerBand).map(r => col(s"mh${b * RowsPerBand + r}")): _*)
-        struct(lit(b).as("band"), sig.as("sig"))
-      }
-      val bands = mh.select(col("doc_id"), explode(array(bandStructs: _*)).as("bs"))
-        .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
-      // The MaxBandBucket cap runs BEFORE any collect, as a count
-      // aggregate + broadcast anti-join (the oversized set is ~empty by
-      // construction): a mega-bucket must never reach collect_list, whose
-      // aggregation buffer materializes the whole bucket — at 100 TB an
-      // exact-dup flood would OOM the aggregator before a post-collect
-      // size filter ran.
-      val oversized = bands.groupBy(col("band"), col("sig"))
-        .agg(count(lit(1)).as("bn"))
-        .filter(col("bn") > MaxBandBucket)
-        .select(col("band"), col("sig"))
-      bands.join(broadcast(oversized), Seq("band", "sig"), "left_anti")
+  private def bands(spark: SparkSession, dir: String): DataFrame = {
+    // the per-doc minhash signature table, memoized: both the cap's count
+    // aggregate and the bucket collect read it; one kernel pass over the
+    // cached shingle table serves both
+    val mh = Memo.memoize(spark, dir, "minhash_sigs")(
+      shingleHashes(spark, dir)
+        .select(col("doc_id"), graft.functions.MinHashSig(col("hs"), AB, P).as("sig"))
+        .select(
+          col("doc_id") +: AB.indices.map(i => element_at(col("sig"), i + 1).as(s"mh$i")): _*))
+    val bandStructs = (0 until Bands).map { b =>
+      val sig = concat_ws("-",
+        (0 until RowsPerBand).map(r => col(s"mh${b * RowsPerBand + r}")): _*)
+      struct(lit(b).as("band"), sig.as("sig"))
     }
+    mh.select(col("doc_id"), explode(array(bandStructs: _*)).as("bs"))
+      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
+  }
 
   /** Config fingerprint for the disk-cached minhash artifacts — every
     * tunable the verified pair graph depends on (the AB permutation
@@ -299,17 +225,13 @@ object DedupQueries {
     * O(pairs) rows cached.
     */
   def dedupMinhash(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoizeDisk(spark, dir, "mh_pairs", mhConfigKey) {
-      // Candidate pairs via ONE bucket aggregation + the PairsExpr kernel —
-      // not a (band, sig) self-join, which would compute the
-      // minhash-signature pipeline once per join side and shuffle twice.
-      val cand = boundedBands(spark, dir)
-        .groupBy(col("band"), col("sig"))
-        .agg(collect_list(col("doc_id")).as("ids")) // PairsExpr orders per pair
-        .filter(size(col("ids")) > 1)
-        .select(graft.functions.PairsExpr(col("ids"))) // generator -> (da, db)
-      verifyJaccard(spark, dir, cand)
-    }
+    Memo.memoizeDisk(spark, dir, "mh_pairs", mhConfigKey)(
+      // Candidate pairs from the (band, sig) posting lists — not a bucket
+      // self-join, which would compute the minhash-signature pipeline once
+      // per join side and shuffle twice. The MaxBandBucket cap drops a
+      // mega-bucket before any collect buffer sees it.
+      verifyJaccard(spark, dir, PostingPairs(bands(spark, dir), Seq("band", "sig"),
+        "doc_id", Some(MaxBandBucket))))
 
   /** The full minhash pipeline as a reusable CTE chain ending in
     * `mhpairs(doc_a, doc_b, jaccard)` — shared verbatim by
@@ -580,11 +502,11 @@ object DedupQueries {
     * pair fan-out + count aggregation is the dominant cost of this family
     * — building it once per (session, dir) is the standard "materialize
     * the candidate pairs with overlap counts" step of a dedup job.
-    * Intersection counts come from ONE groupBy(h) over the inverted index
-    * + the PairsExpr kernel — not an h self-join, which scans/shuffles
-    * the pair table twice for the same rows. The hot-shingle split (see
-    * [[coocPairs]]) keeps df > MaxShingleBucket posting lists out of any
-    * collect buffer; the pinned repartition IS the aggregation exchange
+    * Intersection counts come from the shingles' posting lists
+    * ([[graft.operators.PostingPairs]], uncapped: the oracle has no cap,
+    * so a shingle's whole posting list sits in one collect buffer) — not
+    * an h self-join, which scans/shuffles the pair table twice for the
+    * same rows. The pinned repartition IS the aggregation exchange
     * (groupBy reuses the hash partitioning) — without it AQE sizes the
     * post-shuffle stage by BYTES and coalesces the byte-tiny pair rows to
     * ~3 tasks, serializing the CPU that runs in that stage.
@@ -595,9 +517,8 @@ object DedupQueries {
     // n-gram family, and its output is τ-independent (thresholds apply
     // downstream), so one build serves ngram_jaccard, ngram_containment
     // AND cosine_rerank across processes.
-    Memo.memoizeDisk(spark, dir, "shingle_inter",
-      s"tok=letter-runs n=3 P=$P cap=$MaxShingleBucket")(
-      coocPairs(shinglePairsDf(spark, dir))
+    Memo.memoizeDisk(spark, dir, "shingle_inter", s"tok=letter-runs n=3 P=$P")(
+      PostingPairs(shinglePairs(spark, dir), Seq("h"), "doc_id")
         .repartition(spark.sparkContext.defaultParallelism, col("da"), col("db"))
         .groupBy(col("da"), col("db"))
         .agg(count(lit(1)).as("inter")))
@@ -634,10 +555,9 @@ object DedupQueries {
     * containment = |A∩B| / min(|A|,|B|) ≥ 0.9. Jaccard misses these (a
     * 50-shingle quote inside a 5000-shingle page has J ≈ 0.01 but
     * containment 1.0); real pipelines run both — Jaccard for near-twins,
-    * containment for quotes/boilerplate/subset dups. Same inverted-index
-    * + hot-shingle-split candidate generation and the same sizes table as
-    * [[ngramJaccard]], so the scale story is identical; only the verify
-    * formula differs.
+    * containment for quotes/boilerplate/subset dups. Same overlap table
+    * and the same sizes table as [[ngramJaccard]], so the scale story is
+    * identical; only the verify formula differs.
     */
   val ContainmentTau = 0.9
 
@@ -844,10 +764,10 @@ object DedupQueries {
     *
     * Scale shape: degree table = one partial-final hash agg over the
     * exploded edge list (O(V)); orientation = two vertex-keyed joins;
-    * wedge generation = `groupBy(src)` + the lazy [[graft.functions.PairsExpr]]
-    * generator (pairs stream, no n² buffer — and |out(v)| ≤ O(√m) by
-    * the orientation); closing = one (da, db)-keyed equi-join against
-    * the edge list; the summary is three 1-row aggregates crossJoined
+    * wedge generation = the out-neighbor posting lists
+    * ([[graft.operators.PostingPairs]]: pairs stream, no n² buffer — and
+    * |out(v)| ≤ O(√m) by the orientation); closing = one (da, db)-keyed
+    * equi-join against the edge list; the summary is three 1-row aggregates crossJoined
     * (O(1) broadcasts, PlanGuard-allowlisted). The corpus-sized text
     * pipeline behind the edges is the SHARED memoized minhash index.
     */
@@ -865,10 +785,7 @@ object DedupQueries {
     val oriented = ed.select(
       when(srcIsA, col("a")).otherwise(col("b")).as("src"),
       when(srcIsA, col("b")).otherwise(col("a")).as("dst"))
-    val wedges = oriented.groupBy(col("src"))
-      .agg(collect_list(col("dst")).as("ds"))
-      .filter(size(col("ds")) > 1)
-      .select(graft.functions.PairsExpr(col("ds"))) // -> (da, db), da < db
+    val wedges = PostingPairs(oriented, Seq("src"), "dst") // (da, db), da < db
     val tri = wedges.join(e,
       wedges("da") === e("a") && wedges("db") === e("b"))
       .agg(count(lit(1)).as("n_triangles"))
@@ -1155,8 +1072,8 @@ object DedupQueries {
     * edges when choosing cluster representatives. Scores are one IEEE
     * division of exact BIGINTs.
     *
-    * Scale shape: wedge pairs come from the SAME one-aggregation +
-    * [[graft.functions.PairsExpr]] generator as [[triangleCount]] (no
+    * Scale shape: wedge pairs come from the SAME neighbor posting lists
+    * ([[graft.operators.PostingPairs]]) as [[triangleCount]] (no
     * adjacency self-join — the upstream runs once and pairs STREAM out of
     * GenerateExec); a hot vertex of degree d costs d²/2 generated pairs,
     * bounded by the dedup graph's [[MaxBandBucket]]-capped degrees. The
@@ -1171,9 +1088,7 @@ object DedupQueries {
     val und = e.select(col("a").as("v"), col("b").as("n"))
       .unionAll(e.select(col("b").as("v"), col("a").as("n")))
     val deg = und.groupBy(col("v")).agg(count(lit(1)).as("d"))
-    val cn = und.groupBy(col("v")).agg(collect_list(col("n")).as("ns"))
-      .filter(size(col("ns")) > 1)
-      .select(graft.functions.PairsExpr(col("ns"))) // generator -> (da, db)
+    val cn = PostingPairs(und, Seq("v"), "n")
       .groupBy(col("da"), col("db")).agg(count(lit(1)).as("cn"))
     val edges = e.select(col("a").as("da"), col("b").as("db"))
       .withColumn("flag", lit(true))

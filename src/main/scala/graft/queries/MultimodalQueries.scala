@@ -127,13 +127,13 @@ object MultimodalQueries {
     * `hash60`. Overlap is one IEEE division of exact BIGINTs.
     *
     * Scale shape: the chunk table derives in one scan (memoized — three
-    * consumers), the hot-chunk cap runs as a count-aggregate + anti-join
-    * BEFORE any collect_list (the dedup_minhash MaxBandBucket rule: a
-    * mega-chunk-bucket must never reach an aggregation buffer), pairs
-    * stream from the PairsExpr generator, and sizes attach by key-equi
-    * joins. Identical to the text inverted-index dedup family's cost
-    * model, which is the point: binary payloads dedup with the SAME
-    * machinery once chunk fingerprints replace shingles.
+    * consumers), pairs come from the chunks' posting lists
+    * ([[graft.operators.PostingPairs]] capped at [[FpDfCap]], the
+    * dedup_minhash MaxBandBucket rule: a mega-chunk-bucket never reaches
+    * an aggregation buffer), and sizes attach by key-equi joins. The
+    * text inverted-index dedup family's operator and cost model, which is
+    * the point: binary payloads dedup with the SAME machinery once chunk
+    * fingerprints replace shingles.
     */
   val MediaTau = 0.3
   val FpDfCap = 1024
@@ -158,12 +158,7 @@ object MultimodalQueries {
         .distinct()
     }
     val sizes = fps.groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
-    val hot = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > FpDfCap).select(col("fp"))
-    val pairs = fps.join(broadcast(hot), Seq("fp"), "left_anti")
-      .groupBy(col("fp")).agg(collect_list(col("doc_id")).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .select(graft.functions.PairsExpr(col("ids"))) // generator -> (da, db)
+    val pairs = graft.operators.PostingPairs(fps, Seq("fp"), "doc_id", Some(FpDfCap))
       .groupBy(col("da"), col("db")).agg(count(lit(1)).as("n_shared"))
     pairs
       .join(sizes.select(col("doc_id").as("da"), col("nf").as("nf_a")), "da")

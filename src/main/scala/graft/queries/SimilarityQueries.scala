@@ -55,9 +55,8 @@ object SimilarityQueries {
     */
   val CosTau = 0.35
 
-  /** Salt-grid fragmentation factor for block self-joins (these and
-    * `DedupQueries.coocPairs`' hot shingles). Each side is replicated S×;
-    * a block's pairs spread over S² join cells.
+  /** Salt-grid fragmentation factor for the block self-joins here. Each
+    * side is replicated S×; a block's pairs spread over S² join cells.
     */
   val SaltGrid = 4
 
@@ -68,10 +67,9 @@ object SimilarityQueries {
     * identical to the unsalted join, but a hot block's O(block²) pairs
     * spread across S² independent join cells instead of one straggler
     * task. Standard theta-join fragmentation; replication factor S per
-    * side. Shared by the embedding block joins here and the hot-shingle
-    * branch of `DedupQueries.coocPairs`.
+    * side. Used by the three embedding block joins.
     */
-  private[graft] def saltedGrid(df: DataFrame, idCol: String, ownAxis: String,
+  private def saltedGrid(df: DataFrame, idCol: String, ownAxis: String,
       otherAxis: String): DataFrame =
     df.withColumn(ownAxis, pmod(xxhash64(col(idCol)), lit(SaltGrid)).cast("int"))
       .withColumn(otherAxis, explode(array((0 until SaltGrid).map(lit): _*)))

@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.PairsExpr
+import graft.operators.PostingPairs
 import graft.queries.DedupQueries
 
 /** Property tests for the dedup operators beyond the fixed driver corpus,
@@ -91,13 +93,10 @@ class DedupPropertySpec extends SparkTestBase {
       s"expected only the near-dup pair; got ${pairs.size} pairs: ${pairs.take(5)}")
   }
 
-  test("hot-shingle split is exact: >MaxShingleBucket clones yield every pair, " +
-      "both paths, no collect buffer") {
-    // 1030 byte-identical clones share 2 shingles with df = 1030 >
-    // MaxShingleBucket (1024): BOTH their shingles route to the streaming
-    // salted self-join branch (no collect_list buffer ever sees them),
-    // while an unrelated cold near-dup pair exercises the generator
-    // branch. Unlike minhash's lossy band cap, the exact ngram path must
+  test("exact n-gram Jaccard is uncapped: 1030 clones yield every pair") {
+    // 1030 byte-identical clones share 2 shingles with df = 1030, above
+    // the minhash and media caps (1024), beside an unrelated near-dup
+    // pair. Unlike minhash's lossy band cap, the exact ngram path must
     // KEEP every clone pair: expected output is all C(1030,2) clone pairs
     // at jaccard 1.0 plus the near-dup pair.
     import spark.implicits._
@@ -111,7 +110,6 @@ class DedupPropertySpec extends SparkTestBase {
       .withColumn("lang", lit("en")).withColumn("source", lit("synth"))
       .withColumn("n_chars", length(col("text")).cast("long"))
       .coalesce(1).write.parquet(s"$d/documents.parquet")
-    assert(1030 > DedupQueries.MaxShingleBucket, "corpus no longer exceeds the cap")
     val exact = DedupQueries.ngramJaccard(spark, d.toString)
     val nClones = 1030L * 1029L / 2
     val byJ = exact.groupBy(col("jaccard")).count()
@@ -157,31 +155,28 @@ class DedupPropertySpec extends SparkTestBase {
     assert(labels === Map(10L -> 10L, 11L -> 10L, 12L -> 10L, 99L -> 99L))
   }
 
-  test("coocPairs routing equivalence: all-hot == all-cold == mixed pair multiset") {
-    // The hot/cold split is a pure ROUTING decision — both branches must
-    // emit the same (h, pair) multiset. The >1024-clone corpus pins this
-    // indirectly (end-to-end); here the claim is proven directly on a
-    // skewed posting table by forcing the threshold: Long.MaxValue routes
-    // every shingle to the collect_list+PairsExpr generator, 0 routes
-    // every shingle to the salted streaming self-join, and a mid split
-    // exercises both at once.
+  test("PostingPairs: one row per (key, pair); cap n keeps n-row keys, drops n + 1") {
     import spark.implicits._
-    // df spans 1..40: shingle h is shared by h documents
-    val rows = for { h <- 1L to 40L; d <- 0L until h } yield (d, h)
-    val t0 = rows.toDF("doc_id", "h")
-    val t = t0.join(t0.groupBy("h").agg(count(lit(1)).as("df")), "h")
-    def pairMultiset(threshold: Long): Map[(Long, Long), Long] =
-      DedupQueries.coocPairs(t, threshold).groupBy("da", "db").count()
+    def pairMultiset(t: DataFrame, key: String, cap: Option[Int]): Map[(Long, Long), Long] =
+      PostingPairs(t, Seq(key), "doc_id", cap).groupBy("da", "db").count()
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val allCold = pairMultiset(Long.MaxValue)
-    // expected directly: pair (a, b), a < b, appears once per shingle h
-    // with h > max(a, b) (docs 0..h-1 share h), i.e. 40 - max(a,b) times
+    // df spans 1..40: shingle h is shared by docs 0..h-1, so pair (a, b),
+    // a < b, appears once per h > b, i.e. 40 - b times
+    val skewed = (for { h <- 1L to 40L; d <- 0L until h } yield (d, h)).toDF("doc_id", "h")
     val want = (for {
       a <- 0L until 40L; b <- (a + 1) until 40L
     } yield (a, b) -> (40L - b)).toMap
-    assert(allCold === want)
-    assert(pairMultiset(0L) === allCold)
-    assert(pairMultiset(20L) === allCold)
+    assert(pairMultiset(skewed, "h", None) === want)
+    // cap n = 3: "kept" has exactly 3 rows, "dropped" has 4; "repeat"
+    // lists doc 9 twice and emits no (9, 9) self-pair
+    val capped = Seq(0L -> "kept", 1L -> "kept", 2L -> "kept",
+      3L -> "dropped", 4L -> "dropped", 5L -> "dropped", 6L -> "dropped",
+      9L -> "repeat", 9L -> "repeat").toDF("doc_id", "k")
+    val kept = Map((0L, 1L) -> 1L, (0L, 2L) -> 1L, (1L, 2L) -> 1L)
+    assert(pairMultiset(capped, "k", Some(3)) === kept)
+    assert(pairMultiset(capped, "k", None) === kept ++ (for {
+      a <- 3L to 6L; b <- (a + 1) to 6L
+    } yield (a, b) -> 1L))
   }
 
   test("connected components: pointer jumping closes a diameter-299 path inside the round bound") {

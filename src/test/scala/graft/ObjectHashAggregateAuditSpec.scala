@@ -71,11 +71,11 @@ class ObjectHashAggregateAuditSpec extends SparkTestBase {
     "kv_fold" -> "(b) reference crash.go fold semantics: the concatenated value list IS the output; key domain is the fixed lang set",
     "user_journey" -> "(b) per-user event structs ARE the journey payload a sequence trainer reads; group size = per-user activity (the sessionize bound, measured under Zipf skew in BENCH_skew)",
     "bpe_vocab" -> "(a) collects the bpe_train merge table: <= BpeRounds (10) structs in ONE group",
-    "triangle_count" -> "(a) neighbor lists collected AFTER degree orientation: oriented out-degree <= O(sqrt(|E|)) per group",
-    "link_predict" -> "(a) dup-graph adjacency: per-group degree capped upstream by dedup_minhash's MaxBandBucket hot-bucket rule; the O(d^2) PairsExpr expansion, not the O(d) buffer, is the governing cost and is the documented capped design",
+    "triangle_count" -> "(a) PostingPairs over neighbor lists collected AFTER degree orientation: oriented out-degree <= O(sqrt(|E|)) per group",
+    "link_predict" -> "(a) PostingPairs over the dup-graph adjacency: per-group degree capped upstream by dedup_minhash's MaxBandBucket hot-bucket rule; the O(d^2) pair expansion, not the O(d) buffer, is the governing cost and is the documented capped design",
     "ann_pq" -> "(a) fixed-size groups: PqM structs per codeword reassembly / PqM*PqK=2048 table entries per query",
     "ann_recall_report" -> "(a) composes ann_pq's fixed-size ADC-table collects; no new collect shape of its own",
-    "media_neardup" -> "(a) per-fingerprint doc list capped by the FpDfCap hot-fingerprint anti-join (df > cap rows never reach the collect)")
+    "media_neardup" -> "(a) PostingPairs per-fingerprint doc list capped at FpDfCap by its anti-join (df > cap rows never reach the collect)")
 
   test("every ObjectHashAggregate in the inventory carries bounded buffers (or is justified)") {
     val offenders = SparkEntry.all.toSeq.flatMap { case (name, q) =>

@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
   * engine's fact⋈fact joins (order_revenue, anti_join) rely on when a
   * real corpus hands them a hot key no static plan anticipated.
   *
-  * The queries' own salting/bucketing covers the skew we can PREDICT
-  * (hot shingles, hot labels — see DedupQueries' salt grids); AQE's
-  * `OptimizeSkewedJoin` is the declared backstop for the skew we can't.
+  * The queries' own salting/capping covers the skew we can PREDICT (hot
+  * labels — SimilarityQueries' salt grids; hot minhash buckets and media
+  * chunks — PostingPairs' caps); AQE's `OptimizeSkewedJoin` is the
+  * declared backstop for the skew we can't.
   * This spec proves the mechanism actually engages in this engine's
   * session configuration: a sort-merge join with one partition holding
   * ~90% of the rows must come out of adaptive replanning with its skewed
