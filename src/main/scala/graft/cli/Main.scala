@@ -1,5 +1,6 @@
 package graft.cli
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 import graft.operators.{Apps, MapReduce, MRApp}
@@ -17,13 +18,14 @@ import graft.operators.{Apps, MapReduce, MRApp}
   *   for the CLI path).
   *
   * Output: text files of `"<key> <value>"` lines under outDir — the
-  * reference's mr-out format (src/mr/worker.go:150-155), one file per
-  * reduce bucket, EVERY bucket (empty ones included): bucket i holds the
-  * keys with the reference's own FNV-1a `ihash(key) % N`
+  * reference's mr-out format (src/mr/worker.go:150-155), one file
+  * `part-i` per reduce bucket, EVERY bucket (empty ones included): bucket
+  * i holds the keys with the reference's own FNV-1a `ihash(key) % N`
   * (src/mr/worker.go:25-29), sorted by key (the per-reduce-task order the
-  * reference workers produce). One shuffle per job, no global sort. `wc`
-  * is an [[graft.operators.AlgebraicApp]], so its counts are combined per
-  * input file before that shuffle; the other apps shuffle every map record.
+  * reference workers produce). One RDD shuffle per job, no global sort,
+  * no query plan. `wc` is an [[graft.operators.AlgebraicApp]], so its
+  * counts are combined per input file before that shuffle; the other apps
+  * shuffle every map record.
   *   - Default (no --partitions): N = 1, ONE key-sorted file — exactly the
   *     sequential oracle's layout (src/main/mrsequential.go:59). Like
   *     `mrsequential`, the whole reduce then runs in one task.
@@ -63,21 +65,14 @@ object Main {
     })
 
   /** Run `app` over `glob` into `outDir` as `nReduce` bucket files (see
-    * the object doc). Spark's text writer emits no part file for an empty
-    * partition, so missing bucket indices are touched as empty
-    * `part-NNNNN-empty.txt` files after the write (no exchange sits above
-    * `MapReduce.run`'s bucketing, so task i writes exactly `part-i`).
+    * the object doc), replacing whatever `outDir` held. Reduce task i
+    * writes `part-i`, a zero-byte file when its bucket is empty.
     */
   private[graft] def run(spark: SparkSession, app: MRApp, outDir: String,
       glob: String, nReduce: Int): Unit = {
-    MapReduce.toOutputLines(MapReduce.run(spark, glob, app, nReduce))
-      .write.mode("overwrite").text(outDir)
-    val present = Option(new java.io.File(outDir).listFiles()).toSeq.flatten
-      .filter(_.getName.startsWith("part-"))
-      .map(_.getName.stripPrefix("part-").takeWhile(_.isDigit).toInt).toSet
-    (0 until nReduce).filterNot(present).foreach { i =>
-      new java.io.File(outDir, f"part-$i%05d-empty.txt").createNewFile(): Unit
-    }
+    val out = new Path(outDir)
+    out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
+    MapReduce.toOutputLines(MapReduce.run(spark, glob, app, nReduce)).saveAsTextFile(outDir)
   }
 
   /** A parsed command line: app name, output dir, input glob, bucket count. */

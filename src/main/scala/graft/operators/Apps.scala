@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{Encoder, Encoders}
-
 /** The reference's eight plugin apps (SURVEY §2.2), minus the pure
   * scheduler probes (jobcount/mtiming/rtiming/crash timing behavior — those
   * are *harness* capabilities covered by Spark task retry/speculation and
@@ -21,7 +19,6 @@ object Apps {
     def fold(n: Long, value: String): Long = n + 1
     def merge(a: Long, b: Long): Long = a + b
     def finish(n: Long): String = n.toString
-    def bufferEncoder: Encoder[Long] = Encoders.scalaLong
   }
 
   /** Inverted index — reference `src/mrapps/indexer.go:20-39`: per-document

@@ -4,10 +4,11 @@ import org.apache.spark.sql.{Column, Dataset, Encoder}
 
 /** The paper's reduce with a secondary sort (Dean & Ghemawat §3.1 step 5,
   * §4.2 "Ordering Guarantees"): sort each partition of a Dataset the
-  * caller has already exchanged (`MapReduce.run` on the reference's FNV
-  * bucket, the per-user sweeps on user_id) by `order`, which starts with
-  * what `key` reads, and hand each run of equal keys to `perRun` in one
-  * mapPartitions pass. A NULL key is one more key.
+  * caller has already exchanged (the per-user sweeps, on user_id) by
+  * `order`, which starts with what `key` reads, and hand each run of
+  * equal keys to `perRun` in one mapPartitions pass. A NULL key is one
+  * more key. `MapReduce.run` calls [[runs]] alone: its RDD shuffle
+  * already sorts each bucket by key in the shuffle reader.
   */
 object SortedRuns {
 

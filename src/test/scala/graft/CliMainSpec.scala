@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 import graft.functions.Fnv1a32
 import graft.operators.{Apps, KV, MapReduce, MRApp}
 
@@ -27,7 +29,7 @@ class CliMainSpec extends SparkTestBase {
     val app = cli.Main.resolveApp("graft.TestReflectiveApp")
     assert(app eq TestReflectiveApp)
     // and the loaded app actually runs end-to-end
-    val dir = Files.createTempDirectory("cli-app")
+    val dir = tempDir("cli-app")
     Files.writeString(dir.resolve("a.txt"), "red red blue")
     val out = MapReduce.run(spark, s"$dir/*.txt", app).collect()
       .map(kv => kv.key -> kv.value).toMap
@@ -62,11 +64,11 @@ class CliMainSpec extends SparkTestBase {
 
   test("partitioned output: FNV bucket per file, keys sorted within bucket, content equals the sequential layout") {
     import spark.implicits._
-    val inDir = Files.createTempDirectory("cli-in")
+    val inDir = tempDir("cli-in")
     Files.writeString(inDir.resolve("a.txt"), "cat dog cat bird emu fox gnu hen")
     Files.writeString(inDir.resolve("b.txt"), "dog dog bird ant cat fox ant yak")
     val result = MapReduce.run(spark, s"$inDir/*.txt", graft.operators.Apps.WordCount)
-    val outDir = Files.createTempDirectory("cli-out").toString + "/parts"
+    val outDir = tempDir("cli-out").toString + "/parts"
     val n = 4
     cli.Main.run(spark, Apps.WordCount, outDir, s"$inDir/*.txt", n)
     val files = new java.io.File(outDir).listFiles()
@@ -92,9 +94,9 @@ class CliMainSpec extends SparkTestBase {
   }
 
   test("partitioned output: empty buckets still produce a (zero-byte) file, like the reference's mr-out-X") {
-    val inDir = Files.createTempDirectory("cli-in-empty")
+    val inDir = tempDir("cli-in-empty")
     Files.writeString(inDir.resolve("one.txt"), "solo solo solo")
-    val outDir = Files.createTempDirectory("cli-out-empty").toString + "/parts"
+    val outDir = tempDir("cli-out-empty").toString + "/parts"
     val n = 4 // one key -> exactly one non-empty bucket, three empty
     cli.Main.run(spark, Apps.WordCount, outDir, s"$inDir/*.txt", n)
     val files = new java.io.File(outDir).listFiles()
@@ -108,11 +110,23 @@ class CliMainSpec extends SparkTestBase {
     }
   }
 
+  test("run compiles no generated code: the CLI job adds 0 codegen compiles") {
+    val session = spark
+    val inDir = tempDir("cli-in-codegen")
+    Files.writeString(inDir.resolve("a.txt"), "cat dog cat bird")
+    val outDir = tempDir("cli-out-codegen").toString + "/parts"
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    cli.Main.run(session, Apps.WordCount, outDir, s"$inDir/*.txt", 2)
+    cli.Main.run(session, Apps.Indexer, outDir, s"$inDir/*.txt", 2)
+    assert(compiles.getCount === before)
+  }
+
   test("default layout: one part file, key-sorted lines equal to the sequential fold") {
-    val inDir = Files.createTempDirectory("cli-in-default")
+    val inDir = tempDir("cli-in-default")
     Files.writeString(inDir.resolve("a.txt"), "cat dog cat bird emu fox gnu hen")
     Files.writeString(inDir.resolve("b.txt"), "dog dog bird ant cat fox ant yak")
-    val outDir = Files.createTempDirectory("cli-out-default").toString + "/one"
+    val outDir = tempDir("cli-out-default").toString + "/one"
     cli.Main.run(spark, Apps.WordCount, outDir, s"$inDir/*.txt", 1)
     val files = new java.io.File(outDir).listFiles().filter(_.getName.startsWith("part-"))
     assert(files.length === 1, files.map(_.getName).toSeq)

@@ -1,11 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.{RangePartitioner, ShuffleDependency}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 
 import graft.functions.Fnv1a32
 import graft.operators.{AlgebraicApp, Apps, KV, MapReduce, MRApp}
@@ -30,16 +30,13 @@ object MapReduceSpec {
 class MapReduceSpec extends SparkTestBase {
   import MapReduceSpec.Uncombined
 
-  /** Plan traversal that descends into AQE's final plan and query stages. */
-  private object Plans extends AdaptiveSparkPlanHelper
-
   private val files = Seq(
     "f1.txt" -> "the quick brown fox jumps over the lazy dog\nthe fox",
     "f2.txt" -> "pack my box with five dozen liquor jugs; the box",
     "f3.txt" -> "fox dog fox DOG Fox")
 
   private lazy val corpusDir: String = {
-    val d = Files.createTempDirectory("mr-corpus")
+    val d = tempDir("mr-corpus")
     files.foreach { case (name, text) => Files.writeString(d.resolve(name), text) }
     d.toString
   }
@@ -57,13 +54,49 @@ class MapReduceSpec extends SparkTestBase {
     files.flatMap { case (f, text) => app.map(f, text).iterator }
       .groupBy(_.key).map { case (k, kvs) => k -> app.reduce(k, kvs.map(_.value)) }
 
-  /** Records written by the one shuffle of `MapReduce.run(app)`. */
+  /** Every RDD of `rdd`'s lineage, `rdd` first. */
+  private def lineage(rdd: RDD[_]): Seq[RDD[_]] = rdd +: rdd.dependencies.flatMap(d => lineage(d.rdd))
+
+  private def shuffles(rdd: RDD[_]): Seq[ShuffleDependency[_, _, _]] =
+    lineage(rdd).flatMap(_.dependencies).collect { case s: ShuffleDependency[_, _, _] => s }
+
+  /** Records written by the one shuffle of `MapReduce.run(app)`, summed
+    * from the task metrics a `SparkListener` sees for that job alone.
+    */
   private def shuffleRecords(app: MRApp, nReduce: Int): Long = {
-    val ds = MapReduce.run(spark, s"$corpusDir/*.txt", app, nReduce)
-    ds.collect()
-    val shuffles = Plans.collect(ds.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
-    assert(shuffles.length === 1)
-    shuffles.head.metrics("shuffleRecordsWritten").value
+    val rdd = MapReduce.run(spark, s"$corpusDir/*.txt", app, nReduce)
+    assert(shuffles(rdd).length === 1)
+    val tag = "mapreduce-spec.shuffle-records"
+    val token = java.util.UUID.randomUUID().toString
+    // the bus calls the listener from one thread, and the latch publishes
+    // its writes to this one
+    var jobId = -1
+    var stages = Set.empty[Int]
+    var written = 0L
+    val ended = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(tag) == token)) {
+          jobId = e.jobId
+          stages = e.stageIds.toSet
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          written += e.taskMetrics.shuffleWriteMetrics.recordsWritten
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == jobId) ended.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, token)
+    try {
+      rdd.collect()
+      assert(ended.await(30, TimeUnit.SECONDS), "the job's end never reached the listener")
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+    written
   }
 
   test("WordCount app matches a naive fold") {
@@ -84,7 +117,7 @@ class MapReduceSpec extends SparkTestBase {
 
   test("run places every key at ihash(key) % nReduce, sorted within its bucket") {
     for (app <- Seq(Apps.WordCount, Apps.Indexer); n <- Seq(1, 3, 7)) {
-      val parts = MapReduce.run(spark, s"$corpusDir/*.txt", app, n).rdd.glom().collect()
+      val parts = MapReduce.run(spark, s"$corpusDir/*.txt", app, n).glom().collect()
       assert(parts.length === n)
       parts.zipWithIndex.foreach { case (part, i) =>
         val keys = part.map(_.key).toSeq
@@ -108,32 +141,43 @@ class MapReduceSpec extends SparkTestBase {
       def fold(n: Long, value: String): Long = n + 1
       def merge(a: Long, b: Long): Long = a + b
       def finish(n: Long): String = n.toString
-      def bufferEncoder: Encoder[Long] = Encoders.scalaLong
     }
     Seq(listing -> "a=y,null=x+z", counting -> "a=1,null=2").foreach { case (app, want) =>
-      val parts = MapReduce.run(spark, s"$corpusDir/f1.txt", app, 3).rdd.glom().collect()
+      val parts = MapReduce.run(spark, s"$corpusDir/f1.txt", app, 3).glom().collect()
       val got = parts.flatten.map(kv => s"${kv.key}=${kv.value}").sorted.mkString(",")
       assert(got === want)
       assert(parts(0).count(_.key == null) === 1, parts(0).toSeq)
     }
   }
 
-  test("run's executed plan has exactly one shuffle and no range partitioning") {
+  test("run's lineage has exactly one shuffle and no range partitioning") {
     Seq(Apps.WordCount, Apps.Indexer).foreach { app =>
-      val ds = MapReduce.run(spark, s"$corpusDir/*.txt", app, 3)
-      ds.collect()
-      val plan = ds.queryExecution.executedPlan
-      val shuffles = Plans.collect(plan) { case e: ShuffleExchangeExec => e }
-      assert(shuffles.map(_.shuffleOrigin) === Seq(REPARTITION_BY_NUM), plan.toString)
-      assert(Plans.collect(plan) { case p if p.outputPartitioning.isInstanceOf[RangePartitioning] => p }
-        .isEmpty, plan.toString)
+      val rdd = MapReduce.run(spark, s"$corpusDir/*.txt", app, 3)
+      val deps = shuffles(rdd)
+      assert(deps.length === 1, rdd.toDebugString)
+      assert(deps.head.partitioner.numPartitions === 3, rdd.toDebugString)
+      assert(rdd.getNumPartitions === 3)
+      val partitioners = lineage(rdd).flatMap(_.partitioner) ++ deps.map(_.partitioner)
+      assert(!partitioners.exists(_.isInstanceOf[RangePartitioner[_, _]]), rdd.toDebugString)
+    }
+  }
+
+  test("a bucket lists U+FF21 before U+10400: key order is code-point order, not UTF-16 order") {
+    val deseret = "\uD801\uDC00" // U+10400, a surrogate pair
+    val fullwidthA = "\uFF21"
+    assert(deseret.compareTo(fullwidthA) < 0) // UTF-16 order would list it first
+    val dir = tempDir("mr-planes")
+    Files.writeString(dir.resolve("p.txt"), s"$deseret b $fullwidthA $deseret")
+    for (app <- Seq(Apps.WordCount, Uncombined(Apps.WordCount))) {
+      val got = MapReduce.run(spark, s"$dir/*.txt", app, 1).collect().toSeq
+      assert(got === Seq(KV("b", "1"), KV(fullwidthA, "1"), KV(deseret, "2")), app)
     }
   }
 
   test("generic wordcount equals algebraic wordcount") {
     Seq(1, 3, 8).foreach { n =>
       def layout(app: MRApp) = MapReduce.run(spark, s"$corpusDir/*.txt", app, n)
-        .rdd.glom().collect().map(_.toSeq).toSeq
+        .glom().collect().map(_.toSeq).toSeq
       val combined = layout(Apps.WordCount)
       assert(combined.flatten.nonEmpty)
       assert(combined === layout(Uncombined(Apps.WordCount)), s"n=$n")
@@ -156,6 +200,24 @@ class MapReduceSpec extends SparkTestBase {
     assert(got("fox") === "2 f1.txt,f3.txt")
     assert(got("the") === "2 f1.txt,f2.txt")
     assert(got("box") === "1 f2.txt")
+  }
+
+  test("map sees each file's OS name: no URL escaping of ' ' or '%'") {
+    val dir = tempDir("mr-names")
+    Files.writeString(dir.resolve("a b.txt"), "x y")
+    Files.writeString(dir.resolve("c%d.txt"), "x")
+    val got = MapReduce.run(spark, s"$dir/*.txt", Apps.Indexer)
+      .collect().map(kv => kv.key -> kv.value).toMap
+    assert(got === Map("x" -> "2 a b.txt,c%d.txt", "y" -> "1 a b.txt"))
+  }
+
+  test("an empty input file still reaches map, as mrsequential reads every file") {
+    val dir = tempDir("mr-empty")
+    Files.writeString(dir.resolve("empty.txt"), "")
+    Files.writeString(dir.resolve("full.txt"), "x")
+    val got = MapReduce.run(spark, s"$dir/*.txt", Apps.PerFileCount)
+      .collect().map(kv => kv.key -> kv.value).toMap
+    assert(got === Map("empty.txt" -> "1", "full.txt" -> "1"))
   }
 
   test("KvFold app: sorted space-joined values per fixed key") {

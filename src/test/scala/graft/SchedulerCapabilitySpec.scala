@@ -37,7 +37,7 @@ class SchedulerCapabilitySpec extends SparkTestBase {
   import SchedulerCapabilitySpec._
 
   private lazy val corpus: String = {
-    val d = java.nio.file.Files.createTempDirectory("sched-corpus")
+    val d = tempDir("sched-corpus")
     (1 to 8).foreach { i =>
       java.nio.file.Files.writeString(d.resolve(s"f$i.txt"), s"alpha beta f$i gamma " * 50)
     }
@@ -76,7 +76,8 @@ class SchedulerCapabilitySpec extends SparkTestBase {
     // the probe lives in reduce(), which MapReduce.run executes inside the
     // post-shuffle sorted-bucket stage — map-side concurrency (mtiming
     // above) says nothing about it. 26 keys over run's default 10 reduce
-    // buckets with a 300 ms sleep per key force overlapping reduce tasks.
+    // buckets (10 reduce tasks: no AQE plans an RDD shuffle) with a
+    // 300 ms sleep per key force overlapping reduce tasks.
     liveTasks.set(0); maxConcurrent.set(0)
     val probing = new graft.operators.MRApp {
       def map(file: String, contents: String): IterableOnce[graft.operators.KV] =
@@ -89,14 +90,7 @@ class SchedulerCapabilitySpec extends SparkTestBase {
         values.size.toString
       }
     }
-    // AQE sizes post-shuffle stages by BYTES and would coalesce this
-    // byte-tiny probe to ONE reduce task; pin it off — the probe asserts
-    // scheduler capability (concurrent post-shuffle tasks), not AQE policy.
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val saved = spark.conf.get(coalesceKey)
-    spark.conf.set(coalesceKey, "false")
-    try MapReduce.run(spark, corpus, probing).count()
-    finally spark.conf.set(coalesceKey, saved)
+    MapReduce.run(spark, corpus, probing).count()
     assert(maxConcurrent.get() >= 2,
       s"observed max reduce concurrency ${maxConcurrent.get()}")
   }
@@ -109,7 +103,7 @@ class SchedulerCapabilitySpec extends SparkTestBase {
     // job commit moves them into place — so a job whose final task always
     // fails must leave ZERO visible part files.
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("early-exit").resolve("out").toString
+    val out = tempDir("early-exit").resolve("out").toString
     intercept[Exception] {
       spark.range(0, 8, 1, 8).as[Long].map { i =>
         if (i == 7) throw new RuntimeException("injected failure before completion")
