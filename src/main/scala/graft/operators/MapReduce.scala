@@ -47,9 +47,12 @@ trait AlgebraicApp[B] extends MRApp {
   *
   * The reference's coordinator/worker/RPC machinery (E9-E12 in SURVEY §2.1)
   * is NOT ported: Spark's DAGScheduler + shuffle + task retry +
-  * `spark.speculation` already implement scheduling, the map→reduce barrier,
-  * straggler re-execution and exactly-once-visible output (atomic rename ==
-  * FileOutputCommitter). What remains is the dataflow itself, and its user
+  * `spark.speculation` already implement scheduling, the map→reduce barrier
+  * and straggler re-execution, and its one-winner-per-partition result
+  * gives `graft.cli.Main` exactly-once-visible output: each reduce attempt
+  * stages its own file and the driver renames the winners into place
+  * (the reference's temp file + `os.Rename`, `src/mr/worker.go:180-219`).
+  * What remains is the dataflow itself, and its user
   * functions are opaque to Catalyst, so it is one RDD pipeline — no query
   * plan and no generated code per job:
   *

@@ -1,7 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.{SparkException, TaskContext}
 import org.apache.spark.metrics.source.CodegenMetrics
 
 import graft.functions.Fnv1a32
@@ -18,11 +22,38 @@ object TestReflectiveApp extends MRApp {
   def reduce(key: String, values: Seq[String]): String = values.size.toString
 }
 
+/** Counts the reduce attempts [[CliMainSpec]]'s fault injection failed
+  * (tasks share the JVM in local mode).
+  */
+object CliMainSpec {
+  val injected = new AtomicInteger(0)
+}
+
 /** CLI generality (round-15 "what's missing"): runtime app loading by
   * class name and a partitioned-output mode that never collapses to one
-  * partition.
+  * partition; and the CLI's commit: staged task files renamed into place
+  * by the driver, `_SUCCESS` last, nothing visible from a failed job.
   */
 class CliMainSpec extends SparkTestBase {
+  import CliMainSpec.injected
+
+  /** The names in `dir`, sorted; empty when `dir` does not exist. */
+  private def listing(dir: Path): Seq[String] =
+    if (!Files.exists(dir)) Seq.empty
+    else {
+      val s = Files.list(dir)
+      try s.iterator.asScala.map(_.getFileName.toString).toSeq.sorted finally s.close()
+    }
+
+  private def parts(n: Int): Seq[String] = (0 until n).map(i => f"part-$i%05d")
+
+  /** 26 keys, so each of a few buckets gets some. */
+  private lazy val alphabet: String = {
+    val d = tempDir("cli-in-alphabet")
+    Files.writeString(d.resolve("a.txt"), ('a' to 'z').map(c => s"$c$c").mkString(" "))
+    Files.writeString(d.resolve("b.txt"), ('a' to 'm').map(c => s"$c$c").mkString(" "))
+    s"$d/*.txt"
+  }
 
   test("resolveApp loads an MRApp object by fully-qualified name (not in the builtin map)") {
     assert(!cli.Main.apps.contains("graft.TestReflectiveApp"))
@@ -135,5 +166,92 @@ class CliMainSpec extends SparkTestBase {
     val sequential = words.groupBy(identity).toVector.sortBy(_._1)
       .map { case (w, ws) => s"$w ${ws.length}" }
     assert(lines === sequential)
+  }
+
+  test("commit: outDir lists exactly part-00000..part-(n-1) and an empty _SUCCESS, no checksum or staged file") {
+    val out = tempDir("cli-out-commit").resolve("parts")
+    cli.Main.run(spark, Apps.WordCount, out.toString, alphabet, 3)
+    assert(listing(out) === "_SUCCESS" +: parts(3))
+    assert(Files.size(out.resolve("_SUCCESS")) === 0L)
+  }
+
+  test("commit: a failed job leaves no part file, no _SUCCESS and no _temporary") {
+    val failing = new MRApp {
+      def map(file: String, contents: String): IterableOnce[KV] = Apps.Indexer.map(file, contents)
+      def reduce(key: String, values: Seq[String]): String =
+        if (key == "qq") throw new RuntimeException("injected reduce fault (every attempt)")
+        else Apps.Indexer.reduce(key, values)
+    }
+    val out = tempDir("cli-out-fail").resolve("parts")
+    intercept[SparkException](cli.Main.run(spark, failing, out.toString, alphabet, 3))
+    assert(listing(out) === Seq.empty)
+  }
+
+  test("commit: reduce attempts that fail once leave the clean run's bytes and no losing attempt's file") {
+    val n = 3
+    val clean = tempDir("cli-out-clean").resolve("parts")
+    cli.Main.run(spark, Apps.Indexer, clean.toString, alphabet, n)
+    // every bucket holds keys, so every reduce task's first attempt fails
+    parts(n).foreach(p => assert(Files.size(clean.resolve(p)) > 0, p))
+    val flaky = new MRApp {
+      def map(file: String, contents: String): IterableOnce[KV] = Apps.Indexer.map(file, contents)
+      def reduce(key: String, values: Seq[String]): String = {
+        if (TaskContext.get().attemptNumber() == 0) {
+          injected.incrementAndGet()
+          throw new RuntimeException("injected reduce fault (attempt 0)")
+        }
+        Apps.Indexer.reduce(key, values)
+      }
+    }
+    injected.set(0)
+    val out = tempDir("cli-out-retry").resolve("parts")
+    cli.Main.run(spark, flaky, out.toString, alphabet, n)
+    assert(injected.get() === n)
+    assert(listing(out) === "_SUCCESS" +: parts(n))
+    parts(n).foreach { p =>
+      assert(Files.readAllBytes(out.resolve(p)).toSeq === Files.readAllBytes(clean.resolve(p)).toSeq, p)
+    }
+  }
+
+  test("commit: a second run into the same outDir with fewer buckets leaves only its own files") {
+    val out = tempDir("cli-out-rerun").resolve("parts")
+    cli.Main.run(spark, Apps.WordCount, out.toString, alphabet, 4)
+    assert(listing(out) === "_SUCCESS" +: parts(4))
+    cli.Main.run(spark, Apps.WordCount, out.toString, alphabet, 2)
+    assert(listing(out) === "_SUCCESS" +: parts(2))
+  }
+
+  test("outDir is a local path: parseArgs and run reject another scheme, file: URIs are accepted") {
+    val glob = "in/*.txt"
+    assert(cli.Main.parseArgs(Seq("wc", "hdfs://nn:8020/out", glob)) === None)
+    assert(cli.Main.parseArgs(Seq("wc", "", glob)) === None)
+    assert(cli.Main.parseArgs(Seq("wc", "file:///tmp/out", glob)).isDefined)
+    assert(cli.Main.localPath("file:///tmp/out") === cli.Main.localPath("/tmp/out"))
+    assert(cli.Main.localPath("file:/tmp/out") === cli.Main.localPath("/tmp/out"))
+    intercept[IllegalArgumentException] {
+      cli.Main.run(spark, Apps.WordCount, "hdfs://nn:8020/out", alphabet, 1)
+    }
+  }
+
+  test("a run whose input glob reaches into outDir is refused before anything is deleted") {
+    val dir = tempDir("cli-self")
+    val in = Files.createDirectories(dir.resolve("in"))
+    Files.writeString(in.resolve("a.txt"), "cat dog cat")
+    intercept[IllegalArgumentException] {
+      cli.Main.run(spark, Apps.WordCount, in.toString, s"$in/*.txt", 1)
+    }
+    assert(Files.readString(in.resolve("a.txt")) === "cat dog cat")
+    // an ancestor of the input, an alternation and a negated class that
+    // match outDir, and the `mrsequential` form (outDir `.` under a
+    // relative glob) are refused
+    Seq(dir.toString -> s"$in/*.txt", s"$dir/out" -> s"$dir/{in,out}/*.txt",
+      s"$dir/out" -> s"$dir/[^i]*/*.txt", "." -> "*.txt")
+      .foreach { case (out, glob) =>
+        intercept[IllegalArgumentException](cli.Main.outputPath(out, glob))
+      }
+    // a sibling of the input and a directory the glob cannot match are not
+    Seq(s"$dir/out" -> s"$in/*.txt", s"$in/sub" -> s"$in/*.txt").foreach { case (out, glob) =>
+      assert(cli.Main.outputPath(out, glob) === dir.getFileSystem.getPath(out))
+    }
   }
 }

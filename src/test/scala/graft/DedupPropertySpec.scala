@@ -39,7 +39,7 @@ class DedupPropertySpec extends SparkTestBase {
     */
   private lazy val randomCorpusDir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("dedup-prop")
+    val d = tempDir("dedup-prop")
     val rnd = new scala.util.Random(42)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
       "eta", "theta", "iota", "kappa", "lambda", "mu")
@@ -73,7 +73,7 @@ class DedupPropertySpec extends SparkTestBase {
     // This is the first test to actually EXERCISE the capped path — at
     // the driver SFs no bucket comes near the cap.
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("cap-corpus")
+    val d = tempDir("cap-corpus")
     val clone = "alpha beta gamma delta epsilon zeta eta theta"
     // 20 shared tokens + 1 differing tail token: 19-shingle sets sharing
     // 18 -> J = 18/20 = 0.9 >= tau
@@ -100,7 +100,7 @@ class DedupPropertySpec extends SparkTestBase {
     // KEEP every clone pair: expected output is all C(1030,2) clone pairs
     // at jaccard 1.0 plus the near-dup pair.
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("hot-shingle-corpus")
+    val d = tempDir("hot-shingle-corpus")
     val clone = "alpha beta gamma delta" // 2 shingles, both df=1030
     val base = "one two three four five six seven eight nine ten " +
       "eleven twelve thirteen fourteen fifteen sixteen seventeen eighteen nineteen twenty"
@@ -127,7 +127,7 @@ class DedupPropertySpec extends SparkTestBase {
     // land in cluster min(id); an unrelated singleton must keep its own
     // id as a singleton cluster.
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("chain-corpus")
+    val d = tempDir("chain-corpus")
     val toks = Vector("ape", "bat", "cat", "dog", "eel", "fox", "gnu", "hen",
       "ibis", "jay", "kite", "lark", "mole", "newt", "owl", "pig", "quail",
       "rat", "seal", "toad", "urchin", "vole", "wren", "yak", "zebu",
@@ -220,7 +220,7 @@ class DedupPropertySpec extends SparkTestBase {
     // doc 3 is too short to shingle at all (< 3 tokens) — it must still
     // appear with n_overlap = 0, not vanish.
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("decontam-corpus")
+    val d = tempDir("decontam-corpus")
     val docs = Seq(
       (0L, "alpha beta gamma delta"), // eval: shingles a-b-g, b-g-d
       (1L, "zzz alpha beta gamma yyy"), // shares a-b-g -> contaminated
@@ -283,7 +283,7 @@ class DedupPropertySpec extends SparkTestBase {
   test("dup_spans: touching runs merge into one island; gapped runs split; " +
     "positions are exact") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("dup-spans").toString
+    val d = tempDir("dup-spans").toString
     // distinct letter-only vocabularies; only the c* runs repeat across docs
     val c1 = "conea coneb conec coned conee conef coneg coneh conei conej conek conel"
     val c2 = "ctwoa ctwob ctwoc ctwod ctwoe ctwof ctwog ctwoh ctwoi ctwoj"

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.queries.RelationalQueries
@@ -38,7 +36,7 @@ class EventEdgeSpec extends SparkTestBase {
   private def nullIdEventsDir(
       rows: Seq[(Option[Long], Option[Long], Option[Long], String, Option[Double])]): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-edge").toString
+    val dir = tempDir("graft-edge").toString
     rows.map { case (id, ts, u, t, v) => (id, ts, u, t, v, "{}") }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.queries.RelationalQueries
@@ -50,7 +48,7 @@ class FirstTouchSpec extends SparkTestBase {
 
   private lazy val dir: String = {
     import spark.implicits._
-    val d = Files.createTempDirectory("ft-skew")
+    val d = tempDir("ft-skew")
     events
       .toDF("event_id", "user_id", "ts", "event_type")
       .repartition(7)
@@ -103,7 +101,7 @@ class FirstTouchSpec extends SparkTestBase {
 
   test("a NULL touch event_id ranks last within its microsecond, as in the oracle") {
     import spark.implicits._
-    val d = Files.createTempDirectory("ft-null-id")
+    val d = tempDir("ft-null-id")
     Seq[(Option[Long], Long, Long, String)](
       (None, 1000L, 5L, "view"), (Some(50L), 1500L, 5L, "click"), // same µs: 50 wins
       (Some(60L), 5000L, 5L, "purchase"),

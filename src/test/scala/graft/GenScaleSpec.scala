@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Pins [[GenScale]]'s determinism claim (BASELINE.md's sf1/sf10 scale-up
@@ -33,8 +31,8 @@ class GenScaleSpec extends SparkTestBase {
   }
 
   test("GenScale is deterministic: two generations are content-identical") {
-    val a = Files.createTempDirectory("genscale-a").toString
-    val b = Files.createTempDirectory("genscale-b").toString
+    val a = tempDir("genscale-a").toString
+    val b = tempDir("genscale-b").toString
     GenScale.write(spark, a, mult = 1L, div = 100L)
     GenScale.write(spark, b, mult = 1L, div = 100L)
     tables.foreach { t =>
@@ -52,8 +50,8 @@ class GenScaleSpec extends SparkTestBase {
   }
 
   test("zipforders mode: deterministic, mass-conserving, hot order is key 1 at ~ln2/ln n") {
-    val a = Files.createTempDirectory("genscale-zo-a").toString
-    val b = Files.createTempDirectory("genscale-zo-b").toString
+    val a = tempDir("genscale-zo-a").toString
+    val b = tempDir("genscale-zo-b").toString
     GenScale.write(spark, a, mult = 1L, div = 100L, zipfOrders = true)
     GenScale.write(spark, b, mult = 1L, div = 100L, zipfOrders = true)
     val (na, ha) = fingerprint(a, "lineitem")

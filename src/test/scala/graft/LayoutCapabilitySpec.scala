@@ -22,11 +22,7 @@ import org.apache.spark.sql.functions._
   */
 class LayoutCapabilitySpec extends SparkTestBase {
 
-  private def freshDir(tag: String): String = {
-    val d = Files.createTempDirectory(s"graft-$tag").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
+  private def freshDir(tag: String): String = tempDir(s"graft-$tag").toString
 
   test("bucketed fact tables join with ZERO exchanges (the recurring-join layout)") {
     val conf = spark.conf

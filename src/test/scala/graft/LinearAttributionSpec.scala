@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.queries.RelationalQueries
@@ -60,7 +58,7 @@ class LinearAttributionSpec extends SparkTestBase {
 
   private lazy val dir: String = {
     import spark.implicits._
-    val d = Files.createTempDirectory("la-skew")
+    val d = tempDir("la-skew")
     events.map(e => (e.id, e.user, e.ts, e.typ, e.value))
       .toDF("event_id", "user_id", "ts", "event_type", "value")
       .repartition(7)

@@ -1152,7 +1152,7 @@ class QueriesSpec extends SparkTestBase {
     // driver corpus has near-dups but no byte-identical texts): the two
     // copies must land in one shard, and their fingerprints XOR out of
     // that shard's checksum (a XOR a = 0)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-shard").toString
+    val tmp = tempDir("graft-shard").toString
     Seq((1L, "the same text"), (2L, "the same text"), (3L, "another text"))
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
@@ -1171,7 +1171,7 @@ class QueriesSpec extends SparkTestBase {
   test("media_neardup: truncated copy overlaps 1.0; disjoint payloads absent") {
     import spark.implicits._
     import graft.queries.MultimodalQueries
-    val tmp = java.nio.file.Files.createTempDirectory("graft-media").toString
+    val tmp = tempDir("graft-media").toString
     // 64-byte chunk grid: A = 3 distinct chunks, B = A truncated to 2 of
     // them (the torn-download copy), C = disjoint content
     val a = ("a" * 64) + ("b" * 64) + ("c" * 64)

@@ -17,7 +17,11 @@ import graft.operators.{Apps, MapReduce}
   *  - rtiming (test-mr.sh:174-195): ≥2 REDUCE (post-shuffle) tasks execute
   *    concurrently.
   *  - early_exit (test-mr.sh:222-284): no output is visible before job
-  *    completion; completion publishes atomically (_SUCCESS marker).
+  *    completion; completion publishes atomically (_SUCCESS marker). The
+  *    test below checks Spark's own committer on a DataFrame write; the
+  *    CLI's staged-file commit has its own barrier test, CliMainSpec's
+  *    "commit: a failed job leaves no part file, no _SUCCESS and no
+  *    _temporary".
   *  - crash (test-mr.sh:286-334): output with injected task failures equals
   *    the failure-free output (task retry + exactly-once-visible results).
   *

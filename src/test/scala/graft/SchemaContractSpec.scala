@@ -200,7 +200,7 @@ class SchemaContractSpec extends SparkTestBase {
     // fallback schema must assume the current generator's micros flavor
     // and the normalized contract must hold unchanged
     import graft.streaming.StreamingOps
-    val empty = java.nio.file.Files.createTempDirectory("graft-empty-stream")
+    val empty = tempDir("graft-empty-stream")
     val s = StreamingOps.eventStream(spark, empty.toString)
     assert(s.isStreaming)
     assert(s.schema("ts").dataType == LongType,

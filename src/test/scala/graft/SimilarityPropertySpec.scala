@@ -16,7 +16,7 @@ class SimilarityPropertySpec extends SparkTestBase {
   /** 300 vectors, ALL in one label block — the worst-case hot block. */
   private lazy val hotBlockDir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("hot-block")
+    val d = tempDir("hot-block")
     val rnd = new scala.util.Random(7)
     val rows = Seq.tabulate(300) { i =>
       // clustered directions so a healthy share of pairs clears CosTau
@@ -62,7 +62,7 @@ class SimilarityPropertySpec extends SparkTestBase {
     // ≥ 0.35 but cos(A,C) = cos 2θ = 0.28 < 0.35 — a genuine chain. An
     // orthogonal singleton must keep its own id.
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("embed-chain")
+    val d = tempDir("embed-chain")
     def vec(x: Double, y: Double, z: Double = 0.0): Seq[Float] =
       Seq(x.toFloat, y.toFloat, z.toFloat, 0f, 0f, 0f, 0f, 0f)
     val rows = Seq(
@@ -128,7 +128,7 @@ class SimilarityPropertySpec extends SparkTestBase {
     // must collapse to one cluster with the min id canonical.
     import spark.implicits._
     val n = 121
-    val d = java.nio.file.Files.createTempDirectory("emb-chain")
+    val d = tempDir("emb-chain")
     val rows = Seq.tabulate(n) { i =>
       val v = Array.fill(n + 1)(0f)
       v(i) = 0.70710678f; v(i + 1) = 0.70710678f

@@ -22,9 +22,9 @@ import graft.streaming.StreamingOps
 class StreamingRecoverySpec extends SparkTestBase {
 
   test("restart on the same checkpoint processes only new input; sink exactly-once") {
-    val in = Files.createTempDirectory("graft-stream-in")
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt")
-    val sink = Files.createTempDirectory("graft-stream-sink")
+    val in = tempDir("graft-stream-in")
+    val ckpt = tempDir("graft-stream-ckpt")
+    val sink = tempDir("graft-stream-sink")
 
     // first input file: the sf0.001 documents parquet
     val src = Paths.get(sf("sf0.001"), "documents.parquet")
@@ -53,7 +53,7 @@ class StreamingRecoverySpec extends SparkTestBase {
     // second epoch: a NEW file with shifted ids (distinguishable rows).
     // Written to a scratch dir first — the file source lists plain files,
     // so the part file is copied in as a single flat parquet file.
-    val scratch = Files.createTempDirectory("graft-stream-scratch")
+    val scratch = tempDir("graft-stream-scratch")
     spark.read.parquet(in.resolve("batch0.parquet").toString)
       .withColumn("doc_id", col("doc_id") + lit(1000000L))
       .coalesce(1)
@@ -104,9 +104,9 @@ class StreamingRecoverySpec extends SparkTestBase {
     // (or replay) diverges from the batch backfill over the union. The
     // input splits BY TIME, satisfying the twin's documented contract
     // (per-user event-time order across triggers).
-    val in = Files.createTempDirectory("graft-tf-in")
-    val ckpt = Files.createTempDirectory("graft-tf-ckpt")
-    val sink = Files.createTempDirectory("graft-tf-sink")
+    val in = tempDir("graft-tf-in")
+    val ckpt = tempDir("graft-tf-ckpt")
+    val sink = tempDir("graft-tf-sink")
     val all = graft.Tables(spark, sf("sf0.001"), "events")
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
     val Array(lo, hi) = all.agg(min(col("ts")), max(col("ts")))
@@ -114,7 +114,7 @@ class StreamingRecoverySpec extends SparkTestBase {
     val cut = lo + (hi - lo) / 2
 
     def writeEpoch(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val scratch = Files.createTempDirectory("graft-tf-scratch")
+      val scratch = tempDir("graft-tf-scratch")
       df.coalesce(1).write.mode("overwrite").parquet(scratch.resolve("e").toString)
       val part = Files.list(scratch.resolve("e")).toArray.map(_.toString)
         .filter(_.endsWith(".parquet")).head
@@ -147,7 +147,7 @@ class StreamingRecoverySpec extends SparkTestBase {
     val got = spark.read.parquet(sink.toString)
       .select("event_id", "user_id", "n_7d", "cents_7d", "gap_ns")
       .collect().map(key).toMap
-    val allDir = Files.createTempDirectory("graft-tf-all")
+    val allDir = tempDir("graft-tf-all")
     all.write.mode("overwrite").parquet(allDir.resolve("events.parquet").toString)
     val expected = graft.queries.RelationalQueries
       .trailingFeatures(spark, allDir.toString).collect().map(key).toMap
@@ -188,9 +188,9 @@ class StreamingRecoverySpec extends SparkTestBase {
     // loss would resurrect it (frontier too big), replay would not (the
     // fold is idempotent), so the final snapshot equals batch pareto_front
     // over the union ONLY if the checkpoint round-trips the eviction set.
-    val in = Files.createTempDirectory("graft-sky-in")
-    val ckpt = Files.createTempDirectory("graft-sky-ckpt")
-    val sink = Files.createTempDirectory("graft-sky-sink")
+    val in = tempDir("graft-sky-in")
+    val ckpt = tempDir("graft-sky-ckpt")
+    val sink = tempDir("graft-sky-sink")
     val all = graft.Tables(spark, sf("sf0.001"), "events")
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
     val Array(lo, hi) = all.agg(min(col("ts")), max(col("ts")))
@@ -198,7 +198,7 @@ class StreamingRecoverySpec extends SparkTestBase {
     val cut = lo + (hi - lo) / 2
 
     def writeEpoch(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val scratch = Files.createTempDirectory("graft-sky-scratch")
+      val scratch = tempDir("graft-sky-scratch")
       df.coalesce(1).write.mode("overwrite").parquet(scratch.resolve("e").toString)
       val part = Files.list(scratch.resolve("e")).toArray.map(_.toString)
         .filter(_.endsWith(".parquet")).head
@@ -242,7 +242,7 @@ class StreamingRecoverySpec extends SparkTestBase {
     runOnce()
     val finalFrontier = currentFrontier()
 
-    val allDir = Files.createTempDirectory("graft-sky-all")
+    val allDir = tempDir("graft-sky-all")
     all.write.mode("overwrite").parquet(allDir.resolve("events.parquet").toString)
     val expected = graft.queries.RelationalQueries
       .paretoFront(spark, allDir.toString).collect()
@@ -271,9 +271,9 @@ class StreamingRecoverySpec extends SparkTestBase {
     //                        purchase 12k in trigger 2 → qualifier is the
     //                        NON-earliest purchase, lag 2k
     //  u4 censored         — signup only in trigger 1 → lag NULL
-    val in = Files.createTempDirectory("graft-cl-in")
-    val ckpt = Files.createTempDirectory("graft-cl-ckpt")
-    val sink = Files.createTempDirectory("graft-cl-sink")
+    val in = tempDir("graft-cl-in")
+    val ckpt = tempDir("graft-cl-ckpt")
+    val sink = tempDir("graft-cl-sink")
     import spark.implicits._
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("user_id",
@@ -284,7 +284,7 @@ class StreamingRecoverySpec extends SparkTestBase {
         org.apache.spark.sql.types.StringType)))
 
     def writeEpoch(rows: Seq[(Long, Long, String)], name: String): Unit = {
-      val scratch = Files.createTempDirectory("graft-cl-scratch")
+      val scratch = tempDir("graft-cl-scratch")
       rows.toDF("user_id", "ts", "event_type")
         .coalesce(1).write.mode("overwrite").parquet(scratch.resolve("e").toString)
       val part = Files.list(scratch.resolve("e")).toArray.map(_.toString)
@@ -377,10 +377,10 @@ class StreamingRecoverySpec extends SparkTestBase {
     // alert (the anchor must never emit), and (b) a genuinely stalled
     // epoch-1 anchor emits exactly once when epoch 2's watermark advance
     // expires its window. Both happen across the checkpoint boundary.
-    val in = Files.createTempDirectory("graft-nfu-in")
-    val ckpt = Files.createTempDirectory("graft-nfu-ckpt")
-    val sink = Files.createTempDirectory("graft-nfu-sink")
-    val scratch = Files.createTempDirectory("graft-nfu-scratch")
+    val in = tempDir("graft-nfu-in")
+    val ckpt = tempDir("graft-nfu-ckpt")
+    val sink = tempDir("graft-nfu-sink")
+    val scratch = tempDir("graft-nfu-scratch")
     val t0 = 1700000000000000000L // ns, well past epoch
     def ns(min: Long): Long = t0 + min * 60L * 1000000000L
 

@@ -311,7 +311,7 @@ class StreamingSpec extends SparkTestBase {
 
     // crafted violations: each check counts exactly its injected rows
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dq").toString
+    val tmp = tempDir("graft-dq").toString
     Seq(
       (1L, Some(1000000000L), Option(7L), "view", 1.0, "{}"),
       (2L, Some(1000000000L), None, "view", 1.0, "{}"),          // null_user

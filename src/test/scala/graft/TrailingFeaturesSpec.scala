@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.queries.RelationalQueries
@@ -60,7 +58,7 @@ class TrailingFeaturesSpec extends SparkTestBase {
 
   private def write(rows: Seq[Event], name: String): String = {
     import spark.implicits._
-    val d = Files.createTempDirectory(name)
+    val d = tempDir(name)
     rows
       .toDF("event_id", "user_id", "ts", "cents")
       .repartition(7) // adversarial placement; results must not care

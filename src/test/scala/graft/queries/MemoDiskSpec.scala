@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,8 +17,7 @@ class MemoDiskSpec extends SparkTestBase {
 
   /** Unique per-test input dir with one small parquet file. */
   private def inputDir(tag: String): String = {
-    val d = Files.createTempDirectory(s"graft-memodisk-$tag").toFile
-    d.deleteOnExit()
+    val d = tempDir(s"graft-memodisk-$tag").toFile
     spark.range(10).select(col("id"), (col("id") * 3).as("v"))
       .coalesce(1).write.mode("overwrite").parquet(s"${d.getAbsolutePath}/t")
     d.getAbsolutePath
@@ -99,7 +96,7 @@ class MemoDiskSpec extends SparkTestBase {
   }
 
   test("pruneStale: the first call walks the root; only lapsed, unheld entries go") {
-    val root = Files.createTempDirectory("graft-prune").toFile
+    val root = tempDir("graft-prune").toFile
     val eightDaysAgo = System.currentTimeMillis() - 8L * 24 * 3600 * 1000
     def entry(name: String, mtime: Long): java.io.File = {
       val e = new java.io.File(root, name)
